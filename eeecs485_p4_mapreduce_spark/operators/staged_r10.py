@@ -70,6 +70,7 @@ from eeecs485_p4_mapreduce_spark.operators.quantiles import (
     oracle_bucket_score,
     oracle_threshold_cte,
 )
+from eeecs485_p4_mapreduce_spark.registry import query
 
 # ---------------------------------------------------------------------------
 # q84: exact integer OLS over daily volumes. Phase 1 aggregates events
@@ -105,6 +106,7 @@ Q84_ORACLE = """
 """
 
 
+@query("q84_trend_regression", oracle=Q84_ORACLE)
 def q84_trend_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact BIGINT OLS slope/intercept of daily event volume per type
     (see section comment)."""
@@ -178,6 +180,7 @@ Q85_ORACLE = f"""
 """
 
 
+@query("q85_decile_lift", oracle=Q85_ORACLE)
 def q85_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spend-decile conversion gains table (see section comment)."""
     from pyspark.sql.window import Window
@@ -266,6 +269,7 @@ Q86_ORACLE = """
 """
 
 
+@query("q86_pit_join", oracle=Q86_ORACLE)
 def q86_pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal (point-in-time) join of events against a synthesized
     3-version per-user dimension, aggregated by tier band (see section
@@ -350,6 +354,7 @@ CURATE_APPORTION_ORACLE = f"""
 """
 
 
+@query("curate_quota_apportion", oracle=CURATE_APPORTION_ORACLE)
 def curate_quota_apportion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Largest-remainder apportionment of a 10,000-slot budget across
     sources by char mass (see section comment)."""
@@ -522,6 +527,7 @@ SIM_MMR_ORACLE = f"""
 """
 
 
+@query("sim_mmr_rerank", oracle=SIM_MMR_ORACLE)
 def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MMR-diversified top-5 per query over top-8 dot-product
     candidates (see section comment): one candidate window, one
@@ -659,8 +665,11 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     sims_arr = sims.groupBy("query_id").agg(
         F.collect_list(F.struct("cid_a", "cid_b", "sim_e6")).alias("sims")
     )
+    # Left join: a query with exactly one candidate has no pairwise-sim
+    # row, yet still selects that candidate at rank 1.
     return (
-        cand_arr.join(sims_arr, "query_id")
+        cand_arr.join(sims_arr, "query_id", "left")
+        .withColumn("sims", F.coalesce("sims", F.array()))
         .select("query_id", F.explode(F.expr(greedy)).alias("s"))
         .select(
             "query_id",
@@ -708,6 +717,7 @@ TA_BURST_ORACLE = f"""
 """
 
 
+@query("ta_burstiness", oracle=TA_BURST_ORACLE)
 def ta_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dispersion index (variance-to-mean, zeros included) for the 15
     most frequent tokens (see section comment)."""
@@ -784,6 +794,7 @@ MM_ZIP_ORACLE = """
 """
 
 
+@query("mm_zip_shards", oracle=MM_ZIP_ORACLE)
 def mm_zip_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: build a stored-entry ZIP shard and re-walk it from
     the EOCD with the real parser (see section comment). Zero-shuffle
@@ -854,6 +865,7 @@ MM_FLAC_ORACLE = f"""
 """
 
 
+@query("mm_flac_streaminfo", oracle=MM_FLAC_ORACLE)
 def mm_flac_streaminfo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: build a FLAC metadata stream and re-walk it with
     the real parser (see section comment). Zero-shuffle Arrow
@@ -902,6 +914,7 @@ STREAM_NEW_USERS_ORACLE = """
 """
 
 
+@query("stream_new_users", oracle=STREAM_NEW_USERS_ORACLE)
 def stream_new_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming hourly new-user counts from a foreachBatch-merged
     per-user first-seen snapshot (see section comment), via the shared
@@ -928,26 +941,3 @@ def stream_new_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, partial, ["user_id"], {"first_ts": "min"},
         finalize, prefix="p4spark_newu_",
     )
-
-
-STAGED: dict[str, tuple] = {
-    "q84_trend_regression": (q84_trend_regression, Q84_ORACLE),
-    "q85_decile_lift": (q85_decile_lift, Q85_ORACLE),
-    "q86_pit_join": (q86_pit_join, Q86_ORACLE),
-    "curate_quota_apportion": (
-        curate_quota_apportion,
-        CURATE_APPORTION_ORACLE,
-    ),
-    "sim_mmr_rerank": (sim_mmr_rerank, SIM_MMR_ORACLE),
-    "ta_burstiness": (ta_burstiness, TA_BURST_ORACLE),
-    "mm_zip_shards": (mm_zip_shards, MM_ZIP_ORACLE),
-    "mm_flac_streaminfo": (mm_flac_streaminfo, MM_FLAC_ORACLE),
-    "stream_new_users": (stream_new_users, STREAM_NEW_USERS_ORACLE),
-}
-
-
-def register_staged() -> None:
-    """Registration hook: called from registry.load_all(). Idempotent."""
-    from eeecs485_p4_mapreduce_spark.registry import register_staged_dict
-
-    register_staged_dict(STAGED)

@@ -66,6 +66,7 @@ from eeecs485_p4_mapreduce_spark.operators.quantiles import (
     oracle_bucket_score,
     oracle_threshold_cte,
 )
+from eeecs485_p4_mapreduce_spark.registry import query
 
 # ---------------------------------------------------------------------------
 # q87: RFM segmentation. Recency = whole days from the user's last
@@ -111,6 +112,7 @@ Q87_ORACLE = f"""
 """
 
 
+@query("q87_rfm_segmentation", oracle=Q87_ORACLE)
 def q87_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM quintile codes over per-user aggregates (see section
     comment)."""
@@ -219,6 +221,7 @@ Q88_ORACLE = """
 """
 
 
+@query("q88_changepoint_cusum", oracle=Q88_ORACLE)
 def q88_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact integer CUSUM changepoint per event type (see section
     comment)."""
@@ -307,6 +310,7 @@ Q89_ORACLE = f"""
 """
 
 
+@query("q89_jsonl_roundtrip", oracle=Q89_ORACLE)
 def q89_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write an adversarial documents slice through the JSON-lines sink,
     read it back through the JSON source with an explicit schema, and
@@ -384,6 +388,7 @@ SIM_L2_ORACLE = f"""
 """
 
 
+@query("sim_l2_search", oracle=SIM_L2_ORACLE)
 def sim_l2_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact L2 top-k per query vector (see section comment)."""
     from pyspark.sql.window import Window
@@ -458,6 +463,7 @@ def _dedup_bucket_oracle() -> str:
     """
 
 
+@query("dedup_bucket_stats", oracle=_dedup_bucket_oracle())
 def dedup_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-band LSH bucket census over the production MinHash banding
     (see section comment)."""
@@ -521,6 +527,7 @@ CURATE_ANNEAL_ORACLE = """
 """
 
 
+@query("curate_anneal_mixture", oracle=CURATE_ANNEAL_ORACLE)
 def curate_anneal_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase pretrain/anneal sampling shares per source (see
     section comment)."""
@@ -598,6 +605,7 @@ TA_GINI_ORACLE = """
 """
 
 
+@query("ta_char_gini", oracle=TA_GINI_ORACLE)
 def ta_char_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-language token Gini impurity in ppm (see section
     comment)."""
@@ -672,6 +680,7 @@ MM_OGG_ORACLE = """
 """
 
 
+@query("mm_ogg_pages", oracle=MM_OGG_ORACLE)
 def mm_ogg_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: build an Ogg stream and re-walk its pages with the
     real parser (see section comment). Zero-shuffle Arrow mapInPandas
@@ -741,6 +750,7 @@ MM_PDF_ORACLE = """
 """
 
 
+@query("mm_pdf_xref", oracle=MM_PDF_ORACLE)
 def mm_pdf_xref(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: build a minimal PDF and re-walk its xref table
     with the real parser (see section comment). Zero-shuffle Arrow
@@ -755,23 +765,3 @@ def mm_pdf_xref(spark: SparkSession, sf_dir: str) -> DataFrame:
         return parse_pdf_xref(encode_pdf(1 + d % 4, seed=d))
 
     return media_walk_query(spark, sf_dir, PDF_SCHEMA_FIELDS, per_doc)
-
-
-STAGED: dict[str, tuple] = {
-    "q87_rfm_segmentation": (q87_rfm_segmentation, Q87_ORACLE),
-    "q88_changepoint_cusum": (q88_changepoint_cusum, Q88_ORACLE),
-    "q89_jsonl_roundtrip": (q89_jsonl_roundtrip, Q89_ORACLE),
-    "sim_l2_search": (sim_l2_search, SIM_L2_ORACLE),
-    "dedup_bucket_stats": (dedup_bucket_stats, _dedup_bucket_oracle()),
-    "curate_anneal_mixture": (curate_anneal_mixture, CURATE_ANNEAL_ORACLE),
-    "ta_char_gini": (ta_char_gini, TA_GINI_ORACLE),
-    "mm_ogg_pages": (mm_ogg_pages, MM_OGG_ORACLE),
-    "mm_pdf_xref": (mm_pdf_xref, MM_PDF_ORACLE),
-}
-
-
-def register_staged() -> None:
-    """Registration hook: called from registry.load_all(). Idempotent."""
-    from eeecs485_p4_mapreduce_spark.registry import register_staged_dict
-
-    register_staged_dict(STAGED)

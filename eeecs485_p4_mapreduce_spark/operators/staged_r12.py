@@ -63,6 +63,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eeecs485_p4_mapreduce_spark.catalog import load_table
+from eeecs485_p4_mapreduce_spark.registry import query
 
 # ---------------------------------------------------------------------------
 # q90: pairwise two-sample KS in ppm. For each of the C(5,2) = 10
@@ -107,6 +108,7 @@ Q90_ORACLE = """
 """
 
 
+@query("q90_ks_distance", oracle=Q90_ORACLE)
 def q90_ks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ppm-quantized two-sample KS distance for every event-type pair
     (see section comment)."""
@@ -205,6 +207,7 @@ Q91_ORACLE = """
 """
 
 
+@query("q91_spend_gini", oracle=Q91_ORACLE)
 def q91_spend_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-segment Gini of customer spend from the ppm-quantized Lorenz
     trapezoid (see section comment)."""
@@ -283,6 +286,7 @@ Q92_ORACLE = f"""
 """
 
 
+@query("q92_business_days", oracle=Q92_ORACLE)
 def q92_business_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Closed-form business-day order-to-ship lead time per priority
     (see section comment)."""
@@ -339,6 +343,7 @@ Q93_ORACLE = f"""
 """
 
 
+@query("q93_benford_digits", oracle=Q93_ORACLE)
 def q93_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford's-law leading-digit audit of order totals (see section
     comment)."""
@@ -439,6 +444,7 @@ CURATE_FUNNEL_ORACLE = f"""
 """
 
 
+@query("curate_filter_funnel", oracle=CURATE_FUNNEL_ORACLE)
 def curate_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-stage survivor counts for the 4-rule quality funnel (see
     section comment)."""
@@ -522,6 +528,7 @@ def _dedup_cross_source_oracle() -> str:
     """
 
 
+@query("dedup_cross_source", oracle=_dedup_cross_source_oracle())
 def dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pair counts per unordered source pair, from the
     production MinHash banding (see section comment)."""
@@ -590,6 +597,7 @@ SIM_NORMQ_ORACLE = """
 """
 
 
+@query("sim_norm_quantiles", oracle=SIM_NORMQ_ORACLE)
 def sim_norm_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding-norm census with the exact histogram median
     (see section comment)."""
@@ -649,6 +657,7 @@ STREAM_GAPFILL_ORACLE = """
 """
 
 
+@query("stream_gap_filled_rate", oracle=STREAM_GAPFILL_ORACLE)
 def stream_gap_filled_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming hourly rate with gap filling, via the shared
     mergeable-snapshot scaffold (see section comment)."""
@@ -728,6 +737,7 @@ MM_WEBP_ORACLE = """
 """
 
 
+@query("mm_webp_headers", oracle=MM_WEBP_ORACLE)
 def mm_webp_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: build a VP8L WebP and re-parse its RIFF framing
     and bit-packed dimensions (see section comment). Zero-shuffle
@@ -749,29 +759,3 @@ def mm_webp_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return media_walk_query(spark, sf_dir, WEBP_SCHEMA_FIELDS, per_doc)
-
-
-STAGED: dict[str, tuple] = {
-    "q90_ks_distance": (q90_ks_distance, Q90_ORACLE),
-    "q91_spend_gini": (q91_spend_gini, Q91_ORACLE),
-    "q92_business_days": (q92_business_days, Q92_ORACLE),
-    "q93_benford_digits": (q93_benford_digits, Q93_ORACLE),
-    "curate_filter_funnel": (curate_filter_funnel, CURATE_FUNNEL_ORACLE),
-    "dedup_cross_source": (
-        dedup_cross_source,
-        _dedup_cross_source_oracle(),
-    ),
-    "sim_norm_quantiles": (sim_norm_quantiles, SIM_NORMQ_ORACLE),
-    "stream_gap_filled_rate": (
-        stream_gap_filled_rate,
-        STREAM_GAPFILL_ORACLE,
-    ),
-    "mm_webp_headers": (mm_webp_headers, MM_WEBP_ORACLE),
-}
-
-
-def register_staged() -> None:
-    """Registration hook: called from registry.load_all(). Idempotent."""
-    from eeecs485_p4_mapreduce_spark.registry import register_staged_dict
-
-    register_staged_dict(STAGED)

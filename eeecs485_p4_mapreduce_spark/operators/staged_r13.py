@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eeecs485_p4_mapreduce_spark.catalog import load_table
+from eeecs485_p4_mapreduce_spark.registry import query
 
 # ---------------------------------------------------------------------------
 # q94: ORC roundtrip — same adversarial-content discipline as the CSV
@@ -83,6 +84,7 @@ Q94_ORACLE = f"""
 """
 
 
+@query("q94_orc_roundtrip", oracle=Q94_ORACLE)
 def q94_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write an adversarial documents slice through the ORC sink, read
     it back with an explicit schema, and aggregate (see section
@@ -153,6 +155,7 @@ Q95_ORACLE = f"""
 """
 
 
+@query("q95_xml_roundtrip", oracle=Q95_ORACLE)
 def q95_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write an adversarial documents slice through the native XML
     sink, read it back with an explicit schema, and aggregate (see
@@ -245,6 +248,7 @@ def _q96_partitioned_read(spark: SparkSession, sf_dir: str):
     return back.filter(F.col("event_type").isin(*Q96_TYPES)), out_dir
 
 
+@query("q96_partitioned_prune", oracle=Q96_ORACLE)
 def q96_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-pruned aggregate over a partitioned copy of events
     (see section comment)."""
@@ -336,6 +340,7 @@ def _q97_bucketed_tables(spark: SparkSession, sf_dir: str):
     return joined, (t_spend, t_act)
 
 
+@query("q97_bucketed_join", oracle=Q97_ORACLE)
 def q97_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zero-shuffle bucketed join of two per-user aggregates (see
     section comment)."""
@@ -384,6 +389,7 @@ Q98_ORACLE = f"""
 """
 
 
+@query("q98_csv_malformed_audit", oracle=Q98_ORACLE)
 def q98_csv_malformed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PERMISSIVE CSV ingestion with corrupt-record accounting (see
     section comment)."""
@@ -455,6 +461,7 @@ CURATE_MANIFEST_ORACLE = f"""
 """
 
 
+@query("curate_shard_manifest", oracle=CURATE_MANIFEST_ORACLE)
 def curate_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Export hash-assigned JSON shards plus a manifest, re-read and
     verify shard-for-shard (see section comment)."""
@@ -537,6 +544,7 @@ TA_VOCAB_ORACLE = """
 """
 
 
+@query("ta_vocab_growth", oracle=TA_VOCAB_ORACLE)
 def ta_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact vocabulary-growth curve per corpus decile (see section
     comment)."""
@@ -572,27 +580,3 @@ def ta_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bucketed.select(
         "decile", "new_tokens", cum.alias("cum_vocab")
     )
-
-
-STAGED: dict[str, tuple] = {
-    "q94_orc_roundtrip": (q94_orc_roundtrip, Q94_ORACLE),
-    "q95_xml_roundtrip": (q95_xml_roundtrip, Q95_ORACLE),
-    "q96_partitioned_prune": (q96_partitioned_prune, Q96_ORACLE),
-    "q97_bucketed_join": (q97_bucketed_join, Q97_ORACLE),
-    "q98_csv_malformed_audit": (
-        q98_csv_malformed_audit,
-        Q98_ORACLE,
-    ),
-    "curate_shard_manifest": (
-        curate_shard_manifest,
-        CURATE_MANIFEST_ORACLE,
-    ),
-    "ta_vocab_growth": (ta_vocab_growth, TA_VOCAB_ORACLE),
-}
-
-
-def register_staged() -> None:
-    """Registration hook: called from registry.load_all(). Idempotent."""
-    from eeecs485_p4_mapreduce_spark.registry import register_staged_dict
-
-    register_staged_dict(STAGED)

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eeecs485_p4_mapreduce_spark.catalog import load_table, read_parquet_cached
+from eeecs485_p4_mapreduce_spark.registry import query
 
 # ---------------------------------------------------------------------------
 # q99: equi-depth (quartile) bins. From the exact per-(type, cents)
@@ -71,6 +72,7 @@ Q99_ORACLE = """
 """
 
 
+@query("q99_equi_depth_bins", oracle=Q99_ORACLE)
 def q99_equi_depth_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact quartile boundaries per event type from the value-domain
     histogram (see section comment)."""
@@ -149,6 +151,7 @@ def _dedup_calib_oracle() -> str:
     """
 
 
+@query("dedup_minhash_calibration", oracle=_dedup_calib_oracle())
 def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-Jaccard calibration of the MinHash banding signal (see
     section comment)."""
@@ -252,6 +255,7 @@ STREAM_DLQ_ORACLE = f"""
 """
 
 
+@query("stream_dlq_routing", oracle=STREAM_DLQ_ORACLE)
 def stream_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming per-type counts with dead-letter routing of injected
     rule violations (see section comment)."""
@@ -395,6 +399,7 @@ MM_RLE_ORACLE = """
 """
 
 
+@query("mm_bmp_rle8", oracle=MM_RLE_ORACLE)
 def mm_bmp_rle8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: build a constant-row indexed image, RLE8-encode,
     strictly decode, and emit dimensions + RGB checksum + compression
@@ -428,21 +433,3 @@ def mm_bmp_rle8(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
 
     return media_walk_query(spark, sf_dir, RLE_SCHEMA_FIELDS, per_doc)
-
-
-STAGED: dict[str, tuple] = {
-    "q99_equi_depth_bins": (q99_equi_depth_bins, Q99_ORACLE),
-    "dedup_minhash_calibration": (
-        dedup_minhash_calibration,
-        _dedup_calib_oracle(),
-    ),
-    "stream_dlq_routing": (stream_dlq_routing, STREAM_DLQ_ORACLE),
-    "mm_bmp_rle8": (mm_bmp_rle8, MM_RLE_ORACLE),
-}
-
-
-def register_staged() -> None:
-    """Registration hook: called from registry.load_all(). Idempotent."""
-    from eeecs485_p4_mapreduce_spark.registry import register_staged_dict
-
-    register_staged_dict(STAGED)

@@ -67,6 +67,7 @@ from eeecs485_p4_mapreduce_spark.catalog import (
     pin_disk,
     read_parquet_cached,
 )
+from eeecs485_p4_mapreduce_spark.registry import query
 
 # ---------------------------------------------------------------------------
 # q100: longest activity streak per user. distinct (user, epoch-day)
@@ -98,6 +99,7 @@ Q100_ORACLE = """
 """
 
 
+@query("q100_user_streaks", oracle=Q100_ORACLE)
 def q100_user_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Longest consecutive-day streak census (see section comment)."""
     events = load_table(spark, sf_dir, "events")
@@ -156,6 +158,7 @@ Q101_ORACLE = """
 """
 
 
+@query("q101_rolling_median", oracle=Q101_ORACLE)
 def q101_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 7-day trailing rolling median of daily cents (see section
     comment)."""
@@ -224,6 +227,7 @@ Q102_ORACLE = """
 """
 
 
+@query("q102_independence_audit", oracle=Q102_ORACLE)
 def q102_independence_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-ppm deviation-from-independence table (see section
     comment)."""
@@ -296,6 +300,7 @@ SIM_RADIUS_ORACLE = f"""
 """
 
 
+@query("sim_radius_search", oracle=SIM_RADIUS_ORACLE)
 def sim_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine radius (range) search (see section comment)."""
     from eeecs485_p4_mapreduce_spark.operators.similarity import (
@@ -376,6 +381,7 @@ CURATE_CURRICULUM_ORACLE = f"""
 """
 
 
+@query("curate_length_curriculum", oracle=CURATE_CURRICULUM_ORACLE)
 def curate_length_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed curriculum-position assignment (see section
     comment)."""
@@ -477,6 +483,7 @@ TA_CODE_DETECT_ORACLE = f"""
 """
 
 
+@query("ta_code_detect", oracle=TA_CODE_DETECT_ORACLE)
 def ta_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer-signal code/prose classification (see section
     comment)."""
@@ -573,6 +580,7 @@ MM_ICO_ORACLE = f"""
 """
 
 
+@query("mm_ico_directory", oracle=MM_ICO_ORACLE)
 def mm_ico_directory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: build an ICO container and re-walk it with the
     real parser (see section comment). Zero-shuffle Arrow mapInPandas
@@ -649,6 +657,7 @@ MM_ID3_ORACLE = """
 """
 
 
+@query("mm_id3_tags", oracle=MM_ID3_ORACLE)
 def mm_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: build an ID3v2.3 tag and re-parse it with the real
     parser (see section comment). Zero-shuffle Arrow mapInPandas via
@@ -711,6 +720,7 @@ STREAM_LATENESS_ORACLE = f"""
 """
 
 
+@query("stream_lateness_audit", oracle=STREAM_LATENESS_ORACLE)
 def stream_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming lateness accounting (see section comment)."""
     from eeecs485_p4_mapreduce_spark.streaming.jobs import spool_events
@@ -827,33 +837,3 @@ def stream_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(wm_dir, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     return out
-
-
-#: flip: registry.load_all() adds register_staged() for this module.
-STAGED: dict[str, tuple] = {
-    "q100_user_streaks": (q100_user_streaks, Q100_ORACLE),
-    "q101_rolling_median": (q101_rolling_median, Q101_ORACLE),
-    "q102_independence_audit": (
-        q102_independence_audit,
-        Q102_ORACLE,
-    ),
-    "sim_radius_search": (sim_radius_search, SIM_RADIUS_ORACLE),
-    "curate_length_curriculum": (
-        curate_length_curriculum,
-        CURATE_CURRICULUM_ORACLE,
-    ),
-    "ta_code_detect": (ta_code_detect, TA_CODE_DETECT_ORACLE),
-    "mm_ico_directory": (mm_ico_directory, MM_ICO_ORACLE),
-    "mm_id3_tags": (mm_id3_tags, MM_ID3_ORACLE),
-    "stream_lateness_audit": (
-        stream_lateness_audit,
-        STREAM_LATENESS_ORACLE,
-    ),
-}
-
-
-def register_staged() -> None:
-    """Registration hook: called from registry.load_all(). Idempotent."""
-    from eeecs485_p4_mapreduce_spark.registry import register_staged_dict
-
-    register_staged_dict(STAGED)

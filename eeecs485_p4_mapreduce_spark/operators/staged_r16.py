@@ -56,6 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from eeecs485_p4_mapreduce_spark.catalog import load_table, read_parquet_cached
+from eeecs485_p4_mapreduce_spark.registry import query
 
 # ---------------------------------------------------------------------------
 # q103: FIFO lot allocation. Within each part, lines ordered by
@@ -96,6 +97,7 @@ Q103_ORACLE = f"""
 """.replace("read_parquet_part", "part")
 
 
+@query("q103_fifo_lots", oracle=Q103_ORACLE)
 def q103_fifo_lots(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FIFO lot-boundary census per brand (see section comment)."""
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -169,6 +171,7 @@ Q104_ORACLE = """
 """
 
 
+@query("q104_ship_lag_percentiles", oracle=Q104_ORACLE)
 def q104_ship_lag_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact ship-lag percentiles per priority (see section comment)."""
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -248,6 +251,7 @@ Q105_ORACLE = """
 """
 
 
+@query("q105_wow_change", oracle=Q105_ORACLE)
 def q105_wow_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Week-over-week ppm change per type (see section comment)."""
     events = load_table(spark, sf_dir, "events")
@@ -310,6 +314,7 @@ Q106_ORACLE = """
 """
 
 
+@query("q106_basket_lift", oracle=Q106_ORACLE)
 def q106_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Support / confidence / lift in exact ppm (see section
     comment)."""
@@ -399,6 +404,7 @@ DEDUP_PHONETIC_ORACLE = f"""
 """
 
 
+@query("dedup_phonetic_names", oracle=DEDUP_PHONETIC_ORACLE)
 def dedup_phonetic_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Soundex blocking census over part-name head tokens (see section
     comment)."""
@@ -444,6 +450,7 @@ TA_HAPAX_ORACLE = """
 """
 
 
+@query("ta_hapax_ratio", oracle=TA_HAPAX_ORACLE)
 def ta_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hapax legomena share per language (see section comment)."""
     from eeecs485_p4_mapreduce_spark.functions.text import tokens
@@ -523,6 +530,7 @@ MM_PNG_META_ORACLE = f"""
 """
 
 
+@query("mm_png_metadata", oracle=MM_PNG_META_ORACLE)
 def mm_png_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: splice real metadata chunks into a real PNG and
     re-walk it with CRC verification (see section comment).
@@ -572,6 +580,7 @@ STREAM_RESTART_ORACLE = """
 """
 
 
+@query("stream_restart_idempotent", oracle=STREAM_RESTART_ORACLE)
 def stream_restart_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two availableNow runs over a growing spool, one checkpoint (see
     section comment)."""
@@ -648,32 +657,3 @@ def stream_restart_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(out_dir, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     return out
-
-
-#: registered: registry.load_all() calls register_staged() below.
-STAGED: dict[str, tuple] = {
-    "q103_fifo_lots": (q103_fifo_lots, Q103_ORACLE),
-    "q104_ship_lag_percentiles": (
-        q104_ship_lag_percentiles,
-        Q104_ORACLE,
-    ),
-    "q105_wow_change": (q105_wow_change, Q105_ORACLE),
-    "q106_basket_lift": (q106_basket_lift, Q106_ORACLE),
-    "dedup_phonetic_names": (
-        dedup_phonetic_names,
-        DEDUP_PHONETIC_ORACLE,
-    ),
-    "ta_hapax_ratio": (ta_hapax_ratio, TA_HAPAX_ORACLE),
-    "mm_png_metadata": (mm_png_metadata, MM_PNG_META_ORACLE),
-    "stream_restart_idempotent": (
-        stream_restart_idempotent,
-        STREAM_RESTART_ORACLE,
-    ),
-}
-
-
-def register_staged() -> None:
-    """Registration hook: called from registry.load_all(). Idempotent."""
-    from eeecs485_p4_mapreduce_spark.registry import register_staged_dict
-
-    register_staged_dict(STAGED)

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eeecs485_p4_mapreduce_spark.catalog import load_table
+from eeecs485_p4_mapreduce_spark.registry import query
 
 # ---------------------------------------------------------------------------
 # q107: ordered funnel. Step tables chain: t1 = each user's first view;
@@ -84,6 +85,7 @@ Q107_ORACLE = """
 """
 
 
+@query("q107_funnel_steps", oracle=Q107_ORACLE)
 def q107_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered view→click→purchase funnel (see section comment)."""
     events = load_table(spark, sf_dir, "events").select(
@@ -193,6 +195,7 @@ SIM_MRL_ORACLE = f"""
 """
 
 
+@query("sim_matryoshka_recall", oracle=SIM_MRL_ORACLE)
 def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of prefix-dim cosine against full-dim cosine (see
     section comment)."""
@@ -313,6 +316,7 @@ CURATE_EPOCH_ORACLE = """
 """
 
 
+@query("curate_epoch_allocation", oracle=CURATE_EPOCH_ORACLE)
 def curate_epoch_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Budgeted second-epoch allocation in quality order (see section
     comment)."""
@@ -399,6 +403,7 @@ MM_EXIF_ORACLE = """
 """
 
 
+@query("mm_jpeg_exif", oracle=MM_EXIF_ORACLE)
 def mm_jpeg_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: build a JPEG-with-EXIF and re-parse it with the
     real marker/IFD walker (see section comment). Zero-shuffle Arrow
@@ -420,22 +425,3 @@ def mm_jpeg_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return media_walk_query(spark, sf_dir, EXIF_SCHEMA_FIELDS, per_doc)
-
-
-#: registered: registry.load_all() calls register_staged() below.
-STAGED: dict[str, tuple] = {
-    "q107_funnel_steps": (q107_funnel_steps, Q107_ORACLE),
-    "sim_matryoshka_recall": (sim_matryoshka_recall, SIM_MRL_ORACLE),
-    "curate_epoch_allocation": (
-        curate_epoch_allocation,
-        CURATE_EPOCH_ORACLE,
-    ),
-    "mm_jpeg_exif": (mm_jpeg_exif, MM_EXIF_ORACLE),
-}
-
-
-def register_staged() -> None:
-    """Registration hook: called from registry.load_all(). Idempotent."""
-    from eeecs485_p4_mapreduce_spark.registry import register_staged_dict
-
-    register_staged_dict(STAGED)

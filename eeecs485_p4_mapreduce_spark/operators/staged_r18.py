@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from eeecs485_p4_mapreduce_spark.catalog import load_table
+from eeecs485_p4_mapreduce_spark.registry import query
 
 # ---------------------------------------------------------------------------
 # q108: weighted vs unweighted median price per brand. Both medians
@@ -70,6 +71,7 @@ Q108_ORACLE = """
 """
 
 
+@query("q108_weighted_median", oracle=Q108_ORACLE)
 def q108_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact quantity-weighted median price per brand (see section
     comment)."""
@@ -158,6 +160,7 @@ MM_AIFF_ORACLE = f"""
 """
 
 
+@query("mm_aiff_comm", oracle=MM_AIFF_ORACLE)
 def mm_aiff_comm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: build an AIFF and re-walk it with the real parser
     including the 80-bit extended-float rate decode (see section
@@ -180,17 +183,3 @@ def mm_aiff_comm(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return media_walk_query(spark, sf_dir, AIFF_SCHEMA_FIELDS, per_doc)
-
-
-#: registered: registry.load_all() calls register_staged() below.
-STAGED: dict[str, tuple] = {
-    "q108_weighted_median": (q108_weighted_median, Q108_ORACLE),
-    "mm_aiff_comm": (mm_aiff_comm, MM_AIFF_ORACLE),
-}
-
-
-def register_staged() -> None:
-    """Registration hook: called from registry.load_all(). Idempotent."""
-    from eeecs485_p4_mapreduce_spark.registry import register_staged_dict
-
-    register_staged_dict(STAGED)

@@ -1,16 +1,13 @@
-"""Queries STAGED for a future registration round (implemented +
-oracle-proven in this build session; the flip is one
-``register_staged()`` call in ``registry.load_all``).
+"""Registered queries of the r19 pipeline (each with ``@query``).
 
-Same staging discipline as operators/staged_r9–r18: built, pytest
-hash-checked against DuckDB at sf0.001 and sf0.01
-(tests/test_staged_r19.py), fixture-tested with independent
-references, plan-gate swept, and x10/x100 replica-probed BEFORE
-registration. Same contract as every registered query: identical
+Same discipline as operators/staged_r9–r18: built, hash-checked against
+DuckDB at sf0.001 and sf0.01, fixture-tested with independent references
+(tests/test_staged_r19.py), plan-gate swept, and x10/x100 replica-probed
+before registration. Same contract as every registered query: identical
 aliases both sides, round()-ed or integer-exact outputs, no nullable
 hash-bearing columns.
 
-Staged surface:
+Surface:
 
 - ``q109_avro_roundtrip`` — closes the format-contract family
   (CSV q82 / JSONL q89 / ORC q94 / XML q95 / parquet q96): an
@@ -71,6 +68,7 @@ from pyspark.sql.window import Window
 from eeecs485_p4_mapreduce_spark.catalog import load_table, spread_small_source, pin_disk
 from eeecs485_p4_mapreduce_spark.functions.text import tokens
 from eeecs485_p4_mapreduce_spark.operators.similarity import N_QUERIES
+from eeecs485_p4_mapreduce_spark.registry import query
 
 # ---------------------------------------------------------------------------
 # Avro Object Container File codec — from scratch, public spec:
@@ -264,6 +262,7 @@ Q109_ORACLE = f"""
 """
 
 
+@query("q109_avro_roundtrip", oracle=Q109_ORACLE)
 def q109_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode an adversarial documents slice into per-partition Avro
     OCF payloads with the from-scratch codec, strictly decode them
@@ -396,6 +395,7 @@ SKEW_ZIPF_ORACLE = f"""
 """
 
 
+@query("skew_zipf_salted_join", oracle=SKEW_ZIPF_ORACLE)
 def skew_zipf_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipfian-key enrichment through the salted join (see section
     comment). The oracle is the PLAIN join — salting is
@@ -490,6 +490,7 @@ TA_IMPACT_ORACLE = f"""
 """
 
 
+@query("ta_impact_topk", oracle=TA_IMPACT_ORACLE)
 def ta_impact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-{IMPACT_TOP_K} docs per query under integer impact
     scoring, computed through the block-max WAND pruning dataflow (see
@@ -643,6 +644,7 @@ TA_DECON_ORACLE = f"""
 """
 
 
+@query("ta_decontaminate", oracle=TA_DECON_ORACLE)
 def ta_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source benchmark-contamination census (see section comment).
     Scale shape: grams are distinct-ed per side before the match, the
@@ -729,6 +731,7 @@ Q110_ORACLE = f"""
 """
 
 
+@query("q110_cohort_retention", oracle=Q110_ORACLE)
 def q110_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort-retention triangle over 7-day integer periods (see
     section comment). One distinct (user, period) pass feeds both the
@@ -819,6 +822,7 @@ SIM_BQ_ORACLE = f"""
 """
 
 
+@query("sim_binary_quantize", oracle=SIM_BQ_ORACLE)
 def sim_binary_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{BQ_TOP_K} per query under 1-bit sign quantization, exact
     cosine attached as the rerank column (see section comment). Scale
@@ -929,6 +933,7 @@ CURATE_SPLIT_ORACLE = f"""
 """
 
 
+@query("curate_split_assign", oracle=CURATE_SPLIT_ORACLE)
 def curate_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 80/10/10 split with a cross-split exact-text
     leakage audit (see section comment). One grouped pass over the
@@ -963,22 +968,3 @@ def curate_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("n_leaked"),
         )
     )
-
-
-#: flip: registry.load_all() adds register_staged() for this module.
-STAGED: dict[str, tuple] = {
-    "q109_avro_roundtrip": (q109_avro_roundtrip, Q109_ORACLE),
-    "skew_zipf_salted_join": (skew_zipf_salted_join, SKEW_ZIPF_ORACLE),
-    "ta_impact_topk": (ta_impact_topk, TA_IMPACT_ORACLE),
-    "ta_decontaminate": (ta_decontaminate, TA_DECON_ORACLE),
-    "q110_cohort_retention": (q110_cohort_retention, Q110_ORACLE),
-    "sim_binary_quantize": (sim_binary_quantize, SIM_BQ_ORACLE),
-    "curate_split_assign": (curate_split_assign, CURATE_SPLIT_ORACLE),
-}
-
-
-def register_staged() -> None:
-    """Registration hook: called from registry.load_all(). Idempotent."""
-    from eeecs485_p4_mapreduce_spark.registry import register_staged_dict
-
-    register_staged_dict(STAGED)

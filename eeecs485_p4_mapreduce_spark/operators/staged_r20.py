@@ -165,6 +165,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from eeecs485_p4_mapreduce_spark.catalog import load_table, pin_disk
+from eeecs485_p4_mapreduce_spark.registry import query
 
 # ---------------------------------------------------------------------------
 # mm_mkv_ebml: REAL Matroska/EBML walk (see encode_mkv/parse_mkv_ebml
@@ -235,6 +236,7 @@ MM_MKV_ORACLE = """
 """
 
 
+@query("mm_mkv_ebml", oracle=MM_MKV_ORACLE)
 def mm_mkv_ebml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: build a Matroska/EBML file and re-walk it with the
     real recursive VINT parser (see section comment). Zero-shuffle
@@ -304,6 +306,7 @@ TA_FERTILITY_ORACLE = f"""
 """
 
 
+@query("ta_fertility_census", oracle=TA_FERTILITY_ORACLE)
 def ta_fertility_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language fertility / compression census in exact ppm (see
     section comment). One regex projection per doc (map-side), one
@@ -382,6 +385,7 @@ TA_ZIPF_ORACLE = """
 """
 
 
+@query("ta_zipf_rank_mass", oracle=TA_ZIPF_ORACLE)
 def ta_zipf_rank_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact probability mass per vocabulary rank octave (see section
     comment)."""
@@ -523,6 +527,7 @@ def _ivfpq_rerank_oracle() -> str:
 """
 
 
+@query("sim_ivfpq_rerank_recall", oracle=_ivfpq_rerank_oracle())
 def sim_ivfpq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of IVF-PQ + exact top-R rerank, for R on the
     {RERANK_RS} curve (see section comment). Reuses the registered
@@ -724,6 +729,7 @@ Q111_ORACLE = f"""
 """
 
 
+@query("q111_sessionize", oracle=Q111_ORACLE)
 def q111_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session stats under 30-minute-gap sessionization (see
     section comment)."""
@@ -783,6 +789,7 @@ Q112_ORACLE = """
 """
 
 
+@query("q112_dow_profile", oracle=Q112_ORACLE)
 def q112_dow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-of-week activity profile per event type with exact ppm
     shares (see section comment)."""
@@ -960,6 +967,7 @@ Q114_ORACLE = f"""
 """
 
 
+@query("q114_protobuf_roundtrip", oracle=Q114_ORACLE)
 def q114_protobuf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode an adversarial documents slice into per-partition
     protobuf wire-format blobs with the from-scratch codec, strictly
@@ -1107,6 +1115,7 @@ def _skyline_2d(s: DataFrame, x: str, y: str) -> DataFrame:
     )
 
 
+@query("q115_supplier_skyline", oracle=Q115_ORACLE)
 def q115_supplier_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pareto-optimal suppliers on (revenue, line count) via the
     sort + range-frame running-max skyline (see section comment)."""
@@ -1231,6 +1240,7 @@ def _scd2_chain(versions: DataFrame) -> DataFrame:
     )
 
 
+@query("q113_scd2_dimension", oracle=Q113_ORACLE)
 def q113_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Type-2 SCD versions per user from the event stream (see section
     comment)."""
@@ -1335,6 +1345,7 @@ def _scd2_merge(dim: DataFrame | None, bver: DataFrame) -> DataFrame:
     )
 
 
+@query("stream_scd2_incremental", oracle=Q113_ORACLE)
 def stream_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maintain the SCD2 dimension incrementally over a 3-slice
     time-ordered feed; must equal the batch rebuild exactly (see
@@ -1434,6 +1445,7 @@ def _curate_survivorship_oracle() -> str:
 """
 
 
+@query("curate_survivorship_report", oracle=_curate_survivorship_oracle())
 def curate_survivorship_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup-funnel survivorship per (source, lang) in exact ppm (see
     section comment)."""
@@ -1533,6 +1545,7 @@ SKEW_HIST_ORACLE = f"""
 """
 
 
+@query("skew_partition_histogram", oracle=SKEW_HIST_ORACLE)
 def skew_partition_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-partition rows/keys + exact ppm-of-even-share load under the
     md5 router (see section comment)."""
@@ -1620,6 +1633,7 @@ MM_QOI_ORACLE = """
 """
 
 
+@query("mm_qoi_decode", oracle=MM_QOI_ORACLE)
 def mm_qoi_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: synthesize the alternating-row image, QOI-encode
     it, strictly re-decode, and report the chunk census (see section
@@ -1697,6 +1711,7 @@ Q116_ORACLE = """
 """
 
 
+@query("q116_gini_split", oracle=Q116_ORACLE)
 def q116_gini_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted Gini impurity per candidate split threshold (see
     section comment). The unpartitioned window is over the ~20-row
@@ -1821,6 +1836,7 @@ Q117_ORACLE = """
 """
 
 
+@query("q117_autocorrelation", oracle=Q117_ORACLE)
 def q117_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag-1..7 ACF of daily revenue (see section comment). Every
     relation past the first aggregation is day-table-sized."""
@@ -1923,6 +1939,7 @@ SKEW_ISO_ORACLE = """
 """
 
 
+@query("skew_isolated_hot_join", oracle=SKEW_ISO_ORACLE)
 def skew_isolated_hot_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-path hot-key-isolation join (see section comment): hot rows
     broadcast-join, cold rows shuffle-join, union, aggregate."""
@@ -2035,6 +2052,7 @@ DEDUP_PF_ORACLE = """
 """
 
 
+@query("dedup_prefix_filter_join", oracle=DEDUP_PF_ORACLE)
 def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-Jaccard pair join via prefix filtering (see section
     comment): index only each doc's rarest n - ceil(0.8n) + 1
@@ -2269,6 +2287,7 @@ def _daily_seq(spark: SparkSession, sf_dir: str, scale: int) -> DataFrame:
     )
 
 
+@query("q118_theil_sen", oracle=Q118_ORACLE)
 def q118_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil–Sen slope quartiles over the daily revenue series (see
     section comment). The pair relation and its sort are bounded by
@@ -2334,6 +2353,7 @@ Q119_ORACLE = f"""
 """
 
 
+@query("q119_mann_kendall", oracle=Q119_ORACLE)
 def q119_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann–Kendall S statistic and Kendall's tau over the daily
     revenue series (see section comment) — signs only, so it runs on
@@ -2422,6 +2442,7 @@ MM_GZ_ORACLE = """
 """
 
 
+@query("mm_gzip_members", oracle=MM_GZ_ORACLE)
 def mm_gzip_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: build a multi-member gzip stream and strictly
     re-walk it (CRC32/ISIZE verified per member). Zero-shuffle Arrow
@@ -2442,51 +2463,3 @@ def mm_gzip_members(spark: SparkSession, sf_dir: str) -> DataFrame:
         return parse_gzip_members(encode_gzip_members(members))
 
     return media_walk_query(spark, sf_dir, GZ_SCHEMA_FIELDS, per_doc)
-
-
-def _staged() -> dict:
-    return {
-        "mm_mkv_ebml": (mm_mkv_ebml, MM_MKV_ORACLE),
-        "ta_fertility_census": (ta_fertility_census, TA_FERTILITY_ORACLE),
-        "ta_zipf_rank_mass": (ta_zipf_rank_mass, TA_ZIPF_ORACLE),
-        "sim_ivfpq_rerank_recall": (
-            sim_ivfpq_rerank_recall,
-            _ivfpq_rerank_oracle(),
-        ),
-        "q111_sessionize": (q111_sessionize, Q111_ORACLE),
-        "q112_dow_profile": (q112_dow_profile, Q112_ORACLE),
-        "q113_scd2_dimension": (q113_scd2_dimension, Q113_ORACLE),
-        "q114_protobuf_roundtrip": (q114_protobuf_roundtrip, Q114_ORACLE),
-        "stream_scd2_incremental": (stream_scd2_incremental, Q113_ORACLE),
-        "q115_supplier_skyline": (q115_supplier_skyline, Q115_ORACLE),
-        "curate_survivorship_report": (
-            curate_survivorship_report,
-            _curate_survivorship_oracle(),
-        ),
-        "skew_partition_histogram": (
-            skew_partition_histogram,
-            SKEW_HIST_ORACLE,
-        ),
-        "mm_qoi_decode": (mm_qoi_decode, MM_QOI_ORACLE),
-        "q116_gini_split": (q116_gini_split, Q116_ORACLE),
-        "q117_autocorrelation": (q117_autocorrelation, Q117_ORACLE),
-        "skew_isolated_hot_join": (skew_isolated_hot_join, SKEW_ISO_ORACLE),
-        "dedup_prefix_filter_join": (
-            dedup_prefix_filter_join,
-            DEDUP_PF_ORACLE,
-        ),
-        "q118_theil_sen": (q118_theil_sen, Q118_ORACLE),
-        "mm_gzip_members": (mm_gzip_members, MM_GZ_ORACLE),
-        "q119_mann_kendall": (q119_mann_kendall, Q119_ORACLE),
-    }
-
-
-#: flip: registry.load_all() adds register_staged() for this module.
-STAGED: dict[str, tuple] = _staged()
-
-
-def register_staged() -> None:
-    """Registration hook: called from registry.load_all(). Idempotent."""
-    from eeecs485_p4_mapreduce_spark.registry import register_staged_dict
-
-    register_staged_dict(STAGED)

@@ -1,15 +1,13 @@
-"""Queries STAGED for the next registration round (r21 pipeline),
-keeping the every-round staging tradition after the staged_r20 flip
-emptied the pipeline.
+"""Registered queries of the r21 pipeline (each with ``@query``).
 
-Same discipline as operators/staged_r9–r20: built, pytest hash-checked
-against DuckDB at sf0.001 and sf0.01 (tests/test_staged_r21.py),
-fixture-tested with independent references, plan-gate swept, and
-x10/x100 replica-probed BEFORE registration. Same contract as every
-registered query: identical aliases both sides, round()-ed or
-integer-exact outputs, no nullable hash-bearing columns.
+Same discipline as operators/staged_r9–r20: built, hash-checked against
+DuckDB at sf0.001 and sf0.01, fixture-tested with independent references
+(tests/test_staged_r21.py), plan-gate swept, and x10/x100 replica-probed
+before registration. Same contract as every registered query: identical
+aliases both sides, round()-ed or integer-exact outputs, no nullable
+hash-bearing columns.
 
-Staged surface:
+Surface:
 
 - ``q120_allen_relations`` — Allen's interval algebra (Allen, CACM
   1983): classify every same-customer order pair into the 13
@@ -76,6 +74,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from eeecs485_p4_mapreduce_spark.catalog import load_table
+from eeecs485_p4_mapreduce_spark.registry import query
 
 # ---------------------------------------------------------------------------
 # q120_allen_relations. Intervals are closed [s, e] in epoch days from
@@ -128,6 +127,7 @@ Q120_ORACLE = f"""
 """
 
 
+@query("q120_allen_relations", oracle=Q120_ORACLE)
 def q120_allen_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Allen's 13-relation census over same-customer order shipping
     intervals (see module docstring). One shuffle to order grain, one
@@ -240,6 +240,7 @@ MM_MSGPACK_ORACLE = """
 """
 
 
+@query("mm_msgpack_walk", oracle=MM_MSGPACK_ORACLE)
 def mm_msgpack_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: build the fixture object, msgpack-encode it, and
     strictly re-decode with the type-census walker (see section
@@ -319,6 +320,7 @@ Q121_ORACLE = """
 """
 
 
+@query("q121_bitemporal_asof", oracle=Q121_ORACLE)
 def q121_bitemporal_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitemporal as-of reconstruction (see section comment): per user
     the latest effective correction known at the recorded cutoff."""
@@ -451,6 +453,7 @@ def _simhash60(spark: SparkSession, sf_dir: str) -> DataFrame:
     return votes.selectExpr("doc_id", f"({sig}) AS sh")
 
 
+@query("dedup_simhash_pigeonhole", oracle=DEDUP_SH_PIGEON_ORACLE)
 def dedup_simhash_pigeonhole(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -551,6 +554,7 @@ Q122_ORACLE = """
 """
 
 
+@query("q122_link_prediction", oracle=Q122_ORACLE)
 def q122_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 predicted links by common-neighbor Jaccard (see section
     comment)."""
@@ -658,6 +662,7 @@ Q123_ORACLE = """
 """
 
 
+@query("q123_abc_xyz_matrix", oracle=Q123_ORACLE)
 def q123_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC × XYZ planning matrix (see section comment)."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -766,6 +771,7 @@ Q124_ORACLE = """
 """
 
 
+@query("q124_runs_test", oracle=Q124_ORACLE)
 def q124_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wald–Wolfowitz runs test over daily revenue (see section
     comment)."""
@@ -858,6 +864,7 @@ Q125_ORACLE = """
 """
 
 
+@query("q125_hhi_concentration", oracle=Q125_ORACLE)
 def q125_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation supplier-market HHI in exact ppm (see section
     comment)."""
@@ -911,33 +918,3 @@ def q125_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
             "top1_share_ppm",
         )
     )
-
-
-def _staged() -> dict:
-    return {
-        "q120_allen_relations": (q120_allen_relations, Q120_ORACLE),
-        "mm_msgpack_walk": (mm_msgpack_walk, MM_MSGPACK_ORACLE),
-        "q121_bitemporal_asof": (q121_bitemporal_asof, Q121_ORACLE),
-        "dedup_simhash_pigeonhole": (
-            dedup_simhash_pigeonhole,
-            DEDUP_SH_PIGEON_ORACLE,
-        ),
-        "q122_link_prediction": (q122_link_prediction, Q122_ORACLE),
-        "q123_abc_xyz_matrix": (q123_abc_xyz_matrix, Q123_ORACLE),
-        "q124_runs_test": (q124_runs_test, Q124_ORACLE),
-        "q125_hhi_concentration": (
-            q125_hhi_concentration,
-            Q125_ORACLE,
-        ),
-    }
-
-
-#: flip: registry.load_all() adds register_staged() for this module.
-STAGED: dict[str, tuple] = _staged()
-
-
-def register_staged() -> None:
-    """Registration hook: called from registry.load_all(). Idempotent."""
-    from eeecs485_p4_mapreduce_spark.registry import register_staged_dict
-
-    register_staged_dict(STAGED)

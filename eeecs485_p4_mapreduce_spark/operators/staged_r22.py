@@ -1,17 +1,15 @@
-"""Queries STAGED for the next registration round (r22 pipeline),
-keeping the every-round staging tradition after the staged_r21 flip.
+"""Registered queries of the r22 pipeline (each with ``@query``).
 
-Same discipline as operators/staged_r9–r21: built, pytest hash-checked
-against DuckDB at sf0.001 and sf0.01 (tests/test_staged_r22.py),
-fixture-tested with independent references, plan-gate swept (including
-the r11 CartesianProduct gate), and x10/x100 replica-probed BEFORE
-registration. Same contract as every registered query: identical
-aliases both sides, round()-ed or integer-exact outputs, no nullable
-hash-bearing columns. All 14 re-verified under a driver-style BARE
-vanilla session (SPARK_VANILLA=1, sf0.01) at end of r11 — the flip is
-a registration one-liner with pre-proven hashes.
+Same discipline as operators/staged_r9–r21: built, hash-checked against
+DuckDB at sf0.001 and sf0.01, fixture-tested with independent references
+(tests/test_staged_r22.py), plan-gate swept (incl. the CartesianProduct
+gate), and x10/x100 replica-probed before registration. Same contract as
+every registered query: identical aliases both sides, round()-ed or
+integer-exact outputs, no nullable hash-bearing columns. All 14
+re-verified under a driver-style BARE vanilla session (SPARK_VANILLA=1,
+sf0.01) at end of r11.
 
-Staged surface:
+Surface:
 
 - ``mm_orc_postscript`` — the ORC file tail (orc.apache.org spec
   ORCv1): the READ-BACKWARDS length-prefixed footer discipline the
@@ -108,6 +106,7 @@ from pyspark.sql.window import Window
 
 from eeecs485_p4_mapreduce_spark.catalog import load_table, pin_disk
 from eeecs485_p4_mapreduce_spark.functions.text import tokens
+from eeecs485_p4_mapreduce_spark.registry import query
 
 _DUCK_TOKS = "string_split_regex(lower(text), '[ \t]')"
 
@@ -176,6 +175,7 @@ MM_ORC_ORACLE = f"""
 """
 
 
+@query("mm_orc_postscript", oracle=MM_ORC_ORACLE)
 def mm_orc_postscript(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: build a fake-ORC file and strictly re-walk its
     tail backwards (see section comment). Zero-shuffle Arrow
@@ -239,6 +239,7 @@ MM_ARROW_ORACLE = """
 """
 
 
+@query("mm_arrow_ipc", oracle=MM_ARROW_ORACLE)
 def mm_arrow_ipc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: frame an Arrow IPC stream (schema + record
     batches + EOS) and strictly re-walk the envelopes (alignment,
@@ -303,6 +304,7 @@ def _hnsw_m_recall_oracle() -> str:
     """
 
 
+@query("sim_hnsw_m_recall", oracle=_hnsw_m_recall_oracle())
 def sim_hnsw_m_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@{TOP_K} of the layer-0 HNSW adjacency vs the build
     budget M: for each M in {HNSW_RECALL_MS}, the fraction of each
@@ -398,6 +400,7 @@ TA_KL_ORACLE = f"""
 """
 
 
+@query("ta_kl_mixture", oracle=TA_KL_ORACLE)
 def ta_kl_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source unigram KL divergence from the corpus mixture — the
     distribution-shift number mixture-reweighting recipes optimize.
@@ -466,6 +469,7 @@ CURATE_BOTTOMK_ORACLE = f"""
 """
 
 
+@query("curate_bottomk_sample", oracle=CURATE_BOTTOMK_ORACLE)
 def curate_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uniform {BOTTOMK_K}-document sample as a MERGEABLE bottom-k
     sketch, computed the distributed-reservoir way: ``orderBy(h,
@@ -512,6 +516,7 @@ SKEW_ENTROPY_ORACLE = """
 """
 
 
+@query("skew_key_entropy", oracle=SKEW_ENTROPY_ORACLE)
 def skew_key_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew diagnostic for lineitem's two fact join keys:
     distinct keys, total rows, Shannon entropy of the key
@@ -618,6 +623,7 @@ Q126_ORACLE = """
 """
 
 
+@query("q126_interval_coverage", oracle=Q126_ORACLE)
 def q126_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per customer: the union length of their orders' shipping
     intervals — merge-overlapping-intervals as a distributed sweep.
@@ -712,6 +718,7 @@ TA_BURST_ORACLE = f"""
 """
 
 
+@query("ta_burstiness_cg", oracle=TA_BURST_ORACLE)
 def ta_burstiness_cg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Variance-to-mean ratio (exact ppm) of per-document counts for
     the {TA_BURST_TOP} highest-document-frequency tokens — the
@@ -792,6 +799,7 @@ MM_PQ_ORACLE = """
 """
 
 
+@query("mm_parquet_footer", oracle=MM_PQ_ORACLE)
 def mm_parquet_footer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: build a parquet-shaped file (PAR1 magic at both
     ends, real row-group byte runs, thrift compact FileMetaData
@@ -882,6 +890,7 @@ MM_ZSTD_ORACLE = """
 """
 
 
+@query("mm_zstd_frames", oracle=MM_ZSTD_ORACLE)
 def mm_zstd_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: build an RFC 8878 zstd stream (data frames with
     raw/RLE blocks + skippable frames) and strictly re-walk it —
@@ -968,6 +977,7 @@ Q127_ORACLE = """
 """
 
 
+@query("q127_event_funnel", oracle=Q127_ORACLE)
 def q127_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered conversion funnel over the events stream: per user, the
     earliest view, the earliest click STRICTLY after that view, the
@@ -1072,6 +1082,7 @@ def q127_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # matters at 100 TB: the same K-row merge works per partition, per
 # executor, per micro-batch, or per day of arrivals.
 # ---------------------------------------------------------------------------
+@query("stream_bottomk_incremental", oracle=CURATE_BOTTOMK_ORACLE)
 def stream_bottomk_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1228,6 +1239,7 @@ DEDUP_SUBSTR_ORACLE = f"""
 """
 
 
+@query("dedup_exact_substring", oracle=DEDUP_SUBSTR_ORACLE)
 def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: how much of it is an EXACT {SUBSTR_W}-token run
     that also appears verbatim in another document — sliding windows
@@ -1397,6 +1409,7 @@ def _lsh_curve_oracle() -> str:
     """
 
 
+@query("dedup_lsh_band_curve", oracle=_lsh_curve_oracle())
 def dedup_lsh_band_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LSH banding S-curve, measured on this corpus: for bandings
     (2x8, 4x4, 8x2) over the SAME 16-value MinHash signatures, the
@@ -1494,51 +1507,3 @@ def dedup_lsh_band_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             " div nullif(n_candidates, 0), 0) AS BIGINT)"
         ).alias("precision_ppm"),
     )
-
-
-def _staged() -> dict:
-    return {
-        "mm_orc_postscript": (mm_orc_postscript, MM_ORC_ORACLE),
-        "mm_arrow_ipc": (mm_arrow_ipc, MM_ARROW_ORACLE),
-        "sim_hnsw_m_recall": (
-            sim_hnsw_m_recall,
-            _hnsw_m_recall_oracle(),
-        ),
-        "ta_kl_mixture": (ta_kl_mixture, TA_KL_ORACLE),
-        "curate_bottomk_sample": (
-            curate_bottomk_sample,
-            CURATE_BOTTOMK_ORACLE,
-        ),
-        "skew_key_entropy": (skew_key_entropy, SKEW_ENTROPY_ORACLE),
-        "q126_interval_coverage": (
-            q126_interval_coverage,
-            Q126_ORACLE,
-        ),
-        "ta_burstiness_cg": (ta_burstiness_cg, TA_BURST_ORACLE),
-        "mm_parquet_footer": (mm_parquet_footer, MM_PQ_ORACLE),
-        "mm_zstd_frames": (mm_zstd_frames, MM_ZSTD_ORACLE),
-        "q127_event_funnel": (q127_event_funnel, Q127_ORACLE),
-        "stream_bottomk_incremental": (
-            stream_bottomk_incremental,
-            CURATE_BOTTOMK_ORACLE,
-        ),
-        "dedup_exact_substring": (
-            dedup_exact_substring,
-            DEDUP_SUBSTR_ORACLE,
-        ),
-        "dedup_lsh_band_curve": (
-            dedup_lsh_band_curve,
-            _lsh_curve_oracle(),
-        ),
-    }
-
-
-#: flip: registry.load_all() adds register_staged() for this module.
-STAGED: dict[str, tuple] = _staged()
-
-
-def register_staged() -> None:
-    """Registration hook: called from registry.load_all(). Idempotent."""
-    from eeecs485_p4_mapreduce_spark.registry import register_staged_dict
-
-    register_staged_dict(STAGED)

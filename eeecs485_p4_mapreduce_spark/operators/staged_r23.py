@@ -1,15 +1,13 @@
-"""Queries STAGED for the next registration round (r23 pipeline),
-keeping the every-round staging tradition after the staged_r22 flip.
+"""Registered queries of the r23 pipeline (each with ``@query``).
 
-Same discipline as operators/staged_r9-r22: built, pytest hash-checked
-against DuckDB at sf0.001 and sf0.01 (tests/test_staged_r23.py),
-fixture-tested with independent references, plan-gate swept (incl. the
-CartesianProduct gate), and x10/x100 replica-probed BEFORE
-registration. Same contract as every registered query: identical
-aliases both sides, round()-ed or integer-exact outputs, no nullable
-hash-bearing columns.
+Same discipline as operators/staged_r9-r22: built, hash-checked against
+DuckDB at sf0.001 and sf0.01, fixture-tested with independent references
+(tests/test_staged_r23.py), plan-gate swept (incl. the CartesianProduct
+gate), and x10/x100 replica-probed before registration. Same contract as
+every registered query: identical aliases both sides, round()-ed or
+integer-exact outputs, no nullable hash-bearing columns.
 
-Staged surface:
+Surface:
 
 - ``mm_parquet_datapage`` — the r11 verdict's prescribed extension of
   mm_parquet_footer's thrift walk into REAL columnar value reads: a
@@ -92,6 +90,7 @@ from pyspark.sql.window import Window
 
 from eeecs485_p4_mapreduce_spark.catalog import load_table, pin_disk
 from eeecs485_p4_mapreduce_spark.functions.text import hash32
+from eeecs485_p4_mapreduce_spark.registry import query
 
 _DUCK_TOKS = "string_split_regex(lower(text), '[ \t]')"
 
@@ -183,6 +182,7 @@ def _pq_datapage_spool(spark: SparkSession, sf_dir: str) -> str:
     return cached_layout(spark, sf_dir, "pq_datapage", build)
 
 
+@query("mm_parquet_datapage", oracle=MM_DATAPAGE_ORACLE)
 def mm_parquet_datapage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode every (doc_id, source) row back out of real parquet
     bytes — thrift FileMetaData, v1 page headers, PLAIN int64 pages,
@@ -315,6 +315,7 @@ CURATE_BLOOM_ORACLE = f"""
 """
 
 
+@query("curate_bloom_contamination", oracle=CURATE_BLOOM_ORACLE)
 def curate_bloom_contamination(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -495,6 +496,7 @@ DEDUP_UNICODE_ORACLE = f"""
 """
 
 
+@query("dedup_unicode_canonical", oracle=DEDUP_UNICODE_ORACLE)
 def dedup_unicode_canonical(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -581,6 +583,7 @@ DEDUP_CDC_ORACLE = f"""
 """
 
 
+@query("dedup_cdc_chunking", oracle=DEDUP_CDC_ORACLE)
 def dedup_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document shared chunks under content-defined boundaries
     (see section comment). Chunks assemble row-locally via one
@@ -675,6 +678,7 @@ MM_DEFLATE_ORACLE = f"""
 """
 
 
+@query("mm_deflate_fixed_huffman", oracle=MM_DEFLATE_ORACLE)
 def mm_deflate_fixed_huffman(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -794,6 +798,7 @@ MM_DEFLATE_DYN_ORACLE = f"""
 """
 
 
+@query("mm_deflate_dynamic_huffman", oracle=MM_DEFLATE_DYN_ORACLE)
 def mm_deflate_dynamic_huffman(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -898,6 +903,7 @@ TA_KWIC_ORACLE = f"""
 """
 
 
+@query("ta_kwic_concordance", oracle=TA_KWIC_ORACLE)
 def ta_kwic_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concordance lines (term, 1-based position, +-3-token contexts)
     for the corpus's own top frequent long tokens. One token-count
@@ -1011,6 +1017,7 @@ Q128_KM_ORACLE = """
 """
 
 
+@query("q128_survival_km", oracle=Q128_KM_ORACLE)
 def q128_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier curve over order fulfillment durations (see the
     section comment for the risk-set algebra and why the global
@@ -1131,6 +1138,7 @@ CURATE_DOREMI_ORACLE = f"""
 """
 
 
+@query("curate_doremi_step", oracle=CURATE_DOREMI_ORACLE)
 def curate_doremi_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One domain-reweighting step for a training mixture (see the
     section comment for the fixed-point scales). The loss proxy is a
@@ -1222,6 +1230,7 @@ SKEW_TOPN_ORACLE = f"""
 """
 
 
+@query("skew_twophase_topn", oracle=SKEW_TOPN_ORACLE)
 def skew_twophase_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase (salted) top-{N} events per event_type (see the
     section comment; same skew discipline as skew_salted_agg, applied
@@ -1310,6 +1319,7 @@ MM_GZIP_INFLATE_ORACLE = f"""
 """
 
 
+@query("mm_gzip_inflate", oracle=MM_GZIP_INFLATE_ORACLE)
 def mm_gzip_inflate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per doc: hand-build a multi-member gzip stream (closed-form
     member payloads, full header feature rotation, level-9 deflate
@@ -1480,6 +1490,7 @@ def _kcenter_oracle() -> str:
 CURATE_KCENTER_ORACLE = _kcenter_oracle()
 
 
+@query("curate_coreset_kcenter", oracle=CURATE_KCENTER_ORACLE)
 def curate_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Farthest-first coreset of CORESET_K exemplar embeddings (see
     section comment). Returns (rank, id, dist_sq) where dist_sq is
@@ -1593,6 +1604,7 @@ def _kcore_oracle() -> str:
 Q129_KCORE_ORACLE = _kcore_oracle()
 
 
+@query("q129_kcore_peel", oracle=Q129_KCORE_ORACLE)
 def q129_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """{KCORE_ROUNDS} degree-peeling rounds at the data-derived
     threshold K = floor(|E|/|N|) over the observed part–supplier
@@ -1634,11 +1646,12 @@ def q129_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     #     defeating exchange reuse; identical children collapse to one
     #     broadcast per round (ReusedExchange).
     d0 = degrees(edges).transform(pin_disk)
-    k = int(
-        d0.agg(
-            F.expr("(sum(c) div 2) div count(1)").alias("k")
-        ).first()[0]
-    )
+    k = d0.agg(
+        F.expr("(sum(c) div 2) div count(1)").alias("k")
+    ).first()[0]
+    # An empty edge table has a NULL sum: no node survives any K, so
+    # K = 0 yields the oracle's empty result.
+    k = 0 if k is None else int(k)
 
     from eeecs485_p4_mapreduce_spark.catalog import dump_plan_evidence
 
@@ -1725,6 +1738,7 @@ Q130_BOOT_ORACLE = f"""
 """
 
 
+@query("q130_bootstrap_ci", oracle=Q130_BOOT_ORACLE)
 def q130_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """95% Poisson-bootstrap CI for mean order value per priority
     (see section comment — {BOOT_B} deterministic replicas fold
@@ -1789,47 +1803,3 @@ def q130_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     return point.join(F.broadcast(ci), "prio").select(
         "prio", "n_orders", "mean_cents", "boot_lo", "boot_hi"
     )
-
-
-def _staged() -> dict:
-    return {
-        "mm_parquet_datapage": (mm_parquet_datapage, MM_DATAPAGE_ORACLE),
-        "mm_deflate_fixed_huffman": (
-            mm_deflate_fixed_huffman,
-            MM_DEFLATE_ORACLE,
-        ),
-        "mm_deflate_dynamic_huffman": (
-            mm_deflate_dynamic_huffman,
-            MM_DEFLATE_DYN_ORACLE,
-        ),
-        "mm_gzip_inflate": (mm_gzip_inflate, MM_GZIP_INFLATE_ORACLE),
-        "ta_kwic_concordance": (ta_kwic_concordance, TA_KWIC_ORACLE),
-        "q128_survival_km": (q128_survival_km, Q128_KM_ORACLE),
-        "q129_kcore_peel": (q129_kcore_peel, Q129_KCORE_ORACLE),
-        "q130_bootstrap_ci": (q130_bootstrap_ci, Q130_BOOT_ORACLE),
-        "dedup_cdc_chunking": (dedup_cdc_chunking, DEDUP_CDC_ORACLE),
-        "dedup_unicode_canonical": (
-            dedup_unicode_canonical,
-            DEDUP_UNICODE_ORACLE,
-        ),
-        "curate_bloom_contamination": (
-            curate_bloom_contamination,
-            CURATE_BLOOM_ORACLE,
-        ),
-        "curate_doremi_step": (curate_doremi_step, CURATE_DOREMI_ORACLE),
-        "skew_twophase_topn": (skew_twophase_topn, SKEW_TOPN_ORACLE),
-        "curate_coreset_kcenter": (
-            curate_coreset_kcenter,
-            CURATE_KCENTER_ORACLE,
-        ),
-    }
-
-
-STAGED = _staged()
-
-
-def register_staged() -> None:
-    """Registration hook: called from registry.load_all(). Idempotent."""
-    from eeecs485_p4_mapreduce_spark.registry import register_staged_dict
-
-    register_staged_dict(STAGED)

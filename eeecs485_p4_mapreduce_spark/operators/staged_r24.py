@@ -1,15 +1,13 @@
-"""Queries STAGED for the next registration round (r24 pipeline),
-keeping the every-round staging tradition after the staged_r23 flip.
+"""Registered queries of the r24 pipeline (each with ``@query``).
 
-Same discipline as operators/staged_r9-r23: built, pytest hash-checked
-against DuckDB at sf0.001 and sf0.01 (tests/test_staged_r24.py),
-fixture-tested with independent references, plan-gate swept (incl. the
-CartesianProduct gate), and x10/x100 replica-probed BEFORE
-registration. Same contract as every registered query: identical
-aliases both sides, round()-ed or integer-exact outputs, no nullable
-hash-bearing columns.
+Same discipline as operators/staged_r9-r23: built, hash-checked against
+DuckDB at sf0.001 and sf0.01, fixture-tested with independent references
+(tests/test_staged_r24.py), plan-gate swept (incl. the CartesianProduct
+gate), and x10/x100 replica-probed before registration. Same contract as
+every registered query: identical aliases both sides, round()-ed or
+integer-exact outputs, no nullable hash-bearing columns.
 
-Staged surface (see each section comment for the scale argument):
+Surface (see each section comment for the scale argument):
 
 - ``q131_cusum_changepoint`` — CUSUM changepoint detection over the
   daily order-count series, all-integer (deviations scaled by n so no
@@ -78,6 +76,7 @@ from eeecs485_p4_mapreduce_spark.catalog import (
     pin_disk,
     read_parquet_cached,
 )
+from eeecs485_p4_mapreduce_spark.registry import query
 
 _DUCK_TOKS = "string_split_regex(lower(text), '[ \t]')"
 _SPARK_TOKS = "split(lower(text), '[ \t]')"
@@ -132,6 +131,7 @@ Q131_CUSUM_ORACLE = f"""
 """
 
 
+@query("q131_cusum_changepoint", oracle=Q131_CUSUM_ORACLE)
 def q131_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{CUSUM_TOP} CUSUM changepoint candidates over daily order
     counts (see section comment). The only shuffle the fact table pays
@@ -221,6 +221,7 @@ Q133_KS_ORACLE = """
 """
 
 
+@query("q133_ks_test", oracle=Q133_KS_ORACLE)
 def q133_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact two-sample KS statistic between returned / non-returned
     quantity distributions (see section comment): one value-grain
@@ -330,6 +331,7 @@ Q132_SAX_ORACLE = f"""
 """
 
 
+@query("q132_sax_symbols", oracle=Q132_SAX_ORACLE)
 def q132_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SAX symbolization of daily revenue (see section comment): one
     day-grain shuffle on the fact table, then SAX_W-row relations all
@@ -452,6 +454,7 @@ SKEW_RB_ORACLE = f"""
 """
 
 
+@query("skew_range_balance", oracle=SKEW_RB_ORACLE)
 def skew_range_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range-partitioner balance audit over l_orderkey (see section
     comment): deterministic sample, two-level exact order statistics,
@@ -561,6 +564,7 @@ CURATE_TB_ORACLE = f"""
 """
 
 
+@query("curate_token_budget_cap", oracle=CURATE_TB_ORACLE)
 def curate_token_budget_cap(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -643,6 +647,7 @@ TA_RENYI_ORACLE = f"""
 """
 
 
+@query("ta_renyi_repetition", oracle=TA_RENYI_ORACLE)
 def ta_renyi_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc Rényi-2 collision probability in ppm (see section
     comment): token explode → fingerprint → (doc, fp) partial count →
@@ -714,6 +719,7 @@ TA_DSIR_ORACLE = f"""
 """
 
 
+@query("ta_dsir_quantized", oracle=TA_DSIR_ORACLE)
 def ta_dsir_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantized DSIR importance per document (see section comment):
     hashed-unigram bucket LM (broadcast, DSIR_BUCKETS rows), integer
@@ -803,6 +809,7 @@ def _dedup_bbit_oracle() -> str:
 DEDUP_BBIT_ORACLE = _dedup_bbit_oracle()
 
 
+@query("dedup_bbit_minhash", oracle=DEDUP_BBIT_ORACLE)
 def dedup_bbit_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """b-bit MinHash Jaccard estimation over the banded candidate
     pairs (see section comment): one signature build (persisted
@@ -984,6 +991,7 @@ def _sim_rp_oracle() -> str:
 SIM_RP_ORACLE = _sim_rp_oracle()
 
 
+@query("sim_rp_lsh_cosine", oracle=SIM_RP_ORACLE)
 def sim_rp_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH candidate generation + exact cosine
     rerank, top-{RP_TOPK} per query (see section comment). One
@@ -1069,6 +1077,7 @@ MM_LZ4_ORACLE = f"""
 """
 
 
+@query("mm_lz4_block_decode", oracle=MM_LZ4_ORACLE)
 def mm_lz4_block_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-trip every doc's closed-form payload through the hand LZ4
     block codec (see section comment); the oracle hash proves the
@@ -1162,6 +1171,7 @@ MM_TIFF_ORACLE = """
 """
 
 
+@query("mm_tiff_strip_decode", oracle=MM_TIFF_ORACLE)
 def mm_tiff_strip_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build + hand-decode one grayscale TIFF per doc (see section
     comment); emits only closed-form-recomputable geometry and the
@@ -1237,6 +1247,7 @@ MM_RIFF_ORACLE = """
 """
 
 
+@query("mm_riff_webp", oracle=MM_RIFF_ORACLE)
 def mm_riff_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build + walk one RIFF/WEBP container per doc (see section
     comment); the oracle recomputes every column closed-form from
@@ -1373,6 +1384,7 @@ def _pq_v2_spool(spark: SparkSession, sf_dir: str) -> str:
     return cached_layout(spark, sf_dir, "pq_datapage_v2", build)
 
 
+@query("mm_parquet_datapage_v2", oracle=MM_DATAPAGE_V2_ORACLE)
 def mm_parquet_datapage_v2(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1453,6 +1465,7 @@ STREAM_SEMDEDUP_ORACLE = """
 """
 
 
+@query("stream_semantic_dedup", oracle=STREAM_SEMDEDUP_ORACLE)
 def stream_semantic_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1581,6 +1594,7 @@ Q134_MW_ORACLE = """
 """
 
 
+@query("q134_mann_whitney", oracle=Q134_MW_ORACLE)
 def q134_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Mann-Whitney U with midrank tie handling (see section
     comment): value-grain counts, doubled-rank integer arithmetic,
@@ -1673,6 +1687,7 @@ Q135_EWMA_ORACLE = """
 """
 
 
+@query("q135_ewma_spikes", oracle=Q135_EWMA_ORACLE)
 def q135_ewma_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EWMA spike detection over daily revenue (see section comment):
     day-grain reduction, one array fold for the recurrence, exact
@@ -1710,43 +1725,3 @@ def q135_ewma_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return daily.agg(
         F.expr(fold).alias("rows")
     ).selectExpr("inline(rows)")
-
-
-def _staged() -> dict:
-    return {
-        "q131_cusum_changepoint": (q131_cusum_changepoint, Q131_CUSUM_ORACLE),
-        "q133_ks_test": (q133_ks_test, Q133_KS_ORACLE),
-        "q132_sax_symbols": (q132_sax_symbols, Q132_SAX_ORACLE),
-        "skew_range_balance": (skew_range_balance, SKEW_RB_ORACLE),
-        "curate_token_budget_cap": (
-            curate_token_budget_cap,
-            CURATE_TB_ORACLE,
-        ),
-        "ta_renyi_repetition": (ta_renyi_repetition, TA_RENYI_ORACLE),
-        "ta_dsir_quantized": (ta_dsir_quantized, TA_DSIR_ORACLE),
-        "dedup_bbit_minhash": (dedup_bbit_minhash, DEDUP_BBIT_ORACLE),
-        "sim_rp_lsh_cosine": (sim_rp_lsh_cosine, SIM_RP_ORACLE),
-        "mm_lz4_block_decode": (mm_lz4_block_decode, MM_LZ4_ORACLE),
-        "mm_tiff_strip_decode": (mm_tiff_strip_decode, MM_TIFF_ORACLE),
-        "mm_riff_webp": (mm_riff_webp, MM_RIFF_ORACLE),
-        "mm_parquet_datapage_v2": (
-            mm_parquet_datapage_v2,
-            MM_DATAPAGE_V2_ORACLE,
-        ),
-        "stream_semantic_dedup": (
-            stream_semantic_dedup,
-            STREAM_SEMDEDUP_ORACLE,
-        ),
-        "q134_mann_whitney": (q134_mann_whitney, Q134_MW_ORACLE),
-        "q135_ewma_spikes": (q135_ewma_spikes, Q135_EWMA_ORACLE),
-    }
-
-
-STAGED = _staged()
-
-
-def register_staged() -> None:
-    """Registration hook: called from registry.load_all(). Idempotent."""
-    from eeecs485_p4_mapreduce_spark.registry import register_staged_dict
-
-    register_staged_dict(STAGED)

@@ -1,15 +1,16 @@
-"""Queries STAGED for the next registration round (r25 pipeline),
-keeping the every-round staging tradition after the staged_r24 flip.
+"""Candidate queries that are built and tested but not registered:
+no function here carries ``@query``, so ``registry.load_all()`` never
+sees them and the driver's query surface stays as it is.
 
-Same discipline as operators/staged_r9-r24: built, pytest hash-checked
-against DuckDB at sf0.001 and sf0.01 (tests/test_staged_r25.py),
-fixture-tested with independent references, plan-gate swept (incl. the
-CartesianProduct gate), and x10/x100 replica-probed BEFORE
-registration. Same contract as every registered query: identical
-aliases both sides, round()-ed or integer-exact outputs, no nullable
-hash-bearing columns.
+Same discipline as operators/staged_r9-r24: pytest hash-checked
+against DuckDB at sf0.001 and sf0.01 (tests/test_staged_r25.py owns
+the name -> (fn, oracle) table), fixture-tested with independent
+references, plan-gate swept (incl. the CartesianProduct gate), and
+x10/x100 replica-probed. Same contract as every registered query:
+identical aliases both sides, round()-ed or integer-exact outputs, no
+nullable hash-bearing columns.
 
-Staged surface (see each section comment for the scale argument):
+Candidate surface (see each section comment for the scale argument):
 
 - ``q136_ktruss_edges`` — k-truss peeling on the co-purchase graph:
   per-edge triangle support, edges below the data-derived support
@@ -2090,57 +2091,3 @@ def stream_join_amplification(
         f" AS BIGINT) AS top{TOPK_AMP}_share_ppm",
     )
 
-
-def _staged() -> dict:
-    return {
-        "q136_ktruss_edges": (q136_ktruss_edges, Q136_KTRUSS_ORACLE),
-        "q138_hill_tail_index": (q138_hill_tail_index, Q138_HILL_ORACLE),
-        "q139_spearman_rho": (q139_spearman_rho, Q139_SPEARMAN_ORACLE),
-        "sim_ivf_delta_upsert": (
-            sim_ivf_delta_upsert,
-            SIM_IVF_DELTA_ORACLE,
-        ),
-        "sim_ivf_upsert_search": (
-            sim_ivf_upsert_search,
-            SIM_IVF_UPSERT_SEARCH_ORACLE,
-        ),
-        "stream_ann_upsert": (stream_ann_upsert, STREAM_ANN_UPSERT_ORACLE),
-        "mm_mpeg1_layer1_subbands": (
-            mm_mpeg1_layer1_subbands,
-            MM_L1_ORACLE,
-        ),
-        "mm_png_adam7": (mm_png_adam7, MM_ADAM7_ORACLE),
-        "mm_zip64_eocd": (mm_zip64_eocd, MM_ZIP64_ORACLE),
-        "dedup_winnowing": (dedup_winnowing, DEDUP_WINNOW_ORACLE),
-        "q137_local_clustering": (
-            q137_local_clustering,
-            Q137_LCC_ORACLE,
-        ),
-        "q140_degree_assortativity": (
-            q140_degree_assortativity,
-            Q140_ASSORT_ORACLE,
-        ),
-        "ta_msttr_segments": (ta_msttr_segments, TA_MSTTR_ORACLE),
-        "skew_join_amplification": (
-            skew_join_amplification,
-            SKEW_AMP_ORACLE,
-        ),
-        "sim_graph_delta_link": (
-            sim_graph_delta_link,
-            SIM_GRAPH_DELTA_ORACLE,
-        ),
-        "stream_join_amplification": (
-            stream_join_amplification,
-            SKEW_AMP_ORACLE,
-        ),
-    }
-
-
-STAGED = _staged()
-
-
-def register_staged() -> None:
-    """Registration hook: called from registry.load_all(). Idempotent."""
-    from eeecs485_p4_mapreduce_spark.registry import register_staged_dict
-
-    register_staged_dict(STAGED)

@@ -3,12 +3,11 @@
 Round 6 had already used the ~10-query per-round registration budget
 (the rotation-coverage cap set by the round-4 verdict: the driver's
 50-slot window must keep cycling the proven block every ~4 rounds), so
-these nine were staged — implemented, pytest hash-checked against
-DuckDB (tests/test_staged_r7.py), plan-gate compliant and x10-probed in
-round 6 — then promoted to the graded surface in round 7 via
-``register_staged()`` (called from ``registry.load_all``). Same
-contract as every registered query: identical aliases both sides,
-round()-ed or integer-exact outputs, no nullable hash-bearing columns.
+these nine were implemented, pytest hash-checked against DuckDB,
+plan-gate compliant and x10-probed in round 6, then joined the graded
+surface in round 7. Each registers with ``@query``. Same contract as
+every registered query: identical aliases both sides, round()-ed or
+integer-exact outputs, no nullable hash-bearing columns.
 
 Surface:
 
@@ -51,6 +50,7 @@ from eeecs485_p4_mapreduce_spark.catalog import (
     read_parquet_cached,
     spread_small_source,
 )
+from eeecs485_p4_mapreduce_spark.registry import query
 
 INTERVAL_US = 300_000_000  # 5-minute activity window, as q57
 
@@ -89,6 +89,7 @@ Q76_ORACLE = f"""
 """
 
 
+@query("q76_interval_coverage", oracle=Q76_ORACLE)
 def q76_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Union-of-intervals coverage per user: each event opens a 5-minute
     activity interval; overlapping/touching intervals merge into runs
@@ -213,6 +214,7 @@ def _exact_median2x(counts: DataFrame, group: str, val: str) -> DataFrame:
     )
 
 
+@query("q77_mad_outliers", oracle=Q77_ORACLE)
 def q77_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Median-Absolute-Deviation outliers per event_type — the robust
     twin of q63's 3-sigma rule (one wild value can't drag the center or
@@ -329,6 +331,7 @@ TA_RAKE_ORACLE = f"""
 """
 
 
+@query("ta_rake_keywords", oracle=TA_RAKE_ORACLE)
 def ta_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus top-{RAKE_TOP_K} RAKE keyphrases (see section comment).
     Empty tokens (consecutive separators) delimit phrases exactly like
@@ -442,6 +445,7 @@ DEDUP_SPANS_ORACLE = f"""
 """
 
 
+@query("dedup_substring_spans", oracle=DEDUP_SPANS_ORACLE)
 def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate K-token spans across documents (see section comment).
     Spark generates each doc's windows ARRAY-SIDE (one index-aware
@@ -491,6 +495,60 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _ivfpq_oracle() -> str:
+    from eeecs485_p4_mapreduce_spark.operators.similarity import (
+        _DUCK_IVF_CELLS,
+        _DUCK_PQ_CTES,
+        N_QUERIES,
+        NPROBE,
+        TOP_K,
+    )
+
+    return f"""
+    WITH {_DUCK_IVF_CELLS},
+    {_DUCK_PQ_CTES},
+    cells2 AS (
+      SELECT vec_id, c_label AS cell FROM scored WHERE rnk = 1
+    ),
+    probes2 AS (
+      SELECT vec_id AS query_id, c_label AS cell
+      FROM scored WHERE vec_id < {N_QUERIES} AND rnk <= {NPROBE}
+    ),
+    wide AS (
+      SELECT vec_id,
+             max(CASE WHEN subspace = 0 THEN code END) AS c0,
+             max(CASE WHEN subspace = 1 THEN code END) AS c1,
+             max(CASE WHEN subspace = 2 THEN code END) AS c2,
+             max(CASE WHEN subspace = 3 THEN code END) AS c3
+      FROM pqa GROUP BY vec_id
+    ),
+    qd AS (SELECT * FROM pqd WHERE vec_id < {N_QUERIES})
+    SELECT query_id, neighbor_id, rank, round(adc, 4) AS adc_dist
+    FROM (
+      SELECT p.query_id, w.vec_id AS neighbor_id,
+             q0.qerr + q1.qerr + q2.qerr + q3.qerr AS adc,
+             row_number() OVER (
+               PARTITION BY p.query_id
+               ORDER BY q0.qerr + q1.qerr + q2.qerr + q3.qerr, w.vec_id
+             ) AS rank
+      FROM (SELECT DISTINCT c2.vec_id, p2.query_id
+            FROM cells2 c2 JOIN probes2 p2 ON c2.cell = p2.cell
+            WHERE c2.vec_id <> p2.query_id) p
+      JOIN wide w ON w.vec_id = p.vec_id
+      JOIN qd q0 ON q0.vec_id = p.query_id AND q0.subspace = 0
+                AND q0.code = w.c0
+      JOIN qd q1 ON q1.vec_id = p.query_id AND q1.subspace = 1
+                AND q1.code = w.c1
+      JOIN qd q2 ON q2.vec_id = p.query_id AND q2.subspace = 2
+                AND q2.code = w.c2
+      JOIN qd q3 ON q3.vec_id = p.query_id AND q3.subspace = 3
+                AND q3.code = w.c3
+    )
+    WHERE rank <= {TOP_K}
+"""
+
+
+@query("sim_ivfpq_search", oracle=_ivfpq_oracle())
 def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC top-k restricted to IVF cells (see section comment). Reuses
     the registered building blocks: _centroids_packed/_ASSIGN_SORTED for
@@ -597,59 +655,6 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivfpq_oracle() -> str:
-    from eeecs485_p4_mapreduce_spark.operators.similarity import (
-        _DUCK_IVF_CELLS,
-        _DUCK_PQ_CTES,
-        N_QUERIES,
-        NPROBE,
-        TOP_K,
-    )
-
-    return f"""
-    WITH {_DUCK_IVF_CELLS},
-    {_DUCK_PQ_CTES},
-    cells2 AS (
-      SELECT vec_id, c_label AS cell FROM scored WHERE rnk = 1
-    ),
-    probes2 AS (
-      SELECT vec_id AS query_id, c_label AS cell
-      FROM scored WHERE vec_id < {N_QUERIES} AND rnk <= {NPROBE}
-    ),
-    wide AS (
-      SELECT vec_id,
-             max(CASE WHEN subspace = 0 THEN code END) AS c0,
-             max(CASE WHEN subspace = 1 THEN code END) AS c1,
-             max(CASE WHEN subspace = 2 THEN code END) AS c2,
-             max(CASE WHEN subspace = 3 THEN code END) AS c3
-      FROM pqa GROUP BY vec_id
-    ),
-    qd AS (SELECT * FROM pqd WHERE vec_id < {N_QUERIES})
-    SELECT query_id, neighbor_id, rank, round(adc, 4) AS adc_dist
-    FROM (
-      SELECT p.query_id, w.vec_id AS neighbor_id,
-             q0.qerr + q1.qerr + q2.qerr + q3.qerr AS adc,
-             row_number() OVER (
-               PARTITION BY p.query_id
-               ORDER BY q0.qerr + q1.qerr + q2.qerr + q3.qerr, w.vec_id
-             ) AS rank
-      FROM (SELECT DISTINCT c2.vec_id, p2.query_id
-            FROM cells2 c2 JOIN probes2 p2 ON c2.cell = p2.cell
-            WHERE c2.vec_id <> p2.query_id) p
-      JOIN wide w ON w.vec_id = p.vec_id
-      JOIN qd q0 ON q0.vec_id = p.query_id AND q0.subspace = 0
-                AND q0.code = w.c0
-      JOIN qd q1 ON q1.vec_id = p.query_id AND q1.subspace = 1
-                AND q1.code = w.c1
-      JOIN qd q2 ON q2.vec_id = p.query_id AND q2.subspace = 2
-                AND q2.code = w.c2
-      JOIN qd q3 ON q3.vec_id = p.query_id AND q3.subspace = 3
-                AND q3.code = w.c3
-    )
-    WHERE rank <= {TOP_K}
-"""
-
-
 # ---------------------------------------------------------------------------
 # Real VIDEO-container decode, graded: each document synthesizes an
 # AVI/MJPG file (RIFF writer + the real baseline-JPEG encoder), and the
@@ -696,6 +701,7 @@ MM_AVI_ORACLE = """
 """
 
 
+@query("mm_avi_mjpeg_frames", oracle=MM_AVI_ORACLE)
 def mm_avi_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: build an AVI/MJPG of 2-3 constant-grey frames,
     decode container + frames for real, and emit exact header columns,
@@ -825,6 +831,7 @@ TA_PMI_ORACLE = f"""
 """
 
 
+@query("ta_pmi_collocations", oracle=TA_PMI_ORACLE)
 def ta_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus top-{PMI_TOP_K} PMI collocations (see section comment).
     Bigram and unigram counts reduce map-side to vocabulary size; the
@@ -917,6 +924,7 @@ STREAM_CDC_ORACLE = """
 """
 
 
+@query("stream_cdc_snapshot", oracle=STREAM_CDC_ORACLE)
 def stream_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC changelog applied into a stored snapshot via foreachBatch
     (see section comment). At 100 TB the merge's shuffle is keyed on
@@ -1063,6 +1071,7 @@ MM_SRT_ORACLE = """
 """
 
 
+@query("mm_srt_subtitles", oracle=MM_SRT_ORACLE)
 def mm_srt_subtitles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: synthesize an SRT caption track (3-6 cues, second
     text line on alternating cues), parse it back with the real SubRip
@@ -1120,22 +1129,3 @@ def mm_srt_subtitles(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(out)
 
     return spread_small_source(docs.select("doc_id")).mapInPandas(run, schema)
-
-
-STAGED: dict[str, tuple] = {
-    "q76_interval_coverage": (q76_interval_coverage, Q76_ORACLE),
-    "q77_mad_outliers": (q77_mad_outliers, Q77_ORACLE),
-    "ta_rake_keywords": (ta_rake_keywords, TA_RAKE_ORACLE),
-    "dedup_substring_spans": (dedup_substring_spans, DEDUP_SPANS_ORACLE),
-    "sim_ivfpq_search": (sim_ivfpq_search, _ivfpq_oracle()),
-    "mm_avi_mjpeg_frames": (mm_avi_mjpeg_frames, MM_AVI_ORACLE),
-    "ta_pmi_collocations": (ta_pmi_collocations, TA_PMI_ORACLE),
-    "stream_cdc_snapshot": (stream_cdc_snapshot, STREAM_CDC_ORACLE),
-    "mm_srt_subtitles": (mm_srt_subtitles, MM_SRT_ORACLE),
-}
-
-def register_staged() -> None:
-    """Round-7 flip: call from registry.load_all(). Idempotent."""
-    from eeecs485_p4_mapreduce_spark.registry import register_staged_dict
-
-    register_staged_dict(STAGED)

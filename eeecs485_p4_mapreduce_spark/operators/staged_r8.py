@@ -67,6 +67,7 @@ from eeecs485_p4_mapreduce_spark.catalog import (
     load_table,
     spread_small_source,
 )
+from eeecs485_p4_mapreduce_spark.registry import query
 
 # ---------------------------------------------------------------------------
 # q78: BOM explosion / recursive hierarchy roll-up. TPC-H has no
@@ -106,6 +107,7 @@ Q78_ORACLE = """
 """
 
 
+@query("q78_bom_explosion", oracle=Q78_ORACLE)
 def q78_bom_explosion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Roll every part up to its root assembly (see section comment):
     generic pointer doubling over an (node, parent, qty) edge table.
@@ -206,6 +208,7 @@ Q79_ORACLE = f"""
 """
 
 
+@query("q79_event_pattern", oracle=Q79_ORACLE)
 def q79_event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count non-overlapping regex pattern matches over each user's
     ts-ordered event-type string (see section comment). The per-user
@@ -302,6 +305,7 @@ Q80_ORACLE = """
 """
 
 
+@query("q80_skyline_orders", oracle=Q80_ORACLE)
 def q80_skyline_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pareto-optimal orders in (price up, date down, priority down)
     via the quadrant-running-max characterization (section comment).
@@ -375,6 +379,7 @@ Q81_ORACLE = f"""
 """
 
 
+@query("q81_decayed_engagement", oracle=Q81_ORACLE)
 def q81_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recency-weighted engagement per user (see section comment): one
     broadcast of the corpus max ts, per-row integer decay micros, one
@@ -475,6 +480,7 @@ TA_TEXTRANK_ORACLE = f"""
 """
 
 
+@query("ta_textrank_keywords", oracle=TA_TEXTRANK_ORACLE)
 def ta_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus top-{k} TextRank keywords (see section comment): build
     the undirected co-occurrence edge list once, attach weighted
@@ -576,6 +582,7 @@ CURATE_MIXTURE_ORACLE = f"""
 """
 
 
+@query("curate_domain_temperature", oracle=CURATE_MIXTURE_ORACLE)
 def curate_domain_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled sampling weights per source domain (see
     section comment): one groupBy builds the domain table, one
@@ -649,6 +656,7 @@ MM_MP4_ORACLE = """
 """
 
 
+@query("mm_mp4_boxes", oracle=MM_MP4_ORACLE)
 def mm_mp4_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: synthesize an MP4 box tree and re-walk it with the
     real ISO BMFF parser (see section comment); emit box census,
@@ -741,6 +749,7 @@ MM_MP3_ORACLE = """
 """
 
 
+@query("mm_mp3_frames", oracle=MM_MP3_ORACLE)
 def mm_mp3_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: synthesize a VBR MP3 stream and re-walk it with
     the real MPEG-1 Layer III header parser (see section comment);
@@ -820,6 +829,7 @@ STREAM_QH_ORACLE = """
 """
 
 
+@query("stream_quantile_histogram", oracle=STREAM_QH_ORACLE)
 def stream_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact bucket-median per event_type from a foreachBatch-
     merged histogram snapshot (see section comment), via the shared
@@ -863,29 +873,3 @@ def stream_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, partial, ["event_type", "b"], {"cnt": "sum"},
         finalize, prefix="p4spark_qh_",
     )
-
-
-STAGED: dict[str, tuple] = {
-    "q78_bom_explosion": (q78_bom_explosion, Q78_ORACLE),
-    "q79_event_pattern": (q79_event_pattern, Q79_ORACLE),
-    "q80_skyline_orders": (q80_skyline_orders, Q80_ORACLE),
-    "q81_decayed_engagement": (q81_decayed_engagement, Q81_ORACLE),
-    "ta_textrank_keywords": (ta_textrank_keywords, TA_TEXTRANK_ORACLE),
-    "curate_domain_temperature": (
-        curate_domain_temperature,
-        CURATE_MIXTURE_ORACLE,
-    ),
-    "mm_mp4_boxes": (mm_mp4_boxes, MM_MP4_ORACLE),
-    "mm_mp3_frames": (mm_mp3_frames, MM_MP3_ORACLE),
-    "stream_quantile_histogram": (
-        stream_quantile_histogram,
-        STREAM_QH_ORACLE,
-    ),
-}
-
-
-def register_staged() -> None:
-    """Round-8 flip: call from registry.load_all(). Idempotent."""
-    from eeecs485_p4_mapreduce_spark.registry import register_staged_dict
-
-    register_staged_dict(STAGED)

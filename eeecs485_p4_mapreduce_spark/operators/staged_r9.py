@@ -68,6 +68,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eeecs485_p4_mapreduce_spark.catalog import load_table
+from eeecs485_p4_mapreduce_spark.registry import query
 
 # ---------------------------------------------------------------------------
 # q82: the CSV sink/source contract. Spark's CSV writer quotes fields
@@ -105,6 +106,7 @@ Q82_ORACLE = f"""
 """
 
 
+@query("q82_csv_roundtrip", oracle=Q82_ORACLE)
 def q82_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write an adversarial documents slice through the CSV sink, read
     it back through the CSV source, and aggregate (see section
@@ -197,6 +199,7 @@ Q83_ORACLE = """
 """
 
 
+@query("q83_bfs_hops", oracle=Q83_ORACLE)
 def q83_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min-hop distance from the root parts over tree + shortcut edges
     (see section comment): frontier iteration with min-merge, one
@@ -335,6 +338,7 @@ DEDUP_URL_ORACLE = f"""
 """
 
 
+@query("dedup_url_canonical", oracle=DEDUP_URL_ORACLE)
 def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonicalize synthesized URL variants and collapse duplicates
     (see section comment). All string surgery is JVM-side regex/array
@@ -428,6 +432,7 @@ CURATE_REJ_ORACLE = """
 """
 
 
+@query("curate_rejection_sample", oracle=CURATE_REJ_ORACLE)
 def curate_rejection_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-language rejection sampling via md5-hex
     thresholds (see section comment)."""
@@ -530,6 +535,7 @@ TA_NDCG_ORACLE = f"""
 """
 
 
+@query("ta_ndcg_eval", oracle=TA_NDCG_ORACLE)
 def ta_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NDCG@10 per evaluation query (see section comment): term-
     frequency scoring, TakeOrdered top-10 for the run and the ideal
@@ -648,6 +654,7 @@ SIM_MIPS_ORACLE = f"""
 """
 
 
+@query("sim_mips_search", oracle=SIM_MIPS_ORACLE)
 def sim_mips_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact MIPS top-k plus the executed norm-augmentation reduction
     (see section comment). One broadcast of the query set; the
@@ -769,6 +776,7 @@ MM_TAR_ORACLE = """
 """
 
 
+@query("mm_tar_webdataset", oracle=MM_TAR_ORACLE)
 def mm_tar_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: build a ustar shard and re-walk it with the real
     parser (see section comment). Zero-shuffle Arrow mapInPandas via
@@ -842,6 +850,7 @@ MM_TIFF_ORACLE = """
 """
 
 
+@query("mm_tiff_ifd", oracle=MM_TIFF_ORACLE)
 def mm_tiff_ifd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: write a 1-2 page TIFF in the doc's byte order and
     re-walk the IFD chain with the real parser (see section comment).
@@ -895,6 +904,7 @@ STREAM_TOPK_ORACLE = """
 """
 
 
+@query("stream_topk_windowed", oracle=STREAM_TOPK_ORACLE)
 def stream_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming hourly top-3 event types from a foreachBatch-merged
     count snapshot (see section comment), via the shared mergeable-
@@ -935,26 +945,3 @@ def stream_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, partial, ["window_start", "event_type"],
         {"n_events": "sum"}, finalize, prefix="p4spark_topk_",
     )
-
-
-STAGED: dict[str, tuple] = {
-    "q82_csv_roundtrip": (q82_csv_roundtrip, Q82_ORACLE),
-    "q83_bfs_hops": (q83_bfs_hops, Q83_ORACLE),
-    "dedup_url_canonical": (dedup_url_canonical, DEDUP_URL_ORACLE),
-    "curate_rejection_sample": (
-        curate_rejection_sample,
-        CURATE_REJ_ORACLE,
-    ),
-    "ta_ndcg_eval": (ta_ndcg_eval, TA_NDCG_ORACLE),
-    "sim_mips_search": (sim_mips_search, SIM_MIPS_ORACLE),
-    "mm_tar_webdataset": (mm_tar_webdataset, MM_TAR_ORACLE),
-    "mm_tiff_ifd": (mm_tiff_ifd, MM_TIFF_ORACLE),
-    "stream_topk_windowed": (stream_topk_windowed, STREAM_TOPK_ORACLE),
-}
-
-
-def register_staged() -> None:
-    """Round-9 flip: call from registry.load_all(). Idempotent."""
-    from eeecs485_p4_mapreduce_spark.registry import register_staged_dict
-
-    register_staged_dict(STAGED)

@@ -42,336 +42,6 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# The correctness driver checks the first N registered queries in dict
-# order (round 1 stopped at 50 of 124, leaving whole families unchecked).
-# This list pins the front of the window each round: families with no
-# driver signal yet first, then queries whose oracles changed and need
-# re-validation, then the never-checked events-based relational set.
-# Names not present are skipped; everything else keeps registration order.
-# Queries whose ORACLE text changed: they jump the driver window
-# regardless of prior green rows (the plain priority list skips
-# already-proven names). Each entry maps the query name to the round
-# number of its last PRE-change green row (i.e. the round after which
-# the recheck was requested); the entry SELF-EXPIRES once a green
-# driver row from a strictly later round lands in CORRECTNESS_r*.json,
-# so a forgotten entry cannot permanently consume window slots or
-# re-check an already re-proven query forever.
-DRIVER_FORCE_RECHECK: dict[str, int] = {
-    # r12 adversarial-corpus sweep fixes (requested after round 11;
-    # all four got fresh green rows in CORRECTNESS_r12 — kept here as
-    # expired entries demonstrating the self-expiry mechanism).
-    "curate_weighted_sample": 11,
-    "mm_frame_sample": 11,
-    "mm_thumbnail": 11,
-    "ta_bpe_token_count": 11,
-}
-
-
-def _active_force_recheck(last_green: dict[str, int]) -> list[str]:
-    """Force-recheck names still awaiting a post-change green row: an
-    entry is live until CORRECTNESS_r*.json contains a hash-green row
-    from a round strictly later than the one recorded at request time."""
-    return [
-        n
-        for n, requested in DRIVER_FORCE_RECHECK.items()
-        if n in QUERIES and last_green.get(n, -1) <= requested
-    ]
-
-DRIVER_PRIORITY = [
-    # staged_r24 flips (first driver rows expected in CORRECTNESS_r14)
-    "mm_parquet_datapage_v2",
-    "mm_lz4_block_decode",
-    "mm_tiff_strip_decode",
-    "mm_riff_webp",
-    "sim_rp_lsh_cosine",
-    "dedup_bbit_minhash",
-    "ta_renyi_repetition",
-    "ta_dsir_quantized",
-    "q131_cusum_changepoint",
-    "q132_sax_symbols",
-    "q133_ks_test",
-    "q134_mann_whitney",
-    "q135_ewma_spikes",
-    "skew_range_balance",
-    "curate_token_budget_cap",
-    "stream_semantic_dedup",
-    # staged_r23 flips (first driver rows expected in CORRECTNESS_r13)
-    "mm_parquet_datapage",
-    "mm_deflate_fixed_huffman",
-    "mm_deflate_dynamic_huffman",
-    "mm_gzip_inflate",
-    "ta_kwic_concordance",
-    "q128_survival_km",
-    "q129_kcore_peel",
-    "q130_bootstrap_ci",
-    "dedup_cdc_chunking",
-    "dedup_unicode_canonical",
-    "curate_bloom_contamination",
-    "curate_doremi_step",
-    "skew_twophase_topn",
-    "curate_coreset_kcenter",
-    # staged_r22 flips (first driver rows expected in CORRECTNESS_r12)
-    "mm_orc_postscript",
-    "mm_arrow_ipc",
-    "sim_hnsw_m_recall",
-    "ta_kl_mixture",
-    "curate_bottomk_sample",
-    "skew_key_entropy",
-    "q126_interval_coverage",
-    "ta_burstiness_cg",
-    "mm_parquet_footer",
-    "mm_zstd_frames",
-    "q127_event_funnel",
-    "stream_bottomk_incremental",
-    "dedup_exact_substring",
-    "dedup_lsh_band_curve",
-    # staged_r21 flips (first driver rows expected in CORRECTNESS_r11)
-    "q120_allen_relations",
-    "mm_msgpack_walk",
-    "q121_bitemporal_asof",
-    "dedup_simhash_pigeonhole",
-    "q122_link_prediction",
-    "q123_abc_xyz_matrix",
-    "q124_runs_test",
-    "q125_hhi_concentration",
-    # staged_r20 flips (first driver rows expected in CORRECTNESS_r10)
-    "mm_mkv_ebml",
-    "ta_fertility_census",
-    "ta_zipf_rank_mass",
-    "sim_ivfpq_rerank_recall",
-    "q111_sessionize",
-    "q112_dow_profile",
-    "q113_scd2_dimension",
-    "q114_protobuf_roundtrip",
-    "stream_scd2_incremental",
-    "q115_supplier_skyline",
-    "curate_survivorship_report",
-    "skew_partition_histogram",
-    "mm_qoi_decode",
-    "q116_gini_split",
-    "q117_autocorrelation",
-    "skew_isolated_hot_join",
-    "dedup_prefix_filter_join",
-    "q118_theil_sen",
-    "q119_mann_kendall",
-    "mm_gzip_members",
-    # staged_r19 flips (first driver rows expected in CORRECTNESS_r10)
-    "q109_avro_roundtrip",
-    "skew_zipf_salted_join",
-    "ta_impact_topk",
-    "ta_decontaminate",
-    "q110_cohort_retention",
-    "sim_binary_quantize",
-    "curate_split_assign",
-    # staged_r16–r18 flips (first driver rows expected in CORRECTNESS_r09)
-    "q103_fifo_lots",
-    "q104_ship_lag_percentiles",
-    "q105_wow_change",
-    "q106_basket_lift",
-    "dedup_phonetic_names",
-    "ta_hapax_ratio",
-    "mm_png_metadata",
-    "stream_restart_idempotent",
-    "q107_funnel_steps",
-    "sim_matryoshka_recall",
-    "curate_epoch_allocation",
-    "mm_jpeg_exif",
-    "q108_weighted_median",
-    "mm_aiff_comm",
-    # staged_r10–r15 flips (first driver rows in CORRECTNESS_r08)
-    "q84_trend_regression",
-    "q85_decile_lift",
-    "q86_pit_join",
-    "curate_quota_apportion",
-    "sim_mmr_rerank",
-    "ta_burstiness",
-    "mm_zip_shards",
-    "mm_flac_streaminfo",
-    "stream_new_users",
-    "q87_rfm_segmentation",
-    "q88_changepoint_cusum",
-    "q89_jsonl_roundtrip",
-    "sim_l2_search",
-    "dedup_bucket_stats",
-    "curate_anneal_mixture",
-    "ta_char_gini",
-    "mm_ogg_pages",
-    "mm_pdf_xref",
-    "q90_ks_distance",
-    "q91_spend_gini",
-    "q92_business_days",
-    "q93_benford_digits",
-    "curate_filter_funnel",
-    "dedup_cross_source",
-    "sim_norm_quantiles",
-    "stream_gap_filled_rate",
-    "mm_webp_headers",
-    "q94_orc_roundtrip",
-    "q95_xml_roundtrip",
-    "q96_partitioned_prune",
-    "q97_bucketed_join",
-    "q98_csv_malformed_audit",
-    "curate_shard_manifest",
-    "ta_vocab_growth",
-    "q99_equi_depth_bins",
-    "dedup_minhash_calibration",
-    "stream_dlq_routing",
-    "mm_bmp_rle8",
-    "q100_user_streaks",
-    "q101_rolling_median",
-    "q102_independence_audit",
-    "sim_radius_search",
-    "curate_length_curriculum",
-    "ta_code_detect",
-    "mm_ico_directory",
-    "mm_id3_tags",
-    "stream_lateness_audit",
-    # staged_r9 flip — got their first driver rows in CORRECTNESS_r07
-    "q82_csv_roundtrip",
-    "q83_bfs_hops",
-    "dedup_url_canonical",
-    "curate_rejection_sample",
-    "ta_ndcg_eval",
-    "sim_mips_search",
-    "mm_tar_webdataset",
-    "mm_tiff_ifd",
-    "stream_topk_windowed",
-    # SURVEY §2 workloads — never driver-checked in round 1
-    "mr_wordcount",
-    "mr_wordcount_pipeline",
-    "mr_grep",
-    "mr_grep_sorted",
-    # similarity family — never checked
-    "sim_topk_bruteforce",
-    "sim_lsh_buckets",
-    "sim_ann_lsh",
-    "sim_ivf_label",
-    "sim_ivf_build",
-    "sim_ann_multiprobe",
-    "sim_ivf_search",
-    "sim_embedding_covariance",
-    "sim_random_projection",
-    "sim_topk_projected",
-    "sim_pq_encode",
-    "sim_pq_search",
-    "sim_ann_recall",
-    "sim_label_centroids",
-    "sim_kmeans_step",
-    "sim_cluster_quality",
-    "sim_ivf_recall",
-    # text analysis — never checked
-    "ta_token_stats",
-    "ta_quality_score",
-    "ta_langid",
-    "ta_fingerprint",
-    "ta_top_bigrams",
-    "ta_bpe_token_count",
-    "ta_doc_frequency",
-    "ta_tfidf_top_terms",
-    "ta_pii_scrub",
-    "ta_gopher_repetition",
-    "ta_unigram_logprob",
-    "ta_bpe_merge_candidates",
-    "ta_bigram_logprob",
-    # skew + streaming — never checked
-    "skew_salted_enrich",
-    "skew_salted_agg",
-    "stream_hourly_finalized",
-    "stream_dedup_replay",
-    "stream_sliding_finalized",
-    "stream_click_attribution",
-    "stream_enriched_segment_totals",
-    "stream_incremental_rollup",
-    # round-2 fixes needing driver re-validation (oracle typing / nanos)
-    "dedup_incremental",
-    "dedup_simhash",
-    "pipeline_curate",
-    "curate_sample_stratified",
-    "curate_token_budget",
-    "curate_boilerplate",
-    "mm_byte_histogram",
-    "mm_audio_energy",
-    "mm_scene_cuts",
-    "mm_phash_pairs",
-    "mm_format_sniff",
-    "q18_events_hourly",
-    "q19_sessionize",
-    "q21_json_props",
-    "q22_asof_last_purchase",
-    # never-checked events-based relational (fills the 50-slot window)
-    "q25_event_extremes",
-    "q34_click_attribution",
-    "q35_session_window",
-    "q42_gap_fill_hourly",
-    "q43_sliding_window_trend",
-    "q48_funnel",
-    "q53_retention_cohorts",
-    "q66_incremental_rollup",
-    "q67_range_join_buckets",
-    "q68_profile_orders",
-    "q69_pagerank_step",
-    "q70_cohort_ltv",
-    "q71_correlation_matrix",
-    "curate_export_shards",
-    "curate_oversample_rare",
-    "curate_weighted_sample",
-    "ta_readability",
-    "ta_zipf_slope",
-    "ta_js_divergence",
-    "dedup_suffix_prefix",
-    # Round-3 window tail + the 13 round-4 leftovers, pinned explicitly so
-    # NEWLY REGISTERED queries (which sort by module import order and
-    # could otherwise jump ahead of never-proven relational queries) queue
-    # BEHIND everything still awaiting a driver row.
-    "q23_quantity_band_join",
-    "q24_group_percentiles",
-    "q26_approx_sketches",
-    "q27_status_unpivot",
-    "q28_window_rank_family",
-    "q29_date_features",
-    "q30_grouping_sets",
-    "q31_order_count_distribution",
-    "q32_top_supplier_revenue",
-    "q33_rich_inactive_customers",
-    "q36_volume_shipping",
-    "q37_product_profit",
-    "q38_disjunctive_revenue",
-    "q39_lone_return_suppliers",
-    "q40_sql_surface",
-    "q41_stats_summary",
-    "q44_profile_orders",
-    "q45_market_share",
-    "q46_zvalue_interleave",
-    "q47_share_of_total",
-    "q49_min_cost_supplier",
-    "q50_click_attribution_outer",
-    "q51_dominant_suppliers",
-    "q52_important_value_share",
-    "q54_event_debounce",
-    "q55_range_frame_moving_avg",
-    "q56_rolling_distinct_users",
-    "q57_peak_concurrency",
-    "q58_big_orders",
-    "q59_rolling_distinct_sketch",
-    "q60_value_histogram",
-    "q61_part_affinity",
-    "q62_event_transitions",
-    "q63_value_outliers",
-    "q64_top_suppliers_others",
-    "q65_abc_classification",
-]
-
-
-def register_staged_dict(staged: dict) -> None:
-    """Idempotently register a staging module's {name: (fn, oracle)}
-    dict — load_all() runs on every registry import while module
-    decorators only run once, so staged registration must skip names
-    already present (shared by operators/staged*.py)."""
-    for name, (fn, oracle) in staged.items():
-        if name not in QUERIES:
-            query(name, oracle=oracle)(fn)
-
-
 def _driver_green_rounds() -> dict[str, int]:
     """Map query name -> round number of its MOST RECENT hash-green row
     across every committed CORRECTNESS_r{N}.json at the repo root (the
@@ -400,50 +70,23 @@ def _driver_green_rounds() -> dict[str, int]:
     return last_green
 
 
-def _prioritize() -> None:
-    """Order the registry so the driver's bounded per-round window always
-    reaches the queries with the weakest evidence first:
+def _rotate() -> None:
+    """Order the registry least-recently-green first.
 
-    1. explicit priority names without a green driver row yet,
-    2. all other never-green queries in registration order,
-    3. proven queries ordered by LEAST-RECENTLY-GREEN round (oldest
-       driver evidence first; ties broken by registration order).
-
-    Block 3 is the regression-rotation guarantee: once every query is
-    proven (reached in round 4), a static order would make the driver's
-    ~50-slot window re-check the identical first 50 forever, leaving the
-    other ~110 queries permanently unmonitored. Ordering by the round of
-    each query's most recent green row instead cycles the window through
-    the whole registry (163 queries as of round 5) about every
-    ceil(163/50) ≈ 4 rounds: each driver run stamps its 50 checked
-    queries with the new round number, pushing them to the back of the
-    next round's order. (pytest + tools/oracle_check.py still re-verify
-    the full registry every round regardless of order.) Set ``SPARK_GRAFT_STABLE_ORDER=1`` to skip reordering and
-    keep pure registration order."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_STABLE_ORDER") == "1":
-        return
+    The correctness driver checks only the first ~50 registered queries
+    each round. Sorting on the round of the last green driver row (-1 if
+    none) puts never-checked queries first and then the oldest evidence,
+    so each round's checked queries move to the back and the window
+    cycles through the whole registry. The sort is stable: ties keep
+    registration order.
+    """
     last_green = _driver_green_rounds()
-    reg_idx = {n: i for i, n in enumerate(QUERIES)}
-    force = _active_force_recheck(last_green)
-    pri = force + [
-        n
-        for n in DRIVER_PRIORITY
-        if n in QUERIES and n not in last_green and n not in force
-    ]
-    seen = set(pri)
-    unproven = [n for n in QUERIES if n not in seen and n not in last_green]
-    proven = sorted(
-        (n for n in QUERIES if n not in seen and n in last_green),
-        key=lambda n: (last_green[n], reg_idx[n]),
-    )
-    for n in pri + unproven + proven:
-        QUERIES[n] = QUERIES.pop(n)
+    for name in sorted(QUERIES, key=lambda n: last_green.get(n, -1)):
+        QUERIES[name] = QUERIES.pop(name)
 
 
 def load_all() -> None:
-    """Import every operator module so their @query decorators run."""
+    """Import every query module so their @query decorators run."""
     from eeecs485_p4_mapreduce_spark.operators import (  # noqa: F401
         dedup,
         multimodal,
@@ -455,7 +98,7 @@ def load_all() -> None:
     )
     from eeecs485_p4_mapreduce_spark import mr_queries  # noqa: F401
     from eeecs485_p4_mapreduce_spark.streaming import queries  # noqa: F401
-    from eeecs485_p4_mapreduce_spark.operators import (
+    from eeecs485_p4_mapreduce_spark.operators import (  # noqa: F401
         staged,
         staged_r7,
         staged_r8,
@@ -477,23 +120,4 @@ def load_all() -> None:
         staged_r24,
     )
 
-    staged.register_staged()
-    staged_r7.register_staged()
-    staged_r8.register_staged()
-    staged_r9.register_staged()
-    staged_r10.register_staged()
-    staged_r11.register_staged()
-    staged_r12.register_staged()
-    staged_r13.register_staged()
-    staged_r14.register_staged()
-    staged_r15.register_staged()
-    staged_r16.register_staged()
-    staged_r17.register_staged()
-    staged_r18.register_staged()
-    staged_r19.register_staged()
-    staged_r20.register_staged()
-    staged_r21.register_staged()
-    staged_r22.register_staged()
-    staged_r23.register_staged()
-    staged_r24.register_staged()
-    _prioritize()
+    _rotate()

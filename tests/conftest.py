@@ -43,6 +43,13 @@ def duck(sf_dir):
     con.close()
 
 
+def registered_in(module) -> list[str]:
+    """Sorted names of the registered queries defined in ``module``."""
+    from eeecs485_p4_mapreduce_spark.registry import QUERIES
+
+    return sorted(n for n, fn in QUERIES.items() if fn.__module__ == module.__name__)
+
+
 def assert_query_matches_oracle(spark, duck, sf_dir: str, name: str) -> None:
     """Driver-style compare: rowcount + column names + order-insensitive hash.
 

@@ -35,19 +35,28 @@ def test_entry_smoke(spark):
 
 
 def test_registry_consistency():
-    from eeecs485_p4_mapreduce_spark.registry import ORACLES, QUERIES, load_all
+    from eeecs485_p4_mapreduce_spark.registry import (
+        ORACLES,
+        QUERIES,
+        load_all,
+        query,
+    )
 
     load_all()
     assert set(ORACLES) <= set(QUERIES)
     assert len(QUERIES) >= 21
+    fn = QUERIES["q01_pricing_summary"]
+    with pytest.raises(ValueError, match="duplicate query name"):
+        query("q01_pricing_summary")(lambda spark, sf_dir: None)
+    assert QUERIES["q01_pricing_summary"] is fn
 
 
 def test_driver_window_rotates_by_least_recently_green():
-    """Regression-rotation guarantee: the proven block must be ordered by
-    the round of each query's most recent green driver row (oldest
-    evidence first), so the driver's ~50-slot per-round window cycles
-    through the whole registry in ~3 rounds instead of re-checking the
-    same static prefix forever."""
+    """Regression-rotation guarantee: the registry is ordered by the
+    round of each query's most recent green driver row (never-green
+    queries first, then oldest evidence), so the driver's ~50-slot
+    per-round window cycles through the whole registry instead of
+    re-checking the same static prefix forever."""
     import glob
     import json
     import os
@@ -55,7 +64,6 @@ def test_driver_window_rotates_by_least_recently_green():
 
     from eeecs485_p4_mapreduce_spark.registry import (
         QUERIES,
-        _active_force_recheck,
         _driver_green_rounds,
         load_all,
     )
@@ -63,22 +71,11 @@ def test_driver_window_rotates_by_least_recently_green():
     load_all()
     last_green = _driver_green_rounds()
     names = list(QUERIES)
-
-    # Force-recheck names (oracle text changed since their last green
-    # row) legitimately jump to the very front regardless of prior
-    # evidence; the rotation invariants apply to everything after them.
-    # Entries self-expire once a strictly-newer green row lands, so
-    # only the still-active subset occupies the prefix.
-    force = _active_force_recheck(last_green)
-    assert names[: len(force)] == force
-    names = names[len(force):]
-
-    # Proven queries form a suffix ordered non-decreasing by last-green
-    # round; unproven (new) queries all come first.
-    proven = [n for n in names if n in last_green]
-    assert names[len(names) - len(proven):] == proven
-    rounds = [last_green[n] for n in proven]
+    rounds = [last_green.get(n, -1) for n in names]
     assert rounds == sorted(rounds)
+    # Re-running load_all keeps the order: ties stay in registry order.
+    load_all()
+    assert list(QUERIES) == names
 
     # The next driver window must be (mostly) disjoint from the latest
     # round's — the whole point of the rotation. Only meaningful once the
@@ -91,9 +88,52 @@ def test_driver_window_rotates_by_least_recently_green():
     with open(latest) as f:
         prev_window = set(json.load(f))
     window = names[:50]
-    n_unproven = len(names) - len(proven)
-    if n_unproven == 0 and len(proven) >= 100:
+    if all(n in last_green for n in names) and len(names) >= 100:
         assert len(set(window) & prev_window) <= 20  # >=60% disjoint
+
+
+_IMPORT_EVERY_QUERY_MODULE = """
+import importlib, pkgutil
+from eeecs485_p4_mapreduce_spark import operators
+from eeecs485_p4_mapreduce_spark.registry import QUERIES, load_all
+load_all()
+loaded = set(QUERIES)
+names = [f"{operators.__name__}.{m.name}"
+         for m in pkgutil.iter_modules(operators.__path__)]
+names += ["eeecs485_p4_mapreduce_spark.mr_queries",
+          "eeecs485_p4_mapreduce_spark.streaming.queries"]
+problems = []
+for name in names:
+    for attr, val in vars(importlib.import_module(name)).items():
+        side_table = isinstance(val, dict) and val and all(
+            isinstance(v, tuple) and v and callable(v[0])
+            for v in val.values())
+        if attr.startswith("register") or side_table:
+            problems.append(f"{name}.{attr}")
+problems += [f"registered outside load_all: {n}"
+             for n in sorted(set(QUERIES) - loaded)]
+print(problems)
+"""
+
+
+def test_every_query_module_registers_only_through_load_all():
+    """``@query`` is the only registration route: importing every query
+    module in a fresh process adds no name beyond what ``load_all()``
+    registered (a module left out of ``load_all`` would), and no module
+    keeps a side table of (fn, oracle) pairs or a ``register*`` hook
+    for later registration."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    out = subprocess.run(
+        [sys.executable, "-c", _IMPORT_EVERY_QUERY_MODULE],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    assert out.strip() == "[]", out
 
 
 def test_orders_customer_fk_holds(spark, sf_dir):
@@ -698,43 +738,3 @@ def test_event_queries_match_oracle_on_adversarial_fixture(spark, tmp_path):
     }
     missing = must - set(ran)
     assert not missing, f"expected events queries not exercised: {missing}"
-
-
-def test_force_recheck_entries_self_expire():
-    """DRIVER_FORCE_RECHECK entries record the round at which the
-    recheck was requested and must drop out automatically once a green
-    driver row from a strictly later round exists — a forgotten entry
-    may not consume window slots forever (r12 ADVICE)."""
-    from unittest import mock
-
-    from eeecs485_p4_mapreduce_spark import registry
-
-    with mock.patch.dict(
-        registry.__dict__,
-        {"DRIVER_FORCE_RECHECK": {"q01_pricing_summary": 11}},
-    ):
-        # No green row yet, or only rows from <= the request round:
-        # the entry stays active.
-        assert registry._active_force_recheck({}) == [
-            "q01_pricing_summary"
-        ]
-        assert registry._active_force_recheck(
-            {"q01_pricing_summary": 11}
-        ) == ["q01_pricing_summary"]
-        # A strictly newer green row expires it.
-        assert (
-            registry._active_force_recheck({"q01_pricing_summary": 12})
-            == []
-        )
-        # Names not in QUERIES never occupy the prefix.
-        with mock.patch.dict(
-            registry.__dict__, {"DRIVER_FORCE_RECHECK": {"nope": 11}}
-        ):
-            assert registry._active_force_recheck({}) == []
-
-    # The real list as committed: every entry must already be expired
-    # or awaiting a genuinely-newer row — never an entry whose request
-    # round is in the future relative to the committed driver files.
-    latest = max(registry._driver_green_rounds().values())
-    for name, requested in registry.DRIVER_FORCE_RECHECK.items():
-        assert requested <= latest

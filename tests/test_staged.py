@@ -1,6 +1,4 @@
-"""Oracle + semantics tests for the round-6 STAGED queries (operators/
-staged.py): registered-query-contract checks run here in round 5, so the
-round-6 registration flip is a one-liner with pre-proven hashes."""
+"""Oracle + semantics tests for the queries in operators/staged.py."""
 
 from __future__ import annotations
 
@@ -11,32 +9,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from eeecs485_p4_mapreduce_spark.operators import staged
+from tests.conftest import assert_query_matches_oracle, registered_in
 
 REPO_ROOT = Path(__file__).resolve().parents[1]
 
 
-def _assert_matches(spark, duck, sf_dir, name):
-    sys.path.insert(0, str(REPO_ROOT / "tools"))
-    from oracle_check import canon_lines, lines_hash
-
-    fn, oracle = staged.STAGED[name]
-    s_pd = fn(spark, sf_dir).toPandas()
-    d_pd = duck.sql(oracle).df()
-    assert len(s_pd) == len(d_pd), f"{name}: rowcount {len(s_pd)} != {len(d_pd)}"
-    assert sorted(s_pd.columns) == sorted(d_pd.columns)
-    s_lines, d_lines = canon_lines(s_pd), canon_lines(d_pd)
-    if lines_hash(s_lines) != lines_hash(d_lines):
-        d_set, s_set = set(d_lines), set(s_lines)
-        raise AssertionError(
-            f"{name}: hash mismatch\n"
-            f"  spark-only: {[x for x in s_lines if x not in d_set][:3]}\n"
-            f"  duck-only:  {[x for x in d_lines if x not in s_set][:3]}"
-        )
-
-
-@pytest.mark.parametrize("name", sorted(staged.STAGED))
+@pytest.mark.parametrize("name", registered_in(staged))
 def test_staged_matches_oracle(spark, duck, sf_dir, name):
-    _assert_matches(spark, duck, sf_dir, name)
+    assert_query_matches_oracle(spark, duck, sf_dir, name)
 
 
 def test_bm25_two_phase_topk_is_exact(spark, sf_dir):

@@ -1,15 +1,13 @@
-"""Oracle + semantics tests for the round-10 STAGED queries
-(operators/staged_r10.py). Every operator gets a constructed-fixture
-test computed by an INDEPENDENT reference (hand math, a tiny Python
-reimplementation, or a stdlib implementation), because a shared
-semantic bug hash-matches its own oracle (the q73/q77 lesson)."""
+"""Oracle + semantics tests for the queries in operators/staged_r10.py.
+Every operator gets a constructed-fixture test computed by an
+INDEPENDENT reference (hand math, a tiny Python reimplementation, or a
+stdlib implementation), because a shared semantic bug hash-matches its
+own oracle (the q73/q77 lesson)."""
 
 from __future__ import annotations
 
 import io
-import sys
 import zipfile
-from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,28 +19,12 @@ from eeecs485_p4_mapreduce_spark.operators.multimodal import (
     parse_flac_stream,
     parse_zip_entries,
 )
+from tests.conftest import assert_query_matches_oracle, registered_in
 
-REPO_ROOT = Path(__file__).resolve().parents[1]
 
-
-@pytest.mark.parametrize("name", sorted(staged_r10.STAGED))
+@pytest.mark.parametrize("name", registered_in(staged_r10))
 def test_staged_r10_matches_oracle(spark, duck, sf_dir, name):
-    sys.path.insert(0, str(REPO_ROOT / "tools"))
-    from oracle_check import canon_lines, lines_hash
-
-    fn, oracle = staged_r10.STAGED[name]
-    s_pd = fn(spark, sf_dir).toPandas()
-    d_pd = duck.sql(oracle).df()
-    assert len(s_pd) == len(d_pd), f"{name}: {len(s_pd)} != {len(d_pd)}"
-    assert sorted(s_pd.columns) == sorted(d_pd.columns)
-    s_lines, d_lines = canon_lines(s_pd), canon_lines(d_pd)
-    if lines_hash(s_lines) != lines_hash(d_lines):
-        d_set, s_set = set(d_lines), set(s_lines)
-        raise AssertionError(
-            f"{name}: hash mismatch\n"
-            f"  spark-only: {[x for x in s_lines if x not in d_set][:3]}\n"
-            f"  duck-only:  {[x for x in d_lines if x not in s_set][:3]}"
-        )
+    assert_query_matches_oracle(spark, duck, sf_dir, name)
 
 
 def _write_docs(spark, tmp_path, rows):
@@ -342,6 +324,35 @@ def test_mmr_diversifies_away_from_near_duplicate(spark, tmp_path):
     assert out[0].vec_id == 1 and out[1].vec_id == 3
     rels = {r.vec_id: r.rel_e6 for r in out}
     assert rels[2] > rels[3]  # b outranks c on relevance alone
+
+
+@pytest.mark.parametrize("n_vecs", [1, 2])
+def test_mmr_matches_oracle_with_at_most_one_candidate(
+    spark, tmp_path, n_vecs
+):
+    """With two embeddings each query has exactly one candidate and no
+    pairwise-sim row, yet the oracle keeps its rank-1 pick; with one
+    embedding there is no candidate and both sides are empty."""
+    import duckdb
+
+    from tests.conftest import assert_query_matches_oracle
+
+    rows = [(i, [1.0 + i] + [0.5] * 63, 0) for i in range(n_vecs)]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    with duckdb.connect() as duck:
+        duck.execute(
+            "CREATE VIEW embeddings AS SELECT * FROM"
+            f" read_parquet('{tmp_path / 'embeddings.parquet'}/*.parquet')"
+        )
+        assert_query_matches_oracle(
+            spark, duck, str(tmp_path), "sim_mmr_rerank"
+        )
+    got = staged_r10.sim_mmr_rerank(spark, str(tmp_path)).collect()
+    assert sorted((r.query_id, r.sel_rank, r.vec_id) for r in got) == (
+        [(0, 1, 1), (1, 1, 0)] if n_vecs == 2 else []
+    )
 
 
 # --- ta_burstiness ------------------------------------------------------------

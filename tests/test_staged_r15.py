@@ -1,38 +1,18 @@
-"""Oracle + semantics tests for the STAGED r15 queries
-(operators/staged_r15.py), with independent references per the
-staging discipline."""
+"""Oracle + semantics tests for the queries in operators/staged_r15.py,
+with independent references."""
 
 from __future__ import annotations
-
-import sys
-from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from eeecs485_p4_mapreduce_spark.operators import staged_r15
+from tests.conftest import assert_query_matches_oracle, registered_in
 
-REPO_ROOT = Path(__file__).resolve().parents[1]
 
-
-@pytest.mark.parametrize("name", sorted(staged_r15.STAGED))
+@pytest.mark.parametrize("name", registered_in(staged_r15))
 def test_staged_r15_matches_oracle(spark, duck, sf_dir, name):
-    sys.path.insert(0, str(REPO_ROOT / "tools"))
-    from oracle_check import canon_lines, lines_hash
-
-    fn, oracle = staged_r15.STAGED[name]
-    s_pd = fn(spark, sf_dir).toPandas()
-    d_pd = duck.sql(oracle).df()
-    assert len(s_pd) == len(d_pd), f"{name}: {len(s_pd)} != {len(d_pd)}"
-    assert sorted(s_pd.columns) == sorted(d_pd.columns)
-    s_lines, d_lines = canon_lines(s_pd), canon_lines(d_pd)
-    if lines_hash(s_lines) != lines_hash(d_lines):
-        d_set, s_set = set(d_lines), set(s_lines)
-        raise AssertionError(
-            f"{name}: hash mismatch\n"
-            f"  spark-only: {[x for x in s_lines if x not in d_set][:3]}\n"
-            f"  duck-only:  {[x for x in d_lines if x not in s_set][:3]}"
-        )
+    assert_query_matches_oracle(spark, duck, sf_dir, name)
 
 
 def _write_events(spark, tmp_path, rows):

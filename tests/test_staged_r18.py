@@ -1,33 +1,20 @@
-"""Oracle + semantics tests for the STAGED r18 queries
-(operators/staged_r18.py), with independent references per the
-staging discipline."""
+"""Oracle + semantics tests for the queries in operators/staged_r18.py,
+with independent references."""
 
 from __future__ import annotations
 
 import struct
-import sys
-from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from eeecs485_p4_mapreduce_spark.operators import staged_r18
+from tests.conftest import assert_query_matches_oracle, registered_in
 
-REPO_ROOT = Path(__file__).resolve().parents[1]
 
-
-@pytest.mark.parametrize("name", sorted(staged_r18.STAGED))
+@pytest.mark.parametrize("name", registered_in(staged_r18))
 def test_staged_r18_matches_oracle(spark, duck, sf_dir, name):
-    sys.path.insert(0, str(REPO_ROOT / "tools"))
-    from oracle_check import canon_lines, lines_hash
-
-    fn, oracle = staged_r18.STAGED[name]
-    s_pd = fn(spark, sf_dir).toPandas()
-    d_pd = duck.sql(oracle).df()
-    assert len(s_pd) == len(d_pd), f"{name}: {len(s_pd)} != {len(d_pd)}"
-    assert sorted(s_pd.columns) == sorted(d_pd.columns)
-    s_lines, d_lines = canon_lines(s_pd), canon_lines(d_pd)
-    assert lines_hash(s_lines) == lines_hash(d_lines), name
+    assert_query_matches_oracle(spark, duck, sf_dir, name)
 
 
 def _write_lineitem(spark, tmp_path, rows):

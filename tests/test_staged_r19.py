@@ -1,37 +1,19 @@
-"""Oracle + semantics tests for the STAGED r19 queries
-(operators/staged_r19.py), with independent references per the
-staging discipline: the Avro OCF codec gets byte-level roundtrip +
-single-byte mutation fuzz, the zipfian salted join gets an
+"""Oracle + semantics tests for the queries in operators/staged_r19.py,
+with independent references: the Avro OCF codec gets byte-level
+roundtrip + single-byte mutation fuzz, the zipfian salted join gets an
 engine-parity check on the bin()-derived key and a hot-key share
-assertion, and the WAND-style pruning gets a brute-force Python
-rescorer plus a proof the pruning actually dropped candidates."""
+assertion, and the WAND-style pruning gets a brute-force Python rescorer
+plus a proof the pruning actually dropped candidates."""
 
 from __future__ import annotations
 
-import sys
 from collections import Counter
-from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from eeecs485_p4_mapreduce_spark.operators import staged_r19
-
-REPO_ROOT = Path(__file__).resolve().parents[1]
-
-
-@pytest.mark.parametrize("name", sorted(staged_r19.STAGED))
-def test_staged_r19_matches_oracle(spark, duck, sf_dir, name):
-    sys.path.insert(0, str(REPO_ROOT / "tools"))
-    from oracle_check import canon_lines, lines_hash
-
-    fn, oracle = staged_r19.STAGED[name]
-    s_pd = fn(spark, sf_dir).toPandas()
-    d_pd = duck.sql(oracle).df()
-    assert len(s_pd) == len(d_pd), f"{name}: {len(s_pd)} != {len(d_pd)}"
-    assert sorted(s_pd.columns) == sorted(d_pd.columns)
-    s_lines, d_lines = canon_lines(s_pd), canon_lines(d_pd)
-    assert lines_hash(s_lines) == lines_hash(d_lines), name
+from tests.conftest import assert_query_matches_oracle, registered_in
 
 
 # --- Avro OCF codec ---------------------------------------------------------------
@@ -45,6 +27,11 @@ EDGE_ROWS = [
     (-7, "s", "line\nbreak\ttab", 2**62),
     (63, "x" * 300, "y" * 300, -63),  # >127-byte strings: 2-byte varints
 ]
+
+
+@pytest.mark.parametrize("name", registered_in(staged_r19))
+def test_staged_r19_matches_oracle(spark, duck, sf_dir, name):
+    assert_query_matches_oracle(spark, duck, sf_dir, name)
 
 
 def test_avro_roundtrip_edge_values():

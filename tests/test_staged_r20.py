@@ -1,18 +1,15 @@
-"""Oracle + semantics tests for the STAGED r20 queries
-(operators/staged_r20.py), with independent references per the
-staging discipline: the EBML codec gets a hand-computed byte layout,
-VINT width-boundary cases, and strictness fuzz; sessionization gets a
-brute-force Python sessionizer over the same parquet; the Zipf octave
-masses get a collections.Counter reference; the fertility census gets
-a pure-Python regex recount; and the IVF-PQ rerank curve gets a
+"""Oracle + semantics tests for the queries in operators/staged_r20.py,
+with independent references: the EBML codec gets a hand-computed byte
+layout, VINT width-boundary cases, and strictness fuzz; sessionization
+gets a brute-force Python sessionizer over the same parquet; the Zipf
+octave masses get a collections.Counter reference; the fertility census
+gets a pure-Python regex recount; and the IVF-PQ rerank curve gets a
 monotonicity invariant (more rerank budget can never lose recall)."""
 
 from __future__ import annotations
 
 import re
-import sys
 from collections import Counter
-from pathlib import Path
 
 import pytest
 
@@ -22,22 +19,12 @@ from eeecs485_p4_mapreduce_spark.operators.multimodal import (
     encode_mkv,
     parse_mkv_ebml,
 )
+from tests.conftest import assert_query_matches_oracle, registered_in
 
-REPO_ROOT = Path(__file__).resolve().parents[1]
 
-
-@pytest.mark.parametrize("name", sorted(staged_r20.STAGED))
+@pytest.mark.parametrize("name", registered_in(staged_r20))
 def test_staged_r20_matches_oracle(spark, duck, sf_dir, name):
-    sys.path.insert(0, str(REPO_ROOT / "tools"))
-    from oracle_check import canon_lines, lines_hash
-
-    fn, oracle = staged_r20.STAGED[name]
-    s_pd = fn(spark, sf_dir).toPandas()
-    d_pd = duck.sql(oracle).df()
-    assert len(s_pd) == len(d_pd), f"{name}: {len(s_pd)} != {len(d_pd)}"
-    assert sorted(s_pd.columns) == sorted(d_pd.columns)
-    s_lines, d_lines = canon_lines(s_pd), canon_lines(d_pd)
-    assert lines_hash(s_lines) == lines_hash(d_lines), name
+    assert_query_matches_oracle(spark, duck, sf_dir, name)
 
 
 # --- EBML / Matroska codec ---------------------------------------------------

@@ -1,6 +1,5 @@
-"""Oracle + semantics tests for the STAGED r21 queries
-(operators/staged_r21.py), with independent references per the
-staging discipline: Allen's relations get a brute-force Python
+"""Oracle + semantics tests for the queries in operators/staged_r21.py,
+with independent references: Allen's relations get a brute-force Python
 classifier plus the partition-completeness identity; the msgpack codec
 gets exact promotion-boundary widths, nested roundtrip fuzz, and
 strictness negatives; the bitemporal as-of gets a brute-force Python
@@ -8,27 +7,15 @@ reconstruction over the same parquet."""
 
 from __future__ import annotations
 
-import sys
-from pathlib import Path
-
 import pytest
 
 from eeecs485_p4_mapreduce_spark.operators import staged_r21
+from tests.conftest import assert_query_matches_oracle, registered_in
 
-REPO_ROOT = Path(__file__).resolve().parents[1]
 
-
-@pytest.mark.parametrize("name", sorted(staged_r21.STAGED))
+@pytest.mark.parametrize("name", registered_in(staged_r21))
 def test_staged_r21_matches_oracle(spark, duck, sf_dir, name):
-    sys.path.insert(0, str(REPO_ROOT / "tools"))
-    from oracle_check import canon_lines, lines_hash
-
-    fn, oracle = staged_r21.STAGED[name]
-    s_pd = fn(spark, sf_dir).toPandas()
-    d_pd = duck.sql(oracle).df()
-    assert len(s_pd) == len(d_pd), f"{name}: {len(s_pd)} != {len(d_pd)}"
-    assert sorted(s_pd.columns) == sorted(d_pd.columns)
-    assert lines_hash(canon_lines(s_pd)) == lines_hash(canon_lines(d_pd)), name
+    assert_query_matches_oracle(spark, duck, sf_dir, name)
 
 
 # --- Allen's interval relations ----------------------------------------------

@@ -1,38 +1,26 @@
-"""Oracle + semantics tests for the STAGED r22 queries
-(operators/staged_r22.py), with independent references per the
-staging discipline: the ORC tail and Arrow IPC codecs get roundtrip
-fuzz plus strictness negatives (every cross-reference the parsers
-claim to verify is mutated and must raise); the HNSW M-recall curve
-gets a numpy ground-truth check plus monotonicity; KL, bottom-k, and
-key entropy get full pure-Python reimplementations over the same
+"""Oracle + semantics tests for the queries in operators/staged_r22.py,
+with independent references: the ORC tail and Arrow IPC codecs get
+roundtrip fuzz plus strictness negatives (every cross- reference the
+parsers claim to verify is mutated and must raise); the HNSW M-recall
+curve gets a numpy ground-truth check plus monotonicity; KL, bottom-k,
+and key entropy get full pure-Python reimplementations over the same
 parquet."""
 
 from __future__ import annotations
 
 import hashlib
 import math
-import sys
 from collections import Counter
-from pathlib import Path
 
 import pytest
 
 from eeecs485_p4_mapreduce_spark.operators import staged_r22
+from tests.conftest import assert_query_matches_oracle, registered_in
 
-REPO_ROOT = Path(__file__).resolve().parents[1]
 
-
-@pytest.mark.parametrize("name", sorted(staged_r22.STAGED))
+@pytest.mark.parametrize("name", registered_in(staged_r22))
 def test_staged_r22_matches_oracle(spark, duck, sf_dir, name):
-    sys.path.insert(0, str(REPO_ROOT / "tools"))
-    from oracle_check import canon_lines, lines_hash
-
-    fn, oracle = staged_r22.STAGED[name]
-    s_pd = fn(spark, sf_dir).toPandas()
-    d_pd = duck.sql(oracle).df()
-    assert len(s_pd) == len(d_pd), f"{name}: {len(s_pd)} != {len(d_pd)}"
-    assert sorted(s_pd.columns) == sorted(d_pd.columns)
-    assert lines_hash(canon_lines(s_pd)) == lines_hash(canon_lines(d_pd)), name
+    assert_query_matches_oracle(spark, duck, sf_dir, name)
 
 
 # --- ORC tail codec ----------------------------------------------------------

@@ -1,7 +1,6 @@
-"""Oracle + independent-reference tests for the staged_r23 queries
-(same harness as test_staged_r9-r22: DuckDB hash parity at the
-session sf_dir, plus per-query independent checks the hash can't
-express)."""
+"""Oracle + independent-reference tests for the queries in
+operators/staged_r23.py: DuckDB hash parity at the session sf_dir, plus
+per-query checks the hash can't express."""
 
 from __future__ import annotations
 
@@ -11,21 +10,14 @@ from pathlib import Path
 import pytest
 
 from eeecs485_p4_mapreduce_spark.operators import staged_r23
+from tests.conftest import assert_query_matches_oracle, registered_in
 
 REPO_ROOT = Path(__file__).resolve().parents[1]
 
 
-@pytest.mark.parametrize("name", sorted(staged_r23.STAGED))
+@pytest.mark.parametrize("name", registered_in(staged_r23))
 def test_staged_r23_matches_oracle(spark, duck, sf_dir, name):
-    sys.path.insert(0, str(REPO_ROOT / "tools"))
-    from oracle_check import canon_lines, lines_hash
-
-    fn, oracle = staged_r23.STAGED[name]
-    s_pd = fn(spark, sf_dir).toPandas()
-    d_pd = duck.sql(oracle).df()
-    assert len(s_pd) == len(d_pd), f"{name}: {len(s_pd)} != {len(d_pd)}"
-    assert sorted(s_pd.columns) == sorted(d_pd.columns)
-    assert lines_hash(canon_lines(s_pd)) == lines_hash(canon_lines(d_pd)), name
+    assert_query_matches_oracle(spark, duck, sf_dir, name)
 
 
 # --- parquet data-page decoder ------------------------------------------------
@@ -739,7 +731,6 @@ def test_cdc_resynchronization_property():
     assert shared == set(a[1:])
 
 
-
 # --- adversarial-grain mini-corpus (review regression) ---------------------------
 
 
@@ -1003,6 +994,30 @@ def test_kcenter_matches_python(spark, sf_dir):
 
 
 # --- k-core peeling ---------------------------------------------------------------
+
+
+def test_kcore_on_empty_edge_table_matches_oracle(spark, sf_dir, tmp_path):
+    """An empty lineitem table gives an empty edge set, whose degree sum
+    is NULL: the peel must return the oracle's empty result, not raise."""
+    import duckdb
+
+    from eeecs485_p4_mapreduce_spark.catalog import table_path
+    from eeecs485_p4_mapreduce_spark.registry import load_all
+    from tests.conftest import assert_query_matches_oracle
+
+    load_all()
+    empty = str(tmp_path / "lineitem.parquet")
+    spark.read.parquet(table_path(sf_dir, "lineitem")).limit(0).write.mode(
+        "overwrite"
+    ).parquet(empty)
+    with duckdb.connect() as duck:
+        duck.execute(
+            "CREATE VIEW lineitem AS SELECT * FROM"
+            f" read_parquet('{empty}/*.parquet')"
+        )
+        assert_query_matches_oracle(
+            spark, duck, str(tmp_path), "q129_kcore_peel"
+        )
 
 
 def test_kcore_matches_python(spark, sf_dir):

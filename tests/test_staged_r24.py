@@ -1,31 +1,20 @@
-"""Oracle + independent-reference tests for the staged_r24 queries
-(same harness as test_staged_r9-r23: DuckDB hash parity at the
-session sf_dir, plus per-query independent checks the hash can't
-express)."""
+"""Oracle + independent-reference tests for the queries in
+operators/staged_r24.py: DuckDB hash parity at the session sf_dir, plus
+per-query checks the hash can't express."""
 
 from __future__ import annotations
 
-import sys
 from pathlib import Path
 
 import pytest
 
 from eeecs485_p4_mapreduce_spark.operators import staged_r24
+from tests.conftest import assert_query_matches_oracle, registered_in
 
-REPO_ROOT = Path(__file__).resolve().parents[1]
 
-
-@pytest.mark.parametrize("name", sorted(staged_r24.STAGED))
+@pytest.mark.parametrize("name", registered_in(staged_r24))
 def test_staged_r24_matches_oracle(spark, duck, sf_dir, name):
-    sys.path.insert(0, str(REPO_ROOT / "tools"))
-    from oracle_check import canon_lines, lines_hash
-
-    fn, oracle = staged_r24.STAGED[name]
-    s_pd = fn(spark, sf_dir).toPandas()
-    d_pd = duck.sql(oracle).df()
-    assert len(s_pd) == len(d_pd), f"{name}: {len(s_pd)} != {len(d_pd)}"
-    assert sorted(s_pd.columns) == sorted(d_pd.columns)
-    assert lines_hash(canon_lines(s_pd)) == lines_hash(canon_lines(d_pd)), name
+    assert_query_matches_oracle(spark, duck, sf_dir, name)
 
 
 # --- LZ4 block codec ---------------------------------------------------------
@@ -814,20 +803,20 @@ def test_delta_page_values_absolute_ceiling():
 
 
 def test_staged_names_do_not_shadow_registered_queries():
-    """The r13 collision lesson: a staged query reusing a REGISTERED
-    name silently never registers (register_staged_dict skips present
-    names) and mislabels probe rows. Every staged name must either be
-    absent from the registry (pre-flip) or registered AS the staged
-    function (post-flip) — never shadowed by an older query."""
-    from eeecs485_p4_mapreduce_spark.registry import QUERIES, load_all
+    """The r13 collision lesson: a query reusing a registered name must
+    fail loudly instead of silently never registering. Re-registering
+    any staged_r24 name raises, and the registry keeps the staged_r24
+    function under it."""
+    from eeecs485_p4_mapreduce_spark.registry import QUERIES, load_all, query
 
     load_all()
-    shadowed = [
-        n
-        for n, (fn, _oracle) in staged_r24.STAGED.items()
-        if n in QUERIES and QUERIES[n] is not fn
-    ]
-    assert not shadowed, f"staged names shadowed by registered: {shadowed}"
+    names = registered_in(staged_r24)
+    assert names
+    for n in names:
+        fn = QUERIES[n]
+        with pytest.raises(ValueError, match="duplicate query name"):
+            query(n)(lambda spark, sf_dir: None)
+        assert QUERIES[n] is fn is getattr(staged_r24, fn.__name__)
 
 
 def test_mann_whitney_matches_python(spark, duck, sf_dir):

@@ -1,40 +1,18 @@
-"""Oracle + semantics tests for the round-7 STAGED queries
-(operators/staged_r7.py): the registered-query contract is proven in
-round 6 so the round-7 registration flip ships with pre-proven hashes —
-the same staging discipline round 5 used for the round-6 batch."""
+"""Oracle + semantics tests for the queries in operators/staged_r7.py."""
 
 from __future__ import annotations
-
-import sys
-from pathlib import Path
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from eeecs485_p4_mapreduce_spark.operators import staged_r7
+from tests.conftest import assert_query_matches_oracle, registered_in
 
-REPO_ROOT = Path(__file__).resolve().parents[1]
 
-
-@pytest.mark.parametrize("name", sorted(staged_r7.STAGED))
+@pytest.mark.parametrize("name", registered_in(staged_r7))
 def test_staged_r7_matches_oracle(spark, duck, sf_dir, name):
-    sys.path.insert(0, str(REPO_ROOT / "tools"))
-    from oracle_check import canon_lines, lines_hash
-
-    fn, oracle = staged_r7.STAGED[name]
-    s_pd = fn(spark, sf_dir).toPandas()
-    d_pd = duck.sql(oracle).df()
-    assert len(s_pd) == len(d_pd), f"{name}: {len(s_pd)} != {len(d_pd)}"
-    assert sorted(s_pd.columns) == sorted(d_pd.columns)
-    s_lines, d_lines = canon_lines(s_pd), canon_lines(d_pd)
-    if lines_hash(s_lines) != lines_hash(d_lines):
-        d_set, s_set = set(d_lines), set(s_lines)
-        raise AssertionError(
-            f"{name}: hash mismatch\n"
-            f"  spark-only: {[x for x in s_lines if x not in d_set][:3]}\n"
-            f"  duck-only:  {[x for x in d_lines if x not in s_set][:3]}"
-        )
+    assert_query_matches_oracle(spark, duck, sf_dir, name)
 
 
 def test_interval_coverage_merges_nested_intervals(spark, tmp_path):
@@ -166,7 +144,6 @@ def test_ivfpq_candidates_are_cell_bounded(spark, sf_dir):
     }
     for r in out:
         assert (r.query_id, cells[r.neighbor_id]) in probes, r
-
 
 
 def test_avi_codec_structure_and_rejection():

@@ -1,16 +1,14 @@
-"""Oracle + semantics tests for the round-9 STAGED queries
-(operators/staged_r9.py). Every operator gets a constructed-fixture
-test computed by an INDEPENDENT reference (hand math, a tiny Python
-reimplementation, or a stdlib implementation), because a shared
-semantic bug hash-matches its own oracle (the q73/q77 lesson)."""
+"""Oracle + semantics tests for the queries in operators/staged_r9.py.
+Every operator gets a constructed-fixture test computed by an
+INDEPENDENT reference (hand math, a tiny Python reimplementation, or a
+stdlib implementation), because a shared semantic bug hash-matches its
+own oracle (the q73/q77 lesson)."""
 
 from __future__ import annotations
 
 import hashlib
 import io
-import sys
 import tarfile
-from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,28 +20,12 @@ from eeecs485_p4_mapreduce_spark.operators.multimodal import (
     parse_tar_members,
     parse_tiff_ifds,
 )
+from tests.conftest import assert_query_matches_oracle, registered_in
 
-REPO_ROOT = Path(__file__).resolve().parents[1]
 
-
-@pytest.mark.parametrize("name", sorted(staged_r9.STAGED))
+@pytest.mark.parametrize("name", registered_in(staged_r9))
 def test_staged_r9_matches_oracle(spark, duck, sf_dir, name):
-    sys.path.insert(0, str(REPO_ROOT / "tools"))
-    from oracle_check import canon_lines, lines_hash
-
-    fn, oracle = staged_r9.STAGED[name]
-    s_pd = fn(spark, sf_dir).toPandas()
-    d_pd = duck.sql(oracle).df()
-    assert len(s_pd) == len(d_pd), f"{name}: {len(s_pd)} != {len(d_pd)}"
-    assert sorted(s_pd.columns) == sorted(d_pd.columns)
-    s_lines, d_lines = canon_lines(s_pd), canon_lines(d_pd)
-    if lines_hash(s_lines) != lines_hash(d_lines):
-        d_set, s_set = set(d_lines), set(s_lines)
-        raise AssertionError(
-            f"{name}: hash mismatch\n"
-            f"  spark-only: {[x for x in s_lines if x not in d_set][:3]}\n"
-            f"  duck-only:  {[x for x in d_lines if x not in s_set][:3]}"
-        )
+    assert_query_matches_oracle(spark, duck, sf_dir, name)
 
 
 def _write_docs(spark, tmp_path, rows):
