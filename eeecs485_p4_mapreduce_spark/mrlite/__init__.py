@@ -6,9 +6,12 @@ external map/reduce executables speaking tab-separated key-value lines,
 md5 hash partitioning, per-partition lexicographic sort before reduce, and
 ``part-%05d`` text output files.
 
-The data plane for real analytics stays Spark (its scheduler, executors
-and fault tolerance subsume the reference's task runtime). The FULL
-control plane is nonetheless kept for drop-in compatibility:
+A job has one of two data planes, and both deal input files to map
+tasks with the same rule (``partitioner.split_input``): Spark through
+``MREngine`` (its scheduler, executors and fault tolerance subsume the
+reference's task runtime), or a registered worker fleet, which runs the
+reference's own ``tmp/job-{id}/intermediate`` file shuffle. The FULL
+control plane is kept for drop-in compatibility:
 
 - ``MREngine.submit_job`` accepts exactly the fields of the reference's
   ``new_manager_job`` message (reference: mapreduce/submit.py:70-78);

@@ -13,14 +13,14 @@ streams through executor-local subprocesses exactly like the reference's
 worker pipes (reference contract: tests/test_worker_11.py enforces O(1)
 memory streaming; RDD.pipe gives the same property).
 
-Scale notes:
-- ``parity_tasks=True`` pins the task counts to (num_mappers,
-  num_reducers) like the reference. At 100 TB you set it False: input
-  splitting falls back to Spark's size-based splits (maxPartitionBytes)
-  and only the reduce width is honored.
-- the md5 partitioner is only needed for per-partition-file parity with
-  the reference; it rides pyspark's partitionBy, so the shuffle itself is
-  Spark's machinery — md5 is uniform, so balance matches Murmur3.
+Task counts are pinned to (num_mappers, num_reducers) like the
+reference: ``partitioner.split_input`` deals the files, one coalesced
+partition per map task. The md5 partitioner is only needed for
+per-partition-file parity with the reference; it rides pyspark's
+partitionBy, so the shuffle itself is Spark's machinery — md5 is
+uniform, so balance matches Murmur3. The reference's on-disk
+``tmp/job-{id}/intermediate`` layout is the worker fleet's data path
+(``MRManagerServer._run_job_on_workers``), not this engine's.
 """
 
 from __future__ import annotations
@@ -34,7 +34,10 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-from eeecs485_p4_mapreduce_spark.mrlite.partitioner import md5_partition
+from eeecs485_p4_mapreduce_spark.mrlite.partitioner import (
+    md5_partition,
+    split_input,
+)
 
 MapperFn = Callable[[str], Iterable[tuple[str, str]]]
 ReducerFn = Callable[[str, Iterable[str]], Iterable[str]]
@@ -95,65 +98,6 @@ class MREngine:
         self.spark = spark
         self._next_job_id = 0
 
-    def _file_shuffle(self, mapped, intermediate_dir: str, job_id: int, num_reducers: int):
-        """K2 debug shuffle: materialize map output as the reference's
-        ``job-{j}/intermediate/maptask%05d-part%05d`` files, then build the
-        reduce input by reading them back.
-
-        Map task id == partition index of ``mapped`` (parity_tasks pins one
-        partition per map task). Each map task streams its pairs into
-        ``num_reducers`` open files routed by md5(key) — O(1) memory like
-        the reference worker's per-partition file handles; file content is
-        unsorted map-output order (§2.2 M3). The reduce side then sorts its
-        merged input by (key, value) (§2.4 R1), reproducing the reference's
-        read-intermediates-then-sort flow byte for byte.
-        """
-        inter = Path(intermediate_dir) / f"job-{job_id}" / "intermediate"
-        if inter.exists():
-            # Job ids restart at 0 per engine instance, so a reused
-            # intermediate_dir can hold maptask files from a previous run
-            # (possibly with a different num_mappers); the reduce side
-            # globs maptask*, so stale files would silently merge into
-            # the reduce input. Start from an empty dir every time.
-            shutil.rmtree(inter)
-        inter.mkdir(parents=True)
-        base = str(inter)
-
-        def dump(idx: int, pairs: Iterator[tuple[str, str]]) -> Iterator[int]:
-            handles = [
-                (Path(base) / f"maptask{idx:05d}-part{p:05d}").open(
-                    "w", encoding="utf-8"
-                )
-                for p in range(num_reducers)
-            ]
-            try:
-                for k, v in pairs:
-                    handles[md5_partition(k, num_reducers)].write(f"{k}\t{v}\n")
-            finally:
-                for h in handles:
-                    h.close()
-            yield idx
-
-        # Action = the reference's map→reduce barrier (§2.3 X2): every
-        # intermediate file is on disk before any reduce task reads.
-        mapped.mapPartitionsWithIndex(dump).count()
-
-        def read_partition(idx: int, _elems) -> Iterator[tuple[str, str]]:
-            rows: list[tuple[str, str]] = []
-            for mp in sorted(Path(base).glob(f"maptask*-part{idx:05d}")):
-                with mp.open(encoding="utf-8") as f:
-                    for line in f:
-                        rows.append(_parse_kv(line.rstrip("\n")))
-            rows.sort()
-            return iter(rows)
-
-        sc = self.spark.sparkContext
-        # parallelize(range(n), n) puts element i in partition i, so the
-        # mapPartitionsWithIndex index is the reduce partition id.
-        return sc.parallelize(range(num_reducers), num_reducers).mapPartitionsWithIndex(
-            read_partition
-        )
-
     def submit_job(
         self,
         input_directory: str,
@@ -162,8 +106,6 @@ class MREngine:
         reducer_executable: str | ReducerFn | None = None,
         num_mappers: int = 2,
         num_reducers: int = 2,
-        parity_tasks: bool = True,
-        intermediate_dir: str | None = None,
     ) -> MRJobResult:
         """Run one MapReduce job; mirrors the reference's new_manager_job
         message fields and CLI defaults (2 mappers / 2 reducers —
@@ -173,45 +115,15 @@ class MREngine:
         to an external executable (reference behavior: subprocess over
         stdin/stdout via RDD.pipe) or a Python callable (built-in fast
         path, see builtins.py for the protocol).
-
-        ``intermediate_dir`` enables the reference's debug materialization
-        (K2): map output is written to
-        ``{intermediate_dir}/job-{job_id}/intermediate/maptask%05d-part%05d``
-        (reference naming: tests/test_worker_08.py:160-175,
-        tests/test_manager_03.py:169-171) and the reduce stage reads those
-        files back — the data plane flows through inspectable files exactly
-        like the reference's shared-tmp layout. Default (None) uses Spark's
-        in-memory shuffle; the debug path trades speed for byte-level
-        inspectability and assumes a filesystem shared by all executors
-        (true in local mode and on any NFS/DBFS-style cluster tmp).
         """
         if mapper_executable is None or reducer_executable is None:
             raise ValueError("mapper and reducer are required")
-        in_dir = Path(input_directory)
-        if not in_dir.is_dir():
-            raise FileNotFoundError(f"input directory {input_directory} not found")
+        groups = split_input(input_directory, num_mappers)
         job_id = self._next_job_id
         self._next_job_id += 1
 
-        # §2.1 S2: files sorted by name, dealt round-robin to map tasks.
-        # Hidden files (.-/_ prefixed: _SUCCESS, .crc) are skipped, matching
-        # Hadoop's input conventions — the reader would ignore them anyway.
-        files = sorted(
-            str(p)
-            for p in in_dir.iterdir()
-            if p.is_file() and not p.name.startswith((".", "_"))
-        )
-        if not files:
-            raise FileNotFoundError(f"no input files in {input_directory}")
         sc = self.spark.sparkContext
-
-        if parity_tasks:
-            n_map = min(num_mappers, len(files))
-            groups = [files[i::n_map] for i in range(n_map)]
-            rdds = [sc.textFile(",".join(g)).coalesce(1) for g in groups]
-            lines = sc.union(rdds)
-        else:
-            lines = sc.textFile(",".join(files))
+        lines = sc.union([sc.textFile(",".join(g)).coalesce(1) for g in groups])
 
         # Map stage (§2.2 M1): executable pipe or callable flatMap.
         if callable(mapper_executable):
@@ -222,19 +134,14 @@ class MREngine:
         # Shuffle (§2.2 M2 + §2.4 R1): md5(key) partitioning, then sort
         # within each partition by (key, value) — the whole-line
         # lexicographic order the reference's merge-sort produces.
-        if intermediate_dir is not None:
-            shuffled = self._file_shuffle(
-                mapped, intermediate_dir, job_id, num_reducers
+        shuffled = (
+            mapped.map(lambda kv: (kv, None))
+            .repartitionAndSortWithinPartitions(
+                numPartitions=num_reducers,
+                partitionFunc=lambda kv: md5_partition(kv[0], num_reducers),
             )
-        else:
-            shuffled = (
-                mapped.map(lambda kv: (kv, None))
-                .repartitionAndSortWithinPartitions(
-                    numPartitions=num_reducers,
-                    partitionFunc=lambda kv: md5_partition(kv[0], num_reducers),
-                )
-                .map(lambda kvn: kvn[0])
-            )
+            .map(lambda kvn: kvn[0])
+        )
 
         # Reduce stage (§2.4 R2).
         if callable(reducer_executable):

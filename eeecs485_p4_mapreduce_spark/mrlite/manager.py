@@ -54,25 +54,42 @@ behavior of discarding undecodable JSON rather than crashing — but the
 drop is OBSERVABLE: ``malformed_count`` increments per discarded
 message so an operator can tell "client never sent" apart from "server
 discarded garbage" without packet captures.
+
+The module logger records each job's start and end with its data plane
+(fleet or spark) at INFO, task dispatch and finish at DEBUG, and every
+requeue (with its reason) and worker eviction at WARNING. No handler is
+configured here.
 """
 
 from __future__ import annotations
 
-import json
-import queue
 import itertools
+import json
+import logging
+import queue
 import shutil
 import socket
 import threading
 import time
+from collections import deque
 from dataclasses import dataclass, field
 from pathlib import Path
 
 from eeecs485_p4_mapreduce_spark.mrlite.engine import MREngine, MRJobResult
+from eeecs485_p4_mapreduce_spark.mrlite.partitioner import split_input
 from eeecs485_p4_mapreduce_spark.mrlite.worker import (
     TIME_BETWEEN_HEARTBEATS,
     send_json,
     serve_json_loop,
+)
+
+log = logging.getLogger(__name__)
+
+#: Failure text for a fleet whose workers drop the task message's
+#: ``wave`` field: such a worker can never complete the nonce check.
+_NONCELESS = (
+    " without echoing the wave nonce; a worker that drops the task"
+    " message's wave field can never complete a task here"
 )
 
 
@@ -117,14 +134,7 @@ class MRManagerServer:
         port: int = 6000,
         hb_port: int | None = None,
         heartbeat_interval: float = TIME_BETWEEN_HEARTBEATS,
-        legacy_wave_compat: bool = False,
     ):
-        #: Accept nonce-less finished events (workers predating the
-        #: per-wave nonce). Every in-repo worker echoes the nonce, so
-        #: the strict default closes the stale-echo-across-waves race
-        #: for reused task_ids; set True only when driving third-party
-        #: workers that drop unknown task-message fields.
-        self.legacy_wave_compat = legacy_wave_compat
         self.engine = engine
         self.host = host
         self.port = port
@@ -218,7 +228,7 @@ class MRManagerServer:
                 )
             except OSError:
                 # Worker vanished between register and ack; forget it.
-                self.workers.pop((whost, wport), None)
+                self._evict((whost, wport), "register_ack refused")
         elif mtype == "finished":
             with self.task_event:
                 self.task_events.append(message)
@@ -267,6 +277,11 @@ class MRManagerServer:
         # snapshot: the accept thread inserts on register concurrently
         return [w for w in list(self.workers.values()) if w.last_seen >= cutoff]
 
+    def _evict(self, wkey: tuple[str, int], reason: str) -> None:
+        """Drop a worker from the fleet until it registers again."""
+        self.workers.pop(wkey, None)
+        log.warning("evict worker %s:%d: %s", wkey[0], wkey[1], reason)
+
     # -- worker dispatch (C5/C7) --------------------------------------------
 
     #: give up on a task after this many distinct dispatch attempts —
@@ -278,9 +293,10 @@ class MRManagerServer:
         """Run one stage's tasks across the live worker fleet: send each
         task to an idle worker, collect its ``finished`` event, requeue
         tasks whose worker died, re-registered (epoch bump), or reported
-        a task error (C7). Returns finished messages in task_id order.
-        Raises if the fleet empties, a task exhausts its attempts, or
-        shutdown arrives — a queued job must never hang its submitter.
+        a task error (C7). Returns finished messages in task_id order
+        as soon as the last one is consumed. Raises if the fleet
+        empties, a task exhausts its attempts, or shutdown arrives — a
+        queued job must never hang its submitter.
 
         Correlation is (wave nonce AND task_id AND assigned worker): a
         straggler ``finished`` from a presumed-dead worker whose task
@@ -290,36 +306,35 @@ class MRManagerServer:
         next wave — sender+tid alone would accept its stale map-stage
         finished as the reduce result). Dispatched tasks carry a
         ``wave`` nonce the worker echoes; an event whose echoed nonce
-        mismatches is skipped. Events WITHOUT the field (a worker
-        predating the nonce, or reference tooling) are accepted on the
-        sender+tid match only under ``legacy_wave_compat=True``. By
-        default the first nonce-less finished from an assigned worker
-        quarantines THAT worker for the wave and requeues its task
-        (sender identity is body-reported, so one spoofed packet must
-        not kill the job); a second struck worker, or a wave with no
-        un-struck live workers left, fails the job fast with an error
-        naming the flag — never a silent indefinite hang (a compliant
-        worker always echoes the nonce, so repeated nonce-less events
-        prove a fleet that drops unknown fields and whose tasks can
-        never complete the nonce check)."""
-        from collections import deque
+        mismatches is skipped. An event WITHOUT the field proves its
+        worker drops unknown task fields, so its tasks can never pass
+        the nonce check. But sender identity is body-reported, not
+        socket-peer, and one spoofed packet must not kill the job: the
+        first nonce-less finished from an assigned worker quarantines
+        THAT worker for the wave and requeues its task (re-execution is
+        the normal, atomic-write-safe reassignment path). A second
+        struck worker, or a wave with no un-struck live workers left,
+        fails the job fast — never a silent indefinite hang.
 
+        The loop waits on ``task_event`` only while a task is still
+        outstanding and every received event has been consumed; the
+        timeout bounds how stale the liveness check can get."""
         wave_nonce = next(self._wave_seq)
         pending = deque(tasks)
+        #: task_id -> (assigned worker, its epoch at dispatch, task)
         inflight: dict[int, tuple[tuple[str, int], int, dict]] = {}
         done: dict[int, dict] = {}
-        busy: set[tuple[str, int]] = set()
         attempts: dict[int, int] = {}
-        # Workers that sent a nonce-less finished for their assigned
-        # task under strict mode: quarantined from further dispatch
-        # this wave (see the nonce-less branch below).
-        nonceless_struck: set[tuple[str, int]] = set()
-        legacy_remedy = (
-            " without echoing the wave nonce; it likely predates the"
-            " nonce protocol — start the manager with"
-            " legacy_wave_compat=True to accept nonce-less finished"
-            " events"
-        )
+        struck: set[tuple[str, int]] = set()  # nonce-less quarantine
+
+        def requeue(tid: int, reason: str) -> None:
+            wkey, _epoch, task = inflight.pop(tid)
+            pending.append(task)
+            log.warning(
+                "wave %d: requeue task %d from %s:%d: %s",
+                wave_nonce, tid, wkey[0], wkey[1], reason,
+            )
+
         with self.task_event:
             # Events from completed waves are never re-read (each wave
             # cursors forward from its start); prune so a long-lived
@@ -328,92 +343,65 @@ class MRManagerServer:
             if len(self.task_events) > 10_000:
                 del self.task_events[:-1_000]
             cursor = len(self.task_events)
-            while len(done) < len(tasks):
-                if self._shutdown.is_set():
-                    raise RuntimeError("shutdown during job dispatch")
+            while True:
                 # Consume finished events that arrived since last look.
                 while cursor < len(self.task_events):
                     ev = self.task_events[cursor]
                     cursor += 1
                     tid = int(ev["task_id"])
-                    if tid not in inflight or tid in done:
+                    if tid not in inflight:
                         continue
-                    wkey, _epoch, task = inflight[tid]
+                    wkey = inflight[tid][0]
                     sender = (
                         str(ev.get("worker_host")),
                         int(ev.get("worker_port", -1)),
                     )
                     if sender != wkey:
                         continue  # straggler from a reassigned worker
-                    if ev.get("wave") != wave_nonce:
-                        if "wave" in ev:
-                            continue  # stale echo from a previous wave
-                        # Nonce-less event from the ASSIGNED worker of
-                        # an inflight task. Tasks here were dispatched
-                        # WITH a nonce, so a compliant worker always
-                        # echoes it (even its stale prior-wave echoes
-                        # carry the OLD nonce, and stragglers from a
-                        # reassigned worker fail the sender check
-                        # above). Under legacy_wave_compat the
-                        # sender+tid match is accepted as-is (reference
-                        # tooling / a worker predating the nonce).
-                        # Strict default: the event proves this worker
-                        # drops unknown fields, so its tasks can NEVER
-                        # complete the nonce check. But the sender
-                        # identity is body-reported, not socket-peer —
-                        # one spoofed packet must not kill the job. So:
-                        # first offense per worker QUARANTINES that
-                        # worker for the wave and requeues its task
-                        # elsewhere (C7-safe: task writes are atomic,
-                        # re-execution is the normal reassignment
-                        # path); a SECOND struck worker — or a wave
-                        # left with no eligible workers (checked below)
-                        # — proves a legacy fleet, not a stray packet,
-                        # and fails fast with the remedy.
-                        if not self.legacy_wave_compat:
-                            nonceless_struck.add(wkey)
-                            if len(nonceless_struck) >= 2:
-                                raise RuntimeError(
-                                    "two workers reported finished"
-                                    + legacy_remedy
-                                )
-                            del inflight[tid]
-                            busy.discard(wkey)
-                            pending.append(task)
-                            continue
-                    if ev.get("error"):
-                        # Worker survived but the task failed: requeue
-                        # elsewhere (bounded attempts), free the worker.
-                        del inflight[tid]
-                        busy.discard(wkey)
-                        if attempts.get(tid, 1) >= self.MAX_TASK_ATTEMPTS:
+                    if "wave" not in ev:
+                        struck.add(wkey)
+                        if len(struck) >= 2:
+                            raise RuntimeError(
+                                "two workers reported finished" + _NONCELESS
+                            )
+                        requeue(tid, "finished without the wave nonce")
+                    elif ev["wave"] != wave_nonce:
+                        continue  # stale echo from a previous wave
+                    elif ev.get("error"):
+                        if attempts[tid] >= self.MAX_TASK_ATTEMPTS:
                             raise RuntimeError(
                                 f"task {tid} failed "
                                 f"{attempts[tid]} times: {ev['error']}"
                             )
-                        pending.append(task)
-                        continue
-                    done[tid] = ev
-                    busy.discard(wkey)
-                    del inflight[tid]
+                        requeue(tid, f"task error: {ev['error']}")
+                    else:
+                        del inflight[tid]
+                        done[tid] = ev
+                        log.debug(
+                            "wave %d: task %d finished on %s:%d",
+                            wave_nonce, tid, wkey[0], wkey[1],
+                        )
+                if len(done) == len(tasks):
+                    return [done[int(t["task_id"])] for t in tasks]
+                if self._shutdown.is_set():
+                    raise RuntimeError("shutdown during job dispatch")
                 # C7: requeue tasks whose worker fell out of liveness or
                 # re-registered (a fresh process never saw the task).
                 alive = {
                     (w.host, w.port): w.epoch for w in self.alive_workers()
                 }
-                for tid, (wkey, epoch, task) in list(inflight.items()):
-                    if alive.get(wkey) == epoch:
-                        continue
-                    del inflight[tid]
-                    busy.discard(wkey)
+                for tid, (wkey, epoch, _task) in list(inflight.items()):
                     if wkey not in alive:
-                        self.workers.pop(wkey, None)  # dead until re-register
-                    pending.append(task)
+                        requeue(tid, "worker dead")
+                        self._evict(wkey, "missed 5 heartbeats")
+                    elif alive[wkey] != epoch:
+                        requeue(tid, "worker re-registered")
                 # C5: deal pending tasks to idle live workers
                 # (nonce-less offenders stay quarantined this wave).
+                busy = {wkey for wkey, _epoch, _task in inflight.values()}
                 idle = [
                     k
-                    for k in sorted(set(alive) - busy - nonceless_struck)
+                    for k in sorted(set(alive) - busy - struck)
                     if k in self.workers
                 ]
                 while pending and idle:
@@ -432,30 +420,26 @@ class MRManagerServer:
                         )
                     except OSError:
                         # Refused/timed out = dead now, don't wait 5 beats.
-                        self.workers.pop(wkey, None)
+                        self._evict(wkey, "task connection refused")
                         pending.appendleft(task)
                         continue
-                    busy.add(wkey)
                     tid = int(task["task_id"])
                     attempts[tid] = attempts.get(tid, 0) + 1
                     inflight[tid] = (wkey, alive[wkey], task)
+                    log.debug(
+                        "wave %d: task %d -> %s:%d (attempt %d)",
+                        wave_nonce, tid, wkey[0], wkey[1], attempts[tid],
+                    )
                 if pending and not inflight:
-                    live = {
-                        (w.host, w.port) for w in self.alive_workers()
-                    }
+                    live = {(w.host, w.port) for w in self.alive_workers()}
                     if not live:
+                        raise RuntimeError("no live workers left for dispatch")
+                    if not live - struck:
                         raise RuntimeError(
-                            "no live workers left for dispatch"
+                            "every live worker reported finished" + _NONCELESS
                         )
-                    if not (live - nonceless_struck):
-                        # Every live worker struck out nonce-less:
-                        # that's a legacy fleet, not a spoofed packet.
-                        raise RuntimeError(
-                            "every live worker reported finished"
-                            + legacy_remedy
-                        )
-                self.task_event.wait(timeout=0.2)
-        return [done[int(t["task_id"])] for t in tasks]
+                if cursor == len(self.task_events):
+                    self.task_event.wait(timeout=0.2)
 
     def _run_job_on_workers(self, message: dict, job_id: int) -> MRJobResult:
         """Execute one new_manager_job by dispatching to registered
@@ -463,17 +447,9 @@ class MRManagerServer:
         round-robin file splits, map wave, partition-grouped reduce
         wave, ``part-%05d`` output (same stage contract MREngine.
         submit_job implements on Spark)."""
-        in_dir = Path(message["input_directory"])
-        if not in_dir.is_dir():
-            raise FileNotFoundError(f"input directory {in_dir} not found")
-        files = sorted(
-            str(p)
-            for p in in_dir.iterdir()
-            if p.is_file() and not p.name.startswith((".", "_"))
+        groups = split_input(
+            message["input_directory"], int(message.get("num_mappers", 2))
         )
-        if not files:
-            raise FileNotFoundError(f"no input files in {in_dir}")
-        num_mappers = int(message.get("num_mappers", 2))
         num_reducers = int(message.get("num_reducers", 2))
         out_dir = Path(message["output_directory"])
         out_dir.mkdir(parents=True, exist_ok=True)
@@ -508,18 +484,17 @@ class MRManagerServer:
         inter = job_root / "intermediate"
         inter.mkdir(exist_ok=True)
         try:
-            n_map = min(num_mappers, len(files))
             map_finished = self._dispatch_wave(
                 [
                     {
                         "message_type": "new_map_task",
                         "task_id": i,
                         "executable": str(message["mapper_executable"]),
-                        "input_paths": files[i::n_map],  # S2 round-robin
+                        "input_paths": group,
                         "output_directory": str(inter),
                         "num_partitions": num_reducers,
                     }
-                    for i in range(n_map)
+                    for i, group in enumerate(groups)
                 ]
             )
             by_partition: dict[str, list[str]] = {}
@@ -589,13 +564,14 @@ class MRManagerServer:
                         dropped.error = "dropped: shutdown"
                         dropped.done.set()
                 break
+            job_id = self.jobs.index(rec)
+            # C5: a live registered fleet executes the job the reference
+            # way; Spark is the no-fleet data plane.
+            plane = "fleet" if self.alive_workers() else "spark"
+            log.info("job %d start on %s: %s", job_id, plane, rec.message)
             try:
-                if self.alive_workers():
-                    # C5: a live registered fleet executes the job the
-                    # reference way; Spark is the no-fleet data plane.
-                    rec.result = self._run_job_on_workers(
-                        rec.message, job_id=self.jobs.index(rec)
-                    )
+                if plane == "fleet":
+                    rec.result = self._run_job_on_workers(rec.message, job_id)
                 elif self.engine is None:
                     raise RuntimeError(
                         "no live workers registered and no Spark engine"
@@ -611,7 +587,11 @@ class MRManagerServer:
                     )
             except Exception as exc:  # noqa: BLE001 — survive bad jobs
                 rec.error = f"{type(exc).__name__}: {exc}"
+                log.warning("job %d failed", job_id, exc_info=True)
             finally:
+                log.info(
+                    "job %d end on %s: %s", job_id, plane, rec.error or "ok"
+                )
                 rec.done.set()
 
     # -- lifecycle ---------------------------------------------------------

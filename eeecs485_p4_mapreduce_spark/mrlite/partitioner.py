@@ -1,4 +1,5 @@
-"""The reference's shuffle partition function.
+"""The reference's two routing rules: input files → map tasks (S2) and
+key → reduce partition (M2).
 
 Key → partition by ``int(md5(key).hexdigest(), 16) % num_partitions``.
 The reference never states this in code (its framework is starter-code
@@ -15,9 +16,34 @@ pays that cost. The idiomatic layer uses Spark's native hash exchange.
 from __future__ import annotations
 
 import hashlib
+from pathlib import Path
 
 
 def md5_partition(key: str, num_partitions: int) -> int:
     """Partition index for a key, exactly as the reference computes it."""
     digest = hashlib.md5(key.encode("utf-8")).hexdigest()
     return int(digest, 16) % num_partitions
+
+
+def split_input(input_directory: str, num_mappers: int) -> list[list[str]]:
+    """§2.1 S1+S2: the input files of each map task, one list per task.
+
+    Files are listed in name order and dealt round-robin
+    (``files[i::n_map]``) to ``n_map = min(num_mappers, len(files))``
+    tasks (reference: tests/test_manager_02.py:139-144). Hidden files
+    (``.``/``_`` prefixed: ``_SUCCESS``, ``.crc``) are skipped, matching
+    Hadoop's input conventions. Raises FileNotFoundError when the
+    directory is missing or holds no input file.
+    """
+    in_dir = Path(input_directory)
+    if not in_dir.is_dir():
+        raise FileNotFoundError(f"input directory {input_directory} not found")
+    files = sorted(
+        str(p)
+        for p in in_dir.iterdir()
+        if p.is_file() and not p.name.startswith((".", "_"))
+    )
+    if not files:
+        raise FileNotFoundError(f"no input files in {input_directory}")
+    n_map = min(num_mappers, len(files))
+    return [files[i::n_map] for i in range(n_map)]

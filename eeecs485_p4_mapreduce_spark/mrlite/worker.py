@@ -67,6 +67,7 @@ from __future__ import annotations
 
 import heapq
 import json
+import logging
 import os
 import socket
 import subprocess
@@ -76,6 +77,8 @@ from contextlib import ExitStack
 from pathlib import Path
 
 from eeecs485_p4_mapreduce_spark.mrlite.partitioner import md5_partition
+
+log = logging.getLogger(__name__)
 
 #: Seconds between heartbeats — in the reference spec
 #: (reference: tests/utils/__init__.py:21-22).
@@ -214,6 +217,7 @@ class MRWorker:
         mtype = message.get("message_type")
         if mtype == "register_ack":
             if not self.registered.is_set():
+                log.info("worker %s:%d registered", self.host, self.port)
                 self.registered.set()
                 t = threading.Thread(target=self._heartbeat_loop, daemon=True)
                 t.start()
@@ -222,12 +226,20 @@ class MRWorker:
             # A failing task must neither kill this loop nor hang the
             # manager: report it as finished-with-error (an extra field
             # reference tooling ignores; our manager requeues on it).
+            log.debug(
+                "worker %s:%d: %s %s",
+                self.host, self.port, mtype, message.get("task_id"),
+            )
             try:
                 if mtype == "new_map_task":
                     self._run_map_task(message)
                 else:
                     self._run_reduce_task(message)
             except Exception as exc:  # noqa: BLE001 — report, don't die
+                log.warning(
+                    "worker %s:%d: %s %s failed: %s",
+                    self.host, self.port, mtype, message.get("task_id"), exc,
+                )
                 self._send_finished(
                     int(message.get("task_id", -1)),
                     [],
@@ -235,6 +247,7 @@ class MRWorker:
                     wave=message.get("wave"),
                 )
         elif mtype == "shutdown":
+            log.info("worker %s:%d shutting down", self.host, self.port)
             self._shutdown.set()
 
     def _heartbeat_loop(self) -> None:

@@ -3,7 +3,9 @@
 from __future__ import annotations
 
 import os
+import re
 import sys
+from collections import Counter
 from pathlib import Path
 
 import pytest
@@ -13,6 +15,22 @@ sys.path.insert(0, str(REPO_ROOT))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+
+#: In-repo mrlite corpus and executables (FIXTURES.md §1 properties).
+MR_FIXTURES = Path(__file__).resolve().parent / "fixtures" / "mr"
+
+
+def fixture_wordcount() -> list[str]:
+    """Golden ``word<TAB>count`` lines of the fixture corpus, computed
+    without mrlite: each line lowercased and split on ``[ \t]``, so a
+    blank line and each extra separator count the empty word."""
+    counts = Counter(
+        word
+        for f in sorted((MR_FIXTURES / "input").iterdir())
+        for line in f.read_text().splitlines()
+        for word in re.split("[ \t]", line.lower())
+    )
+    return [f"{w}\t{c}" for w, c in counts.items()]
 
 
 @pytest.fixture(scope="session")

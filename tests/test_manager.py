@@ -1,8 +1,10 @@
 """TCP submit-endpoint parity tests: the reference's OWN client script
-(/root/reference/mapreduce/submit.py, run as a subprocess at test time —
-never copied) must be able to submit a job to MRManagerServer and get the
-golden word-count output, proving C1's network hop works unchanged for
-existing user scripts."""
+(mapreduce/submit.py of the reference checkout, run as a subprocess at
+test time — never copied) must be able to submit a job to MRManagerServer
+and get the golden word-count output, proving C1's network hop works
+unchanged for existing user scripts; that test carries
+``needs_reference``. The rest run on the in-repo ``tests/fixtures/mr``
+corpus or on no input at all."""
 
 from __future__ import annotations
 
@@ -15,12 +17,22 @@ from pathlib import Path
 
 import pytest
 
+from tests.conftest import MR_FIXTURES, fixture_wordcount
+
 REF = Path("/root/reference")
 REF_DATA = REF / "tests/testdata"
 
-pytestmark = pytest.mark.skipif(
+needs_reference = pytest.mark.skipif(
     not REF_DATA.is_dir(), reason="reference testdata not available"
 )
+
+#: new_manager_job fields of a fixture word-count job
+FIXTURE_WC = {
+    "message_type": "new_manager_job",
+    "input_directory": str(MR_FIXTURES / "input"),
+    "mapper_executable": str(MR_FIXTURES / "exec/wc_map.sh"),
+    "reducer_executable": str(MR_FIXTURES / "exec/wc_reduce.sh"),
+}
 
 
 @pytest.fixture()
@@ -50,6 +62,7 @@ def _wait_jobs(server, n: int, timeout: float = 120.0) -> None:
     raise TimeoutError(f"jobs not finished: {[(r.error, r.result) for r in server.jobs]}")
 
 
+@needs_reference
 def test_reference_submit_client_runs_wc_job(server, tmp_path):
     """Drive the endpoint with the reference's actual mapreduce-submit
     client: its fire-and-forget TCP JSON message must produce the golden
@@ -96,14 +109,7 @@ def test_fifo_queueing_and_malformed_messages(server, tmp_path):
     while server.malformed_count < 2 and time.monotonic() < deadline:
         time.sleep(0.05)
     assert server.malformed_count == 2
-    base = {
-        "message_type": "new_manager_job",
-        "input_directory": str(REF_DATA / "input_small"),
-        "mapper_executable": str(REF_DATA / "exec/wc_map.sh"),
-        "reducer_executable": str(REF_DATA / "exec/wc_reduce.sh"),
-        "num_mappers": 1,
-        "num_reducers": 1,
-    }
+    base = {**FIXTURE_WC, "num_mappers": 1, "num_reducers": 1}
     _send(server.port, {**base, "output_directory": str(tmp_path / "a")})
     _send(server.port, {**base, "output_directory": str(tmp_path / "b")})
     _wait_jobs(server, 2)
@@ -163,23 +169,22 @@ def test_cli_serve_mode(tmp_path):
         stdout=subprocess.PIPE,
         stderr=subprocess.DEVNULL,
         text=True,
-        cwd="/root/repo",
+        cwd=Path(__file__).resolve().parents[1],
     )
     try:
         line = proc.stdout.readline()
         m = re.search(r"listening on ([\w.]+):(\d+)", line)
         assert m, line
         port = int(m.group(2))
-        base = {
-            "message_type": "new_manager_job",
-            "input_directory": str(REF_DATA / "input_small"),
-            "output_directory": str(tmp_path / "out"),
-            "mapper_executable": str(REF_DATA / "exec/wc_map.sh"),
-            "reducer_executable": str(REF_DATA / "exec/wc_reduce.sh"),
-            "num_mappers": 1,
-            "num_reducers": 1,
-        }
-        _send(port, base)
+        _send(
+            port,
+            {
+                **FIXTURE_WC,
+                "output_directory": str(tmp_path / "out"),
+                "num_mappers": 1,
+                "num_reducers": 1,
+            },
+        )
         deadline = time.monotonic() + 90
         out_file = tmp_path / "out" / "part-00000"
         while time.monotonic() < deadline and not out_file.exists():
@@ -222,11 +227,8 @@ def test_dead_fleet_falls_back_to_spark_engine(spark, tmp_path):
         _send(
             server.port,
             {
-                "message_type": "new_manager_job",
-                "input_directory": str(REF_DATA / "input"),
+                **FIXTURE_WC,
                 "output_directory": str(out),
-                "mapper_executable": str(REF_DATA / "exec/wc_map.sh"),
-                "reducer_executable": str(REF_DATA / "exec/wc_reduce.sh"),
                 "num_mappers": 2,
                 "num_reducers": 2,
             },
@@ -236,57 +238,41 @@ def test_dead_fleet_falls_back_to_spark_engine(spark, tmp_path):
         assert rec.error is None
         # No worker ever saw a task.
         assert server.task_events == []
-        golden = (
-            (REF_DATA / "correct/word_count_correct.txt")
-            .read_text()
-            .splitlines()
-        )
-        assert sorted(rec.result.read_lines()) == sorted(golden)
+        assert sorted(rec.result.read_lines()) == sorted(fixture_wordcount())
     finally:
         worker.stop()
         server.stop()
         server.join(timeout=10)
 
 
-def test_nonceless_finished_fails_fast_unless_legacy(monkeypatch):
+def test_nonceless_finished_fails_fast(monkeypatch):
     """A worker that drops the unknown ``wave`` field (e.g. reference
     manager-test mock workers send ``finished`` with no wave) must not
-    hang ``_dispatch_wave`` forever under the strict default: the
-    nonce-less finished from the assigned worker raises a RuntimeError
-    naming ``legacy_wave_compat`` (the remedy), while with the flag set
-    the sender+tid match completes the wave as documented."""
+    hang ``_dispatch_wave`` forever: its nonce-less finished quarantines
+    it, and with no other worker left the wave raises a RuntimeError
+    naming the missing wave nonce."""
     from eeecs485_p4_mapreduce_spark.mrlite import manager as mgr
 
-    def run(legacy: bool):
-        srv = mgr.MRManagerServer(
-            None, port=0, hb_port=None, legacy_wave_compat=legacy
-        )
-        wkey = ("localhost", 7001)
-        srv.workers[wkey] = mgr.WorkerRecord(host=wkey[0], port=wkey[1])
+    srv = mgr.MRManagerServer(None, port=0, hb_port=None)
+    wkey = ("localhost", 7001)
+    srv.workers[wkey] = mgr.WorkerRecord(host=wkey[0], port=wkey[1])
 
-        def fake_send(host, port, message):
-            # Legacy-style worker: instant finished WITHOUT the wave
-            # field (it dropped the unknown key from the task message).
-            ev = {
-                "message_type": "finished",
-                "task_id": message["task_id"],
-                "worker_host": host,
-                "worker_port": port,
-            }
-            with srv.task_event:
-                srv.task_events.append(ev)
-                srv.task_event.notify_all()
+    def fake_send(host, port, message):
+        # Instant finished WITHOUT the wave field (the worker dropped
+        # the unknown key from the task message).
+        ev = {
+            "message_type": "finished",
+            "task_id": message["task_id"],
+            "worker_host": host,
+            "worker_port": port,
+        }
+        with srv.task_event:
+            srv.task_events.append(ev)
+            srv.task_event.notify_all()
 
-        monkeypatch.setattr(mgr, "send_json", fake_send)
-        return srv._dispatch_wave(
-            [{"task_id": 0, "message_type": "new_map_task"}]
-        )
-
-    with pytest.raises(RuntimeError, match="legacy_wave_compat"):
-        run(False)
-
-    done = run(True)
-    assert [int(ev["task_id"]) for ev in done] == [0]
+    monkeypatch.setattr(mgr, "send_json", fake_send)
+    with pytest.raises(RuntimeError, match="wave nonce"):
+        srv._dispatch_wave([{"task_id": 0, "message_type": "new_map_task"}])
 
 
 def test_single_spoofed_nonceless_event_does_not_kill_job(monkeypatch):
@@ -372,3 +358,43 @@ def test_stale_prior_wave_nonce_still_skipped(monkeypatch):
     )
     assert [int(ev["task_id"]) for ev in done] == [0]
     assert done[0]["wave"] is not None
+
+
+def test_wave_returns_without_waiting_after_last_finished(monkeypatch):
+    """The wave tail: once the last ``finished`` event is consumed the
+    wave returns at once. A worker that answers before the dispatch
+    loop looks again (here: synchronously inside send_json) leaves an
+    unconsumed event pending, so ``task_event.wait`` is never called —
+    no 0.2 s timeout is sat out per wave."""
+    from eeecs485_p4_mapreduce_spark.mrlite import manager as mgr
+
+    srv = mgr.MRManagerServer(None, port=0, hb_port=None)
+    wkey = ("localhost", 7005)
+    srv.workers[wkey] = mgr.WorkerRecord(host=wkey[0], port=wkey[1])
+
+    def fake_send(host, port, message):
+        ev = {
+            "message_type": "finished",
+            "task_id": message["task_id"],
+            "worker_host": host,
+            "worker_port": port,
+            "wave": message["wave"],
+        }
+        with srv.task_event:
+            srv.task_events.append(ev)
+            srv.task_event.notify_all()
+
+    waits = []
+    real_wait = srv.task_event.wait
+
+    def counting_wait(timeout=None):
+        waits.append(timeout)
+        return real_wait(timeout)
+
+    monkeypatch.setattr(mgr, "send_json", fake_send)
+    monkeypatch.setattr(srv.task_event, "wait", counting_wait)
+    done = srv._dispatch_wave(
+        [{"task_id": 0, "message_type": "new_map_task"}]
+    )
+    assert [int(ev["task_id"]) for ev in done] == [0]
+    assert waits == []

@@ -1,10 +1,14 @@
-"""Golden-parity tests for the mrlite engine against the reference's own
-test corpus, executables, and golden outputs (read at runtime from the
-read-only reference checkout — nothing is copied).
+"""Golden-parity tests for the mrlite engine.
+
+Word count runs on the in-repo corpus and executables under
+``tests/fixtures/mr`` against a golden computed with ``Counter``. The
+grep and large-input tests read the reference's own corpus and
+byte-exact goldens at runtime (nothing is copied) and carry
+``needs_reference``.
 
 Mirrors the reference's integration-test strategy (SURVEY.md §5):
 - grep  → byte-exact compare vs grep_correct.txt  (test_integration_01)
-- wc    → order-insensitive set compare vs word_count_correct.txt
+- wc    → order-insensitive set compare vs the golden word count
           (test_integration_02/03, union of parts)
 - per-partition md5 routing asserted like test_worker_08.
 """
@@ -15,9 +19,11 @@ from pathlib import Path
 
 import pytest
 
+from tests.conftest import MR_FIXTURES, fixture_wordcount
+
 REF = Path("/root/reference/tests/testdata")
 
-pytestmark = pytest.mark.skipif(
+needs_reference = pytest.mark.skipif(
     not REF.is_dir(), reason="reference testdata not available"
 )
 
@@ -27,10 +33,6 @@ def engine(spark):
     from eeecs485_p4_mapreduce_spark.mrlite import MREngine
 
     return MREngine(spark)
-
-
-def golden_wordcount() -> list[str]:
-    return (REF / "correct/word_count_correct.txt").read_text().splitlines()
 
 
 def golden_grep() -> bytes:
@@ -47,18 +49,18 @@ def test_md5_partition_matches_reference_routing():
 
 
 def test_wordcount_external_executables(engine, tmp_path):
-    """Reference wc_map.sh/wc_reduce.sh through RDD.pipe, 2x2 job;
-    union of parts must equal the golden multiset exactly."""
+    """wc_map.sh/wc_reduce.sh through RDD.pipe, 2x2 job; union of parts
+    must equal the golden multiset exactly."""
     res = engine.submit_job(
-        input_directory=str(REF / "input"),
+        input_directory=str(MR_FIXTURES / "input"),
         output_directory=str(tmp_path / "out"),
-        mapper_executable=str(REF / "exec/wc_map.sh"),
-        reducer_executable=str(REF / "exec/wc_reduce.sh"),
+        mapper_executable=str(MR_FIXTURES / "exec/wc_map.sh"),
+        reducer_executable=str(MR_FIXTURES / "exec/wc_reduce.sh"),
         num_mappers=2,
         num_reducers=2,
     )
     assert len(res.output_paths) == 2
-    assert sorted(res.read_lines()) == sorted(golden_wordcount())
+    assert sorted(res.read_lines()) == sorted(fixture_wordcount())
 
 
 def test_wordcount_builtin_python(engine, tmp_path):
@@ -67,7 +69,7 @@ def test_wordcount_builtin_python(engine, tmp_path):
     from eeecs485_p4_mapreduce_spark.mrlite import builtins as b
 
     res = engine.submit_job(
-        input_directory=str(REF / "input"),
+        input_directory=str(MR_FIXTURES / "input"),
         output_directory=str(tmp_path / "out"),
         mapper_executable=b.wc_map,
         reducer_executable=b.wc_reduce,
@@ -76,9 +78,10 @@ def test_wordcount_builtin_python(engine, tmp_path):
     )
     assert len(res.output_paths) == 1
     # single sorted partition → byte-level line order is the golden's order
-    assert res.read_lines() == sorted(golden_wordcount())
+    assert res.read_lines() == sorted(fixture_wordcount())
 
 
+@needs_reference
 def test_grep_external_executables(engine, tmp_path):
     """Reference grep_map.py/grep_reduce.py, 2 mappers / 1 reducer —
     byte-exact against grep_correct.txt like reference test_integration_01."""
@@ -93,6 +96,7 @@ def test_grep_external_executables(engine, tmp_path):
     assert Path(res.output_paths[0]).read_bytes() == golden_grep()
 
 
+@needs_reference
 def test_grep_builtin_python(engine, tmp_path):
     from eeecs485_p4_mapreduce_spark.mrlite import builtins as b
 
@@ -114,7 +118,7 @@ def test_multireducer_partition_layout(engine, tmp_path):
     from eeecs485_p4_mapreduce_spark.mrlite import builtins as b, md5_partition
 
     res = engine.submit_job(
-        input_directory=str(REF / "input"),
+        input_directory=str(MR_FIXTURES / "input"),
         output_directory=str(tmp_path / "out"),
         mapper_executable=b.wc_map,
         reducer_executable=b.wc_reduce,
@@ -132,7 +136,7 @@ def test_fifo_job_ids(engine, tmp_path):
     from eeecs485_p4_mapreduce_spark.mrlite import builtins as b
 
     first = engine.submit_job(
-        input_directory=str(REF / "input_small"),
+        input_directory=str(MR_FIXTURES / "input"),
         output_directory=str(tmp_path / "a"),
         mapper_executable=b.wc_map,
         reducer_executable=b.wc_reduce,
@@ -140,7 +144,7 @@ def test_fifo_job_ids(engine, tmp_path):
         num_reducers=1,
     )
     second = engine.submit_job(
-        input_directory=str(REF / "input_small"),
+        input_directory=str(MR_FIXTURES / "input"),
         output_directory=str(tmp_path / "b"),
         mapper_executable=b.wc_map,
         reducer_executable=b.wc_reduce,
@@ -151,6 +155,7 @@ def test_fifo_job_ids(engine, tmp_path):
     assert first.read_lines() == second.read_lines()
 
 
+@needs_reference
 def test_streaming_large_input(engine, tmp_path):
     """Reference test_worker_11 analog: the 3.7 MB corpus must map+reduce
     through external pipes without error (O(1) streaming path), inside the
@@ -176,77 +181,19 @@ def test_streaming_large_input(engine, tmp_path):
     assert elapsed < 30.0, f"3.7 MB map+reduce took {elapsed:.1f}s"
 
 
-def test_intermediate_debug_materialization(engine, tmp_path):
-    """K2 debug mode: the 2x2 wc job with intermediate_dir set must write
-    the reference's exact scratch layout —
-    job-{j}/intermediate/maptask%05d-part%05d
-    (reference: tests/test_worker_08.py:160-175,
-    tests/test_manager_03.py:169-171) — with BYTE-identical content to an
-    independent oracle that pipes each round-robin file group through the
-    reference's wc_map.sh and routes lines by md5(key), and the final
-    output must still match the golden word count."""
-    import subprocess
+def test_split_input_deals_sorted_visible_files(tmp_path):
+    """S1+S2, the one split rule both data planes call: visible files in
+    name order, dealt round-robin to min(num_mappers, #files) tasks."""
+    from eeecs485_p4_mapreduce_spark.mrlite.partitioner import split_input
 
-    from eeecs485_p4_mapreduce_spark.mrlite import md5_partition
-
-    scratch = tmp_path / "scratch"
-    res = engine.submit_job(
-        input_directory=str(REF / "input"),
-        output_directory=str(tmp_path / "out"),
-        mapper_executable=str(REF / "exec/wc_map.sh"),
-        reducer_executable=str(REF / "exec/wc_reduce.sh"),
-        num_mappers=2,
-        num_reducers=2,
-        intermediate_dir=str(scratch),
-    )
-    inter = scratch / f"job-{res.job_id}" / "intermediate"
-    names = sorted(p.name for p in inter.iterdir())
-    assert names == [
-        "maptask00000-part00000",
-        "maptask00000-part00001",
-        "maptask00001-part00000",
-        "maptask00001-part00001",
-    ]
-
-    # Independent oracle: same round-robin split (sorted files, i::2),
-    # same executable, same md5 routing — computed without the engine.
-    files = sorted(p for p in (REF / "input").iterdir() if p.is_file())
-    for m in range(2):
-        group = files[m::2]
-        blob = b"".join(p.read_bytes() for p in group)
-        out = subprocess.run(
-            [str(REF / "exec/wc_map.sh")], input=blob, capture_output=True,
-            check=True,
-        ).stdout.decode()
-        expected = {0: [], 1: []}
-        for line in out.splitlines():
-            key = line.split("\t", 1)[0]
-            expected[md5_partition(key, 2)].append(line + "\n")
-        for p in range(2):
-            got = (inter / f"maptask{m:05d}-part{p:05d}").read_text()
-            assert got == "".join(expected[p]), f"maptask{m}-part{p} differs"
-
-    assert sorted(res.read_lines()) == sorted(golden_wordcount())
-
-
-def test_file_shuffle_equals_memory_shuffle(engine, tmp_path):
-    """Metamorphic: the K2 debug file-shuffle path and the default
-    in-memory Spark shuffle must produce BYTE-identical part files for
-    the same job (2x2 external wc)."""
-    kwargs = dict(
-        input_directory=str(REF / "input"),
-        mapper_executable=str(REF / "exec/wc_map.sh"),
-        reducer_executable=str(REF / "exec/wc_reduce.sh"),
-        num_mappers=2,
-        num_reducers=2,
-    )
-    mem = engine.submit_job(
-        output_directory=str(tmp_path / "mem"), **kwargs
-    )
-    dbg = engine.submit_job(
-        output_directory=str(tmp_path / "dbg"),
-        intermediate_dir=str(tmp_path / "scratch"),
-        **kwargs,
-    )
-    for a, b in zip(mem.output_paths, dbg.output_paths):
-        assert Path(a).read_bytes() == Path(b).read_bytes()
+    with pytest.raises(FileNotFoundError, match="not found"):
+        split_input(str(tmp_path / "missing"), 2)
+    for name in ("_SUCCESS", ".part-0.crc"):
+        (tmp_path / name).write_text("")
+    with pytest.raises(FileNotFoundError, match="no input files"):
+        split_input(str(tmp_path), 2)
+    for name in ("f3", "f1", "f2"):
+        (tmp_path / name).write_text("")
+    paths = [str(tmp_path / f"f{i}") for i in (1, 2, 3)]
+    assert split_input(str(tmp_path), 2) == [paths[0::2], paths[1::2]]
+    assert split_input(str(tmp_path), 5) == [[p] for p in paths]

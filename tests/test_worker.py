@@ -2,10 +2,13 @@
 
 Each test replays a reference worker unit test over REAL sockets (the
 reference mocks socket.socket; here a live fake-manager harness listens
-on ephemeral TCP/UDP ports), using the reference's OWN executables and
-fixtures read from /root/reference/tests/testdata — never copied into
-this repo. The goldens asserted are the reference tests' own expected
-values (cited per test).
+on ephemeral TCP/UDP ports). Most run on the in-repo corpus and
+executables under ``tests/fixtures/mr``, whose file01/file02 carry the
+two classic four-word lines, so the reference tests' own expected values
+(cited per test) still apply. Tests that need the reference's own
+client, slow scripts, unsorted intermediate fixtures or large corpus
+read them from the reference checkout at runtime (never copied) and
+carry ``needs_reference``.
 
 No Spark needed: the worker is a pure control/exec shim. The final test
 wires a real MRManagerServer and real MRWorkers together to prove the
@@ -26,10 +29,11 @@ from pathlib import Path
 import pytest
 
 from eeecs485_p4_mapreduce_spark.mrlite.worker import MRWorker, send_json
+from tests.conftest import MR_FIXTURES, fixture_wordcount
 
 REF_DATA = Path("/root/reference/tests/testdata")
 
-pytestmark = pytest.mark.skipif(
+needs_reference = pytest.mark.skipif(
     not REF_DATA.is_dir(), reason="reference testdata not available"
 )
 
@@ -207,9 +211,9 @@ def test_no_heartbeat_without_ack():
 
 
 def test_map_task(fake_manager, worker, tmp_path):
-    """Reference test_worker_03/04: a map task runs the reference's own
-    wc_map.sh, md5-routes by the pre-tab key, writes one file per
-    partition, and reports finished with the exact message shape."""
+    """Reference test_worker_03/04: a map task runs wc_map.sh,
+    md5-routes by the pre-tab key, writes one file per partition, and
+    reports finished with the exact message shape."""
     fake_manager.wait_for(lambda ms: len(_non_heartbeat(ms)) >= 1)
     out = tmp_path / "output"
     out.mkdir()
@@ -219,8 +223,8 @@ def test_map_task(fake_manager, worker, tmp_path):
         {
             "message_type": "new_map_task",
             "task_id": 0,
-            "executable": str(REF_DATA / "exec/wc_map.sh"),
-            "input_paths": [str(REF_DATA / "input/file01")],
+            "executable": str(MR_FIXTURES / "exec/wc_map.sh"),
+            "input_paths": [str(MR_FIXTURES / "input/file01")],
             "output_directory": str(out),
             "num_partitions": 2,
             "worker_host": "localhost",
@@ -255,6 +259,7 @@ def test_map_task(fake_manager, worker, tmp_path):
     assert sorted(part1) == ["world\t1", "world\t1"]
 
 
+@needs_reference
 def test_reduce_task(fake_manager, worker, tmp_path):
     """Reference test_worker_07: reduce over the reference's own
     (unsorted!) intermediate fixtures through its own wc_reduce.sh must
@@ -311,8 +316,8 @@ def test_map_then_reduce_end_to_end(fake_manager, worker, tmp_path):
             {
                 "message_type": "new_map_task",
                 "task_id": task_id,
-                "executable": str(REF_DATA / "exec/wc_map.sh"),
-                "input_paths": [str(REF_DATA / infile)],
+                "executable": str(MR_FIXTURES / "exec/wc_map.sh"),
+                "input_paths": [str(MR_FIXTURES / infile)],
                 "output_directory": str(inter),
                 "num_partitions": 2,
                 "worker_host": "localhost",
@@ -327,7 +332,7 @@ def test_map_then_reduce_end_to_end(fake_manager, worker, tmp_path):
             {
                 "message_type": "new_reduce_task",
                 "task_id": task_id,
-                "executable": str(REF_DATA / "exec/wc_reduce.sh"),
+                "executable": str(MR_FIXTURES / "exec/wc_reduce.sh"),
                 "input_paths": [
                     str(inter / f"maptask00000-part{task_id:05d}"),
                     str(inter / f"maptask00001-part{task_id:05d}"),
@@ -420,8 +425,12 @@ def test_cluster_runs_reference_wc_job(tmp_path):
     """C5 end-to-end: a manager with a live registered fleet executes a
     new_manager_job by dispatching map/reduce tasks to the workers —
     the reference's own execution model — and the union of part files
-    equals the reference's word_count_correct.txt golden multiset
-    (reference test_integration_02's check)."""
+    equals the golden multiset (reference test_integration_02's check).
+    K2: the map tasks write the reference's scratch layout,
+    ``<cwd>/tmp/job-{id}/intermediate/maptask%05d-part%05d``, and the
+    job removes its intermediate directory when it ends."""
+    import re
+
     from eeecs485_p4_mapreduce_spark.mrlite import MRManagerServer
 
     server = MRManagerServer(
@@ -445,10 +454,10 @@ def test_cluster_runs_reference_wc_job(tmp_path):
             server.port,
             {
                 "message_type": "new_manager_job",
-                "input_directory": str(REF_DATA / "input"),
+                "input_directory": str(MR_FIXTURES / "input"),
                 "output_directory": str(out),
-                "mapper_executable": str(REF_DATA / "exec/wc_map.sh"),
-                "reducer_executable": str(REF_DATA / "exec/wc_reduce.sh"),
+                "mapper_executable": str(MR_FIXTURES / "exec/wc_map.sh"),
+                "reducer_executable": str(MR_FIXTURES / "exec/wc_reduce.sh"),
                 "num_mappers": 2,
                 "num_reducers": 2,
             },
@@ -465,11 +474,24 @@ def test_cluster_runs_reference_wc_job(tmp_path):
             for p in rec.result.output_paths
             for line in Path(p).read_text().splitlines()
         ]
-        assert sorted(lines) == sorted(_golden_wordcount())
+        assert sorted(lines) == sorted(fixture_wordcount())
         # Both workers did map work (2 tasks, 2 idle workers).
-        assert {ev["worker_port"] for ev in server.task_events[:2]} == {
+        map_events = server.task_events[:2]
+        assert {ev["worker_port"] for ev in map_events} == {
             w.port for w in workers
         }
+        # K2 layout; a fleet sharing this cwd may force the nested
+        # m{port} fallback inside tmp/job-0.
+        inter = re.escape(str(Path.cwd() / "tmp" / "job-0")) + (
+            r"(/m\d+)?/intermediate"
+        )
+        for ev in map_events:
+            tid = ev["task_id"]
+            for p, path in enumerate(ev["output_paths"]):
+                assert re.fullmatch(
+                    rf"{inter}/maptask{tid:05d}-part{p:05d}", path
+                ), path
+                assert not Path(path).exists()
     finally:
         for w in workers:
             w.stop()
@@ -492,12 +514,18 @@ class _ZombieWorker(MRWorker):
         self._shutdown.set()  # silent death: no finished, no heartbeats
 
 
-def test_dead_worker_task_reassigned(tmp_path):
+def test_dead_worker_task_reassigned(tmp_path, caplog):
     """C7: a worker that takes a task and dies silently falls out of
     liveness after 5 missed heartbeats; the manager requeues its task
-    to the survivor and the job still completes with the golden
-    output."""
+    to the survivor, logs the requeue and the eviction at WARNING, and
+    the job still completes with the golden output."""
+    import logging
+
     from eeecs485_p4_mapreduce_spark.mrlite import MRManagerServer
+
+    caplog.set_level(
+        logging.WARNING, logger="eeecs485_p4_mapreduce_spark.mrlite.manager"
+    )
 
     server = MRManagerServer(
         None, port=0, hb_port=0, heartbeat_interval=HB
@@ -523,10 +551,10 @@ def test_dead_worker_task_reassigned(tmp_path):
             server.port,
             {
                 "message_type": "new_manager_job",
-                "input_directory": str(REF_DATA / "input"),
+                "input_directory": str(MR_FIXTURES / "input"),
                 "output_directory": str(out),
-                "mapper_executable": str(REF_DATA / "exec/wc_map.sh"),
-                "reducer_executable": str(REF_DATA / "exec/wc_reduce.sh"),
+                "mapper_executable": str(MR_FIXTURES / "exec/wc_map.sh"),
+                "reducer_executable": str(MR_FIXTURES / "exec/wc_reduce.sh"),
                 "num_mappers": 2,
                 "num_reducers": 2,
             },
@@ -539,13 +567,23 @@ def test_dead_worker_task_reassigned(tmp_path):
             for p in rec.result.output_paths
             for line in Path(p).read_text().splitlines()
         ]
-        assert sorted(lines) == sorted(_golden_wordcount())
+        assert sorted(lines) == sorted(fixture_wordcount())
         # The zombie was evicted from the fleet when its task requeued.
         assert (zombie.host, zombie.port) not in server.workers
         # Every finished event came from the survivor.
         assert {ev["worker_port"] for ev in server.task_events} == {
             worker.port
         }
+        zkey = f"localhost:{zombie.port}"
+        messages = [
+            r.getMessage() for r in caplog.records
+            if r.levelno == logging.WARNING
+        ]
+        assert any(
+            "requeue task" in m and zkey in m and "worker dead" in m
+            for m in messages
+        ), messages
+        assert f"evict worker {zkey}: missed 5 heartbeats" in messages
     finally:
         zombie.stop()
         worker.stop()
@@ -555,6 +593,7 @@ def test_dead_worker_task_reassigned(tmp_path):
         server.join(timeout=10)
 
 
+@needs_reference
 def test_reference_submit_client_drives_worker_fleet(tmp_path):
     """Full drop-in parity with ZERO Spark: the reference's OWN
     mapreduce-submit client (run as a subprocess) submits to our
@@ -623,7 +662,7 @@ def test_task_failure_reported_not_fatal(fake_manager, worker, tmp_path):
             "message_type": "new_map_task",
             "task_id": 7,
             "executable": "/nonexistent/mapper.sh",
-            "input_paths": [str(REF_DATA / "input/file01")],
+            "input_paths": [str(MR_FIXTURES / "input/file01")],
             "output_directory": str(out),
             "num_partitions": 1,
             "worker_host": "localhost",
@@ -648,8 +687,8 @@ def test_task_failure_reported_not_fatal(fake_manager, worker, tmp_path):
         {
             "message_type": "new_map_task",
             "task_id": 8,
-            "executable": str(REF_DATA / "exec/wc_map.sh"),
-            "input_paths": [str(REF_DATA / "input/file01")],
+            "executable": str(MR_FIXTURES / "exec/wc_map.sh"),
+            "input_paths": [str(MR_FIXTURES / "input/file01")],
             "output_directory": str(out),
             "num_partitions": 1,
             "worker_host": "localhost",
@@ -689,10 +728,10 @@ def test_bad_job_fails_cleanly_on_fleet(tmp_path):
             server.port,
             {
                 "message_type": "new_manager_job",
-                "input_directory": str(REF_DATA / "input"),
+                "input_directory": str(MR_FIXTURES / "input"),
                 "output_directory": str(tmp_path / "out"),
                 "mapper_executable": "/nonexistent/mapper.sh",
-                "reducer_executable": str(REF_DATA / "exec/wc_reduce.sh"),
+                "reducer_executable": str(MR_FIXTURES / "exec/wc_reduce.sh"),
                 "num_mappers": 2,
                 "num_reducers": 1,
             },
@@ -726,7 +765,7 @@ def test_reduce_handles_missing_trailing_newline(
         {
             "message_type": "new_reduce_task",
             "task_id": 0,
-            "executable": str(REF_DATA / "exec/wc_reduce.sh"),
+            "executable": str(MR_FIXTURES / "exec/wc_reduce.sh"),
             "input_paths": [
                 str(inter / "maptask00000-part00000"),
                 str(inter / "maptask00001-part00000"),
@@ -742,6 +781,7 @@ def test_reduce_handles_missing_trailing_newline(
     assert (out / "part-00000").read_text() == "a\t2\nb\t2\n"
 
 
+@needs_reference
 def test_worker_sigkilled_mid_task_is_reassigned(tmp_path):
     """C7, the hard case: a worker dies AFTER receiving a map task but
     BEFORE sending finished (SIGKILL mid-``sleep`` inside the
@@ -912,6 +952,7 @@ class _RssSampler:
         return self.peak - self.base
 
 
+@needs_reference
 @pytest.mark.skipif(
     not Path("/proc/self/statm").exists(), reason="needs Linux procfs"
 )
