@@ -53,7 +53,11 @@ Malformed messages are ignored, matching the reference manager's
 behavior of discarding undecodable JSON rather than crashing — but the
 drop is OBSERVABLE: ``malformed_count`` increments per discarded
 message so an operator can tell "client never sent" apart from "server
-discarded garbage" without packet captures.
+discarded garbage" without packet captures. A worker message
+(``register``, ``heartbeat``, ``finished``) must also carry the fields
+in ``_WORKER_FIELDS`` with their JSON types; one that does not is
+discarded the same way, with a WARNING record, before it reaches
+``workers`` or ``task_events``.
 
 The module logger records each job's start and end with its data plane
 (fleet or spark) at INFO, task dispatch and finish at DEBUG, and every
@@ -91,6 +95,26 @@ _NONCELESS = (
     " without echoing the wave nonce; a worker that drops the task"
     " message's wave field can never complete a task here"
 )
+
+
+#: Fields each worker message must carry, with their JSON types.
+_WORKER_FIELDS: dict[str, dict[str, type]] = {
+    "register": {"worker_host": str, "worker_port": int},
+    "heartbeat": {"worker_host": str, "worker_port": int},
+    "finished": {"task_id": int, "worker_host": str, "worker_port": int},
+}
+
+
+def _check_worker_fields(message) -> None:
+    """Raise ValueError unless ``message`` is a JSON object carrying the
+    ``_WORKER_FIELDS`` of its message type (other types: no check)."""
+    if not isinstance(message, dict):
+        raise ValueError(f"not a JSON object: {type(message).__name__}")
+    mtype = message.get("message_type")
+    for name, kind in _WORKER_FIELDS.get(mtype, {}).items():
+        # type(), not isinstance(): JSON true must not pass as a port
+        if type(message.get(name)) is not kind:
+            raise ValueError(f"{mtype} without {kind.__name__} {name}")
 
 
 @dataclass
@@ -196,6 +220,7 @@ class MRManagerServer:
         serve_json_loop(self._sock, self._shutdown, self._dispatch, bump)
 
     def _dispatch(self, message: dict) -> None:
+        _check_worker_fields(message)  # raises: serve_json_loop counts it
         mtype = message.get("message_type")
         if mtype == "new_manager_job":
             rec = JobRecord(message=message)
@@ -210,8 +235,8 @@ class MRManagerServer:
         elif mtype == "register":
             # C3: record the worker, ack on the worker's own TCP socket
             # (reference: tests/test_manager_02.py:126-133).
-            whost = str(message["worker_host"])
-            wport = int(message["worker_port"])
+            whost = message["worker_host"]
+            wport = message["worker_port"]
             prev = self.workers.get((whost, wport))
             self.workers[(whost, wport)] = WorkerRecord(
                 whost, wport, epoch=(prev.epoch + 1) if prev else 0
@@ -259,12 +284,14 @@ class MRManagerServer:
                 break
             try:
                 message = json.loads(data.decode("utf-8"))
-            except (ValueError, UnicodeDecodeError):
+                _check_worker_fields(message)
+            except ValueError as exc:  # UnicodeDecodeError included
                 self.malformed_count += 1
+                log.warning("dropped heartbeat datagram: %s", exc)
                 continue
             if message.get("message_type") != "heartbeat":
                 continue
-            key = (str(message["worker_host"]), int(message["worker_port"]))
+            key = (message["worker_host"], message["worker_port"])
             rec = self.workers.get(key)
             if rec is not None:  # heartbeats from unregistered hosts: drop
                 rec.last_seen = time.monotonic()
@@ -348,15 +375,11 @@ class MRManagerServer:
                 while cursor < len(self.task_events):
                     ev = self.task_events[cursor]
                     cursor += 1
-                    tid = int(ev["task_id"])
+                    tid = ev["task_id"]
                     if tid not in inflight:
                         continue
                     wkey = inflight[tid][0]
-                    sender = (
-                        str(ev.get("worker_host")),
-                        int(ev.get("worker_port", -1)),
-                    )
-                    if sender != wkey:
+                    if (ev["worker_host"], ev["worker_port"]) != wkey:
                         continue  # straggler from a reassigned worker
                     if "wave" not in ev:
                         struck.add(wkey)

@@ -19,10 +19,12 @@ import hashlib
 from pathlib import Path
 
 
-def md5_partition(key: str, num_partitions: int) -> int:
-    """Partition index for a key, exactly as the reference computes it."""
-    digest = hashlib.md5(key.encode("utf-8")).hexdigest()
-    return int(digest, 16) % num_partitions
+def md5_partition(key: str | bytes, num_partitions: int) -> int:
+    """Partition index for a key, exactly as the reference computes it.
+    A str key is hashed as its UTF-8 bytes; a bytes key as it is."""
+    if isinstance(key, str):
+        key = key.encode("utf-8")
+    return int(hashlib.md5(key).hexdigest(), 16) % num_partitions
 
 
 def split_input(input_directory: str, num_mappers: int) -> list[list[str]]:

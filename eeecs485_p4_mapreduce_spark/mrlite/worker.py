@@ -26,16 +26,14 @@ starter stubs, so the tests ARE the spec):
   set; tests/test_worker_08.py:159-175, one output file per partition
   whether or not rows landed in it): run the executable once per input
   path with that file as stdin, route each stdout line to partition
-  ``md5(key) % num_partitions`` (key = text before the first tab —
+  ``md5(key) % num_partitions`` (key = bytes before the first tab —
   mrlite/partitioner.py, pinned by test_worker_08's observed layout),
   write ``maptask{task_id:05d}-part{p:05d}`` under ``output_directory``
   UNSORTED (this fork's M3 contract: the reference's own reduce
   fixtures, tests/testdata/test_worker_07/maptask00000-part00000, are
   unsorted — sorting is reduce-side), and reply ``{"message_type":
   "finished", "task_id", "output_paths", "worker_host",
-  "worker_port"}`` (tests/test_worker_03.py:85-101). Lines stream
-  through O(1) memory while partitioning (tests/test_worker_11.py
-  profiles the map stage).
+  "worker_port"}`` (tests/test_worker_03.py:85-101).
 - **new_reduce_task** (reference: tests/test_worker_07.py:27-38 field
   set, :117-125 grouped output): merge-sort the input partition files
   lexicographically by whole ``(key, value)`` line (R1 — required:
@@ -50,6 +48,23 @@ starter stubs, so the tests ARE the spec):
 - **shutdown**: stop the loops, close the sockets, exit 0
   (tests/test_worker_01.py catches SystemExit(0); here ``join()``
   returns and ``exit_code`` reads 0).
+
+Records are bytes end to end. A line ends at a newline byte and
+nowhere else: carriage returns, form feeds and the other separators
+``str.splitlines`` knows are record bytes, as in the job contract. A
+final line without its newline gets one, so it cannot run into the
+next file's first line. The map loop reads the mapper's stdout
+``CHUNK_BYTES`` at a time, carries the partial last line into the next
+chunk, and writes each partition's share of a chunk with one call; a
+per-task memo maps keys to partitions and is cleared when it reaches
+``MEMO_KEYS`` entries, so map memory is O(chunk + memo), not O(input)
+(tests/test_worker_11.py profiles the map stage). The reduce side
+reads, sorts, spills and merges bytes, in the memory bound above.
+Sorting UTF-8 bytes orders lines as sorting their code points would,
+so on UTF-8 output every intermediate and ``part-%05d`` file is what a
+str pipeline writes. Output that is not UTF-8 passes through
+unchanged: its key bytes are md5-routed as they are and its lines sort
+bytewise.
 
 Replies to the manager are fire-and-forget TCP connects (connect →
 sendall → close), the same shape ``MRManagerServer`` already accepts
@@ -84,6 +99,12 @@ log = logging.getLogger(__name__)
 #: (reference: tests/utils/__init__.py:21-22).
 TIME_BETWEEN_HEARTBEATS = 2.0
 
+#: Bytes the map loop reads from a mapper's stdout per step.
+CHUNK_BYTES = 1 << 14
+
+#: Keys a map task's key -> partition memo holds before it is cleared.
+MEMO_KEYS = 4096
+
 
 def send_json(
     host: str, port: int, message: dict, timeout: float = 5.0
@@ -105,7 +126,9 @@ def serve_json_loop(sock, shutdown, on_message, on_malformed) -> None:
     both mrlite daemons run (manager accept loop, worker listen loop).
     A dispatch exception is contained per-message: a bad task/message
     must never kill the daemon's network thread (the heartbeat thread
-    would keep advertising a worker that can no longer hear anything)."""
+    would keep advertising a worker that can no longer hear anything).
+    It counts as a malformed message and is logged at WARNING with the
+    message type."""
     while not shutdown.is_set():
         try:
             conn, _addr = sock.accept()
@@ -128,7 +151,14 @@ def serve_json_loop(sock, shutdown, on_message, on_malformed) -> None:
         try:
             on_message(message)
         except Exception:  # noqa: BLE001 — survive bad messages/tasks
-            pass  # the dispatcher reports failures itself
+            on_malformed()
+            log.warning(
+                "dropped %s message",
+                message.get("message_type")
+                if isinstance(message, dict)
+                else type(message).__name__,
+                exc_info=True,
+            )
     sock.close()
 
 
@@ -328,32 +358,27 @@ class MRWorker:
                 # One output file per partition, created up front: the
                 # reference reports every partition file in finished even
                 # when empty (tests/test_worker_08.py:159-162).
-                parts = [
-                    stack.enter_context(p.open("w", encoding="utf-8"))
-                    for p in tmp_paths
-                ]
+                parts = [stack.enter_context(p.open("wb")) for p in tmp_paths]
+                route: dict[bytes, int] = {}
                 for input_path in message["input_paths"]:
                     with (
                         Path(str(input_path)).open("rb") as infile,
                         subprocess.Popen(
-                            [executable],
-                            stdin=infile,
-                            stdout=subprocess.PIPE,
-                            text=True,
+                            [executable], stdin=infile, stdout=subprocess.PIPE
                         ) as proc,
                     ):
                         assert proc.stdout is not None
-                        for line in proc.stdout:  # streams: O(1) memory
-                            # A mapper whose final stdout line lacks its
-                            # newline must not concatenate with the next
-                            # input file's first line routed to the same
-                            # partition (mirror of the reduce-side patch).
-                            if not line.endswith("\n"):
-                                line += "\n"
-                            key = line.partition("\t")[0]
-                            parts[
-                                md5_partition(key, num_partitions)
-                            ].write(line)
+                        tail = b""
+                        while chunk := proc.stdout.read(CHUNK_BYTES):
+                            lines = (tail + chunk).split(b"\n")
+                            tail = lines.pop()
+                            _write_routed(lines, parts, route)
+                        # A mapper whose final stdout line lacks its
+                        # newline must not concatenate with the next
+                        # input file's first line routed to the same
+                        # partition (mirror of the reduce-side patch).
+                        if tail:
+                            _write_routed([tail], parts, route)
                     if proc.returncode:
                         raise RuntimeError(
                             f"mapper exited {proc.returncode} on {input_path}"
@@ -387,36 +412,27 @@ class MRWorker:
             # memory = the largest single input file, not the partition.
             runs = []
             for p in message["input_paths"]:
-                lines = (
-                    Path(str(p))
-                    .read_text(encoding="utf-8")
-                    .splitlines(keepends=True)
-                )
+                with Path(str(p)).open("rb") as f:
+                    lines = f.readlines()
                 # A mapper whose final line lacks its newline must not
                 # concatenate two records in the merged stream (and a
                 # bare line sorts differently from its terminated twin).
-                if lines and not lines[-1].endswith("\n"):
-                    lines[-1] += "\n"
+                if lines and not lines[-1].endswith(b"\n"):
+                    lines[-1] += b"\n"
                 lines.sort()
-                run = stack.enter_context(
-                    tempfile.TemporaryFile("w+", encoding="utf-8")
-                )
+                run = stack.enter_context(tempfile.TemporaryFile())
                 run.writelines(lines)
                 run.seek(0)
                 runs.append(run)
             stack.callback(tmp_path.unlink, missing_ok=True)
-            outfile = stack.enter_context(tmp_path.open("w", encoding="utf-8"))
+            outfile = stack.enter_context(tmp_path.open("wb"))
             proc = stack.enter_context(
                 subprocess.Popen(
-                    [executable],
-                    stdin=subprocess.PIPE,
-                    stdout=outfile,
-                    text=True,
+                    [executable], stdin=subprocess.PIPE, stdout=outfile
                 )
             )
             assert proc.stdin is not None
-            for line in heapq.merge(*runs):  # streaming k-way merge
-                proc.stdin.write(line)
+            proc.stdin.writelines(heapq.merge(*runs))  # streaming k-way merge
             proc.stdin.close()
             if proc.wait():
                 raise RuntimeError(f"reducer exited {proc.returncode}")
@@ -425,3 +441,25 @@ class MRWorker:
         self._send_finished(
             task_id, [str(out_path)], wave=message.get("wave")
         )
+
+
+def _write_routed(
+    lines: list[bytes], parts: list, route: dict[bytes, int]
+) -> None:
+    """Append each line, with its newline, to the partition file its
+    key (the bytes before the first tab) md5-routes to: one write per
+    partition. ``route`` memoizes key -> partition for the task and is
+    cleared at ``MEMO_KEYS`` entries."""
+    blocks: list[list[bytes]] = [[] for _ in parts]
+    for line in lines:
+        key = line.partition(b"\t")[0]
+        p = route.get(key)
+        if p is None:
+            if len(route) >= MEMO_KEYS:
+                route.clear()
+            p = route[key] = md5_partition(key, len(parts))
+        blocks[p].append(line)
+    for part, block in zip(parts, blocks):
+        if block:
+            block.append(b"")  # so the join ends with a newline
+            part.write(b"\n".join(block))

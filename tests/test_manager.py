@@ -9,6 +9,7 @@ corpus or on no input at all."""
 from __future__ import annotations
 
 import json
+import logging
 import socket
 import subprocess
 import sys
@@ -398,3 +399,117 @@ def test_wave_returns_without_waiting_after_last_finished(monkeypatch):
     )
     assert [int(ev["task_id"]) for ev in done] == [0]
     assert waits == []
+
+
+def _wait_count(srv, n: int, timeout: float = 5.0) -> None:
+    deadline = time.monotonic() + timeout
+    while srv.malformed_count < n and time.monotonic() < deadline:
+        time.sleep(0.02)
+
+
+@pytest.mark.parametrize(
+    "message",
+    [
+        {"message_type": "register"},
+        {"message_type": "register", "worker_host": "localhost",
+         "worker_port": "7010"},
+        {"message_type": "register", "worker_host": "localhost",
+         "worker_port": True},
+        {"message_type": "finished", "worker_host": "localhost",
+         "worker_port": 7010},
+        {"message_type": "finished", "task_id": "0",
+         "worker_host": "localhost", "worker_port": 7010},
+        ["message_type", "finished"],
+    ],
+    ids=["register-empty", "register-str-port", "register-bool-port",
+         "finished-no-task-id", "finished-str-task-id", "not-an-object"],
+)
+def test_malformed_worker_message_counted_and_logged(message, caplog):
+    """A worker message without its fields, or with a field of the
+    wrong JSON type, is dropped before it reaches ``workers`` or
+    ``task_events``: ``malformed_count`` counts it and a WARNING record
+    names its type. Handler errors are no longer swallowed silently."""
+    from eeecs485_p4_mapreduce_spark.mrlite import MRManagerServer
+
+    caplog.set_level(logging.WARNING)
+    srv = MRManagerServer(None, port=0).start()
+    try:
+        _send(srv.port, message)
+        _wait_count(srv, 1)
+        assert srv.malformed_count == 1
+        assert srv.workers == {} and srv.task_events == []
+        name = message["message_type"] if isinstance(message, dict) else "list"
+        assert any(
+            r.levelno == logging.WARNING
+            and r.getMessage() == f"dropped {name} message"
+            for r in caplog.records
+        ), caplog.records
+    finally:
+        srv.stop()
+        srv.join(timeout=10)
+
+
+def test_malformed_finished_does_not_fail_wave(monkeypatch):
+    """A ``finished`` without ``task_id`` that arrives before the real
+    one is dropped at the socket; the in-flight wave still completes
+    on the valid event (before, the wave raised KeyError and failed
+    the job)."""
+    from eeecs485_p4_mapreduce_spark.mrlite import manager as mgr
+
+    srv = mgr.MRManagerServer(None, port=0).start()
+    wkey = ("localhost", 7006)
+    srv.workers[wkey] = mgr.WorkerRecord(host=wkey[0], port=wkey[1])
+
+    def fake_send(host, port, message):
+        if message["message_type"] != "new_map_task":
+            return  # the shutdown fan-out from srv.stop()
+        # Both go through the server's own accept loop, in order.
+        _send(srv.port, {"message_type": "finished",
+                         "worker_host": host, "worker_port": port})
+        _send(srv.port, {"message_type": "finished",
+                         "task_id": message["task_id"],
+                         "worker_host": host, "worker_port": port,
+                         "wave": message["wave"]})
+
+    monkeypatch.setattr(mgr, "send_json", fake_send)
+    try:
+        done = srv._dispatch_wave(
+            [{"task_id": 0, "message_type": "new_map_task"}]
+        )
+        assert [ev["task_id"] for ev in done] == [0]
+        assert srv.malformed_count == 1
+        assert all("task_id" in ev for ev in srv.task_events)
+    finally:
+        srv.stop()
+        srv.join(timeout=10)
+
+
+def test_malformed_heartbeat_keeps_liveness(caplog):
+    """A heartbeat datagram without its fields is counted and logged;
+    the heartbeat thread survives it and still refreshes a registered
+    worker's liveness (before, the KeyError ended the thread, and
+    every worker then fell out of liveness)."""
+    from eeecs485_p4_mapreduce_spark.mrlite import manager as mgr
+
+    caplog.set_level(logging.WARNING)
+    srv = mgr.MRManagerServer(None, port=0, hb_port=0).start()
+    wkey = ("localhost", 7007)
+    srv.workers[wkey] = rec = mgr.WorkerRecord(host=wkey[0], port=wkey[1])
+    seen = rec.last_seen
+    try:
+        with socket.socket(socket.AF_INET, socket.SOCK_DGRAM) as sock:
+            sock.connect(("localhost", srv.hb_port))
+            sock.send(json.dumps({"message_type": "heartbeat"}).encode())
+            _wait_count(srv, 1)
+            sock.send(json.dumps({"message_type": "heartbeat",
+                                  "worker_host": wkey[0],
+                                  "worker_port": wkey[1]}).encode())
+            deadline = time.monotonic() + 5
+            while rec.last_seen == seen and time.monotonic() < deadline:
+                time.sleep(0.02)
+        assert srv.malformed_count == 1
+        assert rec.last_seen > seen
+        assert any("heartbeat" in r.getMessage() for r in caplog.records)
+    finally:
+        srv.stop()
+        srv.join(timeout=10)

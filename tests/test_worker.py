@@ -6,9 +6,9 @@ on ephemeral TCP/UDP ports). Most run on the in-repo corpus and
 executables under ``tests/fixtures/mr``, whose file01/file02 carry the
 two classic four-word lines, so the reference tests' own expected values
 (cited per test) still apply. Tests that need the reference's own
-client, slow scripts, unsorted intermediate fixtures or large corpus
-read them from the reference checkout at runtime (never copied) and
-carry ``needs_reference``.
+client, slow scripts or unsorted intermediate fixtures read them from
+the reference checkout at runtime (never copied) and carry
+``needs_reference``.
 
 No Spark needed: the worker is a pure control/exec shim. The final test
 wires a real MRManagerServer and real MRWorkers together to prove the
@@ -19,11 +19,14 @@ because its framework is starter stubs.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import random
 import socket
 import threading
 import time
+from collections import Counter
 from pathlib import Path
 
 import pytest
@@ -781,6 +784,85 @@ def test_reduce_handles_missing_trailing_newline(
     assert (out / "part-00000").read_text() == "a\t2\nb\t2\n"
 
 
+def _contract_wordcount(texts: list[bytes], n: int) -> dict[str, bytes]:
+    """The job contract for wc_map.sh/wc_reduce.sh, over bytes: split
+    each file on newline only, tokenize on space and tab (ASCII
+    lowercase, as ``tr`` under LC_ALL=C), route ``token<TAB>1`` by
+    md5(token) % n, sort each partition's whole lines, count runs."""
+    parts: list[list[bytes]] = [[] for _ in range(n)]
+    for text in texts:
+        for line in text.split(b"\n")[:-1]:
+            for tok in line.lower().replace(b"\t", b" ").split(b" "):
+                p = int(hashlib.md5(tok).hexdigest(), 16) % n
+                parts[p].append(tok + b"\t1\n")
+    out = {}
+    for p, lines in enumerate(parts):
+        counts = Counter(line.partition(b"\t")[0] for line in lines)
+        out[f"maptask00000-part{p:05d}"] = b"".join(sorted(lines))
+        out[f"part-{p:05d}"] = b"".join(
+            b"%s\t%d\n" % (k, counts[k]) for k in sorted(counts)
+        )
+    return out
+
+
+def test_records_split_on_newline_only(fake_manager, worker, tmp_path):
+    """A record ends at a newline byte only. Carriage returns and form
+    feeds (which text-mode reads and ``str.splitlines`` treat as line
+    ends) stay inside their token, through map routing, the reduce
+    sort and the reducer. Mapper output that is not UTF-8 passes
+    through as bytes: md5-routed on its raw key bytes, sorted bytewise."""
+    texts = [
+        b"alpha be\x0cta gamma\nde\rlta alpha\n",
+        b"caf\xe9 na\xefve caf\xe9\n",  # Latin-1, not UTF-8
+    ]
+    inp = tmp_path / "in"
+    inter = tmp_path / "inter"
+    out = tmp_path / "out"
+    for d in (inp, inter, out):
+        d.mkdir()
+    for i, text in enumerate(texts):
+        (inp / f"file{i:02d}").write_bytes(text)
+    golden = _contract_wordcount(texts, 2)
+    fake_manager.wait_for(lambda ms: len(_non_heartbeat(ms)) >= 1)
+
+    def run(message: dict, n_finished: int) -> None:
+        send_json("localhost", worker.port, {
+            **message, "worker_host": "localhost", "worker_port": worker.port,
+        })
+        fake_manager.wait_for(
+            lambda ms: sum(m.get("message_type") == "finished" for m in ms)
+            >= n_finished
+        )
+
+    run({
+        "message_type": "new_map_task",
+        "task_id": 0,
+        "executable": str(MR_FIXTURES / "exec/wc_map.sh"),
+        "input_paths": [str(inp / "file00"), str(inp / "file01")],
+        "output_directory": str(inter),
+        "num_partitions": 2,
+    }, 1)
+    for p in (0, 1):
+        run({
+            "message_type": "new_reduce_task",
+            "task_id": p,
+            "executable": str(MR_FIXTURES / "exec/wc_reduce.sh"),
+            "input_paths": [str(inter / f"maptask00000-part{p:05d}")],
+            "output_directory": str(out),
+        }, 2 + p)
+    errors = [
+        m.get("error") for m in fake_manager.tcp_messages if m.get("error")
+    ]
+    assert errors == []
+    for p in (0, 1):
+        name = f"maptask00000-part{p:05d}"
+        lines = (inter / name).read_bytes().split(b"\n")
+        assert lines.pop() == b""
+        assert b"".join(sorted(ln + b"\n" for ln in lines)) == golden[name]
+        name = f"part-{p:05d}"
+        assert (out / name).read_bytes() == golden[name]
+
+
 @needs_reference
 def test_worker_sigkilled_mid_task_is_reassigned(tmp_path):
     """C7, the hard case: a worker dies AFTER receiving a map task but
@@ -952,25 +1034,48 @@ class _RssSampler:
         return self.peak - self.base
 
 
-@needs_reference
+def _zipf_corpus(out_dir: Path, seed: int, n_files: int, size: int) -> None:
+    """Write ``file01``.. of about ``size`` bytes each: lines of 1-80
+    words drawn Zipf(1.1) from a seeded 4000-word vocabulary, a few in
+    upper case."""
+    rng = random.Random(seed)
+    letters = "abcdefghijklmnopqrstuvwxyz"
+    vocab = [
+        "".join(rng.choices(letters, k=2 + i % 8)) for i in range(4000)
+    ]
+    vocab[::37] = [w.capitalize() for w in vocab[::37]]
+    weights = [1.0 / r**1.1 for r in range(1, len(vocab) + 1)]
+    for i in range(1, n_files + 1):
+        words = rng.choices(vocab, weights, k=size // 6)
+        lines, start = [], 0
+        while start < len(words):
+            end = start + rng.randint(1, 80)
+            lines.append(" ".join(words[start:end]))
+            start = end
+        (out_dir / f"file{i:02d}").write_text("\n".join(lines) + "\n")
+
+
 @pytest.mark.skipif(
     not Path("/proc/self/statm").exists(), reason="needs Linux procfs"
 )
 def test_map_task_memory_envelope(fake_manager, worker, tmp_path):
-    """Reference test_worker_11 analog, the MEMORY half: mapping the
-    3.6 MB input_large corpus through the reference's own wc_map.sh
-    must not grow this process's RSS by more than 1 MiB (the
-    reference's exact bound at tests/test_worker_11.py:121) — the
-    worker's map loop streams the mapper's stdout line-at-a-time
-    (worker.py `for line in proc.stdout`), so peak memory is O(1) in
-    input size, not O(file). The wc_map.sh subprocess's own memory is
-    outside our RSS and is streaming anyway (the reference relies on
-    the same decomposition).
+    """Reference test_worker_11 analog, the MEMORY half: mapping a
+    seeded ~3.6 MB Zipf corpus through wc_map.sh must not grow this
+    process's RSS by more than 1 MiB (the reference's exact bound at
+    tests/test_worker_11.py:121) — the worker's map loop reads the
+    mapper's stdout in ``CHUNK_BYTES`` chunks and bounds its key memo
+    at ``MEMO_KEYS``, so peak memory is O(1) in input size, not
+    O(file). The wc_map.sh subprocess's own memory is outside our RSS
+    and is streaming anyway (the reference relies on the same
+    decomposition).
 
     A small warm-up map runs first so one-time costs (subprocess
     machinery imports, allocator arenas) are paid outside the profiled
     window, mirroring the reference profiler's start-after-register
     sequencing."""
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    _zipf_corpus(corpus, seed=11, n_files=4, size=900_000)
     fake_manager.wait_for(lambda ms: len(_non_heartbeat(ms)) >= 1)
     out_warm = tmp_path / "warm"
     out_warm.mkdir()
@@ -980,8 +1085,8 @@ def test_map_task_memory_envelope(fake_manager, worker, tmp_path):
         {
             "message_type": "new_map_task",
             "task_id": 0,
-            "executable": str(REF_DATA / "exec/wc_map.sh"),
-            "input_paths": [str(REF_DATA / "input/file01")],
+            "executable": str(MR_FIXTURES / "exec/wc_map.sh"),
+            "input_paths": [str(MR_FIXTURES / "input/file01")],
             "output_directory": str(out_warm),
             "num_partitions": 2,
             "worker_host": "localhost",
@@ -1002,11 +1107,8 @@ def test_map_task_memory_envelope(fake_manager, worker, tmp_path):
         {
             "message_type": "new_map_task",
             "task_id": 1,
-            "executable": str(REF_DATA / "exec/wc_map.sh"),
-            "input_paths": [
-                str(REF_DATA / "input_large" / f"file{i:02d}")
-                for i in (1, 2, 3, 4)
-            ],
+            "executable": str(MR_FIXTURES / "exec/wc_map.sh"),
+            "input_paths": [str(p) for p in sorted(corpus.iterdir())],
             "output_directory": str(out),
             "num_partitions": 4,
             "worker_host": "localhost",
@@ -1022,12 +1124,12 @@ def test_map_task_memory_envelope(fake_manager, worker, tmp_path):
     )
     elapsed = time.monotonic() - t0
     growth = sampler.stop()
-    # Sanity: the map really ran over the large corpus (~640k tokens).
+    # Sanity: the map really ran over the whole corpus (~600k tokens).
     n_lines = sum(
         sum(1 for _ in p.open(encoding="utf-8"))
         for p in out.glob("maptask00001-part*")
     )
-    assert n_lines > 100_000
+    assert n_lines > 500_000
     assert growth < 1 * 1024 * 1024, f"RSS grew {growth} B during map"
     assert 0 < elapsed < 30.0
 
