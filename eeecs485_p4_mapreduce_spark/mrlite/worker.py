@@ -40,11 +40,16 @@ starter stubs, so the tests ARE the spec):
   ``wc_reduce.sh`` is ``uniq -c``, which only groups sorted input, and
   the reference's fixture inputs are unsorted) into the reduce
   executable's stdin, streaming its stdout to ``part-{task_id:05d}``.
-  The sort is external: each input file is sorted alone in memory and
-  spilled to a run file, then ``heapq.merge`` streams the runs — peak
-  memory is O(largest single input file), never O(partition), which is
-  what lets one reduce task take a whole skewed partition at 100 TB
-  shard sizes without this shim becoming the weak link.
+  The sort is external: each input file is sorted alone in memory;
+  all but the last are spilled to run files in blocks of about
+  ``CHUNK_BYTES``, and the last stays in memory, so a reduce over one
+  input touches no temp file. The k runs are merged a block at a time
+  (``_merge_runs``), one write per block into the reducer's stdin.
+  Peak memory is O(largest single input file + k blocks), never
+  O(partition), which is what lets one reduce task take a whole skewed
+  partition at 100 TB shard sizes without this shim becoming the weak
+  link. A reducer that exits non-zero, or exits 0 while its input is
+  still unread, fails the task and leaves no output file.
 - **shutdown**: stop the loops, close the sockets, exit 0
   (tests/test_worker_01.py catches SystemExit(0); here ``join()``
   returns and ``exit_code`` reads 0).
@@ -59,7 +64,11 @@ chunk, and writes each partition's share of a chunk with one call; a
 per-task memo maps keys to partitions and is cleared when it reaches
 ``MEMO_KEYS`` entries, so map memory is O(chunk + memo), not O(input)
 (tests/test_worker_11.py profiles the map stage). The reduce side
-reads, sorts, spills and merges bytes, in the memory bound above.
+reads, sorts, spills and merges bytes, in the memory bound above:
+each merge step takes from every run the lines up to the smallest
+last line among the runs' buffered blocks and sorts them in C, so
+the per-line work of the merge runs in ``list.sort`` and
+``bytes.join``, not in Python.
 Sorting UTF-8 bytes orders lines as sorting their code points would,
 so on UTF-8 output every intermediate and ``part-%05d`` file is what a
 str pipeline writes. Output that is not UTF-8 passes through
@@ -80,7 +89,6 @@ mini-cluster in tests (manager dispatch → worker exec → finished).
 
 from __future__ import annotations
 
-import heapq
 import json
 import logging
 import os
@@ -88,7 +96,10 @@ import socket
 import subprocess
 import tempfile
 import threading
-from contextlib import ExitStack
+from bisect import bisect_right
+from collections.abc import Iterator
+from contextlib import ExitStack, suppress
+from functools import partial
 from pathlib import Path
 
 from eeecs485_p4_mapreduce_spark.mrlite.partitioner import md5_partition
@@ -127,8 +138,9 @@ def serve_json_loop(sock, shutdown, on_message, on_malformed) -> None:
     A dispatch exception is contained per-message: a bad task/message
     must never kill the daemon's network thread (the heartbeat thread
     would keep advertising a worker that can no longer hear anything).
-    It counts as a malformed message and is logged at WARNING with the
-    message type."""
+    It is logged at WARNING with the message type, then counted as a
+    malformed message, so a reader that sees the count also finds the
+    record."""
     while not shutdown.is_set():
         try:
             conn, _addr = sock.accept()
@@ -151,7 +163,6 @@ def serve_json_loop(sock, shutdown, on_message, on_malformed) -> None:
         try:
             on_message(message)
         except Exception:  # noqa: BLE001 — survive bad messages/tasks
-            on_malformed()
             log.warning(
                 "dropped %s message",
                 message.get("message_type")
@@ -159,6 +170,7 @@ def serve_json_loop(sock, shutdown, on_message, on_malformed) -> None:
                 else type(message).__name__,
                 exc_info=True,
             )
+            on_malformed()
     sock.close()
 
 
@@ -406,24 +418,20 @@ class MRWorker:
         tmp_path = out_path.with_name(
             f"{out_path.name}.tmp-{self._attempt_tag()}"
         )
+        paths = [str(p) for p in message["input_paths"]]
         with ExitStack() as stack:
-            # External merge-sort: one sorted run per (unsorted) input
-            # file, spilled to disk, then a streaming k-way merge. Peak
-            # memory = the largest single input file, not the partition.
+            # External merge-sort: each (unsorted) input file is sorted
+            # alone in memory and all but the last are spilled, so peak
+            # memory = the largest single input file plus k blocks, not
+            # the partition. By the last file no other input is held,
+            # so its run is merged straight from memory.
             runs = []
-            for p in message["input_paths"]:
-                with Path(str(p)).open("rb") as f:
-                    lines = f.readlines()
-                # A mapper whose final line lacks its newline must not
-                # concatenate two records in the merged stream (and a
-                # bare line sorts differently from its terminated twin).
-                if lines and not lines[-1].endswith(b"\n"):
-                    lines[-1] += b"\n"
-                lines.sort()
+            for p in paths[:-1]:
                 run = stack.enter_context(tempfile.TemporaryFile())
-                run.writelines(lines)
+                run.writelines(map(b"".join, _sorted_blocks(p)))
                 run.seek(0)
-                runs.append(run)
+                runs.append(iter(partial(run.readlines, CHUNK_BYTES), []))
+            runs += map(_sorted_blocks, paths[-1:])
             stack.callback(tmp_path.unlink, missing_ok=True)
             outfile = stack.enter_context(tmp_path.open("wb"))
             proc = stack.enter_context(
@@ -432,8 +440,18 @@ class MRWorker:
                 )
             )
             assert proc.stdin is not None
-            proc.stdin.writelines(heapq.merge(*runs))  # streaming k-way merge
-            proc.stdin.close()
+            try:
+                _merge_runs(runs, proc.stdin.write)
+                proc.stdin.close()
+            except BrokenPipeError:
+                # The reducer stopped reading; its exit status says why,
+                # whether or not it died before the last write.
+                with suppress(BrokenPipeError):
+                    proc.stdin.close()
+                if proc.wait() == 0:
+                    raise RuntimeError(
+                        "reducer exited 0 before reading all its input"
+                    ) from None
             if proc.wait():
                 raise RuntimeError(f"reducer exited {proc.returncode}")
             outfile.flush()
@@ -441,6 +459,49 @@ class MRWorker:
         self._send_finished(
             task_id, [str(out_path)], wave=message.get("wave")
         )
+
+
+def _sorted_blocks(path: str) -> Iterator[list[bytes]]:
+    """The lines of the file at ``path``, sorted, in blocks of about
+    ``CHUNK_BYTES``. A final line without its newline gets one: it must
+    not concatenate with another run's line in the merged stream, and a
+    bare line sorts differently from its terminated twin."""
+    with open(path, "rb") as f:
+        lines = f.readlines()
+        size = f.tell()
+    if lines and not lines[-1].endswith(b"\n"):
+        lines[-1] += b"\n"
+    lines.sort()
+    step = max(1, CHUNK_BYTES * len(lines) // max(size, 1))
+    return (lines[i : i + step] for i in range(0, len(lines), step))
+
+
+def _merge_runs(runs: list[Iterator[list[bytes]]], write) -> None:
+    """Write the lines of ``runs``, each an iterator of non-empty sorted
+    blocks, in sorted order, one ``write`` per step.
+
+    A step takes from every run's buffered block the lines up to the
+    fence, the smallest last line among those blocks, sorts them
+    (timsort merges the presorted pieces in C) and writes them. Every
+    line not taken is greater than the fence, and equal lines are equal
+    bytes, so the output is byte for byte one sort of all the lines.
+    A cursor marks each block's first untaken line, so no block is
+    re-sliced from step to step."""
+    heads = [[block, 0, run] for run in runs if (block := next(run, None))]
+    while heads:
+        fence = min(block[-1] for block, _, _ in heads)
+        taken: list[bytes] = []
+        for head in heads:
+            block, lo, run = head
+            hi = bisect_right(block, fence, lo)
+            taken += block[lo:hi]
+            if hi == len(block):
+                head[0], head[1] = next(run, None), 0
+            else:
+                head[1] = hi
+        heads = [head for head in heads if head[0]]
+        taken.sort()
+        write(b"".join(taken))
 
 
 def _write_routed(

@@ -6,9 +6,8 @@ on ephemeral TCP/UDP ports). Most run on the in-repo corpus and
 executables under ``tests/fixtures/mr``, whose file01/file02 carry the
 two classic four-word lines, so the reference tests' own expected values
 (cited per test) still apply. Tests that need the reference's own
-client, slow scripts or unsorted intermediate fixtures read them from
-the reference checkout at runtime (never copied) and carry
-``needs_reference``.
+client or slow scripts read them from the reference checkout at
+runtime (never copied) and carry ``needs_reference``.
 
 No Spark needed: the worker is a pure control/exec shim. The final test
 wires a real MRManagerServer and real MRWorkers together to prove the
@@ -23,7 +22,9 @@ import hashlib
 import json
 import os
 import random
+import shutil
 import socket
+import sys
 import threading
 import time
 from collections import Counter
@@ -31,6 +32,7 @@ from pathlib import Path
 
 import pytest
 
+from eeecs485_p4_mapreduce_spark.mrlite import worker as worker_module
 from eeecs485_p4_mapreduce_spark.mrlite.worker import MRWorker, send_json
 from tests.conftest import MR_FIXTURES, fixture_wordcount
 
@@ -262,26 +264,30 @@ def test_map_task(fake_manager, worker, tmp_path):
     assert sorted(part1) == ["world\t1", "world\t1"]
 
 
-@needs_reference
 def test_reduce_task(fake_manager, worker, tmp_path):
-    """Reference test_worker_07: reduce over the reference's own
-    (unsorted!) intermediate fixtures through its own wc_reduce.sh must
-    produce its exact golden part-00000 — proving the worker sorts
-    reduce input rather than trusting map-side order."""
-    fake_manager.wait_for(lambda ms: len(_non_heartbeat(ms)) >= 1)
+    """Reference test_worker_07: reduce over two UNSORTED intermediates
+    of partition 0 through wc_reduce.sh must produce the reference's
+    exact golden part-00000 — proving the worker sorts reduce input
+    rather than trusting map-side order."""
+    inter = tmp_path / "inter"
     out = tmp_path / "output"
+    inter.mkdir()
     out.mkdir()
+    inputs = {
+        "maptask00000-part00000": "hello\t1\n\t1\nbye\t1\n",
+        "maptask00001-part00000": "hello\t1\n\t1\n",
+    }
+    for name, text in inputs.items():
+        (inter / name).write_text(text)
+    fake_manager.wait_for(lambda ms: len(_non_heartbeat(ms)) >= 1)
     send_json(
         "localhost",
         worker.port,
         {
             "message_type": "new_reduce_task",
             "task_id": 0,
-            "executable": str(REF_DATA / "exec/wc_reduce.sh"),
-            "input_paths": [
-                str(REF_DATA / "test_worker_07/maptask00000-part00000"),
-                str(REF_DATA / "test_worker_07/maptask00001-part00000"),
-            ],
+            "executable": str(MR_FIXTURES / "exec/wc_reduce.sh"),
+            "input_paths": [str(inter / name) for name in inputs],
             "output_directory": str(out),
             "worker_host": "localhost",
             "worker_port": worker.port,
@@ -290,8 +296,16 @@ def test_reduce_task(fake_manager, worker, tmp_path):
     fake_manager.wait_for(
         lambda ms: any(m.get("message_type") == "finished" for m in ms)
     )
-    # Golden from reference tests/test_worker_07.py:120-125.
-    assert (out / "part-00000").read_text() == "\t2\nbye\t1\nhello\t2\n"
+    # Golden from reference tests/test_worker_07.py:120-125, which is
+    # also the word count of the inputs above.
+    golden = "\t2\nbye\t1\nhello\t2\n"
+    counts = Counter(
+        line.partition("\t")[0]
+        for text in inputs.values()
+        for line in text.splitlines()
+    )
+    assert golden == "".join(f"{k}\t{counts[k]}\n" for k in sorted(counts))
+    assert (out / "part-00000").read_text() == golden
 
 
 def test_map_then_reduce_end_to_end(fake_manager, worker, tmp_path):
@@ -784,6 +798,138 @@ def test_reduce_handles_missing_trailing_newline(
     assert (out / "part-00000").read_text() == "a\t2\nb\t2\n"
 
 
+@pytest.mark.parametrize(
+    "reducer, n_lines",
+    [("false", 10), ("false", 200_000), ("true", 10), ("true", 200_000)],
+)
+def test_reducer_exit_reported_without_output(
+    fake_manager, worker, tmp_path, reducer, n_lines
+):
+    """A reducer that exits non-zero is reported as ``reducer exited N``
+    whether it died before or after the worker's last write into its
+    stdin; one that exits 0 while input is still unread (200k lines,
+    well past the 64 KiB pipe buffer) is an error too. Either way the
+    task is reported, not fatal, and leaves neither a ``part-*`` nor a
+    ``.tmp-*`` file. With 10 lines the pipe buffer can take the whole
+    input before ``true`` exits, so success with an empty part is the
+    one other outcome allowed there."""
+    inter = tmp_path / "inter"
+    out = tmp_path / "out"
+    inter.mkdir()
+    out.mkdir()
+    inputs = []
+    for i in range(3):
+        path = inter / f"maptask{i:05d}-part00000"
+        path.write_bytes(b"".join(b"w%d\t1\n" % j for j in range(n_lines)))
+        inputs.append(str(path))
+    fake_manager.wait_for(lambda ms: len(_non_heartbeat(ms)) >= 1)
+    send_json(
+        "localhost",
+        worker.port,
+        {
+            "message_type": "new_reduce_task",
+            "task_id": 0,
+            "executable": shutil.which(reducer),
+            "input_paths": inputs,
+            "output_directory": str(out),
+            "worker_host": "localhost",
+            "worker_port": worker.port,
+        },
+    )
+    fake_manager.wait_for(
+        lambda ms: any(m.get("message_type") == "finished" for m in ms),
+        timeout=30.0,
+    )
+    (ev,) = [
+        m
+        for m in fake_manager.tcp_messages
+        if m.get("message_type") == "finished"
+    ]
+    if reducer == "false":
+        assert ev.get("error") == "RuntimeError: reducer exited 1"
+    elif n_lines > 10 or ev.get("error"):
+        assert ev.get("error") == (
+            "RuntimeError: reducer exited 0 before reading all its input"
+        )
+    else:
+        assert ev["output_paths"] == [str(out / "part-00000")]
+        assert (out / "part-00000").read_bytes() == b""
+        return
+    assert ev["output_paths"] == []
+    assert list(out.iterdir()) == []
+    assert worker.is_alive()
+
+
+class _QuietWorker(MRWorker):
+    """Runs tasks in the calling thread and sends no replies."""
+
+    def _send_finished(self, *args, **kwargs) -> None:
+        pass
+
+
+_MERGE_POOL = [
+    b"", b"a", b"a\t1", b"a\t2", b"a\tb", b"ab", b"b", b"b\r",
+    b"\x0c", b"\r", b"caf\xe9", b"\xff\xfe", b"\t", b"z\x0cz",
+]
+
+
+def _random_run(rng: random.Random) -> list[bytes]:
+    """Newline-terminated lines, from none to ~100 blocks of 64 bytes,
+    drawn from a small pool (so runs share duplicates and lines equal to
+    the merge fence) plus random bytes."""
+    n = rng.choice([0, 1, 1, 2, 5, 30, 200, 2_000])
+    alphabet = b"ab\t\r\x0c\xe9\xff "
+    return [
+        (
+            rng.choice(_MERGE_POOL)
+            if rng.random() < 0.7
+            else bytes(rng.choices(alphabet, k=rng.randint(0, 6)))
+        )
+        + b"\n"
+        for _ in range(n)
+    ]
+
+
+def test_reduce_merge_is_one_sort_of_all_lines(tmp_path, monkeypatch):
+    """Property: over seeded random runs, the reduce task feeds ``cat``
+    exactly the sorted concatenation of all input lines, byte for byte.
+    Covers k = 0..6 inputs (empty files included), 1-line runs, runs of
+    many blocks, duplicates and fence-equal lines across runs, tab
+    (0x09) sorting below newline (0x0a), carriage returns, form feeds,
+    non-UTF-8 bytes, and a final line missing its newline. Blocks are
+    shrunk to 64 bytes so that small runs take many merge steps."""
+    monkeypatch.setattr(worker_module, "CHUNK_BYTES", 64)
+    rng = random.Random(485)
+    cat = shutil.which("cat")
+    w = _QuietWorker(port=0)
+    for trial in range(150):
+        inter = tmp_path / f"inter{trial}"
+        out = tmp_path / f"out{trial}"
+        inter.mkdir()
+        out.mkdir()
+        all_lines, paths = [], []
+        for i in range(rng.randint(0, 6)):
+            run = _random_run(rng)
+            all_lines += run
+            data = b"".join(run)
+            # Drop the final newline, but never of an empty final line:
+            # that would delete the record, not unterminate it.
+            if run and run[-1] != b"\n" and rng.random() < 0.3:
+                data = data[:-1]
+            path = inter / f"maptask{i:05d}-part00000"
+            path.write_bytes(data)
+            paths.append(str(path))
+        w._run_reduce_task({
+            "task_id": 0,
+            "executable": cat,
+            "input_paths": paths,
+            "output_directory": str(out),
+        })
+        expected = b"".join(sorted(all_lines))
+        assert (out / "part-00000").read_bytes() == expected, trial
+        assert [p.name for p in out.iterdir()] == ["part-00000"]
+
+
 def _contract_wordcount(texts: list[bytes], n: int) -> dict[str, bytes]:
     """The job contract for wc_map.sh/wc_reduce.sh, over bytes: split
     each file on newline only, tokenize on space and tab (ASCII
@@ -1132,6 +1278,67 @@ def test_map_task_memory_envelope(fake_manager, worker, tmp_path):
     assert n_lines > 500_000
     assert growth < 1 * 1024 * 1024, f"RSS grew {growth} B during map"
     assert 0 < elapsed < 30.0
+
+
+def _wc_intermediates(out_dir: Path, seed: int, n_files: int, size: int):
+    """Write the unsorted word-count map outputs of a ``_zipf_corpus``,
+    ``word<TAB>1`` per word, one file per corpus file, and return their
+    paths."""
+    corpus = out_dir / "corpus"
+    corpus.mkdir(parents=True)
+    _zipf_corpus(corpus, seed, n_files, size)
+    paths = []
+    for i, f in enumerate(sorted(corpus.iterdir())):
+        path = out_dir / f"maptask{i:05d}-part00000"
+        words = f.read_bytes().split()
+        path.write_bytes(b"".join(w + b"\t1\n" for w in words))
+        paths.append(path)
+    return paths
+
+
+@pytest.mark.skipif(
+    not Path("/proc/self/statm").exists(), reason="needs Linux procfs"
+)
+def test_reduce_task_memory_envelope(tmp_path):
+    """The reduce side's memory bound: O(largest input file + k blocks),
+    never O(partition). Reducing k = 8 wc-style intermediates of ~1.2 MB
+    each through ``cat`` may grow this process's RSS by at most twice
+    what one input costs as a list of lines; holding every sorted input
+    in memory at once would cost about eight times that. A small reduce
+    runs first so one-time costs are paid outside the profiled window."""
+    inputs = _wc_intermediates(tmp_path / "inter", seed=13, n_files=8,
+                               size=930_000)
+    data = inputs[0].read_bytes()
+    # One input as a list of lines: each line a bytes object plus its
+    # list slot.
+    run_cost = len(data) + data.count(b"\n") * (sys.getsizeof(b"") + 8)
+    del data
+    cat = shutil.which("cat")
+    w = _QuietWorker(port=0)
+    warm = tmp_path / "warm"
+    warm.mkdir()
+    w._run_reduce_task({
+        "task_id": 0,
+        "executable": cat,
+        "input_paths": [str(MR_FIXTURES / "input/file01")] * 2,
+        "output_directory": str(warm),
+    })
+    out = tmp_path / "out"
+    out.mkdir()
+    sampler = _RssSampler()
+    w._run_reduce_task({
+        "task_id": 0,
+        "executable": cat,
+        "input_paths": [str(p) for p in inputs],
+        "output_directory": str(out),
+    })
+    growth = sampler.stop()
+    assert (out / "part-00000").stat().st_size == sum(
+        p.stat().st_size for p in inputs
+    )
+    assert growth < 2 * run_cost, (
+        f"RSS grew {growth} B; one input costs {run_cost} B"
+    )
 
 
 def test_job_root_cleanup_never_reaps_a_tenant_fleet(tmp_path):
