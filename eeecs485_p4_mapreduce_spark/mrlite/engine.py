@@ -4,7 +4,8 @@ Pipeline (SURVEY.md §3.1, steps 5-10):
 
     directory scan → round-robin file split across num_mappers tasks →
     map (external executable via RDD.pipe, or Python callable) →
-    md5(key) % num_reducers shuffle → per-partition (key, value) sort →
+    md5(key) % num_reducers shuffle → per-partition sort (whole lines
+    for a reducer executable, (key, value) pairs for a callable) →
     reduce (external executable or callable) → part-%05d text files.
 
 Everything data-plane runs distributed on Spark; the driver only lists
@@ -26,10 +27,12 @@ uniform, so balance matches Murmur3. The reference's on-disk
 from __future__ import annotations
 
 import itertools
+import shlex
 import shutil
 import tempfile
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
+from operator import itemgetter
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -62,6 +65,21 @@ def _parse_kv(line: str) -> tuple[str, str]:
     SURVEY.md §1.1). A tab-less line maps to (line, "")."""
     head, _sep, tail = line.partition("\t")
     return (head, tail)
+
+
+def _join_kv(kv: tuple[str, str]) -> str:
+    return f"{kv[0]}\t{kv[1]}"
+
+
+def _line_key(line: str) -> str:
+    return line.partition("\t")[0]
+
+
+def _line_order(line: str) -> str:
+    """A line's sort key: the line with its newline, so ``beta\tx``
+    sorts before ``beta`` as the fleet worker's bytes do (code-point
+    order on str is UTF-8 byte order)."""
+    return line + "\n"
 
 
 def _callable_map_partition(fn: MapperFn):
@@ -129,18 +147,26 @@ class MREngine:
         if callable(mapper_executable):
             mapped = lines.mapPartitions(_callable_map_partition(mapper_executable))
         else:
-            mapped = lines.pipe(str(mapper_executable), checkCode=True).map(_parse_kv)
+            mapped = lines.pipe(shlex.quote(str(mapper_executable)), checkCode=True)
 
-        # Shuffle (§2.2 M2 + §2.4 R1): md5(key) partitioning, then sort
-        # within each partition by (key, value) — the whole-line
-        # lexicographic order the reference's merge-sort produces.
+        # Shuffle (§2.2 M2 + §2.4 R1): md5(key) partitioning, then a sort
+        # within each partition. A reducer executable reads whole lines in
+        # the contract's order, bytewise by line plus newline, as the fleet
+        # worker sorts them; a callable reducer reads (key, value) pairs.
+        if callable(reducer_executable):
+            records = mapped if callable(mapper_executable) else mapped.map(_parse_kv)
+            key_of, sort_key = itemgetter(0), (lambda kv: kv)
+        else:
+            records = mapped.map(_join_kv) if callable(mapper_executable) else mapped
+            key_of, sort_key = _line_key, _line_order
         shuffled = (
-            mapped.map(lambda kv: (kv, None))
+            records.map(lambda rec: (rec, None))
             .repartitionAndSortWithinPartitions(
                 numPartitions=num_reducers,
-                partitionFunc=lambda kv: md5_partition(kv[0], num_reducers),
+                partitionFunc=lambda rec: md5_partition(key_of(rec), num_reducers),
+                keyfunc=sort_key,
             )
-            .map(lambda kvn: kvn[0])
+            .keys()
         )
 
         # Reduce stage (§2.4 R2).
@@ -149,9 +175,7 @@ class MREngine:
                 _callable_reduce_partition(reducer_executable)
             )
         else:
-            reduced = shuffled.map(lambda kv: f"{kv[0]}\t{kv[1]}").pipe(
-                str(reducer_executable), checkCode=True
-            )
+            reduced = shuffled.pipe(shlex.quote(str(reducer_executable)), checkCode=True)
 
         # Sink (§2.5 K1): exactly num_reducers files named part-%05d.
         out_dir = Path(output_directory)

@@ -13,6 +13,8 @@ import pytest
 REPO_ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO_ROOT))
 
+from eeecs485_p4_mapreduce_spark.mrlite.worker import MRWorker  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 
@@ -31,6 +33,14 @@ def fixture_wordcount() -> list[str]:
         for word in re.split("[ \t]", line.lower())
     )
     return [f"{w}\t{c}" for w, c in counts.items()]
+
+
+class QuietWorker(MRWorker):
+    """An ``MRWorker`` whose tasks run in the calling thread (call
+    ``_run_map_task``/``_run_reduce_task``) and send no replies."""
+
+    def _send_finished(self, *args, **kwargs) -> None:
+        pass
 
 
 @pytest.fixture(scope="session")

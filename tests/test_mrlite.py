@@ -19,7 +19,8 @@ from pathlib import Path
 
 import pytest
 
-from tests.conftest import MR_FIXTURES, fixture_wordcount
+from eeecs485_p4_mapreduce_spark.mrlite import md5_partition
+from tests.conftest import MR_FIXTURES, QuietWorker, fixture_wordcount
 
 REF = Path("/root/reference/tests/testdata")
 
@@ -130,6 +131,61 @@ def test_multireducer_partition_layout(engine, tmp_path):
         keys = [ln.split("\t", 1)[0] for ln in lines]
         assert keys == sorted(keys)
         assert all(md5_partition(k, 2) == part_idx for k in keys)
+
+
+@pytest.mark.parametrize("exec_dir", ["exec", "ex dir"])
+def test_executable_job_matches_fleet_worker(engine, tmp_path, exec_dir):
+    """``MREngine`` pipes each mapper line to the reducer whole, in the
+    contract's order, so its ``part-*`` files are byte for byte the
+    fleet worker's: a tab-less line gains no tab, a key holding a byte
+    below TAB sorts before its prefix, and ``beta\tx`` sorts before
+    ``beta``. The executables' path may hold a space."""
+    cat = tmp_path / exec_dir / "cat.sh"
+    cat.parent.mkdir()
+    cat.write_text("#!/bin/sh\nexec cat\n")
+    cat.chmod(0o755)
+    lines = ["beta\tx", "beta", "a\x01\t1", "a\t1", "", "\t0", "caf\u00e9\t2", "zeta"]
+    inp = tmp_path / "input"
+    inp.mkdir()
+    (inp / "file01").write_text("".join(f"{ln}\n" for ln in lines))
+    res = engine.submit_job(
+        input_directory=str(inp),
+        output_directory=str(tmp_path / "engine"),
+        mapper_executable=str(cat),
+        reducer_executable=str(cat),
+        num_mappers=1,
+        num_reducers=2,
+    )
+
+    worker = QuietWorker(port=0)
+    inter, fleet = tmp_path / "inter", tmp_path / "fleet"
+    inter.mkdir()
+    fleet.mkdir()
+    worker._run_map_task({
+        "task_id": 0,
+        "executable": str(cat),
+        "input_paths": [str(inp / "file01")],
+        "output_directory": str(inter),
+        "num_partitions": 2,
+    })
+    for p in range(2):
+        worker._run_reduce_task({
+            "task_id": p,
+            "executable": str(cat),
+            "input_paths": [str(inter / f"maptask00000-part{p:05d}")],
+            "output_directory": str(fleet),
+        })
+    fleet_parts = [(fleet / f"part-{p:05d}").read_bytes() for p in range(2)]
+    assert [Path(p).read_bytes() for p in res.output_paths] == fleet_parts
+    # The contract, computed here: md5-route by key, sort line + newline.
+    contract = [
+        "".join(sorted(
+            f"{ln}\n" for ln in lines
+            if md5_partition(ln.partition("\t")[0], 2) == p
+        )).encode()
+        for p in range(2)
+    ]
+    assert fleet_parts == contract
 
 
 def test_fifo_job_ids(engine, tmp_path):

@@ -34,7 +34,7 @@ import pytest
 
 from eeecs485_p4_mapreduce_spark.mrlite import worker as worker_module
 from eeecs485_p4_mapreduce_spark.mrlite.worker import MRWorker, send_json
-from tests.conftest import MR_FIXTURES, fixture_wordcount
+from tests.conftest import MR_FIXTURES, QuietWorker, fixture_wordcount
 
 REF_DATA = Path("/root/reference/tests/testdata")
 
@@ -860,13 +860,6 @@ def test_reducer_exit_reported_without_output(
     assert worker.is_alive()
 
 
-class _QuietWorker(MRWorker):
-    """Runs tasks in the calling thread and sends no replies."""
-
-    def _send_finished(self, *args, **kwargs) -> None:
-        pass
-
-
 _MERGE_POOL = [
     b"", b"a", b"a\t1", b"a\t2", b"a\tb", b"ab", b"b", b"b\r",
     b"\x0c", b"\r", b"caf\xe9", b"\xff\xfe", b"\t", b"z\x0cz",
@@ -901,7 +894,7 @@ def test_reduce_merge_is_one_sort_of_all_lines(tmp_path, monkeypatch):
     monkeypatch.setattr(worker_module, "CHUNK_BYTES", 64)
     rng = random.Random(485)
     cat = shutil.which("cat")
-    w = _QuietWorker(port=0)
+    w = QuietWorker(port=0)
     for trial in range(150):
         inter = tmp_path / f"inter{trial}"
         out = tmp_path / f"out{trial}"
@@ -1314,7 +1307,7 @@ def test_reduce_task_memory_envelope(tmp_path):
     run_cost = len(data) + data.count(b"\n") * (sys.getsizeof(b"") + 8)
     del data
     cat = shutil.which("cat")
-    w = _QuietWorker(port=0)
+    w = QuietWorker(port=0)
     warm = tmp_path / "warm"
     warm.mkdir()
     w._run_reduce_task({
