@@ -22,8 +22,14 @@ control plane is kept for drop-in compatibility:
   out to registered workers (C6);
 - ``MRWorker`` speaks the worker side of the same protocol — register,
   heartbeat, ``new_map_task`` / ``new_reduce_task`` execution with md5
-  routing and sorted partition files, ``finished`` replies — so tooling
-  written against the reference's worker wire format runs unchanged.
+  routing into unsorted partition files (the reduce task sorts),
+  ``finished`` replies — so tooling written against the reference's
+  worker wire format runs unchanged.
+
+This package and its ``manager``, ``worker`` and ``partitioner`` import
+only the standard library, so a fleet of workers and a manager without
+an engine (``MRManagerServer(None)``) start without Spark. ``MREngine``
+needs a ``SparkSession`` only when it is built.
 """
 
 from eeecs485_p4_mapreduce_spark.mrlite.engine import MREngine, MRJobResult

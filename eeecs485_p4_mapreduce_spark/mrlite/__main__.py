@@ -1,12 +1,19 @@
-"""CLI for mrlite — the reference's ``mapreduce-submit`` surface
-(reference: mapreduce/submit.py CLI options, including its 2/2 defaults
-and the wc job as the default workload), minus the TCP hop: there is no
-daemon to talk to, the job runs in-process on Spark and blocks until done.
+"""CLI for mrlite, in three modes.
 
-Usage:
-    python -m eeecs485_p4_mapreduce_spark.mrlite \
-        -i INPUT_DIR -o OUTPUT_DIR [-m MAPPER] [-r REDUCER] \
+- Submit (the default): the reference's ``mapreduce-submit`` surface
+  (reference: mapreduce/submit.py CLI options, including its 2/2
+  defaults and the wc job as the default workload), minus the TCP hop:
+  the job runs in-process on Spark and blocks until done.
+- ``--serve``: the manager daemon (reference: ``mapreduce-manager``),
+  with Spark as its data plane when no worker has registered.
+- ``--worker``: a worker daemon (reference: ``mapreduce-worker``); it
+  imports no Spark.
+
+Usage (python -m eeecs485_p4_mapreduce_spark.mrlite ...):
+    -i INPUT_DIR -o OUTPUT_DIR [-m MAPPER] [-r REDUCER]
         [--nmappers N] [--nreducers N]
+    --serve [--port P] [--manager-hb-port P]
+    --worker [--port P] [--manager-port P] [--manager-hb-port P]
 
 MAPPER/REDUCER are external executable paths; omit both to run the
 built-in pure-Python word count.
@@ -19,7 +26,11 @@ import sys
 
 
 def main(argv: list[str] | None = None) -> int:
-    parser = argparse.ArgumentParser(prog="mrlite", description=__doc__)
+    parser = argparse.ArgumentParser(
+        prog="mrlite",
+        description=__doc__,
+        formatter_class=argparse.RawDescriptionHelpFormatter,
+    )
     parser.add_argument(
         "--serve",
         action="store_true",

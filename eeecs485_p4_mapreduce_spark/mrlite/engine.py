@@ -34,13 +34,16 @@ from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
 from operator import itemgetter
 from pathlib import Path
-
-from pyspark.sql import SparkSession
+from typing import TYPE_CHECKING
 
 from eeecs485_p4_mapreduce_spark.mrlite.partitioner import (
+    check_task_count,
     md5_partition,
     split_input,
 )
+
+if TYPE_CHECKING:  # the fleet path imports this module without Spark
+    from pyspark.sql import SparkSession
 
 MapperFn = Callable[[str], Iterable[tuple[str, str]]]
 ReducerFn = Callable[[str, Iterable[str]], Iterable[str]]
@@ -136,6 +139,7 @@ class MREngine:
         """
         if mapper_executable is None or reducer_executable is None:
             raise ValueError("mapper and reducer are required")
+        check_task_count("num_reducers", num_reducers)
         groups = split_input(input_directory, num_mappers)
         job_id = self._next_job_id
         self._next_job_id += 1

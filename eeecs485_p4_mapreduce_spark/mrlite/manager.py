@@ -54,15 +54,15 @@ behavior of discarding undecodable JSON rather than crashing — but the
 drop is OBSERVABLE: ``malformed_count`` increments per discarded
 message so an operator can tell "client never sent" apart from "server
 discarded garbage" without packet captures. A worker message
-(``register``, ``heartbeat``, ``finished``) must also carry the fields
-in ``_WORKER_FIELDS`` with their JSON types; one that does not is
-discarded the same way, with a WARNING record, before it reaches
+(``register``, ``heartbeat``, ``finished``) must also carry its fields
+in ``worker.MESSAGE_FIELDS`` with their JSON types; one that does not
+is discarded the same way, with a WARNING record, before it reaches
 ``workers`` or ``task_events``.
 
 The module logger records each job's start and end with its data plane
-(fleet or spark) at INFO, task dispatch and finish at DEBUG, and every
-requeue (with its reason) and worker eviction at WARNING. No handler is
-configured here.
+(fleet or spark) at INFO, task dispatch and finish and every heartbeat
+(registered or not) at DEBUG, and every requeue (with its reason) and
+worker eviction at WARNING. No handler is configured here.
 """
 
 from __future__ import annotations
@@ -80,9 +80,13 @@ from dataclasses import dataclass, field
 from pathlib import Path
 
 from eeecs485_p4_mapreduce_spark.mrlite.engine import MREngine, MRJobResult
-from eeecs485_p4_mapreduce_spark.mrlite.partitioner import split_input
+from eeecs485_p4_mapreduce_spark.mrlite.partitioner import (
+    check_task_count,
+    split_input,
+)
 from eeecs485_p4_mapreduce_spark.mrlite.worker import (
     TIME_BETWEEN_HEARTBEATS,
+    check_fields,
     send_json,
     serve_json_loop,
 )
@@ -95,26 +99,6 @@ _NONCELESS = (
     " without echoing the wave nonce; a worker that drops the task"
     " message's wave field can never complete a task here"
 )
-
-
-#: Fields each worker message must carry, with their JSON types.
-_WORKER_FIELDS: dict[str, dict[str, type]] = {
-    "register": {"worker_host": str, "worker_port": int},
-    "heartbeat": {"worker_host": str, "worker_port": int},
-    "finished": {"task_id": int, "worker_host": str, "worker_port": int},
-}
-
-
-def _check_worker_fields(message) -> None:
-    """Raise ValueError unless ``message`` is a JSON object carrying the
-    ``_WORKER_FIELDS`` of its message type (other types: no check)."""
-    if not isinstance(message, dict):
-        raise ValueError(f"not a JSON object: {type(message).__name__}")
-    mtype = message.get("message_type")
-    for name, kind in _WORKER_FIELDS.get(mtype, {}).items():
-        # type(), not isinstance(): JSON true must not pass as a port
-        if type(message.get(name)) is not kind:
-            raise ValueError(f"{mtype} without {kind.__name__} {name}")
 
 
 @dataclass
@@ -220,7 +204,7 @@ class MRManagerServer:
         serve_json_loop(self._sock, self._shutdown, self._dispatch, bump)
 
     def _dispatch(self, message: dict) -> None:
-        _check_worker_fields(message)  # raises: serve_json_loop counts it
+        check_fields(message)  # raises: serve_json_loop counts it
         mtype = message.get("message_type")
         if mtype == "new_manager_job":
             rec = JobRecord(message=message)
@@ -284,17 +268,20 @@ class MRManagerServer:
                 break
             try:
                 message = json.loads(data.decode("utf-8"))
-                _check_worker_fields(message)
+                check_fields(message)
             except ValueError as exc:  # UnicodeDecodeError included
-                self.malformed_count += 1
                 log.warning("dropped heartbeat datagram: %s", exc)
+                self.malformed_count += 1
                 continue
             if message.get("message_type") != "heartbeat":
                 continue
             key = (message["worker_host"], message["worker_port"])
             rec = self.workers.get(key)
-            if rec is not None:  # heartbeats from unregistered hosts: drop
-                rec.last_seen = time.monotonic()
+            if rec is None:  # heartbeats from unregistered hosts: drop
+                log.debug("heartbeat from unregistered worker %s:%d", *key)
+                continue
+            rec.last_seen = time.monotonic()
+            log.debug("heartbeat from worker %s:%d", *key)
         self._hb_sock.close()
 
     def alive_workers(self) -> list[WorkerRecord]:
@@ -470,10 +457,11 @@ class MRManagerServer:
         round-robin file splits, map wave, partition-grouped reduce
         wave, ``part-%05d`` output (same stage contract MREngine.
         submit_job implements on Spark)."""
+        num_reducers = int(message.get("num_reducers", 2))
+        check_task_count("num_reducers", num_reducers)
         groups = split_input(
             message["input_directory"], int(message.get("num_mappers", 2))
         )
-        num_reducers = int(message.get("num_reducers", 2))
         out_dir = Path(message["output_directory"])
         out_dir.mkdir(parents=True, exist_ok=True)
         # Shared scratch in the reference's pinned layout:

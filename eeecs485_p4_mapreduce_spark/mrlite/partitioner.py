@@ -27,6 +27,14 @@ def md5_partition(key: str | bytes, num_partitions: int) -> int:
     return int(hashlib.md5(key).hexdigest(), 16) % num_partitions
 
 
+def check_task_count(name: str, count: int) -> None:
+    """Raise ValueError unless a job's ``count`` of map or reduce tasks,
+    ``name``, is at least one: no task would read the input, or md5
+    routing would divide by zero."""
+    if count < 1:
+        raise ValueError(f"{name} must be at least 1, got {count}")
+
+
 def split_input(input_directory: str, num_mappers: int) -> list[list[str]]:
     """§2.1 S1+S2: the input files of each map task, one list per task.
 
@@ -34,9 +42,11 @@ def split_input(input_directory: str, num_mappers: int) -> list[list[str]]:
     (``files[i::n_map]``) to ``n_map = min(num_mappers, len(files))``
     tasks (reference: tests/test_manager_02.py:139-144). Hidden files
     (``.``/``_`` prefixed: ``_SUCCESS``, ``.crc``) are skipped, matching
-    Hadoop's input conventions. Raises FileNotFoundError when the
-    directory is missing or holds no input file.
+    Hadoop's input conventions. Raises ValueError when ``num_mappers``
+    is below one, and FileNotFoundError when the directory is missing
+    or holds no input file.
     """
+    check_task_count("num_mappers", num_mappers)
     in_dir = Path(input_directory)
     if not in_dir.is_dir():
         raise FileNotFoundError(f"input directory {input_directory} not found")

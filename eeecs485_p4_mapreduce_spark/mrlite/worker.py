@@ -54,6 +54,12 @@ starter stubs, so the tests ARE the spec):
   (tests/test_worker_01.py catches SystemExit(0); here ``join()``
   returns and ``exit_code`` reads 0).
 
+A task message's fields are checked against ``MESSAGE_FIELDS`` before
+any file is opened or process started. A bad field fails the task with
+a ``finished`` error that names it; a message without an int
+``task_id`` names no task to fail, so it is dropped, logged and counted
+in ``malformed_count``.
+
 Records are bytes end to end. A line ends at a newline byte and
 nowhere else: carriage returns, form feeds and the other separators
 ``str.splitlines`` knows are record bytes, as in the job contract. A
@@ -115,6 +121,49 @@ CHUNK_BYTES = 1 << 14
 
 #: Keys a map task's key -> partition memo holds before it is cleared.
 MEMO_KEYS = 4096
+
+#: Fields each message type must carry, with their JSON types; a
+#: ``list`` field is a list of strings. The manager checks the messages
+#: workers send it, a worker the task messages it runs.
+MESSAGE_FIELDS: dict[str, dict[str, type]] = {
+    "register": {"worker_host": str, "worker_port": int},
+    "heartbeat": {"worker_host": str, "worker_port": int},
+    "finished": {"task_id": int, "worker_host": str, "worker_port": int},
+    "new_map_task": {
+        "task_id": int,
+        "executable": str,
+        "input_paths": list,
+        "output_directory": str,
+        "num_partitions": int,
+    },
+    "new_reduce_task": {
+        "task_id": int,
+        "executable": str,
+        "input_paths": list,
+        "output_directory": str,
+    },
+}
+
+
+def check_fields(message) -> None:
+    """Raise ValueError, naming the field, unless ``message`` is a JSON
+    object carrying the ``MESSAGE_FIELDS`` of its message type (other
+    types: no check) and a map task has at least one partition."""
+    if not isinstance(message, dict):
+        raise ValueError(f"not a JSON object: {type(message).__name__}")
+    mtype = message.get("message_type")
+    for name, kind in MESSAGE_FIELDS.get(mtype, {}).items():
+        value = message.get(name)
+        # type(), not isinstance(): JSON true must not pass as an int
+        if type(value) is not kind or (
+            kind is list and any(type(v) is not str for v in value)
+        ):
+            what = "list of str" if kind is list else kind.__name__
+            raise ValueError(f"{mtype} without {what} {name}")
+    if mtype == "new_map_task" and message["num_partitions"] < 1:
+        raise ValueError(
+            f"new_map_task num_partitions {message['num_partitions']} < 1"
+        )
 
 
 def send_json(
@@ -268,22 +317,27 @@ class MRWorker:
             # A failing task must neither kill this loop nor hang the
             # manager: report it as finished-with-error (an extra field
             # reference tooling ignores; our manager requeues on it).
+            # A bad field fails the task before any file is opened or
+            # process started.
             log.debug(
                 "worker %s:%d: %s %s",
                 self.host, self.port, mtype, message.get("task_id"),
             )
             try:
+                check_fields(message)
                 if mtype == "new_map_task":
                     self._run_map_task(message)
                 else:
                     self._run_reduce_task(message)
             except Exception as exc:  # noqa: BLE001 — report, don't die
+                if type(message.get("task_id")) is not int:
+                    raise  # no task to report: serve_json_loop drops it
                 log.warning(
                     "worker %s:%d: %s %s failed: %s",
-                    self.host, self.port, mtype, message.get("task_id"), exc,
+                    self.host, self.port, mtype, message["task_id"], exc,
                 )
                 self._send_finished(
-                    int(message.get("task_id", -1)),
+                    message["task_id"],
                     [],
                     error=f"{type(exc).__name__}: {exc}",
                     wave=message.get("wave"),
@@ -342,10 +396,10 @@ class MRWorker:
     # -- task side ---------------------------------------------------------
 
     def _run_map_task(self, message: dict) -> None:
-        task_id = int(message["task_id"])
-        executable = str(message["executable"])
-        out_dir = Path(str(message["output_directory"]))
-        num_partitions = int(message["num_partitions"])
+        task_id = message["task_id"]
+        executable = message["executable"]
+        out_dir = Path(message["output_directory"])
+        num_partitions = message["num_partitions"]
         part_paths = [
             out_dir / f"maptask{task_id:05d}-part{p:05d}"
             for p in range(num_partitions)
@@ -374,7 +428,7 @@ class MRWorker:
                 route: dict[bytes, int] = {}
                 for input_path in message["input_paths"]:
                     with (
-                        Path(str(input_path)).open("rb") as infile,
+                        open(input_path, "rb") as infile,
                         subprocess.Popen(
                             [executable], stdin=infile, stdout=subprocess.PIPE
                         ) as proc,
@@ -408,9 +462,9 @@ class MRWorker:
         )
 
     def _run_reduce_task(self, message: dict) -> None:
-        task_id = int(message["task_id"])
-        executable = str(message["executable"])
-        out_dir = Path(str(message["output_directory"]))
+        task_id = message["task_id"]
+        executable = message["executable"]
+        out_dir = Path(message["output_directory"])
         out_path = out_dir / f"part-{task_id:05d}"
         # Same atomic-rename discipline as the map side: a presumed-dead
         # worker's late writes must not interleave with the replacement
@@ -418,7 +472,7 @@ class MRWorker:
         tmp_path = out_path.with_name(
             f"{out_path.name}.tmp-{self._attempt_tag()}"
         )
-        paths = [str(p) for p in message["input_paths"]]
+        paths = message["input_paths"]
         with ExitStack() as stack:
             # External merge-sort: each (unsorted) input file is sorted
             # alone in memory and all but the last are spilled, so peak

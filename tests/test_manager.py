@@ -484,32 +484,65 @@ def test_malformed_finished_does_not_fail_wave(monkeypatch):
         srv.join(timeout=10)
 
 
-def test_malformed_heartbeat_keeps_liveness(caplog):
-    """A heartbeat datagram without its fields is counted and logged;
-    the heartbeat thread survives it and still refreshes a registered
-    worker's liveness (before, the KeyError ended the thread, and
-    every worker then fell out of liveness)."""
+class _CountAtEmit(logging.Handler):
+    """Records each log record with the server's ``malformed_count``
+    at the moment the record was emitted."""
+
+    def __init__(self, srv):
+        super().__init__(logging.DEBUG)
+        self.srv = srv
+        self.seen: list[tuple[int, str, int]] = []
+
+    def emit(self, record: logging.LogRecord) -> None:
+        self.seen.append(
+            (record.levelno, record.getMessage(), self.srv.malformed_count)
+        )
+
+
+def test_malformed_heartbeat_keeps_liveness():
+    """A heartbeat datagram without its fields is logged, then counted,
+    so a reader that sees the count also finds the record; the
+    heartbeat thread survives it and still refreshes a registered
+    worker's liveness (before, the KeyError ended the thread, and every
+    worker then fell out of liveness). Each heartbeat is logged at
+    DEBUG, naming a sender that never registered."""
     from eeecs485_p4_mapreduce_spark.mrlite import manager as mgr
 
-    caplog.set_level(logging.WARNING)
-    srv = mgr.MRManagerServer(None, port=0, hb_port=0).start()
+    srv = mgr.MRManagerServer(None, port=0, hb_port=0)
+    handler = _CountAtEmit(srv)
+    logger = logging.getLogger(mgr.__name__)
+    level = logger.level
+    logger.setLevel(logging.DEBUG)
+    logger.addHandler(handler)
+    srv.start()
     wkey = ("localhost", 7007)
     srv.workers[wkey] = rec = mgr.WorkerRecord(host=wkey[0], port=wkey[1])
     seen = rec.last_seen
     try:
         with socket.socket(socket.AF_INET, socket.SOCK_DGRAM) as sock:
             sock.connect(("localhost", srv.hb_port))
-            sock.send(json.dumps({"message_type": "heartbeat"}).encode())
-            _wait_count(srv, 1)
-            sock.send(json.dumps({"message_type": "heartbeat",
-                                  "worker_host": wkey[0],
-                                  "worker_port": wkey[1]}).encode())
+            for message in (
+                {"message_type": "heartbeat"},
+                {"message_type": "heartbeat", "worker_host": "localhost",
+                 "worker_port": 7007},
+                {"message_type": "heartbeat", "worker_host": "localhost",
+                 "worker_port": 7008},
+            ):
+                sock.send(json.dumps(message).encode())
             deadline = time.monotonic() + 5
-            while rec.last_seen == seen and time.monotonic() < deadline:
+            while len(handler.seen) < 3 and time.monotonic() < deadline:
                 time.sleep(0.02)
+        assert handler.seen == [
+            (logging.WARNING, "dropped heartbeat datagram: heartbeat"
+             " without str worker_host", 0),
+            (logging.DEBUG, "heartbeat from worker localhost:7007", 1),
+            (logging.DEBUG,
+             "heartbeat from unregistered worker localhost:7008", 1),
+        ]
         assert srv.malformed_count == 1
         assert rec.last_seen > seen
-        assert any("heartbeat" in r.getMessage() for r in caplog.records)
     finally:
+        logger.removeHandler(handler)
+        logger.setLevel(level)
         srv.stop()
         srv.join(timeout=10)

@@ -239,7 +239,8 @@ def test_streaming_large_input(engine, tmp_path):
 
 def test_split_input_deals_sorted_visible_files(tmp_path):
     """S1+S2, the one split rule both data planes call: visible files in
-    name order, dealt round-robin to min(num_mappers, #files) tasks."""
+    name order, dealt round-robin to min(num_mappers, #files) tasks;
+    fewer than one task is a ValueError."""
     from eeecs485_p4_mapreduce_spark.mrlite.partitioner import split_input
 
     with pytest.raises(FileNotFoundError, match="not found"):
@@ -253,3 +254,29 @@ def test_split_input_deals_sorted_visible_files(tmp_path):
     paths = [str(tmp_path / f"f{i}") for i in (1, 2, 3)]
     assert split_input(str(tmp_path), 2) == [paths[0::2], paths[1::2]]
     assert split_input(str(tmp_path), 5) == [[p] for p in paths]
+    for n in (0, -1):
+        with pytest.raises(ValueError, match="num_mappers must be at least 1"):
+            split_input(str(tmp_path), n)
+
+
+@pytest.mark.parametrize(
+    "num_mappers, num_reducers, field",
+    [(0, 1, "num_mappers"), (-1, 2, "num_mappers"), (2, 0, "num_reducers")],
+)
+def test_job_size_below_one_rejected(
+    engine, tmp_path, num_mappers, num_reducers, field
+):
+    """Fewer than one map or reduce task is a ValueError naming the
+    field, raised before the output directory is made. Before,
+    ``split_input`` returned no task groups for ``num_mappers < 1``."""
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match=f"{field} must be at least 1"):
+        engine.submit_job(
+            input_directory=str(MR_FIXTURES / "input"),
+            output_directory=str(out),
+            mapper_executable=str(MR_FIXTURES / "exec/wc_map.sh"),
+            reducer_executable=str(MR_FIXTURES / "exec/wc_reduce.sh"),
+            num_mappers=num_mappers,
+            num_reducers=num_reducers,
+        )
+    assert not out.exists()

@@ -20,10 +20,12 @@ from __future__ import annotations
 
 import hashlib
 import json
+import logging
 import os
 import random
 import shutil
 import socket
+import subprocess
 import sys
 import threading
 import time
@@ -1370,3 +1372,253 @@ def test_job_root_cleanup_never_reaps_a_tenant_fleet(tmp_path):
     assert not tenant.exists() and root.exists()
     MRManagerServer._cleanup_job_root(root, owner_inter, fallback=False)
     assert not root.exists()
+
+
+def _marked_cat(tmp_path: Path) -> tuple[Path, Path]:
+    """An executable that leaves ``<itself>.ran`` behind, then runs
+    ``cat``; returns (executable, marker)."""
+    exe = tmp_path / "marked_cat.sh"
+    exe.write_text('#!/bin/sh\ntouch "$0.ran"\nexec cat\n')
+    exe.chmod(0o755)
+    return exe, tmp_path / "marked_cat.sh.ran"
+
+
+def _task(mtype: str, task_id, exe: Path, out: Path, port: int) -> dict:
+    message = {
+        "message_type": mtype,
+        "task_id": task_id,
+        "executable": str(exe),
+        "input_paths": [str(MR_FIXTURES / "input/file01")],
+        "output_directory": str(out),
+        "worker_host": "localhost",
+        "worker_port": port,
+    }
+    if mtype == "new_map_task":
+        message["num_partitions"] = 2
+    return message
+
+
+def _finished(fake_manager) -> list[dict]:
+    return [
+        m for m in fake_manager.tcp_messages
+        if m.get("message_type") == "finished"
+    ]
+
+
+@pytest.mark.parametrize(
+    "mtype, field, value",
+    [
+        ("new_map_task", "input_paths", "input/file01"),
+        ("new_map_task", "input_paths", [1]),
+        ("new_map_task", "executable", None),
+        ("new_map_task", "output_directory", ["out"]),
+        ("new_map_task", "num_partitions", "2"),
+        ("new_map_task", "num_partitions", True),
+        ("new_map_task", "num_partitions", 0),
+        ("new_reduce_task", "input_paths", "input/file01"),
+        ("new_reduce_task", "executable", 1),
+    ],
+    ids=["map-str-paths", "map-int-path", "map-null-exe", "map-list-outdir",
+         "map-str-parts", "map-bool-parts", "map-zero-parts",
+         "reduce-str-paths", "reduce-int-exe"],
+)
+def test_bad_task_field_fails_before_exec(
+    fake_manager, worker, tmp_path, mtype, field, value
+):
+    """A task message whose field has the wrong JSON type (or a map
+    task with no partition) fails with a ``finished`` error naming the
+    field before any file is opened or process started, and the worker
+    runs the next valid task. Before, fields were coerced with
+    ``int()``/``str()``: a str ``input_paths`` was iterated a character
+    at a time and JSON ``true`` became one partition."""
+    fake_manager.wait_for(lambda ms: len(_non_heartbeat(ms)) >= 1)
+    exe, marker = _marked_cat(tmp_path)
+    out = tmp_path / "out"
+    out.mkdir()
+    send_json("localhost", worker.port,
+              {**_task(mtype, 7, exe, out, worker.port), field: value})
+    fake_manager.wait_for(lambda ms: len(_finished(fake_manager)) >= 1)
+    [bad] = _finished(fake_manager)
+    assert bad["task_id"] == 7 and bad["output_paths"] == []
+    assert bad["error"].startswith("ValueError: ") and field in bad["error"]
+    assert not marker.exists() and list(out.iterdir()) == []
+
+    send_json("localhost", worker.port,
+              _task(mtype, 8, exe, out, worker.port))
+    fake_manager.wait_for(lambda ms: len(_finished(fake_manager)) >= 2)
+    good = _finished(fake_manager)[1]
+    assert good["task_id"] == 8 and "error" not in good
+    assert marker.exists()
+
+
+_ABSENT = object()
+
+
+@pytest.mark.parametrize(
+    "task_id", [_ABSENT, None, "7", True, 7.0],
+    ids=["absent", "null", "str", "bool", "float"],
+)
+def test_task_without_int_task_id_is_dropped(
+    fake_manager, worker, tmp_path, caplog, task_id
+):
+    """A task message without an int ``task_id`` has no task to report
+    on: the worker drops it unrun, logs it and counts it, and runs the
+    next valid task. Before, JSON ``true`` ran as task 1 and an absent
+    id was reported as task -1."""
+    caplog.set_level(logging.WARNING)
+    fake_manager.wait_for(lambda ms: len(_non_heartbeat(ms)) >= 1)
+    exe, marker = _marked_cat(tmp_path)
+    out = tmp_path / "out"
+    out.mkdir()
+    message = _task("new_map_task", task_id, exe, out, worker.port)
+    if task_id is _ABSENT:
+        del message["task_id"]
+    send_json("localhost", worker.port, message)
+    deadline = time.monotonic() + 5
+    while worker.malformed_count < 1 and time.monotonic() < deadline:
+        time.sleep(0.02)
+    assert worker.malformed_count == 1
+    assert any(
+        r.levelno == logging.WARNING
+        and r.getMessage() == "dropped new_map_task message"
+        for r in caplog.records
+    ), caplog.records
+    assert not marker.exists() and list(out.iterdir()) == []
+
+    send_json("localhost", worker.port,
+              _task("new_map_task", 8, exe, out, worker.port))
+    fake_manager.wait_for(lambda ms: len(_finished(fake_manager)) >= 1)
+    [good] = _finished(fake_manager)
+    assert good["task_id"] == 8 and "error" not in good
+    assert marker.exists() and worker.malformed_count == 1
+
+
+@pytest.mark.parametrize(
+    "num_mappers, num_reducers, field",
+    [(0, 1, "num_mappers"), (-1, 2, "num_mappers"), (2, 0, "num_reducers")],
+)
+def test_job_size_below_one_rejected_on_fleet(
+    tmp_path, monkeypatch, num_mappers, num_reducers, field
+):
+    """A fleet job with fewer than one map or reduce task fails with a
+    ValueError naming the field before any directory is made or task
+    dispatched. Before, ``num_mappers: 0`` reported success with empty
+    parts (its input dropped), and ``num_reducers: 0`` failed only after
+    every map task failed three times with ZeroDivisionError."""
+    from eeecs485_p4_mapreduce_spark.mrlite import MRManagerServer
+
+    monkeypatch.chdir(tmp_path)  # the job's tmp/job-{id} would go here
+    server = MRManagerServer(
+        None, port=0, hb_port=0, heartbeat_interval=HB
+    ).start()
+    worker = MRWorker(
+        port=0,
+        manager_port=server.port,
+        manager_hb_port=server.hb_port,
+        heartbeat_interval=HB,
+    ).start()
+    try:
+        assert worker.registered.wait(timeout=10)
+        send_json("localhost", server.port, {
+            "message_type": "new_manager_job",
+            "input_directory": str(MR_FIXTURES / "input"),
+            "output_directory": str(tmp_path / "out"),
+            "mapper_executable": str(MR_FIXTURES / "exec/wc_map.sh"),
+            "reducer_executable": str(MR_FIXTURES / "exec/wc_reduce.sh"),
+            "num_mappers": num_mappers,
+            "num_reducers": num_reducers,
+        })
+        rec = _wait_job_done(server, timeout=30)
+        assert rec.error.startswith(f"ValueError: {field} must be at least 1")
+        assert worker.finished == []
+        assert sorted(p.name for p in tmp_path.iterdir()) == []
+    finally:
+        worker.stop()
+        worker.join(timeout=5)
+        server.stop()
+        server.join(timeout=10)
+
+
+#: Top-level packages the fleet processes must not import.
+THIRD_PARTY = {"pyspark", "py4j", "numpy", "pandas", "pyarrow"}
+
+
+def _third_party_imports(importtime_stderr: str) -> set[str]:
+    """Top-level packages in THIRD_PARTY that a ``-X importtime`` log
+    names (its lines end ``| <module name>``)."""
+    return {
+        line.rpartition("|")[2].strip().split(".")[0]
+        for line in importtime_stderr.splitlines()
+        if line.startswith("import time:")
+    } & THIRD_PARTY
+
+
+def test_worker_process_imports_no_spark():
+    """A ``--worker`` process registers with a live manager, shuts down
+    on its fan-out, and imports nothing from pyspark, py4j, numpy,
+    pandas or pyarrow on the way: the fleet path is standard library
+    only (the package root resolves its Spark exports on first use)."""
+    from eeecs485_p4_mapreduce_spark.mrlite import MRManagerServer
+
+    repo = Path(__file__).resolve().parent.parent
+    server = MRManagerServer(None, port=0, hb_port=0).start()
+    proc = subprocess.Popen(
+        [sys.executable, "-X", "importtime",
+         "-m", "eeecs485_p4_mapreduce_spark.mrlite", "--worker",
+         "--port", "0", "--manager-port", str(server.port),
+         "--manager-hb-port", str(server.hb_port)],
+        cwd=repo, stdout=subprocess.DEVNULL, stderr=subprocess.PIPE,
+        text=True,
+    )
+    try:
+        deadline = time.monotonic() + 60
+        while not server.workers and time.monotonic() < deadline:
+            assert proc.poll() is None, proc.stderr.read()
+            time.sleep(0.01)
+        assert len(server.workers) == 1
+    finally:
+        server.stop()
+        server.join(timeout=10)
+        _out, err = proc.communicate(timeout=30)
+    assert proc.returncode == 0, err[-2000:]
+    assert "eeecs485_p4_mapreduce_spark.mrlite.worker" in err
+    assert _third_party_imports(err) == set()
+
+
+def test_fleet_manager_process_imports_no_spark():
+    """The same holds for a process that hosts ``MRManagerServer(None)``,
+    the manager of a fleet-only deployment."""
+    code = (
+        "from eeecs485_p4_mapreduce_spark.mrlite import MRManagerServer\n"
+        "srv = MRManagerServer(None, port=0, hb_port=0).start()\n"
+        "srv.stop()\n"
+        "srv.join(timeout=10)\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-X", "importtime", "-c", code],
+        cwd=Path(__file__).resolve().parent.parent,
+        capture_output=True, text=True, timeout=60,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "eeecs485_p4_mapreduce_spark.mrlite.manager" in proc.stderr
+    assert _third_party_imports(proc.stderr) == set()
+
+
+def test_package_root_resolves_spark_exports_on_use():
+    """The package root's public names still import, a submodule still
+    imports through it, and an unknown name is an AttributeError."""
+    import eeecs485_p4_mapreduce_spark as pkg
+    from eeecs485_p4_mapreduce_spark import (  # noqa: F401
+        get_spark,
+        load_tables,
+        register_views,
+        registry,
+    )
+    from eeecs485_p4_mapreduce_spark.catalog import load_tables as lt
+    from eeecs485_p4_mapreduce_spark.session import get_spark as gs
+
+    assert (get_spark, load_tables) == (gs, lt)
+    assert pkg.__all__ == ["get_spark", "load_tables", "register_views"]
+    with pytest.raises(AttributeError, match="no_such_name"):
+        pkg.no_such_name  # noqa: B018
+    assert not hasattr(pkg, "no_such_name")
