@@ -9,7 +9,9 @@ sends ONE JSON message, and closes without waiting for a response
 - ``new_manager_job`` with fields ``input_directory``,
   ``output_directory``, ``mapper_executable``, ``reducer_executable``,
   ``num_mappers``, ``num_reducers`` — exactly the dict the reference
-  client builds (submit.py:70-78).
+  client builds (submit.py:70-78). Each size defaults to 2 and must be
+  a JSON int of at least one (``job_sizes``); any other value fails the
+  job with an error naming the field.
 - ``shutdown`` — stop accepting work, finish the in-flight job, drop the
   queue, fan the shutdown out to every registered worker, exit
   (reference: tests/test_manager_00 sends shutdown as the clean exit
@@ -76,6 +78,7 @@ import socket
 import threading
 import time
 from collections import deque
+from contextlib import suppress
 from dataclasses import dataclass, field
 from pathlib import Path
 
@@ -99,6 +102,22 @@ _NONCELESS = (
     " without echoing the wave nonce; a worker that drops the task"
     " message's wave field can never complete a task here"
 )
+
+
+def job_sizes(message: dict) -> tuple[int, int]:
+    """A ``new_manager_job``'s ``(num_mappers, num_reducers)``, each 2
+    when absent. Raise ValueError, naming the field, unless each is a
+    JSON int of at least one: ``1.9``, ``true`` or ``"2"`` is refused,
+    not rounded into some other job size."""
+    sizes = []
+    for name in ("num_mappers", "num_reducers"):
+        value = message.get(name, 2)
+        # type(), not isinstance(): JSON true must not pass as an int
+        if type(value) is not int:
+            raise ValueError(f"{name} must be an int, got {value!r}")
+        check_task_count(name, value)
+        sizes.append(value)
+    return sizes[0], sizes[1]
 
 
 @dataclass
@@ -174,7 +193,6 @@ class MRManagerServer:
         sock.bind((self.host, self.port))
         self.port = sock.getsockname()[1]
         sock.listen()
-        sock.settimeout(0.5)  # so the accept loop notices shutdown
         self._sock = sock
         targets = [self._accept_loop, self._runner_loop]
         if self.hb_port is not None:
@@ -182,7 +200,6 @@ class MRManagerServer:
             hb.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
             hb.bind((self.host, self.hb_port))
             self.hb_port = hb.getsockname()[1]
-            hb.settimeout(0.5)
             self._hb_sock = hb
             targets.append(self._heartbeat_loop)
         for target in targets:
@@ -243,9 +260,7 @@ class MRManagerServer:
                 self.task_events.append(message)
                 self.task_event.notify_all()
         elif mtype == "shutdown":
-            self._shutdown.set()
-            self._queue.put(None)  # wake the runner
-            self._shutdown_workers()
+            self.stop()
 
     def _shutdown_workers(self) -> None:
         """C6 fan-out: forward shutdown to every registered worker
@@ -259,13 +274,13 @@ class MRManagerServer:
     def _heartbeat_loop(self) -> None:
         """C4: receive worker heartbeat datagrams, refresh liveness."""
         assert self._hb_sock is not None
-        while not self._shutdown.is_set():
+        while True:
             try:
                 data, _addr = self._hb_sock.recvfrom(65536)
-            except socket.timeout:
-                continue
             except OSError:
                 break
+            if self._shutdown.is_set():
+                break  # stop() woke the receive: not a datagram
             try:
                 message = json.loads(data.decode("utf-8"))
                 check_fields(message)
@@ -451,17 +466,15 @@ class MRManagerServer:
                 if cursor == len(self.task_events):
                     self.task_event.wait(timeout=0.2)
 
-    def _run_job_on_workers(self, message: dict, job_id: int) -> MRJobResult:
+    def _run_job_on_workers(
+        self, message: dict, job_id: int, num_mappers: int, num_reducers: int
+    ) -> MRJobResult:
         """Execute one new_manager_job by dispatching to registered
         workers — the reference manager's own execution model: S2
         round-robin file splits, map wave, partition-grouped reduce
         wave, ``part-%05d`` output (same stage contract MREngine.
         submit_job implements on Spark)."""
-        num_reducers = int(message.get("num_reducers", 2))
-        check_task_count("num_reducers", num_reducers)
-        groups = split_input(
-            message["input_directory"], int(message.get("num_mappers", 2))
-        )
+        groups = split_input(message["input_directory"], num_mappers)
         out_dir = Path(message["output_directory"])
         out_dir.mkdir(parents=True, exist_ok=True)
         # Shared scratch in the reference's pinned layout:
@@ -581,8 +594,11 @@ class MRManagerServer:
             plane = "fleet" if self.alive_workers() else "spark"
             log.info("job %d start on %s: %s", job_id, plane, rec.message)
             try:
+                num_mappers, num_reducers = job_sizes(rec.message)
                 if plane == "fleet":
-                    rec.result = self._run_job_on_workers(rec.message, job_id)
+                    rec.result = self._run_job_on_workers(
+                        rec.message, job_id, num_mappers, num_reducers
+                    )
                 elif self.engine is None:
                     raise RuntimeError(
                         "no live workers registered and no Spark engine"
@@ -593,8 +609,8 @@ class MRManagerServer:
                         output_directory=rec.message["output_directory"],
                         mapper_executable=rec.message["mapper_executable"],
                         reducer_executable=rec.message["reducer_executable"],
-                        num_mappers=int(rec.message.get("num_mappers", 2)),
-                        num_reducers=int(rec.message.get("num_reducers", 2)),
+                        num_mappers=num_mappers,
+                        num_reducers=num_reducers,
                     )
             except Exception as exc:  # noqa: BLE001 — survive bad jobs
                 rec.error = f"{type(exc).__name__}: {exc}"
@@ -608,10 +624,21 @@ class MRManagerServer:
     # -- lifecycle ---------------------------------------------------------
 
     def stop(self) -> None:
-        """Local equivalent of receiving a shutdown message."""
+        """Local equivalent of receiving a shutdown message: set the
+        flag, wake the runner, fan out to the workers, and shut the
+        sockets down so the blocked ``accept()`` and ``recvfrom()``
+        return at once (``SHUT_RD`` on the unconnected UDP socket wakes
+        its receiver but raises ENOTCONN here)."""
         self._shutdown.set()
         self._queue.put(None)
         self._shutdown_workers()
+        for sock, how in (
+            (self._sock, socket.SHUT_RDWR),
+            (self._hb_sock, socket.SHUT_RD),
+        ):
+            if sock is not None:
+                with suppress(OSError):
+                    sock.shutdown(how)
 
     def join(self, timeout: float | None = None) -> None:
         for t in self._threads:

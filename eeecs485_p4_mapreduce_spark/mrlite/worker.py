@@ -189,12 +189,12 @@ def serve_json_loop(sock, shutdown, on_message, on_malformed) -> None:
     would keep advertising a worker that can no longer hear anything).
     It is logged at WARNING with the message type, then counted as a
     malformed message, so a reader that sees the count also finds the
-    record."""
+    record. It blocks in ``accept()`` until a connection arrives; the
+    daemon's ``stop()`` ends the loop by setting ``shutdown`` and
+    shutting ``sock`` down, which makes ``accept()`` raise."""
     while not shutdown.is_set():
         try:
             conn, _addr = sock.accept()
-        except socket.timeout:
-            continue
         except OSError:
             break
         with conn:
@@ -264,7 +264,6 @@ class MRWorker:
         sock.bind((self.host, self.port))
         self.port = sock.getsockname()[1]
         sock.listen()
-        sock.settimeout(0.5)  # so the accept loop notices shutdown
         self._sock = sock
         t = threading.Thread(target=self._listen_loop, daemon=True)
         t.start()
@@ -282,8 +281,12 @@ class MRWorker:
         return self
 
     def stop(self) -> None:
-        """Local equivalent of receiving a shutdown message."""
+        """Local equivalent of receiving a shutdown message; shutting
+        the listen socket down wakes the blocked ``accept()``."""
         self._shutdown.set()
+        if self._sock is not None:
+            with suppress(OSError):
+                self._sock.shutdown(socket.SHUT_RDWR)
 
     def join(self, timeout: float | None = None) -> None:
         for t in self._threads:

@@ -57,18 +57,6 @@ from eeecs485_p4_mapreduce_spark.catalog import (
 )
 from eeecs485_p4_mapreduce_spark.registry import query
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("media_type", StringType(), False),  # image|audio|video
-        StructField("payload", BinaryType(), True),  # opaque encoded bytes
-        StructField("format", StringType(), True),  # e.g. png/wav/mp4
-        StructField("width", LongType(), True),
-        StructField("height", LongType(), True),
-        StructField("duration_ms", LongType(), True),
-    ]
-)
-
 FEATURE_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -118,13 +106,10 @@ def decode_audio(payload: bytes) -> "object":
 
     REAL for RIFF/WAVE carrying PCM-16 or the G.711 companded codecs
     (u-law / A-law, expanded with the standard's exact segment
-    arithmetic — see decode_wav_samples). For MPEG-1 Layer I the
-    BITSTREAM decode is real down to sample-code requantization
-    (parse_mpeg1_layer1_frames: header tables, slot math, allocations,
-    scalefactors, MSB-first sample codes); only the float polyphase
-    synthesis to PCM remains declared (mpeg1_layer1_synthesize), so
-    this entry point still raises for it. Layer III/AAC/Opus
-    perceptual decode stays a declared stub."""
+    arithmetic — see decode_wav_samples). MPEG audio (any layer),
+    AAC and Opus decode is a declared stub: it raises
+    NotImplementedError (parse_mp3_frames walks MP3 frame headers, but
+    no samples are decoded)."""
     if payload[:4] == b"RIFF":
         return decode_wav_samples(payload)
     raise NotImplementedError(
@@ -1295,26 +1280,6 @@ DIM_SCHEMA = StructType(
 )
 
 _DIM_FMTS = ("jpeg", "png", "gif", "bmp")
-
-
-def decode_image_dimensions(media: DataFrame) -> DataFrame:
-    """Header-decode every payload to (fmt, width, height) — one
-    Arrow-batched zero-shuffle pass; unparseable payloads yield nulls."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_image_header(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "fmt": [t[0] if t else None for t in parsed],
-                    "width": [t[1] if t else None for t in parsed],
-                    "height": [t[2] if t else None for t in parsed],
-                    "n_bytes": [len(p) for p in pdf["payload"]],
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(run, DIM_SCHEMA)
 
 
 @query(
@@ -3525,238 +3490,6 @@ def parse_mp3_frames(payload: bytes):
 
 
 # ---------------------------------------------------------------------------
-# MPEG-1 Audio Layer I (ISO/IEC 11172-3) — the subband-coded sibling of
-# the Layer III frame walker above, implemented at the BITSTREAM level:
-# encode_mpeg1_layer1 packs real mono Layer I frames (32-bit header with
-# the Layer I bitrate/sample-rate tables, 4-bit subband allocations,
-# 6-bit scalefactor indices, 12 granules of MSB-first sample codes,
-# zero-padded to the spec slot length N = floor(12 * bitrate / fs) * 4
-# bytes), and parse_mpeg1_layer1_frames walks it all back strictly.
-# This narrows the perceptual-audio stub in decode_audio: header,
-# bit allocation, scalefactors and sample-code requantization (the
-# integer part of the spec's dequantization) are REAL; only the float
-# synthesis polyphase filterbank (the perceptual playback stage) stays
-# behind the declared NotImplementedError boundary — the same split the
-# PNG/DEFLATE work used to close formats stage by stage.
-# ---------------------------------------------------------------------------
-MPEG1_L1_BITRATES_KBPS = (
-    0, 32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384, 416, 448,
-)
-MPEG1_SAMPLE_RATES = (44100, 48000, 32000)
-_L1_SUBBANDS = 32
-_L1_GRANULES = 12
-
-
-class _MsbBitWriter:
-    """MSB-first bit packer (no byte stuffing — MPEG audio is raw)."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, value: int, width: int) -> None:
-        if value < 0 or value >> width:
-            raise ValueError(f"value {value} overflows {width} bits")
-        for i in range(width - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.acc)
-                self.acc = 0
-                self.n = 0
-
-    def pad_to(self, nbytes: int) -> bytes:
-        while self.n:
-            self.write(0, 1)
-        if len(self.out) > nbytes:
-            raise ValueError(
-                f"layer1 frame body {len(self.out)} exceeds slot length"
-                f" {nbytes}"
-            )
-        self.out += bytes(nbytes - len(self.out))
-        return bytes(self.out)
-
-
-class _MsbBitReader:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.bitpos = 0
-
-    def read(self, width: int) -> int:
-        if self.bitpos + width > len(self.data) * 8:
-            raise ValueError("truncated layer1 bitstream")
-        v = 0
-        for _ in range(width):
-            byte = self.data[self.bitpos >> 3]
-            v = (v << 1) | ((byte >> (7 - (self.bitpos & 7))) & 1)
-            self.bitpos += 1
-        return v
-
-
-def mpeg1_layer1_frame_bytes(bitrate_idx: int, sr_idx: int) -> int:
-    """Spec slot math: Layer I frames are slot-aligned, one slot = 4
-    bytes, N_slots = floor(12 * bitrate / fs) (+ padding, unused
-    here)."""
-    if not 1 <= bitrate_idx <= 14:
-        raise ValueError(f"reserved layer1 bitrate index {bitrate_idx}")
-    if not 0 <= sr_idx <= 2:
-        raise ValueError("reserved layer1 sample-rate index")
-    br = MPEG1_L1_BITRATES_KBPS[bitrate_idx] * 1000
-    return (12 * br // MPEG1_SAMPLE_RATES[sr_idx]) * 4
-
-
-def encode_mpeg1_layer1(
-    sr_idx: int, bitrate_idx: int, frames
-) -> bytes:
-    """Pack mono Layer I frames. ``frames`` is a list of
-    (alloc, scf, samples): alloc = 32 ints (0 = silent subband, 1..14
-    -> sample width alloc+1 bits), scf = scalefactor index per
-    ACTIVE subband (0..62), samples = 12 granules x active subbands
-    sample codes in granule-major order (the spec's transmission
-    order)."""
-    flen = mpeg1_layer1_frame_bytes(bitrate_idx, sr_idx)
-    out = bytearray()
-    for alloc, scf, samples in frames:
-        if len(alloc) != _L1_SUBBANDS:
-            raise ValueError("layer1 allocation must cover 32 subbands")
-        if any(a == 15 or a < 0 for a in alloc):
-            raise ValueError("layer1 allocation 15 is forbidden")
-        active = [i for i in range(_L1_SUBBANDS) if alloc[i]]
-        if len(scf) != len(active):
-            raise ValueError("one scalefactor per active subband")
-        if len(samples) != _L1_GRANULES * len(active):
-            raise ValueError("12 sample codes per active subband")
-        w = _MsbBitWriter()
-        w.write(0xFFF, 12)  # sync
-        w.write(1, 1)  # ID: MPEG-1
-        w.write(0b11, 2)  # layer I
-        w.write(1, 1)  # protection_bit: no CRC
-        w.write(bitrate_idx, 4)
-        w.write(sr_idx, 2)
-        w.write(0, 1)  # padding
-        w.write(0, 1)  # private
-        w.write(0b11, 2)  # mode: single_channel
-        w.write(0, 2)  # mode_extension
-        w.write(0, 1)  # copyright
-        w.write(1, 1)  # original
-        w.write(0, 2)  # emphasis: none
-        for a in alloc:
-            w.write(a, 4)
-        for s in scf:
-            if not 0 <= s <= 62:
-                raise ValueError("layer1 scalefactor index out of range")
-            w.write(s, 6)
-        k = 0
-        for _g in range(_L1_GRANULES):
-            for i, sb in enumerate(active):
-                nb = alloc[sb] + 1
-                w.write(samples[k], nb)
-                k += 1
-        out += w.pad_to(flen)
-    return bytes(out)
-
-
-def parse_mpeg1_layer1_frames(payload: bytes):
-    """Strictly decode a mono MPEG-1 Layer I stream back to per-frame
-    (sr_idx, bitrate_idx, alloc, scf, samples) plus stream totals.
-    Raises ValueError on bad sync, reserved table indices, non-Layer-I
-    or non-mono headers, allocation 15, scalefactor overflow, or
-    trailing slack — the walker contract of parse_mp3_frames, one
-    layer down into the audio data itself."""
-    data = bytes(payload)
-    if not data:
-        raise ValueError("empty layer1 stream")
-    pos = 0
-    frames = []
-    code_sum = 0
-    dq_ppm_sum = 0
-    while pos < len(data):
-        if pos + 4 > len(data):
-            raise ValueError("truncated layer1 frame header")
-        hdr = _MsbBitReader(data[pos : pos + 4])
-        if hdr.read(12) != 0xFFF:
-            raise ValueError(f"bad layer1 sync at byte {pos}")
-        if hdr.read(1) != 1:
-            raise ValueError("only MPEG-1 supported")
-        if hdr.read(2) != 0b11:
-            raise ValueError("not a Layer I frame")
-        hdr.read(1)  # protection
-        bitrate_idx = hdr.read(4)
-        sr_idx = hdr.read(2)
-        if hdr.read(1):
-            raise ValueError("padded layer1 frames not supported")
-        hdr.read(1)  # private
-        if hdr.read(2) != 0b11:
-            raise ValueError("only single_channel layer1 supported")
-        flen = mpeg1_layer1_frame_bytes(bitrate_idx, sr_idx)
-        if pos + flen > len(data):
-            raise ValueError("truncated layer1 frame body")
-        br = _MsbBitReader(data[pos : pos + flen])
-        br.read(32)  # header re-skip
-        alloc = [br.read(4) for _ in range(_L1_SUBBANDS)]
-        if any(a == 15 for a in alloc):
-            raise ValueError("layer1 allocation 15 is forbidden")
-        active = [i for i in range(_L1_SUBBANDS) if alloc[i]]
-        scf = [br.read(6) for _ in active]
-        if any(s > 62 for s in scf):
-            raise ValueError("layer1 scalefactor index out of range")
-        samples = []
-        for _g in range(_L1_GRANULES):
-            for sb in active:
-                nb = alloc[sb] + 1
-                code = br.read(nb)
-                samples.append(code)
-                code_sum += code
-                # integer part of the spec requantization: the code's
-                # position in [0, 1) as exact ppm (nonnegative, so
-                # Spark div == DuckDB // holds in the oracles)
-                dq_ppm_sum += code * 1_000_000 // ((1 << nb) - 1)
-        # everything after the last sample must be zero pad
-        tail_bits = flen * 8 - br.bitpos
-        if tail_bits and br.read(tail_bits) != 0:
-            raise ValueError("layer1 frame pad bits must be zero")
-        frames.append(
-            {
-                "sr_idx": sr_idx,
-                "bitrate_idx": bitrate_idx,
-                "alloc": alloc,
-                "scf": scf,
-                "samples": samples,
-            }
-        )
-        pos += flen
-    return {
-        "frames": frames,
-        "n_frames": len(frames),
-        "code_sum": code_sum,
-        "dq_ppm_sum": dq_ppm_sum,
-    }
-
-
-def mpeg1_layer1_synthesize(frames) -> "object":
-    """Polyphase synthesis filterbank (the perceptual playback stage)
-    — the one remaining DECLARED stub in the audio family, and a
-    permanent one by nature of its boundary: everything algorithmic
-    about Layer I is implemented (parse_mpeg1_layer1_frames decodes
-    the full bitstream down to sample-code requantization), but
-    spec-conformant synthesis additionally requires the standard's
-    512-coefficient prototype window (ISO 11172-3 Table 3-B.3). That
-    table is numerically-designed DATA, not a derivable algorithm —
-    unlike every closed codec in this family (DEFLATE/LZ4/PNG/JPEG
-    tables are all constructible from the spec's rules), there is
-    nothing to implement from first principles without embedding the
-    table itself, and a substitute window would not be Layer I
-    decoding. The boundary is therefore data availability, not
-    implementation effort; kept as a loud raise."""
-    raise NotImplementedError(
-        "layer1 polyphase synthesis requires the spec's 512-coefficient"
-        " prototype window table (numeric data, not derivable);"
-        " bitstream decode is parse_mpeg1_layer1_frames"
-    )
-
-
-# ---------------------------------------------------------------------------
 # POSIX ustar (tar) archives — the shard container WebDataset-style
 # training pipelines use (N samples per .tar member, sequential read).
 # encode_tar writes strict POSIX.1-1988 ustar: 512-byte headers with
@@ -4143,231 +3876,6 @@ def parse_zip_entries(payload: bytes):
         "central_dir_bytes": cd_size,
         "archive_bytes": len(data),
         "n_crc_ok": n_crc_ok,
-    }
-
-
-# ---------------------------------------------------------------------------
-# ZIP64 (PKWARE APPNOTE 4.5+) — the large-archive extension every
-# >4 GiB training shard actually ships with: classic EOCD fields
-# saturate to 0xFFFF/0xFFFFFFFF sentinels, the real numbers move to an
-# EOCD64 record found via the EOCD64 locator, and per-entry sizes/
-# offsets move to the 0x0001 "ZIP64 extended information" extra field.
-# encode_zip64 writes the full structure (sentinels everywhere, so the
-# parser MUST follow the indirection to read anything); parse_zip64
-# walks it back strictly from the end — locator, EOCD64, central
-# entries with extra-field override in the spec's fixed field order
-# (usize, csize, offset — present exactly for the sentineled fields).
-# ---------------------------------------------------------------------------
-_ZIP64_EOCD_SIG = 0x06064B50
-_ZIP64_LOCATOR_SIG = 0x07064B50
-_ZIP64_EXTRA_TAG = 0x0001
-
-
-def encode_zip64(members) -> bytes:
-    """Build a stored-entry ZIP64 archive from (name, payload) pairs:
-    every size/offset field saturated to its sentinel with the real
-    value in ZIP64 structures, the way archivers write archives that
-    exceed (or may exceed) the classic 32-bit limits."""
-    import struct
-    import zlib
-
-    locals_blob = bytearray()
-    central = bytearray()
-    offsets = []
-    for name, payload in members:
-        nb = name.encode("ascii")
-        if not 0 < len(nb) < 0xFFFF:
-            raise ValueError(f"zip member name length {len(nb)}")
-        crc = zlib.crc32(payload) & 0xFFFFFFFF
-        offsets.append(len(locals_blob))
-        extra = struct.pack(
-            "<HHQQ", _ZIP64_EXTRA_TAG, 16, len(payload), len(payload)
-        )
-        locals_blob += (
-            struct.pack(
-                "<IHHHHHIIIHH",
-                _ZIP_LOCAL_SIG, 45, 0, 0, 0, 0x21,
-                crc, 0xFFFFFFFF, 0xFFFFFFFF, len(nb), len(extra),
-            )
-            + nb
-            + extra
-            + payload
-        )
-    for (name, payload), off in zip(members, offsets):
-        nb = name.encode("ascii")
-        crc = zlib.crc32(payload) & 0xFFFFFFFF
-        extra = struct.pack(
-            "<HHQQQ",
-            _ZIP64_EXTRA_TAG, 24, len(payload), len(payload), off,
-        )
-        central += (
-            struct.pack(
-                "<IHHHHHHIIIHHHHHII",
-                _ZIP_CENTRAL_SIG, 45, 45, 0, 0, 0, 0x21,
-                crc, 0xFFFFFFFF, 0xFFFFFFFF,
-                len(nb), len(extra), 0, 0, 0, 0, 0xFFFFFFFF,
-            )
-            + nb
-            + extra
-        )
-    cd_off = len(locals_blob)
-    eocd64_off = cd_off + len(central)
-    eocd64 = struct.pack(
-        "<IQHHIIQQQQ",
-        _ZIP64_EOCD_SIG, 44, 45, 45, 0, 0,
-        len(members), len(members), len(central), cd_off,
-    )
-    locator = struct.pack(
-        "<IIQI", _ZIP64_LOCATOR_SIG, 0, eocd64_off, 1
-    )
-    eocd = struct.pack(
-        "<IHHHHIIH",
-        _ZIP_EOCD_SIG, 0, 0, 0xFFFF, 0xFFFF,
-        0xFFFFFFFF, 0xFFFFFFFF, 0,
-    )
-    return bytes(locals_blob) + bytes(central) + eocd64 + locator + eocd
-
-
-def _zip64_extra(data: bytes, pos: int, xlen: int, wanted: int):
-    """Walk an extra-field block, returning the ``wanted`` 8-byte
-    values from the 0x0001 ZIP64 extended-information field (spec
-    order). Raises ValueError if the block overruns the archive or
-    the field is missing or short — a forged xlen must not surface as
-    struct.error (the walker contract is ValueError-only)."""
-    import struct
-
-    end = pos + xlen
-    if end > len(data):
-        raise ValueError("zip64 extra block out of bounds")
-    while pos + 4 <= end:
-        tag, size = struct.unpack_from("<HH", data, pos)
-        pos += 4
-        if pos + size > end:
-            raise ValueError("zip64 extra field overruns extra block")
-        if tag == _ZIP64_EXTRA_TAG:
-            if size < 8 * wanted:
-                raise ValueError(
-                    f"zip64 extra field holds {size} bytes,"
-                    f" {8 * wanted} needed"
-                )
-            return struct.unpack_from(f"<{wanted}Q", data, pos)
-        pos += size
-    raise ValueError("sentineled zip field without a zip64 extra field")
-
-
-def parse_zip64_entries(payload: bytes):
-    """Strictly walk a ZIP64 archive from the end: classic EOCD (all
-    counts sentineled), EOCD64 locator, EOCD64 record, then the
-    central directory with 0x0001 extra-field overrides; local headers
-    re-validated with their own zip64 extras, CRCs recomputed.
-    Returns (members, info) like parse_zip_entries, plus
-    eocd64_offset. Raises ValueError on any structural violation."""
-    import struct
-    import zlib
-
-    data = bytes(payload)
-    if len(data) < 22 + 20 + 56:
-        raise ValueError("zip64 too short for EOCD + locator + EOCD64")
-    (sig, _dk, _cdk, n_disk, n_total, cd_size32, cd_off32, clen) = (
-        struct.unpack("<IHHHHIIH", data[-22:])
-    )
-    if sig != _ZIP_EOCD_SIG or clen != 0:
-        raise ValueError("zip EOCD not found at end of archive")
-    if (n_disk, n_total, cd_size32, cd_off32) != (
-        0xFFFF, 0xFFFF, 0xFFFFFFFF, 0xFFFFFFFF,
-    ):
-        raise ValueError("classic EOCD fields not zip64-sentineled")
-    (lsig, ldisk, eocd64_off, ndisks) = struct.unpack(
-        "<IIQI", data[-42:-22]
-    )
-    if lsig != _ZIP64_LOCATOR_SIG:
-        raise ValueError("zip64 EOCD locator missing")
-    if ldisk != 0 or ndisks != 1:
-        raise ValueError("multi-disk zip64 not supported")
-    if eocd64_off + 56 > len(data) - 42:
-        raise ValueError("zip64 EOCD record out of bounds")
-    (esig, esize, _vm, _vn, d1, d2, n_ent, n_ent_total, cd_size,
-     cd_off) = struct.unpack_from("<IQHHIIQQQQ", data, eocd64_off)
-    if esig != _ZIP64_EOCD_SIG:
-        raise ValueError("bad zip64 EOCD signature")
-    if esize != 44:
-        raise ValueError("unexpected zip64 EOCD record size")
-    if d1 != 0 or d2 != 0 or n_ent != n_ent_total:
-        raise ValueError("multi-disk zip64 not supported")
-    if cd_off + cd_size != eocd64_off:
-        raise ValueError("zip64 central directory mis-sized")
-    members: list = []
-    payload_bytes = 0
-    n_crc_ok = 0
-    pos = cd_off
-    for _ in range(n_ent):
-        if pos + 46 > cd_off + cd_size:
-            raise ValueError("zip64 central directory truncated")
-        (csig, _vm2, _vn2, _fl, method, _t, _d, crc, csize, usize,
-         nlen, xlen, cmlen, _dks, _ia, _ea, loff32) = struct.unpack_from(
-            "<IHHHHHHIIIHHHHHII", data, pos
-        )
-        if csig != _ZIP_CENTRAL_SIG:
-            raise ValueError(f"bad zip central signature at {pos}")
-        if method != 0:
-            raise ValueError("only stored zip64 entries supported")
-        if (csize, usize, loff32) != (
-            0xFFFFFFFF, 0xFFFFFFFF, 0xFFFFFFFF,
-        ):
-            raise ValueError("zip64 central fields not sentineled")
-        if pos + 46 + nlen + xlen + cmlen > cd_off + cd_size:
-            raise ValueError("zip64 central entry overruns directory")
-        try:
-            name = data[pos + 46 : pos + 46 + nlen].decode("ascii")
-        except UnicodeDecodeError as exc:
-            raise ValueError("non-ascii zip entry name") from exc
-        usize64, csize64, loff = _zip64_extra(
-            data, pos + 46 + nlen, xlen, 3
-        )
-        if usize64 != csize64:
-            raise ValueError("only stored zip64 entries supported")
-        pos += 46 + nlen + xlen + cmlen
-        if loff + 30 > cd_off:
-            raise ValueError(f"zip64 local entry {name!r} out of bounds")
-        (lsig2, _lv, _lf, lmethod, _lt, _ld, lcrc, lcsize, lusize,
-         lnlen, lxlen) = struct.unpack_from("<IHHHHHIIIHH", data, loff)
-        if lsig2 != _ZIP_LOCAL_SIG:
-            raise ValueError(f"bad zip local signature for {name!r}")
-        if (lcsize, lusize) != (0xFFFFFFFF, 0xFFFFFFFF):
-            raise ValueError("zip64 local sizes not sentineled")
-        if lmethod != method or lcrc != crc or lnlen != nlen:
-            raise ValueError(f"zip central/local mismatch for {name!r}")
-        lname = data[loff + 30 : loff + 30 + lnlen].decode(
-            "ascii", errors="replace"
-        )
-        if lname != name:
-            raise ValueError(f"zip name mismatch {lname!r} != {name!r}")
-        if loff + 30 + lnlen + lxlen > cd_off:
-            raise ValueError(f"zip64 local entry {name!r} out of bounds")
-        lusize64, lcsize64 = _zip64_extra(
-            data, loff + 30 + lnlen, lxlen, 2
-        )
-        if (lusize64, lcsize64) != (usize64, csize64):
-            raise ValueError(f"zip64 size mismatch for {name!r}")
-        body_at = loff + 30 + lnlen + lxlen
-        if body_at + usize64 > cd_off:
-            raise ValueError(f"zip64 local entry {name!r} out of bounds")
-        body = data[body_at : body_at + usize64]
-        if (zlib.crc32(body) & 0xFFFFFFFF) == crc:
-            n_crc_ok += 1
-        members.append((name, usize64))
-        payload_bytes += usize64
-    if pos != cd_off + cd_size:
-        raise ValueError("zip64 central directory has trailing slack")
-    if not members:
-        raise ValueError("zip64 archive has no entries")
-    return members, {
-        "n_members": len(members),
-        "payload_bytes": payload_bytes,
-        "central_dir_bytes": cd_size,
-        "archive_bytes": len(data),
-        "n_crc_ok": n_crc_ok,
-        "eocd64_offset": eocd64_off,
     }
 
 

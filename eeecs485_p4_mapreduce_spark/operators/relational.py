@@ -33,7 +33,6 @@ from eeecs485_p4_mapreduce_spark.catalog import (
 from eeecs485_p4_mapreduce_spark.registry import query
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
-TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
 
 # ---------------------------------------------------------------------------

@@ -80,28 +80,6 @@ def skew_salted_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def salted_agg(
-    df: DataFrame,
-    group_cols: list[str],
-    aggs_partial: list,
-    aggs_final: list,
-    salt_from: str,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation for skewed group keys: phase 1 aggregates on
-    (group, salt) — splitting each hot group across ``n_salts`` shuffle
-    partitions — phase 2 merges the per-salt partials. Spark's own
-    partial aggregation already gives this for algebraic aggs; the salted
-    form matters when the per-group STATE is big (collect_list,
-    count_distinct backed by expand, percentile buffers): phase 1 bounds
-    any single task's state to 1/n_salts of the hot group."""
-    salted = df.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(salt_from)), F.lit(n_salts))
-    )
-    partial = salted.groupBy(*group_cols, "__salt").agg(*aggs_partial)
-    return partial.groupBy(*group_cols).agg(*aggs_final)
-
-
 @query(
     "skew_salted_agg",
     oracle="""

@@ -82,8 +82,6 @@ from eeecs485_p4_mapreduce_spark.registry import query
 # ---------------------------------------------------------------------------
 _AVRO_MAGIC = b"Obj\x01"
 
-AVRO_FIELDS = ("doc_id", "source", "tricky", "delta")
-
 _AVRO_SCHEMA_JSON = (
     '{"type":"record","name":"doc_slice","fields":['
     '{"name":"doc_id","type":"long"},'

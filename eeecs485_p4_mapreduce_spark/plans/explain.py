@@ -225,17 +225,6 @@ def unpartitioned_fact_windows(df: DataFrame) -> list[str]:
     return offenders
 
 
-def assert_no_unpartitioned_fact_window(df: DataFrame) -> None:
-    """The 100 TB rule behind VERDICT r2 items 1-2: no global (partition-
-    less) window may consume a scan-sized relation directly — top-k must
-    be ``orderBy().limit()`` (TakeOrderedAndProject) and ranks derived
-    over the k survivors."""
-    offenders = unpartitioned_fact_windows(df)
-    assert not offenders, (
-        "unpartitioned window over fact-sized input:\n" + "\n".join(offenders)
-    )
-
-
 def assert_whole_stage_codegen(df: DataFrame) -> None:
     """Formatted plans mark codegen membership per-node as
     ``[codegen id : N]`` (the literal 'WholeStageCodegen' only appears in

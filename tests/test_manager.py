@@ -129,6 +129,22 @@ def test_shutdown_message_stops_server(server):
     assert not server.is_alive()
 
 
+def test_job_size_not_json_int_rejected_on_spark(server, tmp_path):
+    """With no fleet the job runs on Spark, and a job size that is not a
+    JSON int fails it the same way as on the fleet: a ValueError naming
+    the field, before the output directory is made. Before, ``int()``
+    turned 1.9 into one map task and the job reported success."""
+    out = tmp_path / "out"
+    _send(server.port, {
+        **FIXTURE_WC, "output_directory": str(out), "num_mappers": 1.9,
+    })
+    _wait_jobs(server, 1)
+    assert server.jobs[0].error == (
+        "ValueError: num_mappers must be an int, got 1.9"
+    )
+    assert not out.exists()
+
+
 def test_shutdown_drains_queued_jobs(server):
     """Jobs still queued (or newly dispatched) at shutdown must have
     ``done`` set with an error rather than hanging a client that waits on

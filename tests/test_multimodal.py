@@ -1007,6 +1007,25 @@ def test_jpeg_subsampling_and_restart_roundtrip():
         mm.decode_jpeg_pixels(bytes(payload))
 
 
+def test_adam7_tiny_shape_sweep():
+    """Every (w, h) in 1..9 x 1..9 round-trips through the interlaced
+    PNG encoder/decoder, each with one of the five filter types — the
+    empty-pass geometry sweep (w or h of 1 leaves up to 3 passes
+    empty)."""
+    import numpy as np
+
+    from eeecs485_p4_mapreduce_spark.operators import multimodal as mm
+
+    rng = np.random.RandomState(485)
+    for w in range(1, 10):
+        for h in range(1, 10):
+            px = rng.randint(0, 256, size=(h, w)).astype(np.uint8)
+            ft = (w + h) % 5
+            got = mm.decode_png_pixels(mm.encode_png(px, ft, interlace=True))
+            assert got.shape == (h, w)
+            assert (got == px).all(), (w, h, ft)
+
+
 def test_png_palette_and_adam7():
     """Color type 3 (PLTE-indexed, optional tRNS alpha) and Adam7
     interlacing — the remaining layouts common real-world PNGs use.

@@ -93,16 +93,17 @@ def test_driver_window_rotates_by_least_recently_green():
 
 
 _IMPORT_EVERY_QUERY_MODULE = """
-import importlib, pkgutil
+import importlib, pkgutil, sys
 from eeecs485_p4_mapreduce_spark import operators
 from eeecs485_p4_mapreduce_spark.registry import QUERIES, load_all
 load_all()
 loaded = set(QUERIES)
 names = [f"{operators.__name__}.{m.name}"
          for m in pkgutil.iter_modules(operators.__path__)]
+problems = [f"not loaded by load_all: {n}"
+            for n in names if n not in sys.modules]
 names += ["eeecs485_p4_mapreduce_spark.mr_queries",
           "eeecs485_p4_mapreduce_spark.streaming.queries"]
-problems = []
 for name in names:
     for attr, val in vars(importlib.import_module(name)).items():
         side_table = isinstance(val, dict) and val and all(
@@ -119,7 +120,9 @@ print(problems)
 def test_every_query_module_registers_only_through_load_all():
     """``@query`` is the only registration route: importing every query
     module in a fresh process adds no name beyond what ``load_all()``
-    registered (a module left out of ``load_all`` would), and no module
+    registered (a module left out of ``load_all`` would), every
+    ``operators/`` module is imported by ``load_all()`` (so no module of
+    unregistered candidates can sit there unreached), and no module
     keeps a side table of (fn, oracle) pairs or a ``register*`` hook
     for later registration."""
     import subprocess

@@ -1493,18 +1493,10 @@ def test_task_without_int_task_id_is_dropped(
     assert marker.exists() and worker.malformed_count == 1
 
 
-@pytest.mark.parametrize(
-    "num_mappers, num_reducers, field",
-    [(0, 1, "num_mappers"), (-1, 2, "num_mappers"), (2, 0, "num_reducers")],
-)
-def test_job_size_below_one_rejected_on_fleet(
-    tmp_path, monkeypatch, num_mappers, num_reducers, field
-):
-    """A fleet job with fewer than one map or reduce task fails with a
-    ValueError naming the field before any directory is made or task
-    dispatched. Before, ``num_mappers: 0`` reported success with empty
-    parts (its input dropped), and ``num_reducers: 0`` failed only after
-    every map task failed three times with ZeroDivisionError."""
+def _fleet_job_error(tmp_path, monkeypatch, sizes: dict) -> str:
+    """Submit a fixture word-count job with ``sizes`` to a manager with
+    one live worker; return the job's error after checking that no task
+    was dispatched and no directory made."""
     from eeecs485_p4_mapreduce_spark.mrlite import MRManagerServer
 
     monkeypatch.chdir(tmp_path)  # the job's tmp/job-{id} would go here
@@ -1525,13 +1517,84 @@ def test_job_size_below_one_rejected_on_fleet(
             "output_directory": str(tmp_path / "out"),
             "mapper_executable": str(MR_FIXTURES / "exec/wc_map.sh"),
             "reducer_executable": str(MR_FIXTURES / "exec/wc_reduce.sh"),
-            "num_mappers": num_mappers,
-            "num_reducers": num_reducers,
+            **sizes,
         })
         rec = _wait_job_done(server, timeout=30)
-        assert rec.error.startswith(f"ValueError: {field} must be at least 1")
         assert worker.finished == []
         assert sorted(p.name for p in tmp_path.iterdir()) == []
+        return rec.error
+    finally:
+        worker.stop()
+        worker.join(timeout=5)
+        server.stop()
+        server.join(timeout=10)
+
+
+@pytest.mark.parametrize(
+    "num_mappers, num_reducers, field",
+    [(0, 1, "num_mappers"), (-1, 2, "num_mappers"), (2, 0, "num_reducers")],
+)
+def test_job_size_below_one_rejected_on_fleet(
+    tmp_path, monkeypatch, num_mappers, num_reducers, field
+):
+    """A fleet job with fewer than one map or reduce task fails with a
+    ValueError naming the field before any directory is made or task
+    dispatched. Before, ``num_mappers: 0`` reported success with empty
+    parts (its input dropped), and ``num_reducers: 0`` failed only after
+    every map task failed three times with ZeroDivisionError."""
+    sizes = {"num_mappers": num_mappers, "num_reducers": num_reducers}
+    error = _fleet_job_error(tmp_path, monkeypatch, sizes)
+    assert error.startswith(f"ValueError: {field} must be at least 1")
+
+
+@pytest.mark.parametrize(
+    "field, value",
+    [
+        ("num_mappers", 1.9),
+        ("num_mappers", True),
+        ("num_mappers", "2"),
+        ("num_reducers", 2.5),
+    ],
+)
+def test_job_size_not_json_int_rejected_on_fleet(
+    tmp_path, monkeypatch, field, value
+):
+    """A job size that is not a JSON int fails the fleet job with a
+    ValueError naming the field before any directory is made or task
+    dispatched. Before, ``int()`` turned 1.9, true and "2" into one map
+    task and 2.5 into two reducers, and the job reported success."""
+    error = _fleet_job_error(tmp_path, monkeypatch, {field: value})
+    assert error == f"ValueError: {field} must be an int, got {value!r}"
+
+
+def test_stop_wakes_daemons_at_once():
+    """``stop()`` ends a manager's and a worker's blocked ``accept()``
+    and ``recvfrom()`` at once, and the wake-up is not counted as a
+    malformed message. Before, both loops polled their shutdown flag
+    every 0.5 s, so a ``stop()`` plus ``join()`` took up to 0.5 s."""
+    from eeecs485_p4_mapreduce_spark.mrlite import MRManagerServer
+
+    server = MRManagerServer(
+        None, port=0, hb_port=0, heartbeat_interval=HB
+    ).start()
+    worker = MRWorker(
+        port=0,
+        manager_port=server.port,
+        manager_hb_port=server.hb_port,
+        heartbeat_interval=HB,
+    ).start()
+    try:
+        assert worker.registered.wait(timeout=10)
+        # let both daemons go back to their blocking accept/recvfrom
+        time.sleep(0.1)
+        for daemon in (worker, server):
+            started = time.monotonic()
+            daemon.stop()
+            daemon.join(timeout=5)
+            elapsed = time.monotonic() - started
+            assert not daemon.is_alive()
+            assert elapsed < 0.2, f"{type(daemon).__name__}: {elapsed:.3f}s"
+            assert daemon.malformed_count == 0
     finally:
         worker.stop()
         worker.join(timeout=5)
