@@ -420,8 +420,8 @@ def test_zip_walker_rejects_corruption_and_counts_bad_crc():
     bad[cd_off + 16] ^= 1  # crc32 field of the first central entry
     with pytest.raises(ValueError, match="central/local mismatch"):
         parse_zip_entries(bytes(bad))
-    # ZIP64-sentineled EOCD (size and offset 0xFFFFFFFF): refused, not
-    # misread as a classic archive
+    # EOCD size and offset saturated to 0xFFFFFFFF, as large-archive
+    # extensions write them: refused, not misread as a classic archive
     bad = bytearray(blob)
     bad[-10:-2] = b"\xff" * 8
     with pytest.raises(ValueError, match="mis-sized"):
