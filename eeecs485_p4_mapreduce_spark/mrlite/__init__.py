@@ -6,12 +6,16 @@ external map/reduce executables speaking tab-separated key-value lines,
 md5 hash partitioning, per-partition lexicographic sort before reduce, and
 ``part-%05d`` text output files.
 
-A job has one of two data planes, and both deal input files to map
-tasks with the same rule (``partitioner.split_input``): Spark through
-``MREngine`` (its scheduler, executors and fault tolerance subsume the
-reference's task runtime), or a registered worker fleet, which runs the
-reference's own ``tmp/job-{id}/intermediate`` file shuffle. The FULL
-control plane is kept for drop-in compatibility:
+A job has one of two data planes, one task kernel under two
+schedulers. Both deal input files to map tasks with the same rule
+(``partitioner.split_input``) and run the same task bodies,
+``worker.run_mapper`` and ``worker.run_reducer``: Spark through
+``MREngine`` (its scheduler, executors, shuffle and fault tolerance
+subsume the reference's task runtime), or a registered worker fleet,
+which runs the reference's own ``tmp/job-{id}/intermediate`` file
+shuffle. So an executable job writes the same ``part-%05d`` bytes on
+either plane. The FULL control plane is kept for drop-in
+compatibility:
 
 - ``MREngine.submit_job`` accepts exactly the fields of the reference's
   ``new_manager_job`` message (reference: mapreduce/submit.py:70-78);

@@ -1,37 +1,32 @@
 """The mrlite job engine: the reference's MapReduce contract on Spark.
 
-Pipeline (SURVEY.md §3.1, steps 5-10):
+One task kernel, two schedulers: this engine runs the fleet worker's
+own task bodies, ``worker.run_mapper`` and ``worker.run_reducer``,
+inside Spark tasks (SURVEY.md §3.1, steps 5-10): ``split_input``'s
+file groups, one Spark task each → the mapper once per input file,
+the file's raw bytes on its stdin → md5(key) % num_reducers shuffle of
+the mapper's byte lines, each partition sorted by line plus newline →
+the sorted partition into the reducer's stdin, whose stdout the task
+writes as ``part-%05d``. So an executable job writes the same bytes on
+both data planes: a line ends at a newline byte only, a final line
+without its newline gets one, the reducer's output is kept as it is,
+and bytes that are not UTF-8 pass through.
 
-    directory scan → round-robin file split across num_mappers tasks →
-    map (external executable via RDD.pipe, or Python callable) →
-    md5(key) % num_reducers shuffle → per-partition sort (whole lines
-    for a reducer executable, (key, value) pairs for a callable) →
-    reduce (external executable or callable) → part-%05d text files.
-
-Everything data-plane runs distributed on Spark; the driver only lists
-files and renames outputs. There is no collect() anywhere — map output
-streams through executor-local subprocesses exactly like the reference's
-worker pipes (reference contract: tests/test_worker_11.py enforces O(1)
-memory streaming; RDD.pipe gives the same property).
-
-Task counts are pinned to (num_mappers, num_reducers) like the
-reference: ``partitioner.split_input`` deals the files, one coalesced
-partition per map task. The md5 partitioner is only needed for
-per-partition-file parity with the reference; it rides pyspark's
-partitionBy, so the shuffle itself is Spark's machinery — md5 is
-uniform, so balance matches Murmur3. The reference's on-disk
-``tmp/job-{id}/intermediate`` layout is the worker fleet's data path
-(``MRManagerServer._run_job_on_workers``), not this engine's.
+A Python callable speaks ``builtins.py``'s protocol over the same byte
+lines: a mapper gets each input line as UTF-8 text without its newline
+(other bytes raise UnicodeDecodeError), and its pairs shuffle as
+``key\\tvalue`` lines; a reducer gets each key's values, parsed from
+the sorted lines. The driver lists files, makes the output directory
+and collects the part paths; no record passes through it.
 """
 
 from __future__ import annotations
 
-import itertools
-import shlex
-import shutil
-import tempfile
+import os
+import socket
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
+from itertools import groupby, islice
 from operator import itemgetter
 from pathlib import Path
 from typing import TYPE_CHECKING
@@ -41,12 +36,20 @@ from eeecs485_p4_mapreduce_spark.mrlite.partitioner import (
     md5_partition,
     split_input,
 )
+from eeecs485_p4_mapreduce_spark.mrlite.worker import (
+    replaced,
+    run_mapper,
+    run_reducer,
+)
 
 if TYPE_CHECKING:  # the fleet path imports this module without Spark
     from pyspark.sql import SparkSession
 
 MapperFn = Callable[[str], Iterable[tuple[str, str]]]
 ReducerFn = Callable[[str, Iterable[str]], Iterable[str]]
+
+#: Lines per block a reduce task hands ``run_reducer``.
+_BLOCK_LINES = 1024
 
 
 @dataclass
@@ -55,54 +58,28 @@ class MRJobResult:
     output_directory: str
     output_paths: list[str] = field(default_factory=list)
 
-    def read_lines(self) -> list[str]:
-        """All output lines in partition order (debug/test helper)."""
-        out: list[str] = []
-        for p in self.output_paths:
-            out.extend(Path(p).read_text().splitlines())
-        return out
+
+def _map_lines(mapper: str | MapperFn, path: str) -> Iterator[bytes]:
+    """The shuffle records of one input file: each line the mapper
+    writes, with its newline."""
+    if callable(mapper):
+        with open(path, "rb") as f:
+            for line in f:
+                for key, value in mapper(line.decode().removesuffix("\n")):
+                    yield f"{key}\t{value}\n".encode()
+    else:
+        for lines in run_mapper(mapper, path):
+            for line in lines:
+                yield line + b"\n"
 
 
-def _parse_kv(line: str) -> tuple[str, str]:
-    """key TAB value; key = text before first tab (reference record format,
-    SURVEY.md §1.1). A tab-less line maps to (line, "")."""
-    head, _sep, tail = line.partition("\t")
-    return (head, tail)
-
-
-def _join_kv(kv: tuple[str, str]) -> str:
-    return f"{kv[0]}\t{kv[1]}"
-
-
-def _line_key(line: str) -> str:
-    return line.partition("\t")[0]
-
-
-def _line_order(line: str) -> str:
-    """A line's sort key: the line with its newline, so ``beta\tx``
-    sorts before ``beta`` as the fleet worker's bytes do (code-point
-    order on str is UTF-8 byte order)."""
-    return line + "\n"
-
-
-def _callable_map_partition(fn: MapperFn):
-    def run(lines: Iterator[str]) -> Iterator[tuple[str, str]]:
-        for line in lines:
-            yield from fn(line)
-
-    return run
-
-
-def _callable_reduce_partition(fn: ReducerFn):
-    """Group the sorted (key, value) stream by key and hand each group to
-    the reducer — the streaming equivalent of the external reducer reading
-    sorted lines (itertools.groupby keeps O(group) memory)."""
-
-    def run(pairs: Iterator[tuple[str, str]]) -> Iterator[str]:
-        for key, group in itertools.groupby(pairs, key=lambda kv: kv[0]):
-            yield from fn(key, (v for _, v in group))
-
-    return run
+def _call_reducer(reducer: ReducerFn, lines: Iterator[bytes]) -> Iterator[bytes]:
+    """A callable reducer's output over sorted lines: each key's values
+    in one call, each output line with a newline."""
+    pairs = (line.decode()[:-1].partition("\t") for line in lines)
+    for key, group in groupby(pairs, key=itemgetter(0)):
+        for out in reducer(key, (value for _, _, value in group)):
+            yield f"{out}\n".encode()
 
 
 class MREngine:
@@ -133,9 +110,9 @@ class MREngine:
         reference: mapreduce/submit.py:51-58).
 
         ``mapper_executable``/``reducer_executable`` accept either a path
-        to an external executable (reference behavior: subprocess over
-        stdin/stdout via RDD.pipe) or a Python callable (built-in fast
-        path, see builtins.py for the protocol).
+        to an external executable (reference behavior: a subprocess over
+        stdin/stdout, as on the worker fleet) or a Python callable
+        (built-in fast path, see builtins.py for the protocol).
         """
         if mapper_executable is None or reducer_executable is None:
             raise ValueError("mapper and reducer are required")
@@ -143,60 +120,35 @@ class MREngine:
         groups = split_input(input_directory, num_mappers)
         job_id = self._next_job_id
         self._next_job_id += 1
-
-        sc = self.spark.sparkContext
-        lines = sc.union([sc.textFile(",".join(g)).coalesce(1) for g in groups])
-
-        # Map stage (§2.2 M1): executable pipe or callable flatMap.
-        if callable(mapper_executable):
-            mapped = lines.mapPartitions(_callable_map_partition(mapper_executable))
-        else:
-            mapped = lines.pipe(shlex.quote(str(mapper_executable)), checkCode=True)
-
-        # Shuffle (§2.2 M2 + §2.4 R1): md5(key) partitioning, then a sort
-        # within each partition. A reducer executable reads whole lines in
-        # the contract's order, bytewise by line plus newline, as the fleet
-        # worker sorts them; a callable reducer reads (key, value) pairs.
-        if callable(reducer_executable):
-            records = mapped if callable(mapper_executable) else mapped.map(_parse_kv)
-            key_of, sort_key = itemgetter(0), (lambda kv: kv)
-        else:
-            records = mapped.map(_join_kv) if callable(mapper_executable) else mapped
-            key_of, sort_key = _line_key, _line_order
-        shuffled = (
-            records.map(lambda rec: (rec, None))
-            .repartitionAndSortWithinPartitions(
-                numPartitions=num_reducers,
-                partitionFunc=lambda rec: md5_partition(key_of(rec), num_reducers),
-                keyfunc=sort_key,
-            )
-            .keys()
-        )
-
-        # Reduce stage (§2.4 R2).
-        if callable(reducer_executable):
-            reduced = shuffled.mapPartitions(
-                _callable_reduce_partition(reducer_executable)
-            )
-        else:
-            reduced = shuffled.pipe(shlex.quote(str(reducer_executable)), checkCode=True)
-
-        # Sink (§2.5 K1): exactly num_reducers files named part-%05d.
         out_dir = Path(output_directory)
         out_dir.mkdir(parents=True, exist_ok=True)
-        staging = Path(tempfile.mkdtemp(prefix=f"mrlite-job-{job_id}-"))
-        spark_out = staging / "out"
-        reduced.saveAsTextFile(str(spark_out))
-        output_paths: list[str] = []
-        for part in sorted(spark_out.glob("part-*")):
-            if part.suffix == ".crc":
-                continue
-            dest = out_dir / part.name.split(".")[0]
-            shutil.move(str(part), str(dest))
-            output_paths.append(str(dest))
-        shutil.rmtree(staging, ignore_errors=True)
-        if len(output_paths) != num_reducers:
-            raise RuntimeError(
-                f"expected {num_reducers} output files, wrote {len(output_paths)}"
+        mapper, reducer = mapper_executable, reducer_executable
+
+        def reduce_partition(index: int, records) -> Iterator[str]:
+            lines = map(itemgetter(0), records)
+            out_path = out_dir / f"part-{index:05d}"
+            tag = f"{socket.gethostname()}-{os.getpid()}"
+            if callable(reducer):
+                with replaced(out_path, tag) as outfile:
+                    outfile.writelines(_call_reducer(reducer, lines))
+            else:
+                run = iter(lambda: list(islice(lines, _BLOCK_LINES)), [])
+                run_reducer(reducer, [run], out_path, tag)
+            yield str(out_path)
+
+        output_paths = (
+            self.spark.sparkContext.parallelize(groups, len(groups))
+            .flatMap(lambda group: (
+                (line, None) for path in group for line in _map_lines(mapper, path)
+            ))
+            .repartitionAndSortWithinPartitions(
+                numPartitions=num_reducers,
+                # key: the bytes before the first tab, or the line
+                partitionFunc=lambda line: md5_partition(
+                    line[:-1].partition(b"\t")[0], num_reducers
+                ),
             )
+            .mapPartitionsWithIndex(reduce_partition)
+            .collect()
+        )
         return MRJobResult(job_id, str(out_dir), output_paths)

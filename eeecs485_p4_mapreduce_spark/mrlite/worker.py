@@ -54,6 +54,10 @@ starter stubs, so the tests ARE the spec):
   (tests/test_worker_01.py catches SystemExit(0); here ``join()``
   returns and ``exit_code`` reads 0).
 
+The task bodies, ``run_mapper`` and ``run_reducer``, are module
+functions that ``MREngine`` runs inside Spark tasks too: one task
+kernel under two schedulers.
+
 A task message's fields are checked against ``MESSAGE_FIELDS`` before
 any file is opened or process started. A bad field fails the task with
 a ``finished`` error that names it; a message without an int
@@ -104,9 +108,10 @@ import tempfile
 import threading
 from bisect import bisect_right
 from collections.abc import Iterator
-from contextlib import ExitStack, suppress
+from contextlib import ExitStack, contextmanager, suppress
 from functools import partial
 from pathlib import Path
+from typing import BinaryIO
 
 from eeecs485_p4_mapreduce_spark.mrlite.partitioner import md5_partition
 
@@ -121,6 +126,10 @@ CHUNK_BYTES = 1 << 14
 
 #: Keys a map task's key -> partition memo holds before it is cleared.
 MEMO_KEYS = 4096
+
+#: Seconds a control connection may stay silent: ``send_json``'s
+#: connect and send, and each ``recv`` of ``serve_json_loop``.
+SOCKET_TIMEOUT = 5.0
 
 #: Fields each message type must carry, with their JSON types; a
 #: ``list`` field is a list of strings. The manager checks the messages
@@ -167,7 +176,7 @@ def check_fields(message) -> None:
 
 
 def send_json(
-    host: str, port: int, message: dict, timeout: float = 5.0
+    host: str, port: int, message: dict, timeout: float = SOCKET_TIMEOUT
 ) -> None:
     """Fire-and-forget one JSON message over a fresh TCP connection —
     the wire shape of every control message in the reference protocol
@@ -191,17 +200,23 @@ def serve_json_loop(sock, shutdown, on_message, on_malformed) -> None:
     malformed message, so a reader that sees the count also finds the
     record. It blocks in ``accept()`` until a connection arrives; the
     daemon's ``stop()`` ends the loop by setting ``shutdown`` and
-    shutting ``sock`` down, which makes ``accept()`` raise."""
+    shutting ``sock`` down, which makes ``accept()`` raise. A client
+    that sends nothing for ``SOCKET_TIMEOUT`` seconds is dropped with
+    a WARNING, so one idle connection cannot hold the loop."""
     while not shutdown.is_set():
         try:
-            conn, _addr = sock.accept()
+            conn, addr = sock.accept()
         except OSError:
             break
         with conn:
+            conn.settimeout(SOCKET_TIMEOUT)
             chunks = []
             try:
                 while chunk := conn.recv(65536):
                     chunks.append(chunk)
+            except TimeoutError:
+                log.warning("closed idle connection from %s:%d", *addr)
+                continue
             except OSError:
                 continue
         try:
@@ -400,64 +415,21 @@ class MRWorker:
 
     def _run_map_task(self, message: dict) -> None:
         task_id = message["task_id"]
-        executable = message["executable"]
         out_dir = Path(message["output_directory"])
-        num_partitions = message["num_partitions"]
         part_paths = [
             out_dir / f"maptask{task_id:05d}-part{p:05d}"
-            for p in range(num_partitions)
+            for p in range(message["num_partitions"])
         ]
-        # C7 makes reassignment presumptive: a worker that merely missed
-        # 5 heartbeats may still be running and writing. Two attempts
-        # open('w')-ing the SAME file interleave and corrupt it, so each
-        # attempt streams into a private temp name and os.replace()s the
-        # whole set into place only on success — last completed attempt
-        # wins atomically, a half-done loser leaves nothing behind. The
-        # suffix is (host, port, pid): port alone would collide across
-        # HOSTS of a shared-filesystem fleet (every reference worker
-        # defaults to port 6001), re-enabling the interleaving; pid
-        # disambiguates same-(host, port) restarts racing their
-        # predecessor's orphaned mapper.
-        tmp_paths = [
-            p.with_name(f"{p.name}.tmp-{self._attempt_tag()}")
-            for p in part_paths
-        ]
-        try:
-            with ExitStack() as stack:
-                # One output file per partition, created up front: the
-                # reference reports every partition file in finished even
-                # when empty (tests/test_worker_08.py:159-162).
-                parts = [stack.enter_context(p.open("wb")) for p in tmp_paths]
-                route: dict[bytes, int] = {}
-                for input_path in message["input_paths"]:
-                    with (
-                        open(input_path, "rb") as infile,
-                        subprocess.Popen(
-                            [executable], stdin=infile, stdout=subprocess.PIPE
-                        ) as proc,
-                    ):
-                        assert proc.stdout is not None
-                        tail = b""
-                        while chunk := proc.stdout.read(CHUNK_BYTES):
-                            lines = (tail + chunk).split(b"\n")
-                            tail = lines.pop()
-                            _write_routed(lines, parts, route)
-                        # A mapper whose final stdout line lacks its
-                        # newline must not concatenate with the next
-                        # input file's first line routed to the same
-                        # partition (mirror of the reduce-side patch).
-                        if tail:
-                            _write_routed([tail], parts, route)
-                    if proc.returncode:
-                        raise RuntimeError(
-                            f"mapper exited {proc.returncode} on {input_path}"
-                        )
-            for tmp, final in zip(tmp_paths, part_paths):
-                os.replace(tmp, final)
-        except BaseException:
-            for tmp in tmp_paths:
-                tmp.unlink(missing_ok=True)
-            raise
+        with ExitStack() as stack:
+            # One output file per partition, created up front: the
+            # reference reports every partition file in finished even
+            # when empty (tests/test_worker_08.py:159-162).
+            tag = self._attempt_tag()
+            parts = [stack.enter_context(replaced(p, tag)) for p in part_paths]
+            route: dict[bytes, int] = {}
+            for input_path in message["input_paths"]:
+                for lines in run_mapper(message["executable"], input_path):
+                    _write_routed(lines, parts, route)
         self._send_finished(
             task_id,
             [str(p) for p in part_paths],
@@ -466,15 +438,7 @@ class MRWorker:
 
     def _run_reduce_task(self, message: dict) -> None:
         task_id = message["task_id"]
-        executable = message["executable"]
-        out_dir = Path(message["output_directory"])
-        out_path = out_dir / f"part-{task_id:05d}"
-        # Same atomic-rename discipline as the map side: a presumed-dead
-        # worker's late writes must not interleave with the replacement
-        # attempt's output file.
-        tmp_path = out_path.with_name(
-            f"{out_path.name}.tmp-{self._attempt_tag()}"
-        )
+        out_path = Path(message["output_directory"]) / f"part-{task_id:05d}"
         paths = message["input_paths"]
         with ExitStack() as stack:
             # External merge-sort: each (unsorted) input file is sorted
@@ -489,33 +453,88 @@ class MRWorker:
                 run.seek(0)
                 runs.append(iter(partial(run.readlines, CHUNK_BYTES), []))
             runs += map(_sorted_blocks, paths[-1:])
-            stack.callback(tmp_path.unlink, missing_ok=True)
-            outfile = stack.enter_context(tmp_path.open("wb"))
-            proc = stack.enter_context(
-                subprocess.Popen(
-                    [executable], stdin=subprocess.PIPE, stdout=outfile
-                )
+            run_reducer(
+                message["executable"], runs, out_path, self._attempt_tag()
             )
-            assert proc.stdin is not None
-            try:
-                _merge_runs(runs, proc.stdin.write)
-                proc.stdin.close()
-            except BrokenPipeError:
-                # The reducer stopped reading; its exit status says why,
-                # whether or not it died before the last write.
-                with suppress(BrokenPipeError):
-                    proc.stdin.close()
-                if proc.wait() == 0:
-                    raise RuntimeError(
-                        "reducer exited 0 before reading all its input"
-                    ) from None
-            if proc.wait():
-                raise RuntimeError(f"reducer exited {proc.returncode}")
-            outfile.flush()
-            os.replace(tmp_path, out_path)
         self._send_finished(
             task_id, [str(out_path)], wave=message.get("wave")
         )
+
+
+@contextmanager
+def replaced(path: Path, tag: str) -> Iterator[BinaryIO]:
+    """A file to write at a temp name of attempt ``tag`` beside
+    ``path``, ``os.replace``d onto ``path`` if the block succeeds and
+    deleted if it raises. Reassignment is presumptive (C7), so two
+    attempts may write one output at once: the last to finish wins
+    whole, a loser leaves nothing. The fleet's tag is host, port and
+    pid: port alone collides across hosts sharing a filesystem."""
+    tmp = path.with_name(f"{path.name}.tmp-{tag}")
+    try:
+        with tmp.open("wb") as f:
+            yield f
+        os.replace(tmp, path)
+    finally:
+        tmp.unlink(missing_ok=True)
+
+
+def run_mapper(executable: str, input_path: str) -> Iterator[list[bytes]]:
+    """The map task body both data planes run: ``executable`` with the
+    bytes of the file at ``input_path`` on its stdin, its stdout
+    yielded as lists of complete lines without their newlines, about
+    ``CHUNK_BYTES`` at a time. A final line without its newline is
+    yielded too, so it cannot run into the next file's first line.
+    Raises RuntimeError when the mapper exits non-zero."""
+    with (
+        open(input_path, "rb") as infile,
+        subprocess.Popen(
+            [executable], stdin=infile, stdout=subprocess.PIPE
+        ) as proc,
+    ):
+        assert proc.stdout is not None
+        tail = b""
+        while chunk := proc.stdout.read(CHUNK_BYTES):
+            lines = (tail + chunk).split(b"\n")
+            tail = lines.pop()
+            yield lines
+        if tail:
+            yield [tail]
+    if proc.returncode:
+        raise RuntimeError(f"mapper exited {proc.returncode} on {input_path}")
+
+
+def run_reducer(
+    executable: str,
+    runs: list[Iterator[list[bytes]]],
+    out_path: Path,
+    tag: str,
+) -> None:
+    """The reduce task body both data planes run: ``_merge_runs`` of
+    the sorted ``runs`` into ``executable``'s stdin, its stdout into
+    ``out_path`` through ``replaced(out_path, tag)``. A reducer that
+    exits non-zero, or exits 0 while its input is still unread, raises
+    RuntimeError and leaves no output file."""
+    with (
+        replaced(out_path, tag) as outfile,
+        subprocess.Popen(
+            [executable], stdin=subprocess.PIPE, stdout=outfile
+        ) as proc,
+    ):
+        assert proc.stdin is not None
+        try:
+            _merge_runs(runs, proc.stdin.write)
+            proc.stdin.close()
+        except BrokenPipeError:
+            # The reducer stopped reading; its exit status says why,
+            # whether or not it died before the last write.
+            with suppress(BrokenPipeError):
+                proc.stdin.close()
+            if proc.wait() == 0:
+                raise RuntimeError(
+                    "reducer exited 0 before reading all its input"
+                ) from None
+        if proc.wait():
+            raise RuntimeError(f"reducer exited {proc.returncode}")
 
 
 def _sorted_blocks(path: str) -> Iterator[list[bytes]]:

@@ -35,6 +35,18 @@ def fixture_wordcount() -> list[str]:
     return [f"{w}\t{c}" for w, c in counts.items()]
 
 
+def read_lines(result) -> list[str]:
+    """The lines of an mrlite job ``result``'s output files, in
+    partition order. A line ends at a newline only, as in the job
+    contract: a ``\r`` or ``\x0c`` stays inside its record."""
+    out: list[str] = []
+    for path in result.output_paths:
+        text = Path(path).read_text(encoding="utf-8")
+        if text:
+            out += text.removesuffix("\n").split("\n")
+    return out
+
+
 class QuietWorker(MRWorker):
     """An ``MRWorker`` whose tasks run in the calling thread (call
     ``_run_map_task``/``_run_reduce_task``) and send no replies."""

@@ -18,7 +18,7 @@ from pathlib import Path
 
 import pytest
 
-from tests.conftest import MR_FIXTURES, fixture_wordcount
+from tests.conftest import MR_FIXTURES, fixture_wordcount, read_lines
 
 REF = Path("/root/reference")
 REF_DATA = REF / "tests/testdata"
@@ -91,7 +91,7 @@ def test_reference_submit_client_runs_wc_job(server, tmp_path):
     assert rec.error is None
     assert rec.result is not None and len(rec.result.output_paths) == 2
     golden = (REF_DATA / "correct/word_count_correct.txt").read_text().splitlines()
-    assert sorted(rec.result.read_lines()) == sorted(golden)
+    assert sorted(read_lines(rec.result)) == sorted(golden)
 
 
 def test_fifo_queueing_and_malformed_messages(server, tmp_path):
@@ -117,7 +117,7 @@ def test_fifo_queueing_and_malformed_messages(server, tmp_path):
     a, b = server.jobs
     assert a.error is None and b.error is None
     assert b.result.job_id == a.result.job_id + 1
-    assert a.result.read_lines() == b.result.read_lines()
+    assert read_lines(a.result) == read_lines(b.result)
 
 
 def test_shutdown_message_stops_server(server):
@@ -255,7 +255,7 @@ def test_dead_fleet_falls_back_to_spark_engine(spark, tmp_path):
         assert rec.error is None
         # No worker ever saw a task.
         assert server.task_events == []
-        assert sorted(rec.result.read_lines()) == sorted(fixture_wordcount())
+        assert sorted(read_lines(rec.result)) == sorted(fixture_wordcount())
     finally:
         worker.stop()
         server.stop()
@@ -560,5 +560,41 @@ def test_malformed_heartbeat_keeps_liveness():
     finally:
         logger.removeHandler(handler)
         logger.setLevel(level)
+        srv.stop()
+        srv.join(timeout=10)
+
+
+def test_idle_client_does_not_stall_the_manager(monkeypatch, caplog, tmp_path):
+    """A client that connects and sends nothing is dropped after
+    ``worker.SOCKET_TIMEOUT`` with a WARNING naming it, so a job sent
+    behind it is still received, and ``stop()`` ends a loop that is
+    reading an idle connection within that deadline. Before, the loop
+    read each connection until EOF with no deadline."""
+    from eeecs485_p4_mapreduce_spark.mrlite import MRManagerServer, worker
+
+    deadline = 0.3
+    monkeypatch.setattr(worker, "SOCKET_TIMEOUT", deadline, raising=False)
+    caplog.set_level(logging.WARNING)
+    srv = MRManagerServer(None, port=0).start()
+    idle = socket.create_connection(("localhost", srv.port))
+    try:
+        _send(srv.port, {**FIXTURE_WC, "output_directory": str(tmp_path)})
+        until = time.monotonic() + deadline + 2
+        while not srv.jobs and time.monotonic() < until:
+            time.sleep(0.02)
+        assert len(srv.jobs) == 1
+        peer = "%s:%d" % idle.getsockname()
+        assert any(
+            r.levelno == logging.WARNING
+            and r.getMessage() == f"closed idle connection from {peer}"
+            for r in caplog.records
+        ), caplog.records
+        with socket.create_connection(("localhost", srv.port)):
+            time.sleep(0.1)  # the loop is now reading this connection
+            srv.stop()
+            srv.join(deadline + 1)
+            assert not srv.is_alive()
+    finally:
+        idle.close()
         srv.stop()
         srv.join(timeout=10)

@@ -15,12 +15,21 @@ Mirrors the reference's integration-test strategy (SURVEY.md §5):
 
 from __future__ import annotations
 
+import tempfile
 from pathlib import Path
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from eeecs485_p4_mapreduce_spark.mrlite import md5_partition
-from tests.conftest import MR_FIXTURES, QuietWorker, fixture_wordcount
+from eeecs485_p4_mapreduce_spark.mrlite.partitioner import split_input
+from tests.conftest import (
+    MR_FIXTURES,
+    QuietWorker,
+    fixture_wordcount,
+    read_lines,
+)
 
 REF = Path("/root/reference/tests/testdata")
 
@@ -50,7 +59,7 @@ def test_md5_partition_matches_reference_routing():
 
 
 def test_wordcount_external_executables(engine, tmp_path):
-    """wc_map.sh/wc_reduce.sh through RDD.pipe, 2x2 job; union of parts
+    """wc_map.sh/wc_reduce.sh through the task kernel, 2x2 job; union of parts
     must equal the golden multiset exactly."""
     res = engine.submit_job(
         input_directory=str(MR_FIXTURES / "input"),
@@ -61,7 +70,7 @@ def test_wordcount_external_executables(engine, tmp_path):
         num_reducers=2,
     )
     assert len(res.output_paths) == 2
-    assert sorted(res.read_lines()) == sorted(fixture_wordcount())
+    assert sorted(read_lines(res)) == sorted(fixture_wordcount())
 
 
 def test_wordcount_builtin_python(engine, tmp_path):
@@ -79,7 +88,7 @@ def test_wordcount_builtin_python(engine, tmp_path):
     )
     assert len(res.output_paths) == 1
     # single sorted partition → byte-level line order is the golden's order
-    assert res.read_lines() == sorted(fixture_wordcount())
+    assert read_lines(res) == sorted(fixture_wordcount())
 
 
 @needs_reference
@@ -109,7 +118,7 @@ def test_grep_builtin_python(engine, tmp_path):
         num_mappers=2,
         num_reducers=1,
     )
-    assert "\n".join(res.read_lines()) + "\n" == golden_grep().decode()
+    assert "\n".join(read_lines(res)) + "\n" == golden_grep().decode()
 
 
 def test_multireducer_partition_layout(engine, tmp_path):
@@ -133,59 +142,141 @@ def test_multireducer_partition_layout(engine, tmp_path):
         assert all(md5_partition(k, 2) == part_idx for k in keys)
 
 
-@pytest.mark.parametrize("exec_dir", ["exec", "ex dir"])
-def test_executable_job_matches_fleet_worker(engine, tmp_path, exec_dir):
-    """``MREngine`` pipes each mapper line to the reducer whole, in the
-    contract's order, so its ``part-*`` files are byte for byte the
-    fleet worker's: a tab-less line gains no tab, a key holding a byte
-    below TAB sorts before its prefix, and ``beta\tx`` sorts before
-    ``beta``. The executables' path may hold a space."""
-    cat = tmp_path / exec_dir / "cat.sh"
-    cat.parent.mkdir()
-    cat.write_text("#!/bin/sh\nexec cat\n")
-    cat.chmod(0o755)
-    lines = ["beta\tx", "beta", "a\x01\t1", "a\t1", "", "\t0", "caf\u00e9\t2", "zeta"]
-    inp = tmp_path / "input"
-    inp.mkdir()
-    (inp / "file01").write_text("".join(f"{ln}\n" for ln in lines))
-    res = engine.submit_job(
-        input_directory=str(inp),
-        output_directory=str(tmp_path / "engine"),
-        mapper_executable=str(cat),
-        reducer_executable=str(cat),
-        num_mappers=1,
-        num_reducers=2,
-    )
+#: Bytes the differential test builds input files from: tabs, ``\r``,
+#: ``\x0c``, non-ASCII keys and bytes that are not UTF-8 among them.
+_TOKENS = [
+    b"a", b"B", b"product", b"PRODUCT", b" ", b"\t", b"\r", b"\x0c", b"1",
+    "caf\u00e9".encode(), "\u00df".encode(), b"\xff", b"\xfe", b"\n",
+]
 
+#: Executables written per example into a directory whose name holds a
+#: space; the rest of ``_EXECS`` are the fixture scripts.
+_SCRIPTS = {
+    "cat.sh": "exec cat",
+    "procs.sh": 'n=$(wc -l); printf "procs\\t%s\\n" "$n"',
+    "x.sh": "cat >/dev/null; printf x",
+}
+_FIXTURE_EXECS = sorted(p.name for p in (MR_FIXTURES / "exec").iterdir())
+_EXECS = _FIXTURE_EXECS + sorted(_SCRIPTS)
+
+#: Eight hand-picked lines: a tab-less line gains no tab, a key holding
+#: a byte below TAB sorts before its prefix, and ``beta\tx`` sorts
+#: before ``beta``.
+_EIGHT_LINES = "beta\tx\nbeta\na\x01\t1\na\t1\n\n\t0\ncaf\u00e9\t2\nzeta\n".encode()
+
+
+def _records(data: bytes) -> list[bytes]:
+    """A file's lines, each with its newline: a line ends at a newline
+    byte only, and a last line without one gets one."""
+    lines = data.split(b"\n")
+    if lines[-1] == b"":
+        lines.pop()
+    return [line + b"\n" for line in lines]
+
+
+def _fleet_parts(
+    inp: Path, work: Path, mapper: str, reducer: str, num_mappers: int,
+    num_reducers: int,
+) -> list[bytes]:
+    """The ``part-*`` bytes of a job run by the fleet worker's task code,
+    dispatched as ``MRManagerServer._run_job_on_workers`` does."""
     worker = QuietWorker(port=0)
-    inter, fleet = tmp_path / "inter", tmp_path / "fleet"
+    inter, out = work / "inter", work / "fleet"
     inter.mkdir()
-    fleet.mkdir()
-    worker._run_map_task({
-        "task_id": 0,
-        "executable": str(cat),
-        "input_paths": [str(inp / "file01")],
-        "output_directory": str(inter),
-        "num_partitions": 2,
-    })
-    for p in range(2):
+    out.mkdir()
+    for i, group in enumerate(split_input(str(inp), num_mappers)):
+        worker._run_map_task({
+            "task_id": i,
+            "executable": mapper,
+            "input_paths": group,
+            "output_directory": str(inter),
+            "num_partitions": num_reducers,
+        })
+    for p in range(num_reducers):
         worker._run_reduce_task({
             "task_id": p,
-            "executable": str(cat),
-            "input_paths": [str(inter / f"maptask00000-part{p:05d}")],
-            "output_directory": str(fleet),
+            "executable": reducer,
+            "input_paths": sorted(map(str, inter.glob(f"*-part{p:05d}"))),
+            "output_directory": str(out),
         })
-    fleet_parts = [(fleet / f"part-{p:05d}").read_bytes() for p in range(2)]
-    assert [Path(p).read_bytes() for p in res.output_paths] == fleet_parts
-    # The contract, computed here: md5-route by key, sort line + newline.
-    contract = [
-        "".join(sorted(
-            f"{ln}\n" for ln in lines
-            if md5_partition(ln.partition("\t")[0], 2) == p
-        )).encode()
-        for p in range(2)
-    ]
-    assert fleet_parts == contract
+    return [(out / f"part-{p:05d}").read_bytes() for p in range(num_reducers)]
+
+
+@settings(max_examples=40, deadline=None, derandomize=True, database=None)
+@given(
+    files=st.lists(
+        st.lists(st.sampled_from(_TOKENS), max_size=30).map(b"".join),
+        max_size=5,
+    ),
+    mapper=st.sampled_from(_EXECS),
+    reducer=st.sampled_from(_EXECS),
+    num_mappers=st.integers(1, 4),
+    num_reducers=st.integers(1, 4),
+)
+# Records end at newline bytes only: a \r stays inside its line.
+@example([b"a\rb\t1\nc\r\nd\t2\n"], "cat.sh", "cat.sh", 1, 1)
+# One mapper process per input file, and no newline added to the last
+# line of a file: the fleet writes procs\t1 three times and procs\t2.
+@example(
+    [b"a\t1\n", b"b\t1\nc\t1\n", b"d\t1\n", b"e\nf\t1"], "procs.sh", "cat.sh", 2, 1
+)
+# The reducer's output is written as it is, with no newline added.
+@example([b"a\t1\n"], "cat.sh", "x.sh", 1, 1)
+# Bytes that are not UTF-8 pass through unchanged.
+@example([b"\xff\xfe\t1\nok\t2\n"], "cat.sh", "cat.sh", 1, 1)
+@example([_EIGHT_LINES], "cat.sh", "cat.sh", 1, 2)
+@example([b"Product 1\n\nno\n", b"a PRODUCT\tb"], "grep_map.sh", "grep_reduce.sh", 2, 1)
+def test_engine_parts_equal_fleet_parts(
+    spark, files, mapper, reducer, num_mappers, num_reducers
+):
+    """Differential: on any corpus, ``MREngine`` writes the same
+    ``part-*`` bytes as the fleet worker's task code, for fixture
+    executables, ``cat``, a mapper that writes one line at end of
+    input and a reducer that writes no newline. With ``cat`` on both
+    sides the parts are also the contract, computed here: each line
+    md5-routed by its key, each partition sorted by line plus newline."""
+    from eeecs485_p4_mapreduce_spark.mrlite import MREngine
+
+    with tempfile.TemporaryDirectory() as tmp:
+        work = Path(tmp)
+        scripts, inp = work / "ex dir", work / "input"
+        scripts.mkdir()
+        inp.mkdir()
+        for name, body in _SCRIPTS.items():
+            (scripts / name).write_text(f"#!/bin/sh\n{body}\n")
+            (scripts / name).chmod(0o755)
+        for i, data in enumerate(files):
+            (inp / f"file{i:02d}").write_bytes(data)
+        exe = {
+            name: str((scripts if name in _SCRIPTS else MR_FIXTURES / "exec") / name)
+            for name in (mapper, reducer)
+        }
+        job = dict(
+            input_directory=str(inp),
+            output_directory=str(work / "engine"),
+            mapper_executable=exe[mapper],
+            reducer_executable=exe[reducer],
+            num_mappers=num_mappers,
+            num_reducers=num_reducers,
+        )
+        if not files:
+            with pytest.raises(FileNotFoundError, match="no input files"):
+                MREngine(spark).submit_job(**job)
+            return
+        res = MREngine(spark).submit_job(**job)
+        fleet = _fleet_parts(
+            inp, work, exe[mapper], exe[reducer], num_mappers, num_reducers
+        )
+        assert [Path(p).read_bytes() for p in res.output_paths] == fleet
+        if mapper == reducer == "cat.sh":
+            lines = [line for data in files for line in _records(data)]
+            assert fleet == [
+                b"".join(sorted(
+                    line for line in lines
+                    if md5_partition(line[:-1].partition(b"\t")[0], num_reducers) == p
+                ))
+                for p in range(num_reducers)
+            ]
 
 
 def test_fifo_job_ids(engine, tmp_path):
@@ -208,7 +299,7 @@ def test_fifo_job_ids(engine, tmp_path):
         num_reducers=1,
     )
     assert second.job_id == first.job_id + 1
-    assert first.read_lines() == second.read_lines()
+    assert read_lines(first) == read_lines(second)
 
 
 @needs_reference
@@ -231,7 +322,7 @@ def test_streaming_large_input(engine, tmp_path):
     )
     elapsed = time.perf_counter() - t0
     total = sum(
-        int(ln.split("\t")[1]) for ln in res.read_lines() if "\t" in ln
+        int(ln.split("\t")[1]) for ln in read_lines(res) if "\t" in ln
     )
     assert total > 100_000  # ~640k tokens in the Tolstoy corpus
     assert elapsed < 30.0, f"3.7 MB map+reduce took {elapsed:.1f}s"

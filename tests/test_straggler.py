@@ -60,6 +60,7 @@ spark = (
 )
 sys.path.insert(0, ".")
 from eeecs485_p4_mapreduce_spark.mrlite import MREngine
+from tests.conftest import read_lines
 
 assert spark.sparkContext.getConf().get("spark.speculation") == "true"
 engine = MREngine(spark)
@@ -71,7 +72,7 @@ res = engine.submit_job(
     num_mappers=4,
     num_reducers=2,
 )
-lines = sorted(res.read_lines())
+lines = sorted(read_lines(res))
 print("STRAGGLER_RESULT:" + json.dumps(
     {"n_parts": len(res.output_paths), "lines": lines}
 ))

@@ -36,7 +36,12 @@ import pytest
 
 from eeecs485_p4_mapreduce_spark.mrlite import worker as worker_module
 from eeecs485_p4_mapreduce_spark.mrlite.worker import MRWorker, send_json
-from tests.conftest import MR_FIXTURES, QuietWorker, fixture_wordcount
+from tests.conftest import (
+    MR_FIXTURES,
+    QuietWorker,
+    fixture_wordcount,
+    read_lines,
+)
 
 REF_DATA = Path("/root/reference/tests/testdata")
 
@@ -658,7 +663,7 @@ def test_reference_submit_client_drives_worker_fleet(tmp_path):
         assert proc.returncode == 0, proc.stderr
         rec = _wait_job_done(server)
         assert rec.error is None
-        assert sorted(rec.result.read_lines()) == sorted(_golden_wordcount())
+        assert sorted(read_lines(rec.result)) == sorted(_golden_wordcount())
     finally:
         for w in workers:
             w.stop()
