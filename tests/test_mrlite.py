@@ -224,7 +224,6 @@ def _fleet_parts(
 @example([b"a\t1\n"], "cat.sh", "x.sh", 1, 1)
 # Bytes that are not UTF-8 pass through unchanged.
 @example([b"\xff\xfe\t1\nok\t2\n"], "cat.sh", "cat.sh", 1, 1)
-@example([_EIGHT_LINES], "cat.sh", "cat.sh", 1, 2)
 @example([b"Product 1\n\nno\n", b"a PRODUCT\tb"], "grep_map.sh", "grep_reduce.sh", 2, 1)
 def test_engine_parts_equal_fleet_parts(
     spark, files, mapper, reducer, num_mappers, num_reducers
@@ -277,6 +276,40 @@ def test_engine_parts_equal_fleet_parts(
                 ))
                 for p in range(num_reducers)
             ]
+
+
+@pytest.mark.parametrize("exec_dir", ["exec", "ex dir"])
+def test_executable_job_matches_fleet_worker(engine, tmp_path, exec_dir):
+    """``MREngine`` pipes each mapper line to the reducer whole, in the
+    contract's order, so its ``part-*`` files are byte for byte the
+    fleet worker's on ``_EIGHT_LINES``. The executables' path may hold
+    a space."""
+    cat = tmp_path / exec_dir / "cat.sh"
+    cat.parent.mkdir()
+    cat.write_text("#!/bin/sh\nexec cat\n")
+    cat.chmod(0o755)
+    inp = tmp_path / "input"
+    inp.mkdir()
+    (inp / "file01").write_bytes(_EIGHT_LINES)
+    res = engine.submit_job(
+        input_directory=str(inp),
+        output_directory=str(tmp_path / "engine"),
+        mapper_executable=str(cat),
+        reducer_executable=str(cat),
+        num_mappers=1,
+        num_reducers=2,
+    )
+    fleet = _fleet_parts(inp, tmp_path, str(cat), str(cat), 1, 2)
+    assert [Path(p).read_bytes() for p in res.output_paths] == fleet
+    # The contract, computed here: md5-route by key, sort line + newline.
+    lines = _records(_EIGHT_LINES)
+    assert fleet == [
+        b"".join(sorted(
+            line for line in lines
+            if md5_partition(line[:-1].partition(b"\t")[0], 2) == p
+        ))
+        for p in range(2)
+    ]
 
 
 def test_fifo_job_ids(engine, tmp_path):
