@@ -141,6 +141,8 @@ class JobRecord:
     """One submitted job's lifecycle, observable by tests/tools."""
 
     message: dict
+    #: FIFO id from 0, the record's index in ``MRManagerServer.jobs``
+    job_id: int
     result: MRJobResult | None = None
     error: str | None = None
     done: threading.Event = field(default_factory=threading.Event)
@@ -224,7 +226,7 @@ class MRManagerServer:
         check_fields(message)  # raises: serve_json_loop counts it
         mtype = message.get("message_type")
         if mtype == "new_manager_job":
-            rec = JobRecord(message=message)
+            rec = JobRecord(message=message, job_id=len(self.jobs))
             self.jobs.append(rec)
             if self._shutdown.is_set():
                 # The runner loop has exited (or is exiting); queueing now
@@ -588,7 +590,7 @@ class MRManagerServer:
                         dropped.error = "dropped: shutdown"
                         dropped.done.set()
                 break
-            job_id = self.jobs.index(rec)
+            job_id = rec.job_id
             # C5: a live registered fleet executes the job the reference
             # way; Spark is the no-fleet data plane.
             plane = "fleet" if self.alive_workers() else "spark"

@@ -21,10 +21,12 @@ from pathlib import Path
 
 def md5_partition(key: str | bytes, num_partitions: int) -> int:
     """Partition index for a key, exactly as the reference computes it.
-    A str key is hashed as its UTF-8 bytes; a bytes key as it is."""
+    A str key is hashed as its UTF-8 bytes; a bytes key as it is. The
+    big-endian digest is the hexdigest's integer, without the hex
+    round trip."""
     if isinstance(key, str):
         key = key.encode("utf-8")
-    return int(hashlib.md5(key).hexdigest(), 16) % num_partitions
+    return int.from_bytes(hashlib.md5(key).digest(), "big") % num_partitions
 
 
 def check_task_count(name: str, count: int) -> None:

@@ -25,31 +25,36 @@ starter stubs, so the tests ARE the spec):
 - **new_map_task** (reference: tests/test_worker_03.py:24-34, field
   set; tests/test_worker_08.py:159-175, one output file per partition
   whether or not rows landed in it): run the executable once per input
-  path with that file as stdin, route each stdout line to partition
-  ``md5(key) % num_partitions`` (key = bytes before the first tab —
-  mrlite/partitioner.py, pinned by test_worker_08's observed layout),
-  write ``maptask{task_id:05d}-part{p:05d}`` under ``output_directory``
-  UNSORTED (this fork's M3 contract: the reference's own reduce
-  fixtures, tests/testdata/test_worker_07/maptask00000-part00000, are
-  unsorted — sorting is reduce-side), and reply ``{"message_type":
-  "finished", "task_id", "output_paths", "worker_host",
-  "worker_port"}`` (tests/test_worker_03.py:85-101).
+  path, in order, with that file as stdin (the next file's mapper
+  starts while this one's output is read), route each stdout line to
+  partition ``md5(key) % num_partitions`` (key = bytes before the
+  first tab — mrlite/partitioner.py, pinned by test_worker_08's
+  observed layout), write ``maptask{task_id:05d}-part{p:05d}`` under
+  ``output_directory`` UNSORTED (this fork's M3 contract: the
+  reference's own reduce fixtures,
+  tests/testdata/test_worker_07/maptask00000-part00000, are unsorted —
+  sorting is reduce-side), and reply ``{"message_type": "finished",
+  "task_id", "output_paths", "worker_host", "worker_port"}``
+  (tests/test_worker_03.py:85-101).
 - **new_reduce_task** (reference: tests/test_worker_07.py:27-38 field
   set, :117-125 grouped output): merge-sort the input partition files
   lexicographically by whole ``(key, value)`` line (R1 — required:
   ``wc_reduce.sh`` is ``uniq -c``, which only groups sorted input, and
   the reference's fixture inputs are unsorted) into the reduce
   executable's stdin, streaming its stdout to ``part-{task_id:05d}``.
-  The sort is external: each input file is sorted alone in memory;
-  all but the last are spilled to run files in blocks of about
-  ``CHUNK_BYTES``, and the last stays in memory, so a reduce over one
-  input touches no temp file. The k runs are merged a block at a time
-  (``_merge_runs``), one write per block into the reducer's stdin.
+  The reducer is started first, so its start-up overlaps the read,
+  sort and spill of its input. The sort is external: each input file
+  is sorted alone in memory; all but the last are spilled to run files
+  in blocks of about ``CHUNK_BYTES``, and the last stays in memory, so
+  a reduce over one input touches no temp file. The k runs are merged
+  a block at a time (``_merge_runs``), one write per block into the
+  reducer's stdin.
   Peak memory is O(largest single input file + k blocks), never
   O(partition), which is what lets one reduce task take a whole skewed
   partition at 100 TB shard sizes without this shim becoming the weak
   link. A reducer that exits non-zero, or exits 0 while its input is
-  still unread, fails the task and leaves no output file.
+  still unread, fails the task and leaves no output file; so does an
+  input file that cannot be read, once the reducer has exited.
 - **shutdown**: stop the loops, close the sockets, exit 0
   (tests/test_worker_01.py catches SystemExit(0); here ``join()``
   returns and ``exit_code`` reads 0).
@@ -73,11 +78,17 @@ next file's first line. The map loop reads the mapper's stdout
 chunk, and writes each partition's share of a chunk with one call; a
 per-task memo maps keys to partitions and is cleared when it reaches
 ``MEMO_KEYS`` entries, so map memory is O(chunk + memo), not O(input)
-(tests/test_worker_11.py profiles the map stage). The reduce side
-reads, sorts, spills and merges bytes, in the memory bound above:
-each merge step takes from every run the lines up to the smallest
-last line among the runs' buffered blocks and sorts them in C, so
-the per-line work of the merge runs in ``list.sort`` and
+(tests/test_worker_11.py profiles the map stage). With one partition
+routing is the identity: each chunk's lines are written in one join,
+with no key, memo or per-line step. As the loop starts reading one
+file's mapper it starts the next file's, so at most two mappers run:
+the look-ahead one starts up while this one's output is routed, and
+blocks once its stdout pipe is full. A mapper that fails names its
+file, and a mapper still running then is killed and reaped. The
+reduce side reads, sorts, spills and merges bytes, in the memory bound
+above: each merge step takes from every run the lines up to the
+smallest last line among the runs' buffered blocks and sorts them in
+C, so the per-line work of the merge runs in ``list.sort`` and
 ``bytes.join``, not in Python.
 Sorting UTF-8 bytes orders lines as sorting their code points would,
 so on UTF-8 output every intermediate and ``part-%05d`` file is what a
@@ -107,9 +118,10 @@ import subprocess
 import tempfile
 import threading
 from bisect import bisect_right
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from contextlib import ExitStack, contextmanager, suppress
 from functools import partial
+from itertools import chain
 from pathlib import Path
 from typing import BinaryIO
 
@@ -427,9 +439,10 @@ class MRWorker:
             tag = self._attempt_tag()
             parts = [stack.enter_context(replaced(p, tag)) for p in part_paths]
             route: dict[bytes, int] = {}
-            for input_path in message["input_paths"]:
-                for lines in run_mapper(message["executable"], input_path):
-                    _write_routed(lines, parts, route)
+            for lines in run_mapper(
+                message["executable"], message["input_paths"]
+            ):
+                _write_routed(lines, parts, route)
         self._send_finished(
             task_id,
             [str(p) for p in part_paths],
@@ -445,14 +458,17 @@ class MRWorker:
             # alone in memory and all but the last are spilled, so peak
             # memory = the largest single input file plus k blocks, not
             # the partition. By the last file no other input is held,
-            # so its run is merged straight from memory.
-            runs = []
-            for p in paths[:-1]:
+            # so its run is merged straight from memory. The runs are
+            # made lazily, after run_reducer has started the reducer.
+            def spill(path: str) -> Iterator[list[bytes]]:
                 run = stack.enter_context(tempfile.TemporaryFile())
-                run.writelines(map(b"".join, _sorted_blocks(p)))
+                run.writelines(map(b"".join, _sorted_blocks(path)))
                 run.seek(0)
-                runs.append(iter(partial(run.readlines, CHUNK_BYTES), []))
-            runs += map(_sorted_blocks, paths[-1:])
+                return iter(partial(run.readlines, CHUNK_BYTES), [])
+
+            runs = chain(
+                map(spill, paths[:-1]), map(_sorted_blocks, paths[-1:])
+            )
             run_reducer(
                 message["executable"], runs, out_path, self._attempt_tag()
             )
@@ -478,42 +494,70 @@ def replaced(path: Path, tag: str) -> Iterator[BinaryIO]:
         tmp.unlink(missing_ok=True)
 
 
-def run_mapper(executable: str, input_path: str) -> Iterator[list[bytes]]:
-    """The map task body both data planes run: ``executable`` with the
-    bytes of the file at ``input_path`` on its stdin, its stdout
-    yielded as lists of complete lines without their newlines, about
-    ``CHUNK_BYTES`` at a time. A final line without its newline is
-    yielded too, so it cannot run into the next file's first line.
-    Raises RuntimeError when the mapper exits non-zero."""
-    with (
-        open(input_path, "rb") as infile,
-        subprocess.Popen(
+def run_mapper(
+    executable: str, input_paths: list[str]
+) -> Iterator[list[bytes]]:
+    """The map task body both data planes run: ``executable`` once per
+    file of ``input_paths``, in order, with the file's bytes on its
+    stdin, its stdout yielded as lists of complete lines without their
+    newlines, about ``CHUNK_BYTES`` at a time. A final line without its
+    newline is yielded too, so it cannot run into the next file's first
+    line. As it starts reading one file's mapper it starts the next
+    file's, so that mapper's start-up overlaps this one's output; the
+    look-ahead blocks once its stdout pipe is full. Raises RuntimeError
+    naming the file when a mapper exits non-zero; a mapper still
+    running when the generator fails or is closed is killed and
+    reaped."""
+    procs: list[subprocess.Popen] = []  # the one read, one started ahead
+    try:
+        for i, input_path in enumerate(input_paths):
+            if not procs:  # not started ahead: the first file
+                procs.append(_start_mapper(executable, input_path))
+            if i + 1 < len(input_paths):
+                procs.append(_start_mapper(executable, input_paths[i + 1]))
+            proc = procs[0]
+            tail = b""
+            while chunk := proc.stdout.read(CHUNK_BYTES):
+                lines = (tail + chunk).split(b"\n")
+                tail = lines.pop()
+                yield lines
+            if tail:
+                yield [tail]
+            proc.stdout.close()
+            if proc.wait():
+                raise RuntimeError(
+                    f"mapper exited {proc.returncode} on {input_path}"
+                )
+            procs.pop(0)
+    finally:
+        for proc in procs:
+            proc.kill()
+            proc.stdout.close()
+            proc.wait()
+
+
+def _start_mapper(executable: str, input_path: str) -> subprocess.Popen:
+    """``executable`` reading the file at ``input_path``, its stdout a
+    pipe."""
+    with open(input_path, "rb") as infile:
+        return subprocess.Popen(
             [executable], stdin=infile, stdout=subprocess.PIPE
-        ) as proc,
-    ):
-        assert proc.stdout is not None
-        tail = b""
-        while chunk := proc.stdout.read(CHUNK_BYTES):
-            lines = (tail + chunk).split(b"\n")
-            tail = lines.pop()
-            yield lines
-        if tail:
-            yield [tail]
-    if proc.returncode:
-        raise RuntimeError(f"mapper exited {proc.returncode} on {input_path}")
+        )
 
 
 def run_reducer(
     executable: str,
-    runs: list[Iterator[list[bytes]]],
+    runs: Iterable[Iterator[list[bytes]]],
     out_path: Path,
     tag: str,
 ) -> None:
     """The reduce task body both data planes run: ``_merge_runs`` of
     the sorted ``runs`` into ``executable``'s stdin, its stdout into
-    ``out_path`` through ``replaced(out_path, tag)``. A reducer that
-    exits non-zero, or exits 0 while its input is still unread, raises
-    RuntimeError and leaves no output file."""
+    ``out_path`` through ``replaced(out_path, tag)``. The reducer is
+    started first, then ``runs`` is taken, so a lazy ``runs`` sorts and
+    spills while the reducer starts up. A reducer that exits non-zero,
+    or exits 0 while its input is still unread, raises RuntimeError and
+    leaves no output file; so does an error making the runs."""
     with (
         replaced(out_path, tag) as outfile,
         subprocess.Popen(
@@ -552,7 +596,7 @@ def _sorted_blocks(path: str) -> Iterator[list[bytes]]:
     return (lines[i : i + step] for i in range(0, len(lines), step))
 
 
-def _merge_runs(runs: list[Iterator[list[bytes]]], write) -> None:
+def _merge_runs(runs: Iterable[Iterator[list[bytes]]], write) -> None:
     """Write the lines of ``runs``, each an iterator of non-empty sorted
     blocks, in sorted order, one ``write`` per step.
 
@@ -586,7 +630,14 @@ def _write_routed(
     """Append each line, with its newline, to the partition file its
     key (the bytes before the first tab) md5-routes to: one write per
     partition. ``route`` memoizes key -> partition for the task and is
-    cleared at ``MEMO_KEYS`` entries."""
+    cleared at ``MEMO_KEYS`` entries. With one partition every key
+    routes to it, so the lines are written as they are, in one join
+    (which takes ``lines`` over)."""
+    if len(parts) == 1:
+        if lines:
+            lines.append(b"")  # so the join ends with a newline
+            parts[0].write(b"\n".join(lines))
+        return
     blocks: list[list[bytes]] = [[] for _ in parts]
     for line in lines:
         key = line.partition(b"\t")[0]

@@ -58,6 +58,23 @@ def test_md5_partition_matches_reference_routing():
     assert [md5_partition(k, 2) for k in ("world", "hadoop", "goodbye")] == [1, 1, 1]
 
 
+def test_md5_partition_equals_hexdigest_formula():
+    """The routing integer is the reference's ``int(hexdigest, 16)`` on
+    str keys (hashed as UTF-8), UTF-8 bytes and bytes that are not
+    UTF-8, for partition counts up to past 2**64."""
+    import hashlib
+
+    keys = ["", "hello", "aéb", "日本", "\t"] + [f"k{i}" for i in range(300)]
+    byte_keys = [k.encode() for k in keys] + [
+        b"\xff\xfe", b"caf\xe9", b"\x00", b"\x80" * 17, bytes(range(256)),
+    ]
+    for key in keys + byte_keys:
+        raw = key.encode() if isinstance(key, str) else key
+        digest = int(hashlib.md5(raw).hexdigest(), 16)
+        for n in (1, 2, 3, 5, 7, 1024, 2**64 + 13):
+            assert md5_partition(key, n) == digest % n, (key, n)
+
+
 def test_wordcount_external_executables(engine, tmp_path):
     """wc_map.sh/wc_reduce.sh through the task kernel, 2x2 job; union of parts
     must equal the golden multiset exactly."""

@@ -1009,6 +1009,197 @@ def test_records_split_on_newline_only(fake_manager, worker, tmp_path):
         assert (out / name).read_bytes() == golden[name]
 
 
+def _children() -> set[int]:
+    """Pids of this process's children, over all of its threads."""
+    return {
+        int(pid)
+        for f in Path(f"/proc/{os.getpid()}/task").glob("*/children")
+        for pid in f.read_text().split()
+    }
+
+
+def _script(tmp_path: Path, name: str, body: str) -> Path:
+    exe = tmp_path / name
+    exe.write_text("#!/bin/sh\n" + body)
+    exe.chmod(0o755)
+    return exe
+
+
+# Waits up to 3 s for the file "$0.go", else exits 1.
+_WAIT_FOR_GO = """i=0
+while [ ! -e "$0.go" ]; do
+    i=$((i + 1)); [ $i -gt 300 ] && exit 1; sleep 0.01
+done
+"""
+
+
+def test_map_task_starts_next_mapper_while_reading(tmp_path):
+    """The map task starts file 2's mapper while it reads file 1's: the
+    first mapper waits for a marker that only the second one makes, and
+    copies its input only once it has seen it. A task that runs its
+    mappers one after the other fails with ``mapper exited 1``."""
+    exe = _script(tmp_path, "map.sh", (
+        'IFS= read -r line\n'
+        'if [ "$line" = wait ]; then\n' + _WAIT_FOR_GO
+        + 'else\n    touch "$0.go"\nfi\n'
+        'printf "%s\\n" "$line"\nexec cat\n'
+    ))
+    first, second = tmp_path / "in0", tmp_path / "in1"
+    first.write_bytes(b"wait\nx\n")
+    second.write_bytes(b"go\ny\n")
+    out = tmp_path / "inter"
+    out.mkdir()
+    QuietWorker(port=0)._run_map_task({
+        "task_id": 0,
+        "executable": str(exe),
+        "input_paths": [str(first), str(second)],
+        "output_directory": str(out),
+        "num_partitions": 1,
+    })
+    assert (out / "maptask00000-part00000").read_bytes() == b"wait\nx\ngo\ny\n"
+
+
+def test_map_failure_kills_look_ahead_mapper(fake_manager, worker, tmp_path):
+    """The first file's mapper exits 3 while the second file's, started
+    ahead, still runs: the task reports the first file's exit, leaves
+    no output, and the look-ahead process is killed and reaped."""
+    exe = _script(tmp_path, "map.sh", (
+        'IFS= read -r line\n'
+        'if [ "$line" = fail ]; then\n' + _WAIT_FOR_GO + '    exit 3\nfi\n'
+        'touch "$0.go"\nexec sleep 30\n'
+    ))
+    first, second = tmp_path / "in0", tmp_path / "in1"
+    first.write_bytes(b"fail\n")
+    second.write_bytes(b"run\n")
+    out = tmp_path / "inter"
+    out.mkdir()
+    fake_manager.wait_for(lambda ms: len(_non_heartbeat(ms)) >= 1)
+    children = _children()
+    t0 = time.monotonic()
+    send_json("localhost", worker.port, {
+        "message_type": "new_map_task",
+        "task_id": 0,
+        "executable": str(exe),
+        "input_paths": [str(first), str(second)],
+        "output_directory": str(out),
+        "num_partitions": 2,
+    })
+    fake_manager.wait_for(lambda ms: _finished(fake_manager))
+    (ev,) = _finished(fake_manager)
+    assert ev["error"] == f"RuntimeError: mapper exited 3 on {first}"
+    assert time.monotonic() - t0 < 10  # the sleeping mapper was killed
+    assert list(out.iterdir()) == []
+    assert _children() == children
+
+
+def test_closed_map_kills_running_mappers(tmp_path):
+    """A map closed after its first chunk kills and reaps both the
+    mapper it reads and the one started ahead."""
+    exe = _script(tmp_path, "map.sh", "cat\nexec sleep 30 >&-\n")
+    paths = []
+    for i in range(2):
+        path = tmp_path / f"in{i}"
+        path.write_bytes(b"x\n")
+        paths.append(str(path))
+    children = _children()
+    lines = worker_module.run_mapper(str(exe), paths)
+    assert next(lines) == [b"x"]
+    assert len(_children() - children) == 2
+    lines.close()
+    assert _children() == children
+
+
+def test_reducer_starts_before_its_input_is_sorted(tmp_path, monkeypatch):
+    """The reduce task starts the reducer before it reads and sorts any
+    input file, so its start-up overlaps that work."""
+    exe, marker = _marked_cat(tmp_path)
+    real = worker_module._sorted_blocks
+    calls = []
+
+    def sorted_blocks(path):
+        if not calls:
+            deadline = time.monotonic() + 3
+            while not marker.exists() and time.monotonic() < deadline:
+                time.sleep(0.01)
+            assert marker.exists(), "input sorted before the reducer ran"
+        calls.append(path)
+        return real(path)
+
+    monkeypatch.setattr(worker_module, "_sorted_blocks", sorted_blocks)
+    paths = []
+    for i, data in enumerate([b"b\t1\na\t1\n", b"c\t1\na\t1"]):
+        path = tmp_path / f"maptask{i:05d}-part00000"
+        path.write_bytes(data)
+        paths.append(str(path))
+    out = tmp_path / "out"
+    out.mkdir()
+    QuietWorker(port=0)._run_reduce_task({
+        "task_id": 0,
+        "executable": str(exe),
+        "input_paths": paths,
+        "output_directory": str(out),
+    })
+    assert calls == paths
+    assert (out / "part-00000").read_bytes() == b"a\t1\na\t1\nb\t1\nc\t1\n"
+
+
+@pytest.mark.parametrize("missing", [0, 1])
+def test_missing_reduce_input_fails_without_output(tmp_path, missing):
+    """An input file that cannot be read fails the reduce task, whether
+    it is spilled (first) or merged from memory (last), after the
+    reducer has started: no ``part-*`` or temp file is left, and the
+    reducer has exited and been reaped."""
+    paths = [tmp_path / f"maptask{i:05d}-part00000" for i in (0, 1)]
+    paths[1 - missing].write_bytes(b"a\t1\n")
+    out = tmp_path / "out"
+    out.mkdir()
+    children = _children()
+    with pytest.raises(FileNotFoundError):
+        QuietWorker(port=0)._run_reduce_task({
+            "task_id": 0,
+            "executable": str(MR_FIXTURES / "exec/wc_reduce.sh"),
+            "input_paths": [str(p) for p in paths],
+            "output_directory": str(out),
+        })
+    assert list(out.iterdir()) == []
+    assert _children() == children
+
+
+def test_one_partition_map_writes_mapper_output(tmp_path):
+    """With one partition the intermediate is the mappers' stdout in
+    file order, byte for byte, with a newline after the first file's
+    unterminated, non-UTF-8 last line. The second file spans many
+    chunks."""
+    texts = [
+        b"a\tb\xff\r\n\nc\xe9 d\x0c",
+        b"".join(b"w%d\t\xfe%d\n" % (i % 97, i) for i in range(20_000)),
+    ]
+    paths = []
+    for i, text in enumerate(texts):
+        path = tmp_path / f"in{i}"
+        path.write_bytes(text)
+        paths.append(str(path))
+    cat = shutil.which("cat")
+    stdouts = []
+    for path in paths:
+        with open(path, "rb") as f:
+            stdouts.append(subprocess.run(
+                [cat], stdin=f, stdout=subprocess.PIPE, check=True
+            ).stdout)
+    out = tmp_path / "inter"
+    out.mkdir()
+    QuietWorker(port=0)._run_map_task({
+        "task_id": 0,
+        "executable": cat,
+        "input_paths": paths,
+        "output_directory": str(out),
+        "num_partitions": 1,
+    })
+    assert (out / "maptask00000-part00000").read_bytes() == (
+        stdouts[0] + b"\n" + stdouts[1]
+    )
+
+
 @needs_reference
 def test_worker_sigkilled_mid_task_is_reassigned(tmp_path):
     """C7, the hard case: a worker dies AFTER receiving a map task but
@@ -1382,9 +1573,7 @@ def test_job_root_cleanup_never_reaps_a_tenant_fleet(tmp_path):
 def _marked_cat(tmp_path: Path) -> tuple[Path, Path]:
     """An executable that leaves ``<itself>.ran`` behind, then runs
     ``cat``; returns (executable, marker)."""
-    exe = tmp_path / "marked_cat.sh"
-    exe.write_text('#!/bin/sh\ntouch "$0.ran"\nexec cat\n')
-    exe.chmod(0o755)
+    exe = _script(tmp_path, "marked_cat.sh", 'touch "$0.ran"\nexec cat\n')
     return exe, tmp_path / "marked_cat.sh.ran"
 
 
