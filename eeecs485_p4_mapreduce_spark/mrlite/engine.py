@@ -59,17 +59,16 @@ class MRJobResult:
     output_paths: list[str] = field(default_factory=list)
 
 
-def _map_lines(mapper: str | MapperFn, paths: list[str]) -> Iterator[bytes]:
-    """The shuffle records of one map task's input files: each line the
-    mapper writes, with its newline."""
+def _map_lines(mapper: str | MapperFn, path: str) -> Iterator[bytes]:
+    """The shuffle records of one input file: each line the mapper
+    writes, with its newline."""
     if callable(mapper):
-        for path in paths:
-            with open(path, "rb") as f:
-                for line in f:
-                    for key, value in mapper(line.decode().removesuffix("\n")):
-                        yield f"{key}\t{value}\n".encode()
+        with open(path, "rb") as f:
+            for line in f:
+                for key, value in mapper(line.decode().removesuffix("\n")):
+                    yield f"{key}\t{value}\n".encode()
     else:
-        for lines in run_mapper(mapper, paths):
+        for lines in run_mapper(mapper, path):
             for line in lines:
                 yield line + b"\n"
 
@@ -140,7 +139,7 @@ class MREngine:
         output_paths = (
             self.spark.sparkContext.parallelize(groups, len(groups))
             .flatMap(lambda group: (
-                (line, None) for line in _map_lines(mapper, group)
+                (line, None) for path in group for line in _map_lines(mapper, path)
             ))
             .repartitionAndSortWithinPartitions(
                 numPartitions=num_reducers,

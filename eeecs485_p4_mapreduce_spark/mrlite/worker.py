@@ -25,17 +25,15 @@ starter stubs, so the tests ARE the spec):
 - **new_map_task** (reference: tests/test_worker_03.py:24-34, field
   set; tests/test_worker_08.py:159-175, one output file per partition
   whether or not rows landed in it): run the executable once per input
-  path, in order, with that file as stdin (the next file's mapper
-  starts while this one's output is read), route each stdout line to
-  partition ``md5(key) % num_partitions`` (key = bytes before the
-  first tab — mrlite/partitioner.py, pinned by test_worker_08's
-  observed layout), write ``maptask{task_id:05d}-part{p:05d}`` under
-  ``output_directory`` UNSORTED (this fork's M3 contract: the
-  reference's own reduce fixtures,
-  tests/testdata/test_worker_07/maptask00000-part00000, are unsorted —
-  sorting is reduce-side), and reply ``{"message_type": "finished",
-  "task_id", "output_paths", "worker_host", "worker_port"}``
-  (tests/test_worker_03.py:85-101).
+  path with that file as stdin, route each stdout line to partition
+  ``md5(key) % num_partitions`` (key = bytes before the first tab —
+  mrlite/partitioner.py, pinned by test_worker_08's observed layout),
+  write ``maptask{task_id:05d}-part{p:05d}`` under ``output_directory``
+  UNSORTED (this fork's M3 contract: the reference's own reduce
+  fixtures, tests/testdata/test_worker_07/maptask00000-part00000, are
+  unsorted — sorting is reduce-side), and reply ``{"message_type":
+  "finished", "task_id", "output_paths", "worker_host",
+  "worker_port"}`` (tests/test_worker_03.py:85-101).
 - **new_reduce_task** (reference: tests/test_worker_07.py:27-38 field
   set, :117-125 grouped output): merge-sort the input partition files
   lexicographically by whole ``(key, value)`` line (R1 — required:
@@ -54,7 +52,7 @@ starter stubs, so the tests ARE the spec):
   partition at 100 TB shard sizes without this shim becoming the weak
   link. A reducer that exits non-zero, or exits 0 while its input is
   still unread, fails the task and leaves no output file; so does an
-  input file that cannot be read, once the reducer has exited.
+  input file that cannot be read, and the reducer is then killed.
 - **shutdown**: stop the loops, close the sockets, exit 0
   (tests/test_worker_01.py catches SystemExit(0); here ``join()``
   returns and ``exit_code`` reads 0).
@@ -80,16 +78,11 @@ per-task memo maps keys to partitions and is cleared when it reaches
 ``MEMO_KEYS`` entries, so map memory is O(chunk + memo), not O(input)
 (tests/test_worker_11.py profiles the map stage). With one partition
 routing is the identity: each chunk's lines are written in one join,
-with no key, memo or per-line step. As the loop starts reading one
-file's mapper it starts the next file's, so at most two mappers run:
-the look-ahead one starts up while this one's output is routed, and
-blocks once its stdout pipe is full. A mapper that fails names its
-file, and a mapper still running then is killed and reaped. The
-reduce side reads, sorts, spills and merges bytes, in the memory bound
-above: each merge step takes from every run the lines up to the
-smallest last line among the runs' buffered blocks and sorts them in
-C, so the per-line work of the merge runs in ``list.sort`` and
-``bytes.join``, not in Python.
+with no key, memo or per-line step. The reduce side reads, sorts,
+spills and merges bytes, in the memory bound above: each merge step
+takes from every run the lines up to the smallest last line among the
+runs' buffered blocks and sorts them in C, so the per-line work of the
+merge runs in ``list.sort`` and ``bytes.join``, not in Python.
 Sorting UTF-8 bytes orders lines as sorting their code points would,
 so on UTF-8 output every intermediate and ``part-%05d`` file is what a
 str pipeline writes. Output that is not UTF-8 passes through
@@ -439,10 +432,9 @@ class MRWorker:
             tag = self._attempt_tag()
             parts = [stack.enter_context(replaced(p, tag)) for p in part_paths]
             route: dict[bytes, int] = {}
-            for lines in run_mapper(
-                message["executable"], message["input_paths"]
-            ):
-                _write_routed(lines, parts, route)
+            for input_path in message["input_paths"]:
+                for lines in run_mapper(message["executable"], input_path):
+                    _write_routed(lines, parts, route)
         self._send_finished(
             task_id,
             [str(p) for p in part_paths],
@@ -494,55 +486,29 @@ def replaced(path: Path, tag: str) -> Iterator[BinaryIO]:
         tmp.unlink(missing_ok=True)
 
 
-def run_mapper(
-    executable: str, input_paths: list[str]
-) -> Iterator[list[bytes]]:
-    """The map task body both data planes run: ``executable`` once per
-    file of ``input_paths``, in order, with the file's bytes on its
-    stdin, its stdout yielded as lists of complete lines without their
-    newlines, about ``CHUNK_BYTES`` at a time. A final line without its
-    newline is yielded too, so it cannot run into the next file's first
-    line. As it starts reading one file's mapper it starts the next
-    file's, so that mapper's start-up overlaps this one's output; the
-    look-ahead blocks once its stdout pipe is full. Raises RuntimeError
-    naming the file when a mapper exits non-zero; a mapper still
-    running when the generator fails or is closed is killed and
-    reaped."""
-    procs: list[subprocess.Popen] = []  # the one read, one started ahead
-    try:
-        for i, input_path in enumerate(input_paths):
-            if not procs:  # not started ahead: the first file
-                procs.append(_start_mapper(executable, input_path))
-            if i + 1 < len(input_paths):
-                procs.append(_start_mapper(executable, input_paths[i + 1]))
-            proc = procs[0]
-            tail = b""
-            while chunk := proc.stdout.read(CHUNK_BYTES):
-                lines = (tail + chunk).split(b"\n")
-                tail = lines.pop()
-                yield lines
-            if tail:
-                yield [tail]
-            proc.stdout.close()
-            if proc.wait():
-                raise RuntimeError(
-                    f"mapper exited {proc.returncode} on {input_path}"
-                )
-            procs.pop(0)
-    finally:
-        for proc in procs:
-            proc.kill()
-            proc.stdout.close()
-            proc.wait()
-
-
-def _start_mapper(executable: str, input_path: str) -> subprocess.Popen:
-    """``executable`` reading the file at ``input_path``, its stdout a
-    pipe."""
-    with open(input_path, "rb") as infile:
-        return subprocess.Popen(
+def run_mapper(executable: str, input_path: str) -> Iterator[list[bytes]]:
+    """The map task body both data planes run: ``executable`` with the
+    bytes of the file at ``input_path`` on its stdin, its stdout
+    yielded as lists of complete lines without their newlines, about
+    ``CHUNK_BYTES`` at a time. A final line without its newline is
+    yielded too, so it cannot run into the next file's first line.
+    Raises RuntimeError when the mapper exits non-zero."""
+    with (
+        open(input_path, "rb") as infile,
+        subprocess.Popen(
             [executable], stdin=infile, stdout=subprocess.PIPE
-        )
+        ) as proc,
+    ):
+        assert proc.stdout is not None
+        tail = b""
+        while chunk := proc.stdout.read(CHUNK_BYTES):
+            lines = (tail + chunk).split(b"\n")
+            tail = lines.pop()
+            yield lines
+        if tail:
+            yield [tail]
+    if proc.returncode:
+        raise RuntimeError(f"mapper exited {proc.returncode} on {input_path}")
 
 
 def run_reducer(
@@ -557,7 +523,8 @@ def run_reducer(
     started first, then ``runs`` is taken, so a lazy ``runs`` sorts and
     spills while the reducer starts up. A reducer that exits non-zero,
     or exits 0 while its input is still unread, raises RuntimeError and
-    leaves no output file; so does an error making the runs."""
+    leaves no output file; so does an error making the runs, which
+    kills the reducer."""
     with (
         replaced(out_path, tag) as outfile,
         subprocess.Popen(
@@ -577,6 +544,14 @@ def run_reducer(
                 raise RuntimeError(
                     "reducer exited 0 before reading all its input"
                 ) from None
+        except BaseException:
+            # Anything else, such as an input that cannot be read,
+            # voids the reducer's output: it is stopped, not left to
+            # run on what it was given.
+            proc.kill()
+            with suppress(BrokenPipeError):
+                proc.stdin.close()
+            raise
         if proc.wait():
             raise RuntimeError(f"reducer exited {proc.returncode}")
 

@@ -24,6 +24,7 @@ import logging
 import os
 import random
 import shutil
+import signal
 import socket
 import subprocess
 import sys
@@ -1009,13 +1010,19 @@ def test_records_split_on_newline_only(fake_manager, worker, tmp_path):
         assert (out / name).read_bytes() == golden[name]
 
 
-def _children() -> set[int]:
-    """Pids of this process's children, over all of its threads."""
-    return {
-        int(pid)
-        for f in Path(f"/proc/{os.getpid()}/task").glob("*/children")
-        for pid in f.read_text().split()
-    }
+@pytest.fixture()
+def spawned(monkeypatch) -> list[subprocess.Popen]:
+    """The processes started through ``subprocess.Popen`` during the
+    test, in start order."""
+    procs: list[subprocess.Popen] = []
+
+    class Recorded(subprocess.Popen):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            procs.append(self)
+
+    monkeypatch.setattr(subprocess, "Popen", Recorded)
+    return procs
 
 
 def _script(tmp_path: Path, name: str, body: str) -> Path:
@@ -1023,90 +1030,6 @@ def _script(tmp_path: Path, name: str, body: str) -> Path:
     exe.write_text("#!/bin/sh\n" + body)
     exe.chmod(0o755)
     return exe
-
-
-# Waits up to 3 s for the file "$0.go", else exits 1.
-_WAIT_FOR_GO = """i=0
-while [ ! -e "$0.go" ]; do
-    i=$((i + 1)); [ $i -gt 300 ] && exit 1; sleep 0.01
-done
-"""
-
-
-def test_map_task_starts_next_mapper_while_reading(tmp_path):
-    """The map task starts file 2's mapper while it reads file 1's: the
-    first mapper waits for a marker that only the second one makes, and
-    copies its input only once it has seen it. A task that runs its
-    mappers one after the other fails with ``mapper exited 1``."""
-    exe = _script(tmp_path, "map.sh", (
-        'IFS= read -r line\n'
-        'if [ "$line" = wait ]; then\n' + _WAIT_FOR_GO
-        + 'else\n    touch "$0.go"\nfi\n'
-        'printf "%s\\n" "$line"\nexec cat\n'
-    ))
-    first, second = tmp_path / "in0", tmp_path / "in1"
-    first.write_bytes(b"wait\nx\n")
-    second.write_bytes(b"go\ny\n")
-    out = tmp_path / "inter"
-    out.mkdir()
-    QuietWorker(port=0)._run_map_task({
-        "task_id": 0,
-        "executable": str(exe),
-        "input_paths": [str(first), str(second)],
-        "output_directory": str(out),
-        "num_partitions": 1,
-    })
-    assert (out / "maptask00000-part00000").read_bytes() == b"wait\nx\ngo\ny\n"
-
-
-def test_map_failure_kills_look_ahead_mapper(fake_manager, worker, tmp_path):
-    """The first file's mapper exits 3 while the second file's, started
-    ahead, still runs: the task reports the first file's exit, leaves
-    no output, and the look-ahead process is killed and reaped."""
-    exe = _script(tmp_path, "map.sh", (
-        'IFS= read -r line\n'
-        'if [ "$line" = fail ]; then\n' + _WAIT_FOR_GO + '    exit 3\nfi\n'
-        'touch "$0.go"\nexec sleep 30\n'
-    ))
-    first, second = tmp_path / "in0", tmp_path / "in1"
-    first.write_bytes(b"fail\n")
-    second.write_bytes(b"run\n")
-    out = tmp_path / "inter"
-    out.mkdir()
-    fake_manager.wait_for(lambda ms: len(_non_heartbeat(ms)) >= 1)
-    children = _children()
-    t0 = time.monotonic()
-    send_json("localhost", worker.port, {
-        "message_type": "new_map_task",
-        "task_id": 0,
-        "executable": str(exe),
-        "input_paths": [str(first), str(second)],
-        "output_directory": str(out),
-        "num_partitions": 2,
-    })
-    fake_manager.wait_for(lambda ms: _finished(fake_manager))
-    (ev,) = _finished(fake_manager)
-    assert ev["error"] == f"RuntimeError: mapper exited 3 on {first}"
-    assert time.monotonic() - t0 < 10  # the sleeping mapper was killed
-    assert list(out.iterdir()) == []
-    assert _children() == children
-
-
-def test_closed_map_kills_running_mappers(tmp_path):
-    """A map closed after its first chunk kills and reaps both the
-    mapper it reads and the one started ahead."""
-    exe = _script(tmp_path, "map.sh", "cat\nexec sleep 30 >&-\n")
-    paths = []
-    for i in range(2):
-        path = tmp_path / f"in{i}"
-        path.write_bytes(b"x\n")
-        paths.append(str(path))
-    children = _children()
-    lines = worker_module.run_mapper(str(exe), paths)
-    assert next(lines) == [b"x"]
-    assert len(_children() - children) == 2
-    lines.close()
-    assert _children() == children
 
 
 def test_reducer_starts_before_its_input_is_sorted(tmp_path, monkeypatch):
@@ -1144,25 +1067,26 @@ def test_reducer_starts_before_its_input_is_sorted(tmp_path, monkeypatch):
 
 
 @pytest.mark.parametrize("missing", [0, 1])
-def test_missing_reduce_input_fails_without_output(tmp_path, missing):
+def test_missing_reduce_input_fails_without_output(tmp_path, spawned, missing):
     """An input file that cannot be read fails the reduce task, whether
-    it is spilled (first) or merged from memory (last), after the
-    reducer has started: no ``part-*`` or temp file is left, and the
-    reducer has exited and been reaped."""
+    it is spilled (first) or merged from memory (last): no ``part-*``
+    or temp file is left, and the reducer, started first, is killed
+    before it sees the end of its input, and reaped."""
+    exe = _script(tmp_path, "reduce.sh", 'cat >/dev/null\ntouch "$0.done"\n')
     paths = [tmp_path / f"maptask{i:05d}-part00000" for i in (0, 1)]
     paths[1 - missing].write_bytes(b"a\t1\n")
     out = tmp_path / "out"
     out.mkdir()
-    children = _children()
     with pytest.raises(FileNotFoundError):
         QuietWorker(port=0)._run_reduce_task({
             "task_id": 0,
-            "executable": str(MR_FIXTURES / "exec/wc_reduce.sh"),
+            "executable": str(exe),
             "input_paths": [str(p) for p in paths],
             "output_directory": str(out),
         })
     assert list(out.iterdir()) == []
-    assert _children() == children
+    assert not (tmp_path / "reduce.sh.done").exists()
+    assert [proc.returncode for proc in spawned] == [-signal.SIGKILL]
 
 
 def test_one_partition_map_writes_mapper_output(tmp_path):
