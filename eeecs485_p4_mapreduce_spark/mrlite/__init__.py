@@ -26,7 +26,8 @@ compatibility:
   out to registered workers (C6);
 - ``MRWorker`` speaks the worker side of the same protocol — register,
   heartbeat, ``new_map_task`` / ``new_reduce_task`` execution with md5
-  routing into unsorted partition files (the reduce task sorts),
+  routing into partition files of counted, sorted runs (the reduce
+  task still sorts; on such runs its sort is a merge),
   ``finished`` replies — so tooling written against the reference's
   worker wire format runs unchanged.
 

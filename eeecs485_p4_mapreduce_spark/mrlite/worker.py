@@ -29,11 +29,13 @@ starter stubs, so the tests ARE the spec):
   ``md5(key) % num_partitions`` (key = bytes before the first tab —
   mrlite/partitioner.py, pinned by test_worker_08's observed layout),
   write ``maptask{task_id:05d}-part{p:05d}`` under ``output_directory``
-  UNSORTED (this fork's M3 contract: the reference's own reduce
-  fixtures, tests/testdata/test_worker_07/maptask00000-part00000, are
-  unsorted — sorting is reduce-side), and reply ``{"message_type":
+  as counted, sorted runs (below), and reply ``{"message_type":
   "finished", "task_id", "output_paths", "worker_host",
-  "worker_port"}`` (tests/test_worker_03.py:85-101).
+  "worker_port"}`` (tests/test_worker_03.py:85-101). Map output order
+  is unspecified (M3): the reference's own reduce fixtures,
+  tests/testdata/test_worker_07/maptask00000-part00000, are unsorted,
+  so the reduce task sorts whatever it is given; sorted runs only
+  make that sort cheap.
 - **new_reduce_task** (reference: tests/test_worker_07.py:27-38 field
   set, :117-125 grouped output): merge-sort the input partition files
   lexicographically by whole ``(key, value)`` line (R1 — required:
@@ -73,16 +75,24 @@ nowhere else: carriage returns, form feeds and the other separators
 final line without its newline gets one, so it cannot run into the
 next file's first line. The map loop reads the mapper's stdout
 ``CHUNK_BYTES`` at a time, carries the partial last line into the next
-chunk, and writes each partition's share of a chunk with one call; a
-per-task memo maps keys to partitions and is cleared when it reaches
-``MEMO_KEYS`` entries, so map memory is O(chunk + memo), not O(input)
-(tests/test_worker_11.py profiles the map stage). With one partition
-routing is the identity: each chunk's lines are written in one join,
-with no key, memo or per-line step. The reduce side reads, sorts,
-spills and merges bytes, in the memory bound above: each merge step
-takes from every run the lines up to the smallest last line among the
-runs' buffered blocks and sorts them in C, so the per-line work of the
-merge runs in ``list.sort`` and ``bytes.join``, not in Python.
+chunk, and counts the chunk's lines in a ``Counter``. When it holds
+``MEMO_KEYS`` distinct lines, and at task end, they are written as one
+sorted run per partition: the distinct lines in the reduce's byte
+order, each repeated by its count and md5-routed once, in writes of
+about ``CHUNK_BYTES``. Each distinct line is thus sorted and routed
+once, and the reduce sort of a partition's runs is a merge that
+timsort finds. Counting pays only when lines repeat: once the lines
+counted hold fewer than two copies per distinct line, the rest of the
+task's output is routed chunk by chunk in mapper order, one write per
+partition, and with one partition each chunk is written in one join.
+A per-task memo maps keys to partitions and is cleared when it
+reaches ``MEMO_KEYS`` entries, so map memory is O(chunk + counter +
+memo), not O(input) (tests/test_worker_11.py profiles the map stage).
+The reduce side reads, sorts, spills and merges bytes, in the memory
+bound above: each merge step takes from every run the lines up to the
+smallest last line among the runs' buffered blocks and sorts them in
+C, so the per-line work of the merge runs in ``list.sort`` and
+``bytes.join``, not in Python.
 Sorting UTF-8 bytes orders lines as sorting their code points would,
 so on UTF-8 output every intermediate and ``part-%05d`` file is what a
 str pipeline writes. Output that is not UTF-8 passes through
@@ -111,10 +121,12 @@ import subprocess
 import tempfile
 import threading
 from bisect import bisect_right
+from collections import Counter
 from collections.abc import Iterable, Iterator
 from contextlib import ExitStack, contextmanager, suppress
 from functools import partial
-from itertools import chain
+from itertools import chain, repeat
+from operator import add, itemgetter
 from pathlib import Path
 from typing import BinaryIO
 
@@ -431,10 +443,13 @@ class MRWorker:
             # when empty (tests/test_worker_08.py:159-162).
             tag = self._attempt_tag()
             parts = [stack.enter_context(replaced(p, tag)) for p in part_paths]
-            route: dict[bytes, int] = {}
-            for input_path in message["input_paths"]:
-                for lines in run_mapper(message["executable"], input_path):
-                    _write_routed(lines, parts, route)
+            _write_map_output(
+                chain.from_iterable(
+                    run_mapper(message["executable"], path)
+                    for path in message["input_paths"]
+                ),
+                parts,
+            )
         self._send_finished(
             task_id,
             [str(p) for p in part_paths],
@@ -599,30 +614,98 @@ def _merge_runs(runs: Iterable[Iterator[list[bytes]]], write) -> None:
         write(b"".join(taken))
 
 
+def _write_map_output(chunks: Iterator[list[bytes]], parts: list) -> None:
+    """Write a map task's output ``chunks`` (lists of lines without
+    their newlines) to its partition files as counted, sorted runs.
+
+    The lines are counted until ``MEMO_KEYS`` distinct ones are held;
+    then, and after the last chunk, ``_write_runs`` writes them as one
+    sorted run per partition and counting starts afresh. Counting pays
+    only when lines repeat: once the lines counted hold fewer than two
+    copies per distinct line, they are written as a run and the rest of
+    the output goes through ``_write_routed`` chunk by chunk, in mapper
+    order."""
+    route: dict[bytes, int] = {}
+    counts: Counter[bytes] = Counter()
+    n_lines = 0
+    for lines in chunks:
+        counts.update(lines)
+        n_lines += len(lines)
+        repeated = n_lines >= 2 * len(counts)
+        if len(counts) >= MEMO_KEYS or not repeated:
+            _write_runs(counts, parts, route)
+            counts.clear()
+            n_lines = 0
+            if not repeated:
+                for lines in chunks:
+                    _write_routed(lines, parts, route)
+    _write_runs(counts, parts, route)
+
+
+def _write_runs(
+    counts: Counter[bytes], parts: list, route: dict[bytes, int]
+) -> None:
+    """Write the lines ``counts`` holds, each repeated by its count, as
+    one sorted run per partition file: in the reduce's order (whole
+    line plus newline, so ``a\\tb`` sorts before ``a``), in writes of
+    about ``CHUNK_BYTES``, a hot line's copies split across writes.
+    Each distinct line is routed once, in first-seen order, so the
+    ``route`` memo keeps the keys the task met first."""
+    for part, lines in zip(parts, _route(list(counts), len(parts), route)):
+        ended = map(add, lines, repeat(b"\n"))
+        run = sorted(
+            zip(ended, map(counts.__getitem__, lines)),
+            key=itemgetter(0),  # the lines are distinct
+        )
+        block: list[bytes] = []
+        size = 0
+        for line, count in run:
+            n_bytes = len(line) * count
+            if size + n_bytes > CHUNK_BYTES:
+                part.write(b"".join(block))
+                block, size = [], 0
+                if n_bytes > CHUNK_BYTES:  # a hot line: split its copies
+                    k = CHUNK_BYTES // len(line) or 1
+                    copies = line * k
+                    for _ in range(count // k):
+                        part.write(copies)
+                    count %= k
+                    n_bytes = len(line) * count
+            block.append(line * count)
+            size += n_bytes
+        part.write(b"".join(block))
+
+
 def _write_routed(
     lines: list[bytes], parts: list, route: dict[bytes, int]
 ) -> None:
-    """Append each line, with its newline, to the partition file its
-    key (the bytes before the first tab) md5-routes to: one write per
-    partition. ``route`` memoizes key -> partition for the task and is
-    cleared at ``MEMO_KEYS`` entries. With one partition every key
-    routes to it, so the lines are written as they are, in one join
-    (which takes ``lines`` over)."""
-    if len(parts) == 1:
-        if lines:
-            lines.append(b"")  # so the join ends with a newline
-            parts[0].write(b"\n".join(lines))
-        return
-    blocks: list[list[bytes]] = [[] for _ in parts]
+    """Append each line, with its newline, to the partition file
+    ``_route`` sends it to: one write per partition (which takes
+    ``lines`` over)."""
+    for part, block in zip(parts, _route(lines, len(parts), route)):
+        if block:
+            block.append(b"")  # so the join ends with a newline
+            part.write(b"\n".join(block))
+
+
+def _route(
+    lines: list[bytes], n: int, route: dict[bytes, int]
+) -> list[list[bytes]]:
+    """``lines`` split into ``n`` lists, in order, by the partition
+    their key (the bytes before the first tab) md5-routes to. ``route``
+    memoizes key -> partition for the task and is cleared at
+    ``MEMO_KEYS`` entries. With one partition every key routes to it,
+    so ``lines`` is returned as it is, with no key, memo or per-line
+    step."""
+    if n == 1:
+        return [lines]
+    blocks: list[list[bytes]] = [[] for _ in range(n)]
     for line in lines:
         key = line.partition(b"\t")[0]
         p = route.get(key)
         if p is None:
             if len(route) >= MEMO_KEYS:
                 route.clear()
-            p = route[key] = md5_partition(key, len(parts))
+            p = route[key] = md5_partition(key, n)
         blocks[p].append(line)
-    for part, block in zip(parts, blocks):
-        if block:
-            block.append(b"")  # so the join ends with a newline
-            part.write(b"\n".join(block))
+    return blocks

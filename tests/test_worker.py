@@ -31,6 +31,8 @@ import sys
 import threading
 import time
 from collections import Counter
+from contextlib import contextmanager
+from itertools import chain
 from pathlib import Path
 
 import pytest
@@ -42,6 +44,12 @@ from tests.conftest import (
     QuietWorker,
     fixture_wordcount,
     read_lines,
+)
+
+# A file or socket a test leaves open is an error under
+# ``-X dev -W error::ResourceWarning``, not a warning lost in the log.
+pytestmark = pytest.mark.filterwarnings(
+    "error::pytest.PytestUnraisableExceptionWarning"
 )
 
 REF_DATA = Path("/root/reference/tests/testdata")
@@ -1089,39 +1097,150 @@ def test_missing_reduce_input_fails_without_output(tmp_path, spawned, missing):
     assert [proc.returncode for proc in spawned] == [-signal.SIGKILL]
 
 
-def test_one_partition_map_writes_mapper_output(tmp_path):
-    """With one partition the intermediate is the mappers' stdout in
-    file order, byte for byte, with a newline after the first file's
-    unterminated, non-UTF-8 last line. The second file spans many
-    chunks."""
-    texts = [
-        b"a\tb\xff\r\n\nc\xe9 d\x0c",
-        b"".join(b"w%d\t\xfe%d\n" % (i % 97, i) for i in range(20_000)),
-    ]
+def _cat_map(tmp_path: Path, texts: list[bytes], n: int) -> list[bytes]:
+    """Run one map task of ``cat`` over files holding ``texts`` into
+    ``n`` partitions and return the partition files' bytes."""
     paths = []
     for i, text in enumerate(texts):
         path = tmp_path / f"in{i}"
         path.write_bytes(text)
         paths.append(str(path))
-    cat = shutil.which("cat")
-    stdouts = []
-    for path in paths:
-        with open(path, "rb") as f:
-            stdouts.append(subprocess.run(
-                [cat], stdin=f, stdout=subprocess.PIPE, check=True
-            ).stdout)
     out = tmp_path / "inter"
     out.mkdir()
     QuietWorker(port=0)._run_map_task({
         "task_id": 0,
-        "executable": cat,
+        "executable": shutil.which("cat"),
         "input_paths": paths,
         "output_directory": str(out),
-        "num_partitions": 1,
+        "num_partitions": n,
     })
-    assert (out / "maptask00000-part00000").read_bytes() == (
-        stdouts[0] + b"\n" + stdouts[1]
+    return [
+        (out / f"maptask00000-part{p:05d}").read_bytes() for p in range(n)
+    ]
+
+
+def test_one_partition_map_writes_mapper_output(tmp_path):
+    """With one partition, mapper output that repeats its lines and
+    holds fewer than ``MEMO_KEYS`` distinct ones is written as one
+    sorted run of the mappers' stdout, byte for byte, with a newline
+    after the first file's unterminated, non-UTF-8 last line. The
+    second file spans many chunks."""
+    texts = [
+        b"a\tb\xff\r\n\nc\xe9 d\x0c\n" * 2 + b"a\tb\xff\r\n\nc\xe9 d\x0c",
+        b"".join(b"w%d\t\xfe%d\n" % (i % 97, i % 3) for i in range(20_000)),
+    ]
+    lines = texts[0].split(b"\n") + texts[1].split(b"\n")[:-1]
+    assert (
+        _cat_map(tmp_path, texts, 1)
+        == [b"".join(sorted(line + b"\n" for line in lines))]
     )
+
+
+def test_map_runs_sort_lines_in_reduce_order(tmp_path):
+    """A run's lines are ordered as the reduce orders them, whole line
+    plus newline: ``a\\tb`` and ``a\\x00`` sort before ``a``, which a
+    sort of the bare lines would put first."""
+    texts = [b"ab\na\na\tb\na\x00\na\n" * 2]
+    assert _cat_map(tmp_path, texts, 1) == [
+        b"a\x00\n" * 2 + b"a\tb\n" * 2 + b"a\n" * 4 + b"ab\n" * 2
+    ]
+
+
+def _md5_route(line: bytes, n: int) -> int:
+    return int(hashlib.md5(line.partition(b"\t")[0]).hexdigest(), 16) % n
+
+
+@pytest.mark.parametrize("n", [1, 3])
+@pytest.mark.parametrize("distinct_tail", [False, True])
+def test_map_output_is_written_as_counted_runs(
+    tmp_path, monkeypatch, n, distinct_tail
+):
+    """Both writers of a map task. With ``MEMO_KEYS`` patched to 8 and
+    ``CHUNK_BYTES`` to 64 (eight 8-byte lines a chunk), each two chunks
+    of repeated lines fill the counter and are written as one sorted
+    run per partition, so the output is several runs, each beginning
+    with the smallest line. With ``distinct_tail``, the output then
+    turns to distinct lines: the first chunk of them is written as a
+    run, and every later line is routed as it comes. Each partition
+    then reduces to the sorted lines routed to it."""
+    monkeypatch.setattr(worker_module, "MEMO_KEYS", 8)
+    monkeypatch.setattr(worker_module, "CHUNK_BYTES", 64)
+    rng = random.Random(13)
+    runs = []
+    for _ in range(5):
+        lines = [b"k00\t000\n"]
+        while len(lines) < 8:
+            line = b"k%02d\t%03d\n" % (rng.randrange(1, 99),
+                                         rng.randrange(1000))
+            if line not in lines:
+                lines.append(line)
+        chunks = [lines[:4] * 2, lines[4:] * 2]
+        for chunk in chunks:
+            rng.shuffle(chunk)
+        runs.append(chunks[0] + chunks[1])
+    tail = []
+    if distinct_tail:
+        tail = [b"t%02d\t%03d\n" % (99 - i, i) for i in range(40)]
+        runs.append(tail[:8])
+    expected = [b"" for _ in range(n)]
+    for run in runs:
+        for line in sorted(run):
+            expected[_md5_route(line, n)] += line
+    for line in tail[8:]:
+        expected[_md5_route(line, n)] += line
+    text = b"".join(chain.from_iterable(runs)) + b"".join(tail[8:])
+    assert _cat_map(tmp_path, [text], n) == expected
+    # several runs: no partition is one sort of its lines
+    assert all(part != b"".join(sorted(part.splitlines(True)))
+               for part in expected if part)
+    out = tmp_path / "out"
+    out.mkdir()
+    w = QuietWorker(port=0)
+    for p in range(n):
+        w._run_reduce_task({
+            "task_id": p,
+            "executable": shutil.which("cat"),
+            "input_paths": [str(tmp_path / f"inter/maptask00000-part{p:05d}")],
+            "output_directory": str(out),
+        })
+        assert (out / f"part-{p:05d}").read_bytes() == b"".join(
+            sorted(line for line in text.splitlines(keepends=True)
+                   if _md5_route(line, n) == p)
+        )
+
+
+@pytest.mark.parametrize(
+    "line, count",
+    [(b"x\t1\n", 10**6), (b"y" * 40_000 + b"\n", 20)],
+    ids=["short", "long"],
+)
+def test_hot_line_copies_are_written_in_chunks(
+    tmp_path, monkeypatch, line, count
+):
+    """A line repeated many times reaches its partition file intact,
+    with no write larger than ``CHUNK_BYTES`` or, for a line longer
+    than that, than one copy of the line."""
+    sizes: list[int] = []
+    real = worker_module.replaced
+
+    class Recorded:
+        def __init__(self, f):
+            self.f = f
+
+        def write(self, data):
+            sizes.append(len(data))
+            return self.f.write(data)
+
+    @contextmanager
+    def replaced(path, tag):
+        with real(path, tag) as f:
+            yield Recorded(f)
+
+    monkeypatch.setattr(worker_module, "replaced", replaced)
+    text = line * count
+    assert _cat_map(tmp_path, [text], 1) == [text]
+    assert sum(sizes) == len(text)
+    assert max(sizes) <= max(worker_module.CHUNK_BYTES, len(line))
 
 
 @needs_reference
@@ -1387,8 +1506,7 @@ def test_map_task_memory_envelope(fake_manager, worker, tmp_path):
     growth = sampler.stop()
     # Sanity: the map really ran over the whole corpus (~600k tokens).
     n_lines = sum(
-        sum(1 for _ in p.open(encoding="utf-8"))
-        for p in out.glob("maptask00001-part*")
+        p.read_bytes().count(b"\n") for p in out.glob("maptask00001-part*")
     )
     assert n_lines > 500_000
     assert growth < 1 * 1024 * 1024, f"RSS grew {growth} B during map"
