@@ -82,9 +82,10 @@ order, each repeated by its count and md5-routed once, in writes of
 about ``CHUNK_BYTES``. Each distinct line is thus sorted and routed
 once, and the reduce sort of a partition's runs is a merge that
 timsort finds. Counting pays only when lines repeat: once the lines
-counted hold fewer than two copies per distinct line, the rest of the
-task's output is routed chunk by chunk in mapper order, one write per
-partition, and with one partition each chunk is written in one join.
+counted hold fewer than two copies per distinct line, the rest of that
+input file's output is routed chunk by chunk in mapper order, one
+write per partition, and with one partition each chunk is written in
+one join.
 A per-task memo maps keys to partitions and is cleared when it
 reaches ``MEMO_KEYS`` entries, so map memory is O(chunk + counter +
 memo), not O(input) (tests/test_worker_11.py profiles the map stage).
@@ -444,7 +445,7 @@ class MRWorker:
             tag = self._attempt_tag()
             parts = [stack.enter_context(replaced(p, tag)) for p in part_paths]
             _write_map_output(
-                chain.from_iterable(
+                (
                     run_mapper(message["executable"], path)
                     for path in message["input_paths"]
                 ),
@@ -614,31 +615,36 @@ def _merge_runs(runs: Iterable[Iterator[list[bytes]]], write) -> None:
         write(b"".join(taken))
 
 
-def _write_map_output(chunks: Iterator[list[bytes]], parts: list) -> None:
-    """Write a map task's output ``chunks`` (lists of lines without
-    their newlines) to its partition files as counted, sorted runs.
+def _write_map_output(
+    outputs: Iterable[Iterator[list[bytes]]], parts: list
+) -> None:
+    """Write a map task's ``outputs``, one per input file, each a run of
+    chunks (lists of lines without their newlines), to its partition
+    files as counted, sorted runs.
 
     The lines are counted until ``MEMO_KEYS`` distinct ones are held;
     then, and after the last chunk, ``_write_runs`` writes them as one
     sorted run per partition and counting starts afresh. Counting pays
     only when lines repeat: once the lines counted hold fewer than two
     copies per distinct line, they are written as a run and the rest of
-    the output goes through ``_write_routed`` chunk by chunk, in mapper
-    order."""
+    that file's output goes through ``_write_routed`` chunk by chunk,
+    in mapper order. The next file is counted again, so a short file
+    of distinct lines does not decide for the files after it."""
     route: dict[bytes, int] = {}
     counts: Counter[bytes] = Counter()
     n_lines = 0
-    for lines in chunks:
-        counts.update(lines)
-        n_lines += len(lines)
-        repeated = n_lines >= 2 * len(counts)
-        if len(counts) >= MEMO_KEYS or not repeated:
-            _write_runs(counts, parts, route)
-            counts.clear()
-            n_lines = 0
-            if not repeated:
-                for lines in chunks:
-                    _write_routed(lines, parts, route)
+    for chunks in outputs:
+        for lines in chunks:
+            counts.update(lines)
+            n_lines += len(lines)
+            repeated = n_lines >= 2 * len(counts)
+            if len(counts) >= MEMO_KEYS or not repeated:
+                _write_runs(counts, parts, route)
+                counts.clear()
+                n_lines = 0
+                if not repeated:
+                    for lines in chunks:
+                        _write_routed(lines, parts, route)
     _write_runs(counts, parts, route)
 
 

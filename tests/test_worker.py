@@ -1158,11 +1158,11 @@ def test_map_output_is_written_as_counted_runs(
     """Both writers of a map task. With ``MEMO_KEYS`` patched to 8 and
     ``CHUNK_BYTES`` to 64 (eight 8-byte lines a chunk), each two chunks
     of repeated lines fill the counter and are written as one sorted
-    run per partition, so the output is several runs, each beginning
-    with the smallest line. With ``distinct_tail``, the output then
-    turns to distinct lines: the first chunk of them is written as a
-    run, and every later line is routed as it comes. Each partition
-    then reduces to the sorted lines routed to it."""
+    run per partition, so the output is several runs. With
+    ``distinct_tail``, the output then turns to distinct lines: the
+    first chunk of them is written as a run, and every later line is
+    routed as it comes. Each partition then reduces to the sorted
+    lines routed to it."""
     monkeypatch.setattr(worker_module, "MEMO_KEYS", 8)
     monkeypatch.setattr(worker_module, "CHUNK_BYTES", 64)
     rng = random.Random(13)
@@ -1207,6 +1207,17 @@ def test_map_output_is_written_as_counted_runs(
             sorted(line for line in text.splitlines(keepends=True)
                    if _md5_route(line, n) == p)
         )
+
+
+def test_map_writer_is_chosen_per_input_file(tmp_path):
+    """A first file of a few distinct lines is written as a run and
+    leaves the writer of the next file to its own lines: the second
+    file's repeated lines are counted into one sorted run, not routed
+    in mapper order."""
+    texts = [b"c\nb\na\n", b"y\nx\n" * 100]
+    assert _cat_map(tmp_path, texts, 1) == [
+        b"a\nb\nc\n" + b"x\n" * 100 + b"y\n" * 100
+    ]
 
 
 @pytest.mark.parametrize(
