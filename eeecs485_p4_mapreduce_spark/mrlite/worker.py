@@ -618,9 +618,9 @@ def _merge_runs(runs: Iterable[Iterator[list[bytes]]], write) -> None:
 def _write_map_output(
     outputs: Iterable[Iterator[list[bytes]]], parts: list
 ) -> None:
-    """Write a map task's ``outputs``, one per input file, each a run of
-    chunks (lists of lines without their newlines), to its partition
-    files as counted, sorted runs.
+    """Write a map task's ``outputs``, one per input file, each an
+    iterator of chunks (lists of lines without their newlines), to its
+    partition files as counted, sorted runs.
 
     The lines are counted until ``MEMO_KEYS`` distinct ones are held;
     then, and after the last chunk, ``_write_runs`` writes them as one
